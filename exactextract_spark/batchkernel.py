@@ -45,8 +45,9 @@ import os
 import numpy as np
 import pandas as pd
 
-__all__ = ["batch_eligible", "accumulate_pairs_batch", "zone_segments",
-           "CHUNK_CELLS"]
+from .kernel import suffix_coverage
+
+__all__ = ["batch_eligible", "accumulate_pairs_batch", "CHUNK_CELLS"]
 
 CHUNK_CELLS = int(os.environ.get("EXACTEXTRACT_BATCH_CHUNK", "4000000"))
 
@@ -63,11 +64,6 @@ CHUNK_CELLS = int(os.environ.get("EXACTEXTRACT_BATCH_CHUNK", "4000000"))
 # the stream-stats overhead at every window size up to a full tile.
 RECT_BATCH_MAX_CELLS = int(os.environ.get("EXACTEXTRACT_RECT_BATCH_CELLS", "512"))
 
-# pair tuple layout (built in extract.run_kernel)
-# (zone_id, tile_j, r0z, r1z, c0z, c1z, geom, row0, col0,
-#  nodata, w_nodata, raster_id, passthrough_tuple)
-
-
 def batch_eligible(keygroups) -> bool:
     if os.environ.get("EXACTEXTRACT_BATCH", "1") != "1":
         return False
@@ -79,53 +75,29 @@ def batch_eligible(keygroups) -> bool:
     return True
 
 
-def zone_segments(geom):
-    """Concatenated non-horizontal ring segments of an areal geometry in
-    raw map coordinates: (x0, y0, x1, y1).  Cached per zone by the
-    caller; the window transform happens vectorized per batch."""
-    xs0, ys0, xs1, ys1 = [], [], [], []
-    for ring in geom.rings:
-        x0, y0 = ring[:-1, 0], ring[:-1, 1]
-        x1, y1 = ring[1:, 0], ring[1:, 1]
-        m = y0 != y1  # horizontal edges contribute no signed area
-        xs0.append(x0[m]); ys0.append(y0[m])
-        xs1.append(x1[m]); ys1.append(y1[m])
-    if not xs0:
-        z = np.empty(0)
-        return z, z, z, z
-    return (np.concatenate(xs0), np.concatenate(ys0),
-            np.concatenate(xs1), np.concatenate(ys1))
-
-
-def _poly_coverage(chunk, idx, nrw, ncw, xmin_w, ymin_w, dx, dy, seg_cache):
-    """Scanline coverage for the non-rectangle pairs ``idx`` of the
-    chunk.  Returns (cov2d float32 clipped, off) where pair p's window
-    occupies rows [off[p], off[p]+nrw[p]) bottom-up and columns
-    [0, ncw[p]) of cov2d."""
+def _poly_coverage(zone, zones, idx, nrw, ncw, xmin_w, ymin_w, dx, dy):
+    """Scanline coverage for the non-rectangle pairs ``idx``; ``zone``
+    holds each pair's ordinal into ``zones`` (geom.ZoneArrays), whose
+    pre-flattened segment arrays are gathered by ordinal.  Returns
+    (cov2d float32 clipped, off) where pair p's window occupies rows
+    [off[p], off[p]+nrw[p]) bottom-up and columns [0, ncw[p]) of
+    cov2d."""
     H = int(nrw[idx].sum())
     W = int(ncw[idx].max())
     darea = np.zeros((H, W + 1), dtype=np.float64)
     dcover = np.zeros((H, W + 1), dtype=np.float64)
-    off = np.zeros(len(chunk), dtype=np.int64)
+    off = np.zeros(len(zone), dtype=np.int64)
     off[idx] = np.cumsum(nrw[idx]) - nrw[idx]
+    pieces = np.zeros(H, dtype=np.int64)
+    # each accumulator row's index inside its window, and window width
+    win_row = np.arange(H) - np.repeat(off[idx], nrw[idx])
+    win_cols = np.repeat(ncw[idx], nrw[idx])
 
-    # the cache may have been evicted between pair collection and this
-    # flush (extract.run_kernel clears it past 65536 zones) — recompute
-    # from the pair's geometry on a miss
-    segs = []
-    for p in idx:
-        s = seg_cache.get(chunk[p][0])
-        if s is None:
-            s = seg_cache[chunk[p][0]] = zone_segments(chunk[p][6])
-        segs.append(s)
-    counts = np.array([s[0].size for s in segs], dtype=np.int64)
+    cs, counts = zones.segments_of(zone[idx])
     if counts.sum() == 0:
         return np.zeros((H, W), dtype=np.float32), off
     sp = np.repeat(idx, counts)  # pair index per segment
-    cx0 = np.concatenate([s[0] for s in segs])
-    cy0 = np.concatenate([s[1] for s in segs])
-    cx1 = np.concatenate([s[2] for s in segs])
-    cy1 = np.concatenate([s[3] for s in segs])
+    cx0, cy0, cx1, cy1 = cs[:, 0], cs[:, 1], cs[:, 2], cs[:, 3]
 
     # window transform — identical float ops to the per-pair kernel:
     # u = (x - xmin_w)/dx, w = (y - ymin_w)/dy (bottom-up rows)
@@ -199,6 +171,7 @@ def _poly_coverage(chunk, idx, nrw, ncw, xmin_w, ymin_w, dx, dy, seg_cache):
     nz = dv_right != 0.0
     if np.any(nz):
         np.add.at(dcover, (grow[nz], ncw[pp[nz]]), dv_right[nz])
+        pieces += np.bincount(grow[nz], minlength=H)
 
     # --- middle portion: clamp to 0 <= u <= ncols_p, split at columns
     with np.errstate(divide="ignore", invalid="ignore"):
@@ -211,9 +184,8 @@ def _poly_coverage(chunk, idx, nrw, ncw, xmin_w, ymin_w, dx, dy, seg_cache):
     tm_hi = np.where(du2 == 0.0, np.where(inside0, 1.0, 0.0), tm_hi)
     keep2 = tm_hi > tm_lo
     if not np.any(keep2):
-        suffix = np.cumsum(dcover[:, ::-1], axis=1)[:, ::-1]
-        cov = np.clip(darea[:, :W] + suffix[:, 1:], 0.0, 1.0)
-        return cov.astype(np.float32), off
+        return suffix_coverage(darea, dcover, pieces, win_row,
+                               win_cols).astype(np.float32), off
     nc_k = nc_f[keep2]
     mu0 = np.minimum(np.maximum(pu0[keep2] + tm_lo[keep2] * du2[keep2], 0.0), nc_k)
     mw0 = pw0[keep2] + tm_lo[keep2] * dw2[keep2]
@@ -250,30 +222,31 @@ def _poly_coverage(chunk, idx, nrw, ncw, xmin_w, ymin_w, dx, dy, seg_cache):
     cdw = cw1 - cw0
     np.add.at(darea, (srow, col), (0.5 * (cu0 + cu1) - col) * cdw)
     np.add.at(dcover, (srow, col), cdw)
+    pieces += np.bincount(srow, minlength=H)
+    return suffix_coverage(darea, dcover, pieces, win_row,
+                           win_cols).astype(np.float32), off
 
-    suffix = np.cumsum(dcover[:, ::-1], axis=1)[:, ::-1]
-    cov = np.clip(darea[:, :W] + suffix[:, 1:], 0.0, 1.0)
-    return cov.astype(np.float32), off
 
-
-def accumulate_pairs_batch(pairs, tile_vals, key_specs, *, has_weights,
+def accumulate_pairs_batch(pairs, zones, tile_vals, key_specs, *, has_weights,
                            passthrough, col_names, grid_ncols,
-                           grid_xmin, grid_ymax, dx, dy,
-                           multi_raster, seg_cache):
+                           grid_xmin, grid_ymax, dx, dy, multi_raster):
     """Process a chunk of areal (zone, tile) pairs; returns one columnar
     pandas DataFrame of partial-state rows (columns = col_names).
 
-    pairs: list of pair tuples (see module docstring);
-    tile_vals: tile_j -> (values 2-D, weight 2-D or None)."""
-    P = len(pairs)
-    r0 = np.array([p[2] for p in pairs], dtype=np.int64)
-    r1 = np.array([p[3] for p in pairs], dtype=np.int64)
-    c0 = np.array([p[4] for p in pairs], dtype=np.int64)
-    c1 = np.array([p[5] for p in pairs], dtype=np.int64)
+    pairs: dict of equal-length arrays (built in extract.run_kernel) —
+      zone (ordinal into ``zones``, a geom.ZoneArrays), tile (key into
+      tile_vals), r0/r1/c0/c1 (crop window within the tile), row0/col0
+      (tile origin in the grid), nodata/w_nodata (NaN = none),
+      raster_id (object array; multi_raster only) and pt (P ×
+      len(passthrough) int64);
+    tile_vals: tile key -> (values 2-D, weight 2-D or None)."""
+    zone = np.asarray(pairs["zone"], dtype=np.int64)
+    P = zone.size
+    r0, r1 = pairs["r0"], pairs["r1"]
+    c0, c1 = pairs["c0"], pairs["c1"]
     nrw = r1 - r0
     ncw = c1 - c0
-    row0g = np.array([p[7] for p in pairs], dtype=np.int64)
-    col0g = np.array([p[8] for p in pairs], dtype=np.int64)
+    row0g, col0g = pairs["row0"], pairs["col0"]
     gr0 = row0g + r0
     gc0 = col0g + c0
     # two-step origin arithmetic — tile origin first, then the window
@@ -283,17 +256,16 @@ def accumulate_pairs_batch(pairs, tile_vals, key_specs, *, has_weights,
     xmin_w = (grid_xmin + col0g * dx) + c0 * dx
     ymax_w = (grid_ymax - row0g * dy) - r0 * dy
     ymin_w = ymax_w - nrw * dy
-    nodata = np.array([np.nan if p[9] is None else p[9] for p in pairs])
-    w_nodata = np.array([np.nan if p[10] is None else p[10] for p in pairs])
-    is_rect = np.fromiter((p[6].is_rectangle() for p in pairs),
-                          dtype=bool, count=P)
+    nodata = pairs["nodata"]
+    w_nodata = pairs["w_nodata"]
+    is_rect = zones.is_rect[zone]
 
     # --- coverage ---------------------------------------------------------
     poly_idx = np.flatnonzero(~is_rect)
     cov2d = off = None
     if poly_idx.size:
-        cov2d, off = _poly_coverage(pairs, poly_idx, nrw, ncw,
-                                    xmin_w, ymin_w, dx, dy, seg_cache)
+        cov2d, off = _poly_coverage(zone, zones, poly_idx, nrw, ncw,
+                                    xmin_w, ymin_w, dx, dy)
 
     # --- cell stream (top-down rows, matching accumulate_pair order) -----
     areas = nrw * ncw
@@ -309,10 +281,7 @@ def accumulate_pairs_batch(pairs, tile_vals, key_specs, *, has_weights,
     rc = is_rect[pid]
     if rc.any():
         ri = np.flatnonzero(rc)
-        bx0 = np.array([p[6].bbox[0] if r else 0.0 for p, r in zip(pairs, is_rect)])
-        by0 = np.array([p[6].bbox[1] if r else 0.0 for p, r in zip(pairs, is_rect)])
-        bx1 = np.array([p[6].bbox[2] if r else 0.0 for p, r in zip(pairs, is_rect)])
-        by1 = np.array([p[6].bbox[3] if r else 0.0 for p, r in zip(pairs, is_rect)])
+        bx0, by0, bx1, by1 = zones.bbox[zone].T
         pri = pid[ri]
         x_lo = xmin_w[pri] + dx * cc[ri]
         y_lo = ymin_w[pri] + dy * (nrw[pri] - 1 - r_td[ri])
@@ -330,14 +299,15 @@ def accumulate_pairs_batch(pairs, tile_vals, key_specs, *, has_weights,
     # --- value / weight streams (cheap per-pair window slices) -----------
     v_parts = []
     w_parts = [] if has_weights else None
-    for p in pairs:
-        tv, tw = tile_vals[p[1]]
-        v_parts.append(tv[p[2]:p[3], p[4]:p[5]].ravel())
+    for t, a, b, c, d in zip(pairs["tile"].tolist(), r0.tolist(), r1.tolist(),
+                             c0.tolist(), c1.tolist()):
+        tv, tw = tile_vals[t]
+        v_parts.append(tv[a:b, c:d].ravel())
         if has_weights:
             if tw is None:
-                w_parts.append(np.full((p[3] - p[2]) * (p[5] - p[4]), np.nan))
+                w_parts.append(np.full((b - a) * (d - c), np.nan))
             else:
-                w_parts.append(tw[p[2]:p[3], p[4]:p[5]].ravel())
+                w_parts.append(tw[a:b, c:d].ravel())
     v = np.concatenate(v_parts).astype(np.float64, copy=False)
     wv = np.concatenate(w_parts).astype(np.float64, copy=False) \
         if has_weights else None
@@ -352,7 +322,7 @@ def accumulate_pairs_batch(pairs, tile_vals, key_specs, *, has_weights,
     wdef_s = None
     rid_arr = None
     if multi_raster:
-        rid_arr = np.array([p[11] for p in pairs], dtype=object)
+        rid_arr = pairs["raster_id"]
 
     # --- per-key statistics ----------------------------------------------
     out = {}
@@ -533,12 +503,9 @@ def accumulate_pairs_batch(pairs, tile_vals, key_specs, *, has_weights,
     if rows.size == 0:
         return pd.DataFrame(columns=col_names)
 
-    zarr = np.array([p[0] for p in pairs], dtype=object)
-    ptarrs = [np.array([p[12][t] for p in pairs], dtype=np.int64)
-              for t in range(len(passthrough))]
-    out["zone_id"] = zarr[rows]
+    out["zone_id"] = zones.zone_id[zone[rows]]
     for t, name in enumerate(passthrough):
-        out[name] = ptarrs[t][rows]
+        out[name] = pairs["pt"][rows, t]
 
     for (i, req, _vname, kwargs), res in zip(key_specs, key_results):
         pfx = f"k{i}_"

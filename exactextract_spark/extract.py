@@ -22,15 +22,21 @@ pipeline maps onto the Spark plan one-to-one:
                                      the scalar states (they are all
                                      associative-commutative by design).
 
+Zone prep parses every zone's WKT exactly once: attach_bbox is one
+vectorized mapInArrow pass (geom.parse_wkt_batch) that adds the bbox
+and the flat geometry arrays (GEOM_COLS: kind, interleaved x/y
+coordinates, ring offsets).  Nothing downstream parses WKT again.
+
 Join strategies:
 - "broadcast" (default for small/medium zone sets): only (zone_id,
-  tile_row, tile_col) pairs enter the broadcast hash join; geometry WKT
-  travels via a SparkContext broadcast dict straight to the kernel, so
-  the big tile payloads are NEVER shuffled — the kernel runs in the same
-  stage as the tile scan.
-- "shuffle": for huge zone tables; pairs carry geometry and the join
-  shuffles by tile key (payloads move exactly once).  AQE handles skewed
-  tile keys.
+  tile_row, tile_col) pairs enter the broadcast hash join; the zone
+  geometry travels as one SparkContext broadcast of flat numpy arrays
+  (geom.ZoneArrays, indexed by a dense zone ordinal) straight to the
+  kernel, so the big tile payloads are NEVER shuffled — the kernel runs
+  in the same stage as the tile scan.
+- "shuffle": for huge zone tables; the per-tile zone lists carry the
+  same geometry arrays (not WKT) and the join shuffles by tile key
+  (payloads move exactly once).  AQE handles skewed tile keys.
 
 Variance is carried as (Σc, Σcx, Σcx²) so partial states merge exactly —
 lifting the reference's parallel-strategy restriction
@@ -39,20 +45,22 @@ lifting the reference's parallel-strategy restriction
 
 from __future__ import annotations
 
-import math
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from .accumulate import accumulate_pair
-from .geom import parse_wkt
+from .geom import AREAL, GEOM_COLS, INVALID, ZoneArrays, parse_wkt_batch
 from .io import decode_tile, decode_value_tile
 from .kernel import coverage_for_window
 from .ops import Op, group_ops_by_key, parse_ops
 
 __all__ = ["exact_extract", "attach_bbox", "zone_tile_pairs", "run_kernel",
-           "crs_matches", "raise_on_invalid_zones", "count_and_validate"]
+           "crs_matches", "raise_on_invalid_zones", "count_and_validate",
+           "prepare_zones", "zone_lists"]
 
 BROADCAST_ZONE_LIMIT = 200_000
 
@@ -115,122 +123,162 @@ _CELLS_T = T.ArrayType(T.StructType([
 ]))
 
 
-# JVM-side WKT coordinate stream: split on any char that cannot be part
-# of a float literal (keyword letters like the E in LINESTRING/EMPTY
-# survive the split but try_cast them to NULL, which filter drops), so
-# the remaining tokens are exactly the x,y,x,y,... coordinate stream.
-_WKT_NUMS = ("filter(transform(split({c}, '[^-+.0-9eE]+'),"
-             " s -> try_cast(s AS DOUBLE)), v -> v IS NOT NULL)")
-
-
-# supported geometry head tags (geom.parse_wkt dispatch): anything else
-# — POINT, MULTIPOINT, garbage — must raise at bbox time like the old
-# per-row parse did, because a zone whose bbox intersects no tile never
-# reaches the kernel's parse and would otherwise fail silently.  The
-# tag must be followed directly by EMPTY or '(' so dimension-qualified
-# WKT ('POLYGON Z (...)', 'POLYGON ZM (...)') — which parse_wkt rejects
-# loudly — cannot slip through with a plausible-but-wrong bbox from
-# x/y/z token-parity mixing (ADVICE r4).
-_WKT_HEAD_OK = ("upper(ltrim(geometry)) RLIKE "
-                "'^(MULTIPOLYGON|POLYGON|MULTILINESTRING|LINESTRING"
-                "|GEOMETRYCOLLECTION)\\\\s*(EMPTY|[(])'")
-
-
-def _bbox_expr(minmax: str, parity: int) -> str:
-    """One bbox component over the coordinate stream (x = even tokens,
-    y = odd); array_min/array_max skip the NULLed-out other axis.
-
-    Invalid WKT (bad head tag, odd/missing coordinate tokens) yields a
-    NULL component, NOT an inline raise_error: Catalyst freely reorders
-    filter conjuncts and projections, so a raising expression can fire
-    on rows an earlier filter was meant to drop (e.g. the raster-doc
-    rows of an interleaved table before the zone filter).  The loud
-    failure lives in raise_on_invalid_zones(), which consumers run as a
-    driver-side action once the zone table is materialized."""
-    per_axis = (f"array_{minmax}(transform(_wkt_nums,"
-                f" (v, i) -> IF(i % 2 = {parity}, v, CAST(NULL AS DOUBLE))))")
-    inf = "'Infinity'" if minmax == "min" else "'-Infinity'"
-    return f"""CASE
-      WHEN NOT _wkt_ok THEN CAST(NULL AS DOUBLE)
-      WHEN size(_wkt_nums) >= 2 AND size(_wkt_nums) % 2 = 0 THEN {per_axis}
-      WHEN size(_wkt_nums) = 0 AND upper(geometry) LIKE '%EMPTY%'
-        THEN CAST({inf} AS DOUBLE)
-      ELSE CAST(NULL AS DOUBLE)
-    END"""
+_GEOM_FIELDS = [T.StructField("_geom_kind", T.ByteType()),
+                T.StructField("_geom_xy", T.ArrayType(T.DoubleType())),
+                T.StructField("_geom_rings", T.ArrayType(T.IntegerType()))]
+_BBOX = ("xmin", "ymin", "xmax", "ymax")
 
 
 def attach_bbox(zones: DataFrame) -> DataFrame:
-    """Add (xmin, ymin, xmax, ymax) parsed from WKT (bbox pre-filter
-    feeds tile-range pruning — reference
-    feature_sequential_processor.cpp:72-76).
+    """The zone-prep pass: parse every zone's WKT once and add
+    (xmin, ymin, xmax, ymax) — the bbox pre-filter that feeds
+    tile-range pruning, reference feature_sequential_processor.cpp:72-76
+    — plus the parsed geometry as flat arrays (GEOM_COLS: kind,
+    interleaved x/y coordinates, per-ring end offsets), which the
+    kernels consume instead of WKT.
 
-    Computed entirely with JVM expressions (split/try_cast/array_min
-    over the numeric token stream) — no per-row Python, so a 10⁸-zone
-    table stays in whole-stage codegen.  EMPTY geometries get the
-    inverted bbox (every tile-range predicate false; the zone flows to
-    the final left join like the reference writing a row for every
-    feature).  Invalid WKT (unsupported POINT zones, garbage, odd
-    coordinate counts) gets a NULL bbox here; consumers fail loudly
-    via raise_on_invalid_zones(), and structural invalidity that still
-    yields a plausible bbox (e.g. unbalanced parens) raises at kernel
-    parse time, which sees every zone that intersects any tile.
+    One mapInArrow over the zone table: each Arrow batch is parsed by
+    geom.parse_wkt_batch (numpy tokenizer + one Arrow string->double
+    cast), so the Python cost is per batch, not per row.  EMPTY
+    geometries get the inverted bbox (every tile-range predicate false;
+    the zone flows to the final left join like the reference writing a
+    row for every feature).  Invalid WKT (unsupported POINT zones,
+    garbage, unbalanced parentheses, odd coordinate counts, Z/M
+    coordinates) gets NULL bbox and geometry columns here; consumers
+    fail loudly via count_and_validate() / raise_on_invalid_zones().
+    The Python stage is opaque to the optimizer, so no raising
+    expression can be reordered onto rows a filter below it drops.
 
-    The token-stream projection is an OPTIMIZER BARRIER: the split +
-    try_cast parse is wrapped in an always-true non-deterministic guard
-    so PushDownPredicates / CollapseProject cannot substitute it into
-    every downstream filter conjunct and generator.  Without it the
-    optimized tile-assignment plan evaluated the WKT synthesis + regex
-    split up to ~50× per zone (measured: split() appeared 33× in the
-    optimized plan; ~21 core-ms per zone — guide §7.2 'duplicated
-    subtrees').  With the barrier the parse runs exactly once per row
-    and downstream predicates reference the materialized token array."""
-    if "xmin" in zones.columns:
+    A caller-supplied bbox (xmin.. columns already present) is kept;
+    the geometry is still parsed for the kernels."""
+    if GEOM_COLS[0] in zones.columns:
         return zones
-    # always-true, non-foldable guard (monotonically_increasing_id is
-    # non-negative by construction); value is unchanged, but the
-    # projection becomes non-deterministic, which blocks predicate
-    # pushdown and projection collapse across it
-    nd_true = F.monotonically_increasing_id() >= F.lit(0)
-    z = zones.select(
-        "*",
-        F.when(nd_true, F.expr(_WKT_NUMS.format(c="geometry")))
-         .alias("_wkt_nums"),
-        F.expr(_WKT_HEAD_OK).alias("_wkt_ok"))
-    z = z.select("*",
-                 F.expr(_bbox_expr("min", 0)).alias("xmin"),
-                 F.expr(_bbox_expr("min", 1)).alias("ymin"),
-                 F.expr(_bbox_expr("max", 0)).alias("xmax"),
-                 F.expr(_bbox_expr("max", 1)).alias("ymax"))
-    return z.drop("_wkt_nums", "_wkt_ok")
+    had_bbox = "xmin" in zones.columns
+    add = [] if had_bbox else [T.StructField(c, T.DoubleType()) for c in _BBOX]
+    schema = T.StructType(zones.schema.fields + add + _GEOM_FIELDS)
+    gi = zones.columns.index("geometry")
+
+    def prep(batches):
+        for b in batches:
+            za = parse_wkt_batch(b.column(gi))
+            bad = za.kind == INVALID
+            cols = list(b.columns)
+            if not had_bbox:
+                cols += [pa.array(za.bbox[:, k], mask=bad) for k in range(4)]
+            cols += za.to_arrow()
+            yield pa.RecordBatch.from_arrays(cols, names=schema.names)
+
+    return zones.mapInArrow(prep, schema)
 
 
 def raise_on_invalid_zones(zones_b: DataFrame) -> None:
     """Fail loudly on invalid zone geometry like the reference
-    (test_exact_extract.py:1264-1274 semantics): a NULL xmin marks WKT
-    the JVM bbox parser rejected (attach_bbox).  One column-pruned
-    driver-side action — run it AFTER the zone table is filtered/
-    materialized so it cannot be reordered onto non-zone rows."""
-    bad = zones_b.where(F.col("xmin").isNull()) \
+    (test_exact_extract.py:1264-1274 semantics): a NULL geometry kind
+    marks WKT the zone-prep parser rejected (attach_bbox).  One
+    column-pruned driver-side action."""
+    bad = zones_b.where(F.col("_geom_kind").isNull()) \
                  .select("geometry").limit(1).collect()
     if bad:
         raise ValueError(f"invalid zone geometry {str(bad[0][0])[:80]!r}")
 
 
-def count_and_validate(zones_b: DataFrame, validate: bool = True) -> int:
+def count_and_validate(zones_b: DataFrame) -> int:
     """Zone count and invalid-geometry check in ONE action (consumers
-    that need both would otherwise scan the zone table twice).
-    ``validate=False`` for tables whose bbox columns were supplied by
-    the CALLER (attach_bbox passed them through): a user NULL bbox
-    there is not the engine's invalid-WKT marker."""
-    aggs = [F.count("*").alias("n")]
-    if validate:
-        aggs += [F.sum(F.col("xmin").isNull().cast("long")).alias("bad"),
-                 F.first(F.when(F.col("xmin").isNull(), F.col("geometry")),
-                         ignorenulls=True).alias("ex")]
-    row = zones_b.agg(*aggs).first()
-    if validate and row["bad"]:
+    that need both would otherwise scan the zone table twice)."""
+    bad = F.col("_geom_kind").isNull()
+    row = zones_b.agg(F.count("*").alias("n"),
+                      F.sum(bad.cast("long")).alias("bad"),
+                      F.first(F.when(bad, F.col("geometry")),
+                              ignorenulls=True).alias("ex")).first()
+    if row["bad"]:
         raise ValueError(f"invalid zone geometry {str(row['ex'])[:80]!r}")
     return row["n"]
+
+
+@dataclass
+class PreparedZones:
+    zones_b: DataFrame   # zone table + bbox + GEOM_COLS
+    strategy: str        # "broadcast" | "shuffle"
+    lookup: object       # Broadcast[ZoneArrays] (broadcast strategy) or None
+    n_zones: int | None  # counted when the strategy was "auto"
+
+    def unpersist(self) -> None:
+        self.zones_b.unpersist()
+        if self.lookup is not None:
+            self.lookup.unpersist()
+
+
+def prepare_zones(zones: DataFrame, strategy: str = "auto", *,
+                  limit: int | None = None, with_ord: bool = False,
+                  persist: bool = False) -> PreparedZones:
+    """Zone prep shared by every geometry consumer: attach_bbox (one
+    parse per zone), ONE validating action (that also counts the zones
+    when ``strategy`` is "auto"), and — for the broadcast strategy —
+    the parsed geometry collected with toArrow() and broadcast as flat
+    numpy arrays (geom.ZoneArrays).  Above ``limit`` zones (default
+    BROADCAST_ZONE_LIMIT) the auto strategy switches to "shuffle",
+    where the geometry arrays ride the per-tile zone lists instead
+    (nothing is collected to the driver).
+
+    ``with_ord`` adds ``_zone_ord`` (input row order, for
+    preserve_order output); ``persist`` caches the zone table so the
+    parse runs once across the validation, collect and pair jobs."""
+    if strategy not in ("auto", "broadcast", "shuffle"):
+        raise ValueError(f"unknown strategy {strategy!r}: "
+                         "expected 'auto', 'broadcast' or 'shuffle'")
+    zones_b = attach_bbox(zones)
+    if with_ord:
+        zones_b = zones_b.withColumn("_zone_ord", F.monotonically_increasing_id())
+    if persist:
+        zones_b = zones_b.persist()
+    n = None
+    if strategy == "auto":
+        n = count_and_validate(zones_b)
+        limit = BROADCAST_ZONE_LIMIT if limit is None else limit
+        strategy = "broadcast" if n <= limit else "shuffle"
+    else:
+        raise_on_invalid_zones(zones_b)
+    lookup = None
+    if strategy == "broadcast":
+        t = zones_b.select("zone_id", *GEOM_COLS).toArrow()
+        za = ZoneArrays.from_arrow(*(t.column(c) for c in GEOM_COLS),
+                                   zone_id=t.column("zone_id"))
+        # derived arrays are computed once here, not per executor
+        za.is_rect, za.segments
+        lookup = zones_b.sparkSession.sparkContext.broadcast(za)
+    return PreparedZones(zones_b, strategy, lookup, n)
+
+
+def zone_lists(prep: PreparedZones, grid: dict, tile: int) -> DataFrame:
+    """Per-tile zone hit-lists (the STRtree-query analog,
+    raster_parallel_processor.cpp:142-162), one row per tile so each
+    tile payload crosses the JVM->Arrow boundary once: ``zone_ids``
+    (broadcast strategy; geometry from the broadcast) or
+    ``zone_structs`` (shuffle strategy; the geometry arrays ride the
+    list)."""
+    extra = [] if prep.strategy == "broadcast" else list(GEOM_COLS)
+    pairs = zone_tile_pairs(prep.zones_b.select("zone_id", *extra, *_BBOX),
+                            grid, tile)
+    entry = F.col("zone_id") if not extra else F.struct("zone_id", *extra)
+    return pairs.groupBy("tile_row", "tile_col").agg(
+        F.collect_list(entry).alias("zone_ids" if not extra else "zone_structs"))
+
+
+def pair_zones(pdf: pd.DataFrame, lookup) -> tuple:
+    """Kernel side of zone_lists: (ZoneArrays, tile-row index per pair,
+    zone ordinal per pair) for a pandas batch of tile rows.  No WKT is
+    parsed: broadcast lists gather ordinals from the broadcast arrays,
+    shuffle lists carry the arrays."""
+    structs = "zone_structs" in pdf.columns
+    lists = pdf["zone_structs" if structs else "zone_ids"].to_numpy()
+    lens = np.fromiter(map(len, lists), dtype=np.int64, count=len(lists))
+    rows = np.repeat(np.arange(len(lists)), lens)
+    if structs:
+        za = ZoneArrays.from_records(e for lst in lists for e in lst)
+        return za, rows, np.arange(rows.size)
+    za = lookup.value
+    flat = np.concatenate(lists) if rows.size else np.zeros(0, dtype=object)
+    return za, rows, za.ordinals(flat)
 
 
 def prepare_weight_frame(weight_tiles: DataFrame, grid: dict,
@@ -374,19 +422,24 @@ def run_kernel(joined: DataFrame, keygroups, *, geom_lookup=None,
                has_weights: bool, passthrough=(), progress_acc=None) -> DataFrame:
     """mapInPandas kernel: decode tile, compute coverage once, update
     every op-key's accumulator (read-once dedup of shared windows —
-    reference feature_sequential_processor.cpp:85-113).  ``passthrough``
-    columns (e.g. tile ids for checkpoint lineage) are copied onto every
-    partial row.
+    reference feature_sequential_processor.cpp:85-113).  ``joined``
+    has one row per tile with its zone hit-list (zone_lists);
+    ``geom_lookup`` is the broadcast geometry (prepare_zones) for
+    ``zone_ids`` lists.  ``passthrough`` columns (e.g. tile ids for
+    checkpoint lineage) are copied onto every partial row.
 
-    Areal pairs are routed through the batch-vectorized path
-    (batchkernel.py): coverage + statistics for the whole (zone × tile)
-    batch are computed with flat numpy streams, so Python dispatch cost
-    is per batch, not per pair.  Linear geometries, stored-cell arrays,
-    stable variance and area_* coverage weights fall back to the
-    per-pair path (kernel.py + accumulate.py)."""
+    Pair assembly is vectorized per Arrow batch: the hit-lists are
+    flattened to (tile row, zone ordinal) arrays and every pair's
+    zone-bbox ∩ tile crop window is computed with numpy from the
+    zones' parsed bboxes.  Areal pairs are routed through the
+    batch-vectorized path (batchkernel.py): coverage + statistics for
+    the whole (zone × tile) batch are computed with flat numpy streams,
+    so Python dispatch cost is per batch, not per pair.  Linear
+    geometries, stored-cell arrays, stable variance and area_* coverage
+    weights fall back to the per-pair path (kernel.py +
+    accumulate.py)."""
     from .batchkernel import (CHUNK_CELLS, RECT_BATCH_MAX_CELLS,
-                              accumulate_pairs_batch, batch_eligible,
-                              zone_segments)
+                              accumulate_pairs_batch, batch_eligible)
 
     schema = _partial_schema(keygroups, passthrough)
     # key[0] is the logical raster name; when the joined rows carry a
@@ -402,218 +455,157 @@ def run_kernel(joined: DataFrame, keygroups, *, geom_lookup=None,
                  if isinstance(f.dataType, T.ArrayType)]
     use_batch = batch_eligible(keygroups)
 
+    def opt(pdf, c):
+        return pdf[c].to_numpy() if c in pdf.columns else None
+
+    def row_transform(j, nd, sa, oa, ma):
+        sc = float(sa[j]) if sa is not None and sa[j] is not None else 1.0
+        of = float(oa[j]) if oa is not None and oa[j] is not None else 0.0
+        mk = ma[j] if ma is not None else None
+        transformed = sc != 1.0 or of != 0.0 or mk is not None
+        # a transformed tile is decoded to float64 with undefined cells
+        # already NaN, so downstream nodata is cleared
+        return sc, of, mk, (None if transformed else nd)
+
     def kernel(batches):
-        geom_cache: dict = {}
-        seg_cache: dict = {}
         for pdf in batches:
             n_rows = len(pdf)
             if n_rows == 0:
                 continue
-            # one row per tile with the zone hit-list attached:
-            # "zone_ids" (broadcast strategy; geometry via broadcast
-            # dict) or "zone_structs" (shuffle strategy; (zone_id,
-            # geometry) structs ride the row)
-            grouped_structs = "zone_structs" in pdf.columns
-            grouped = "zone_ids" in pdf.columns or grouped_structs
+            za, prow, zo = pair_zones(pdf, geom_lookup)
             g = lambda c: pdf[c].to_numpy()
             # the batch path evaluates grid constants once per batch;
             # heterogeneous grids (not produced by any current source,
             # but possible with hand-unioned tile tables) fall back
             uniform = all(pdf[c].nunique() <= 1 for c in
                           ("grid_xmin", "grid_ymax", "dx", "dy", "grid_ncols"))
-            use_batch_rows = use_batch and uniform
-            if grouped_structs:
-                zid_a = g("zone_structs")
-            elif grouped:
-                zid_a = g("zone_ids")
-            else:
-                zid_a = g("zone_id")
-            wkt_a = g("geometry") if geom_lookup is None and not grouped else None
-            nr_a, nc_a = g("nrows"), g("ncols")
-            r0_a, c0_a = g("row0"), g("col0")
-            gx_a, gy_a = g("grid_xmin"), g("grid_ymax")
-            dx_a, dy_a = g("dx"), g("dy")
+            nr_a, nc_a = g("nrows").astype(np.int64), g("ncols").astype(np.int64)
+            r0_a, c0_a = g("row0").astype(np.int64), g("col0").astype(np.int64)
+            gx_a = g("grid_xmin").astype(np.float64)
+            gy_a = g("grid_ymax").astype(np.float64)
+            dx_a, dy_a = g("dx").astype(np.float64), g("dy").astype(np.float64)
             gnc_a = g("grid_ncols")
             buf_a, dt_a = g("values"), g("dtype")
             nd_a = pdf["nodata"].to_numpy(dtype=np.float64, na_value=np.nan)
             # optional on-read transform columns (scale/offset, mask band)
-            sc_a = g("scale") if "scale" in pdf.columns else None
-            of_a = g("offset") if "offset" in pdf.columns else None
-            mk_a = g("mask_values") if "mask_values" in pdf.columns else None
+            sc_a, of_a, mk_a = opt(pdf, "scale"), opt(pdf, "offset"), opt(pdf, "mask_values")
             rid_a = g("raster_id") if multi_raster else None
             if has_weights:
                 wbuf_a, wdt_a = g("w_values"), g("w_dtype")
                 wnd_a = pdf["w_nodata"].to_numpy(dtype=np.float64, na_value=np.nan)
-                wsc_a = g("w_scale") if "w_scale" in pdf.columns else None
-                wof_a = g("w_offset") if "w_offset" in pdf.columns else None
-                wmk_a = g("w_mask_values") if "w_mask_values" in pdf.columns else None
-            out_rows = []
-            batch_pairs: list = []
-            batch_cells = 0
-            tile_buf: dict = {}
+                wsc_a, wof_a = opt(pdf, "w_scale"), opt(pdf, "w_offset")
+                wmk_a = opt(pdf, "w_mask_values")
+            pt_rows = np.stack([g(c).astype(np.int64) for c in passthrough], axis=1) \
+                if passthrough else np.zeros((n_rows, 0), dtype=np.int64)
 
-            def row_transform(j, nd, sa, oa, ma):
-                sc = float(sa[j]) if sa is not None and sa[j] is not None else 1.0
-                of = float(oa[j]) if oa is not None and oa[j] is not None else 0.0
-                mk = ma[j] if ma is not None else None
-                transformed = sc != 1.0 or of != 0.0 or mk is not None
-                # a transformed tile is decoded to float64 with undefined
-                # cells already NaN, so downstream nodata is cleared
-                return sc, of, mk, (None if transformed else nd)
+            # per-row decode parameters: (sc, of, mk, nd, raw nodata,
+            # weight transform, weight nodata after transform)
+            def row_params(j):
+                nd_raw = None if np.isnan(nd_a[j]) else float(nd_a[j])
+                sc, of, mk, nd = row_transform(j, nd_raw, sc_a, of_a, mk_a)
+                wt, wn0 = (1.0, 0.0, None, None), None
+                if has_weights:
+                    wn_raw = None if np.isnan(wnd_a[j]) else float(wnd_a[j])
+                    wsc, wof, wmk, wn0 = row_transform(j, wn_raw, wsc_a, wof_a, wmk_a)
+                    wt = (wsc, wof, wmk, wn_raw)
+                return sc, of, mk, nd, nd_raw, wt, wn0
 
-            tr_a, tc_a = g("tile_row"), g("tile_col")
-            bd_a = g("band") if "band" in pdf.columns else None
-            pt_arrays = [g(c) for c in passthrough]
+            params = [row_params(j) for j in range(n_rows)]
+            nd_row = np.array([np.nan if q[3] is None else q[3] for q in params])
+            wn_row = np.array([np.nan if q[6] is None else q[6] for q in params])
+            decoded: dict = {}
 
-            def tile_key(j):
-                return (tr_a[j], tc_a[j],
-                        rid_a[j] if rid_a is not None else None,
-                        bd_a[j] if bd_a is not None else None)
-
-            def decode_row(j, sc=1.0, of=0.0, mk=None, nd=None,
-                           wt=(1.0, 0.0, None, None)):
-                # cache by tile IDENTITY, not row index: the shuffle
-                # strategy joins one row per (zone, tile) pair, so the
-                # same payload appears on many rows of a partition —
-                # decode it once (read-once dedup across pairs)
-                key = tile_key(j)
-                got = tile_buf.get(key)
+            def decode_row(j):
+                got = decoded.get(j)
                 if got is None:
-                    tv = decode_value_tile(
-                        buf_a[j], dt_a[j], int(nr_a[j]), int(nc_a[j]),
-                        nodata=nd, scale=sc, offset=of, mask_buf=mk)
+                    sc, of, mk, _nd, nd_raw, wt, _wn0 = params[j]
+                    nr, nc = int(nr_a[j]), int(nc_a[j])
+                    tv = decode_value_tile(buf_a[j], dt_a[j], nr, nc, nodata=nd_raw,
+                                           scale=sc, offset=of, mask_buf=mk)
                     tw = None
                     if has_weights and wbuf_a[j] is not None:
                         wsc, wof, wmk, wnd = wt
-                        tw = decode_value_tile(
-                            wbuf_a[j], wdt_a[j], int(nr_a[j]), int(nc_a[j]),
-                            nodata=wnd, scale=wsc, offset=wof, mask_buf=wmk)
-                    got = tile_buf[key] = (tv, tw)
+                        tw = decode_value_tile(wbuf_a[j], wdt_a[j], nr, nc, nodata=wnd,
+                                               scale=wsc, offset=wof, mask_buf=wmk)
+                    got = decoded[j] = (tv, tw)
                 return got
 
-            def flush_batch():
-                nonlocal batch_pairs, batch_cells, tile_buf
-                if batch_pairs:
-                    frame = accumulate_pairs_batch(
-                        batch_pairs, tile_buf, key_specs,
-                        has_weights=has_weights, passthrough=passthrough,
-                        col_names=col_names, grid_ncols=int(gnc_a[0]),
-                        grid_xmin=float(gx_a[0]), grid_ymax=float(gy_a[0]),
-                        dx=float(dx_a[0]), dy=float(dy_a[0]),
-                        multi_raster=multi_raster, seg_cache=seg_cache)
-                else:
-                    frame = None
-                batch_pairs = []
-                batch_cells = 0
-                tile_buf = {}
-                return frame
+            # --- pair windows: crop to the zone-bbox ∩ tile sub-window
+            # so kernel work scales with the zone, not the tile (the
+            # reference's crop/shrink_to_fit, grid.h:145-238).  Zones
+            # without rings (EMPTY) cover nothing and are dropped.
+            live = za.ring_off[zo + 1] > za.ring_off[zo]
+            prow, zo = prow[live], zo[live]
+            xmin_r = gx_a + c0_a * dx_a
+            ymax_r = gy_a - r0_a * dy_a
+            bb = za.bbox[zo]
+            xm, ym = xmin_r[prow], ymax_r[prow]
+            dxp, dyp = dx_a[prow], dy_a[prow]
+            ncp, nrp = nc_a[prow], nr_a[prow]
+            c0z = np.clip(np.floor((bb[:, 0] - xm) / dxp), 0, ncp - 1)
+            c1z = np.minimum(np.maximum(np.ceil((bb[:, 2] - xm) / dxp), c0z + 1), ncp)
+            r0z = np.clip(np.floor((ym - bb[:, 3]) / dyp), 0, nrp - 1)
+            r1z = np.minimum(np.maximum(np.ceil((ym - bb[:, 1]) / dyp), r0z + 1), nrp)
+            c0z, c1z, r0z, r1z = (a.astype(np.int64) for a in (c0z, c1z, r0z, r1z))
+            cells = (r1z - r0z) * (c1z - c0z)
+            is_rect = za.is_rect[zo]
+            batched = (za.kind[zo] == AREAL) & (~is_rect | (cells <= RECT_BATCH_MAX_CELLS)) \
+                if use_batch and uniform else np.zeros(zo.size, dtype=bool)
 
+            # chunk boundaries between tile rows: a chunk's batched
+            # pairs hold >= CHUNK_CELLS window cells (bounds decoded-tile
+            # + stream memory); a tile's pairs stay in one chunk
+            row_cells = np.bincount(prow[batched], weights=cells[batched],
+                                    minlength=n_rows)
+            bounds, acc = [0], 0
             for j in range(n_rows):
-                nr, nc = int(nr_a[j]), int(nc_a[j])
-                row0, col0 = int(r0_a[j]), int(c0_a[j])
-                dx, dy = float(dx_a[j]), float(dy_a[j])
-                xmin = float(gx_a[j]) + col0 * dx
-                ymax = float(gy_a[j]) - row0 * dy
-                vals = None
-                wvals = None
-                w_nodata = None
-                nd_raw = None if np.isnan(nd_a[j]) else float(nd_a[j])
-                sc_j, of_j, mk_j, nd = row_transform(j, nd_raw, sc_a, of_a, mk_a)
-                wn0 = None
-                wt_j = (1.0, 0.0, None, None)
-                if has_weights:
-                    wn_raw = None if np.isnan(wnd_a[j]) else float(wnd_a[j])
-                    wsc_j, wof_j, wmk_j, wn0 = row_transform(
-                        j, wn_raw, wsc_a, wof_a, wmk_a)
-                    wt_j = (wsc_j, wof_j, wmk_j, wn_raw)
-                rid_row = rid_a[j] if multi_raster else None
-                pt_tuple = tuple(int(a[j]) for a in pt_arrays)
-                for z_entry in (zid_a[j] if grouped else (zid_a[j],)):
-                    if grouped_structs:
-                        zid = z_entry["zone_id"]
-                    else:
-                        zid = z_entry
-                    cached = geom_cache.get(zid)
-                    if cached is None:
-                        if geom_lookup is not None:
-                            wkt = geom_lookup.value[zid]
-                        elif grouped_structs:
-                            wkt = z_entry["geometry"]
-                        else:
-                            wkt = wkt_a[j]
-                        geom = parse_wkt(wkt)
-                        if len(geom_cache) > 65536:
-                            geom_cache.clear()
-                            seg_cache.clear()
-                        cached = geom_cache[zid] = (geom, geom.bbox)
-                    geom, (bx0, by0, bx1, by1) = cached
-                    # crop to the zone-bbox ∩ tile sub-window so kernel
-                    # work scales with the zone, not the tile (the
-                    # reference's crop/shrink_to_fit, grid.h:145-238)
-                    c0z = min(max(int(math.floor((bx0 - xmin) / dx)), 0), nc - 1)
-                    c1z = min(max(int(math.ceil((bx1 - xmin) / dx)), c0z + 1), nc)
-                    r0z = min(max(int(math.floor((ymax - by1) / dy)), 0), nr - 1)
-                    r1z = min(max(int(math.ceil((ymax - by0) / dy)), r0z + 1), nr)
-                    if use_batch_rows and geom.kind == "areal" and (
-                            not geom.is_rectangle() or
-                            (r1z - r0z) * (c1z - c0z) <= RECT_BATCH_MAX_CELLS):
-                        decode_row(j, sc_j, of_j, mk_j, nd_raw, wt_j)
-                        if not geom.is_rectangle() and zid not in seg_cache:
-                            seg_cache[zid] = zone_segments(geom)
-                        batch_pairs.append((zid, tile_key(j), r0z, r1z, c0z, c1z,
-                                            geom, row0, col0, nd, wn0, rid_row,
-                                            pt_tuple))
-                        batch_cells += (r1z - r0z) * (c1z - c0z)
-                        continue
-                    nrw, ncw = r1z - r0z, c1z - c0z
-                    cov = coverage_for_window(geom, xmin + c0z * dx, ymax - r0z * dy,
-                                              dx, dy, nrw, ncw)
-                    if not cov.any():
-                        continue
-                    pt = dict(zip(passthrough, pt_tuple))
-                    if vals is None:
-                        # decode once per tile row (read-once dedup,
-                        # feature_sequential_processor.cpp:85-113)
-                        vals, wvals = decode_row(j, sc_j, of_j, mk_j, nd_raw, wt_j)
-                        w_nodata = wn0
-                    rec = {"zone_id": zid, **pt}
-                    any_key = False
-                    for i, req, vname, kwargs in key_specs:
-                        if multi_raster and vname != rid_row:
-                            continue
-                        part = accumulate_pair(
-                            cov, vals[r0z:r1z, c0z:c1z], req=req, nodata=nd,
-                            weights=None if wvals is None else wvals[r0z:r1z, c0z:c1z],
-                            weight_nodata=w_nodata,
-                            row0=row0 + r0z, col0=col0 + c0z,
-                            grid_ncols=int(gnc_a[j]),
-                            grid_xmin=float(gx_a[j]), grid_ymax=float(gy_a[j]),
-                            dx=dx, dy=dy, **kwargs)
-                        if part is None:
-                            continue
-                        any_key = True
-                        hist = part.pop("hist", None)
-                        for k, v in part.items():
-                            rec[f"k{i}_{k}"] = v
-                        if hist is not None:
-                            # parallel primitive arrays (see
-                            # _partial_schema); numpy arrays convert
-                            # per-row C-level, never per-element Python
-                            uniq, hci, hciw = hist
-                            rec[f"k{i}_hist_v"] = uniq
-                            rec[f"k{i}_hist_ci"] = hci
-                            rec[f"k{i}_hist_ciw"] = hciw
-                    if any_key:
+                acc += row_cells[j]
+                if acc >= CHUNK_CELLS:
+                    bounds.append(j + 1)
+                    acc = 0
+            if bounds[-1] != n_rows:
+                bounds.append(n_rows)
+            pair_lo = np.searchsorted(prow, bounds)
+
+            out_rows = []
+            for ci in range(len(bounds) - 1):
+                decoded.clear()
+                sl = slice(pair_lo[ci], pair_lo[ci + 1])
+                for p in np.flatnonzero(~batched[sl]) + sl.start:
+                    j = int(prow[p])
+                    rec = _per_pair(za.geometry(int(zo[p])), za.zone_id[zo[p]], j, int(r0z[p]), int(r1z[p]), int(c0z[p]), int(c1z[p]),
+                                    params[j], decode_row,
+                                    row0=int(r0_a[j]), col0=int(c0_a[j]),
+                                    xmin=float(xmin_r[j]), ymax=float(ymax_r[j]),
+                                    dx=float(dx_a[j]), dy=float(dy_a[j]),
+                                    grid=(int(gnc_a[j]), float(gx_a[j]), float(gy_a[j])),
+                                    rid=rid_a[j] if multi_raster else None,
+                                    pt=dict(zip(passthrough, pt_rows[j].tolist())),
+                                    key_specs=key_specs, multi_raster=multi_raster)
+                    if rec is not None:
                         out_rows.append(rec)
-                # bound decoded-tile + stream memory: flush a full batch
-                # between tile rows (a tile's pairs stay in one batch)
-                if batch_cells >= CHUNK_CELLS:
-                    frame = flush_batch()
-                    if frame is not None and len(frame):
-                        yield frame
-            frame = flush_batch()
-            if frame is not None and len(frame):
-                yield frame
+                bi = np.flatnonzero(batched[sl]) + sl.start
+                if bi.size == 0:
+                    continue
+                bj = prow[bi]
+                for j in np.unique(bj):
+                    decode_row(int(j))
+                pairs = {"zone": zo[bi], "tile": bj,
+                         "r0": r0z[bi], "r1": r1z[bi], "c0": c0z[bi], "c1": c1z[bi],
+                         "row0": r0_a[bj], "col0": c0_a[bj],
+                         "nodata": nd_row[bj], "w_nodata": wn_row[bj],
+                         "raster_id": rid_a[bj] if multi_raster else None,
+                         "pt": pt_rows[bj]}
+                frame = accumulate_pairs_batch(
+                    pairs, za, decoded, key_specs,
+                    has_weights=has_weights, passthrough=passthrough,
+                    col_names=col_names, grid_ncols=int(gnc_a[0]),
+                    grid_xmin=float(gx_a[0]), grid_ymax=float(gy_a[0]),
+                    dx=float(dx_a[0]), dy=float(dy_a[0]),
+                    multi_raster=multi_raster)
+                if len(frame):
+                    yield frame
+            decoded.clear()
             if progress_acc is not None:
                 progress_acc.add(n_rows)
             if not out_rows:
@@ -629,6 +621,50 @@ def run_kernel(joined: DataFrame, keygroups, *, geom_lookup=None,
             yield out
 
     return joined.mapInPandas(kernel, schema=schema)
+
+
+def _per_pair(geom, zid, j, r0z, r1z, c0z, c1z, params, decode_row, *,
+              row0, col0, xmin, ymax, dx, dy, grid, rid, pt, key_specs,
+              multi_raster):
+    """One (zone, tile) pair through the per-pair kernel
+    (kernel.coverage_for_window + accumulate.accumulate_pair): the
+    route for linear geometries, large rectangles and the op sets the
+    batch path does not cover.  Returns the partial row or None."""
+    nrw, ncw = r1z - r0z, c1z - c0z
+    cov = coverage_for_window(geom, xmin + c0z * dx, ymax - r0z * dy,
+                              dx, dy, nrw, ncw)
+    if not cov.any():
+        return None
+    _sc, _of, _mk, nd, _nd_raw, _wt, w_nodata = params
+    # decode once per tile row (read-once dedup,
+    # feature_sequential_processor.cpp:85-113)
+    vals, wvals = decode_row(j)
+    gnc, gx, gy = grid
+    rec = {"zone_id": zid, **pt}
+    any_key = False
+    for i, req, vname, kwargs in key_specs:
+        if multi_raster and vname != rid:
+            continue
+        part = accumulate_pair(
+            cov, vals[r0z:r1z, c0z:c1z], req=req, nodata=nd,
+            weights=None if wvals is None else wvals[r0z:r1z, c0z:c1z],
+            weight_nodata=w_nodata,
+            row0=row0 + r0z, col0=col0 + c0z, grid_ncols=gnc,
+            grid_xmin=gx, grid_ymax=gy, dx=dx, dy=dy, **kwargs)
+        if part is None:
+            continue
+        any_key = True
+        hist = part.pop("hist", None)
+        for k, v in part.items():
+            rec[f"k{i}_{k}"] = v
+        if hist is not None:
+            # parallel primitive arrays (see _partial_schema); numpy
+            # arrays convert per-row C-level, never per-element Python
+            uniq, hci, hciw = hist
+            rec[f"k{i}_hist_v"] = uniq
+            rec[f"k{i}_hist_ci"] = hci
+            rec[f"k{i}_hist_ciw"] = hciw
+    return rec if any_key else None
 
 
 def _quantile_udf(q: float):
@@ -894,10 +930,6 @@ class ZonalExtractor:
                  grid: dict | None = None,
                  tile_size: int | None = None,
                  persist_joined: bool = False):
-        if strategy not in ("auto", "broadcast", "shuffle"):
-            raise ValueError(f"unknown strategy {strategy!r}: "
-                             "expected 'auto', 'broadcast' or 'shuffle'")
-        spark = zones.sparkSession
         if grid is None:
             grid = tiles.select("grid_xmin", "grid_ymax", "dx", "dy",
                                 "grid_nrows", "grid_ncols").first().asDict()
@@ -919,58 +951,34 @@ class ZonalExtractor:
             and "scale" not in tiles.columns
         self.has_weights = weight_tiles is not None
 
-        # zone bbox parse is op-independent: cache it (used by the
-        # pair explode AND the final left join).  _zone_ord records the
-        # input row order for preserve_order output (the reference's
-        # pandas writer reindexes to the input GeoDataFrame,
-        # exact_extract.py:497-501).
-        had_bbox = "xmin" in zones.columns
-        zones_b = attach_bbox(zones).withColumn(
-            "_zone_ord", F.monotonically_increasing_id()).persist()
-        self.zones_b = zones_b
+        # zone prep is op-independent: parse once and cache it (used by
+        # the pair explode, the geometry broadcast AND the final left
+        # join).  _zone_ord records the input row order for
+        # preserve_order output (the reference's pandas writer reindexes
+        # to the input GeoDataFrame, exact_extract.py:497-501).
+        prep = prepare_zones(zones, strategy, with_ord=True, persist=True)
+        self._prep = prep
+        self.zones_b = prep.zones_b
+        self.strategy = prep.strategy
+        self.geom_lookup = prep.lookup
 
         tiles_in = tiles
         if self.has_weights:
             w = prepare_weight_frame(weight_tiles, grid, tile_size)
             tiles_in = join_weight_frame(tiles, w)
 
-        if strategy == "auto":
-            strategy = "broadcast" \
-                if count_and_validate(zones_b, validate=not had_bbox) \
-                <= BROADCAST_ZONE_LIMIT else "shuffle"
-        elif not had_bbox:
-            raise_on_invalid_zones(zones_b)
-        self.strategy = strategy
-
-        self.geom_lookup = None
+        # ship each tile payload across the JVM->Arrow boundary exactly
+        # once: the per-tile zone hit-list rides the tile row.  Shuffle
+        # strategy: the lists are grouped BEFORE joining, so each tile
+        # payload crosses the shuffle exactly once (joining raw pairs
+        # would copy the payload once per matching zone — at a 100k-zone
+        # hot tile that is GBs of duplication).
+        pairs_agg = zone_lists(prep, grid, tile_size)
         self._pairs_agg = None
-        if strategy == "broadcast":
-            geoms = {r["zone_id"]: r["geometry"]
-                     for r in zones_b.select("zone_id", "geometry").collect()}
-            self.geom_lookup = spark.sparkContext.broadcast(geoms)
-            pairs = zone_tile_pairs(zones_b.select("zone_id", "xmin", "ymin", "xmax", "ymax"),
-                                    grid, tile_size)
-            # ship each tile payload across the JVM->Arrow boundary exactly
-            # once: attach the per-tile zone hit-list (the STRtree-query
-            # analog, raster_parallel_processor.cpp:142-162) to the tile row
-            pairs_agg = (pairs.groupBy("tile_row", "tile_col")
-                         .agg(F.collect_list("zone_id").alias("zone_ids"))).persist()
-            self._pairs_agg = pairs_agg
-            self.joined = tiles_in.join(F.broadcast(pairs_agg), ["tile_row", "tile_col"])
-        else:
-            # shuffle strategy: group the (zone, tile) pairs into one
-            # row per tile BEFORE joining, so each tile payload crosses
-            # the shuffle exactly once (joining raw pairs would copy the
-            # payload once per matching zone — at a 100k-zone hot tile
-            # that is GBs of duplication).  Geometry WKT rides in the
-            # per-tile zone list.
-            pairs = zone_tile_pairs(
-                zones_b.select("zone_id", "geometry", "xmin", "ymin", "xmax", "ymax"),
-                grid, tile_size)
-            pairs_agg = (pairs.groupBy("tile_row", "tile_col")
-                         .agg(F.collect_list(F.struct("zone_id", "geometry"))
-                              .alias("zone_structs")))
-            self.joined = tiles_in.join(pairs_agg, ["tile_row", "tile_col"])
+        if self.strategy == "broadcast":
+            pairs_agg = self._pairs_agg = pairs_agg.persist()
+            pairs_agg = F.broadcast(pairs_agg)
+        self.joined = tiles_in.join(pairs_agg, ["tile_row", "tile_col"])
         self._joined_persisted = persist_joined
         if persist_joined:
             # materialize the tile⋈zone-list join once: repeated
@@ -1103,19 +1111,17 @@ class ZonalExtractor:
         return rows
 
     def close(self) -> None:
-        """Release cached state (zone bboxes, pair join, geometry
+        """Release cached state (zone table, pair join, geometry
         broadcast).  Long-lived sessions that build many extractors
         should call this (or use the context manager) once the last
         result derived from this extractor has been materialized."""
-        self.zones_b.unpersist()
+        self._prep.unpersist()
         for df in getattr(self, "_caches", ()):
             df.unpersist()
         if self._pairs_agg is not None:
             self._pairs_agg.unpersist()
         if self._joined_persisted:
             self.joined.unpersist()
-        if self.geom_lookup is not None:
-            self.geom_lookup.unpersist()
 
     def __enter__(self):
         return self

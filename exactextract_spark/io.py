@@ -447,13 +447,11 @@ def zones_from_geojson(spark, source, *, id_property: str | None = None) -> Data
     return txt.mapInPandas(conv, schema=out_schema)
 
 
-def _wkt_to_geojson_geom(wkt: str) -> dict:
+def _wkt_to_geojson_geom(wkt: str, g) -> dict:
     """WKT → GeoJSON geometry dict (inverse of _geojson_geom_to_wkt;
-    covers the engine's geometry surface)."""
-    from .geom import parse_wkt as _parse
-
+    covers the engine's geometry surface); ``g`` is the parsed
+    Geometry of ``wkt``."""
     tag = wkt.lstrip().split("(", 1)[0].strip().upper()
-    g = _parse(wkt)
     rings = [[[float(x), float(y)] for x, y in r] for r in g.rings]
     if g.kind == "linear":
         if tag == "LINESTRING" and len(rings) == 1:
@@ -505,12 +503,17 @@ def write_geojson(df: DataFrame, path: str, *, geometry_col: str = "geometry",
         return v
 
     def to_feature(batches):
+        from .geom import parse_wkt_batch
+
         for pdf in batches:
             out = []
-            for rec in pdf.to_dict("records"):
+            # one batch parse per Arrow batch, not one per row
+            za = parse_wkt_batch(pdf[geometry_col].tolist()) if has_geom else None
+            for i, rec in enumerate(pdf.to_dict("records")):
                 geom = None
                 if has_geom and rec.get(geometry_col):
-                    geom = _wkt_to_geojson_geom(rec.pop(geometry_col))
+                    wkt = rec.pop(geometry_col)
+                    geom = _wkt_to_geojson_geom(wkt, za.geometry(i))
                 elif has_geom:
                     rec.pop(geometry_col, None)
                 fid = conv_value(rec.get(id_col))

@@ -41,7 +41,14 @@ import numpy as np
 
 from .geom import Geometry
 
-__all__ = ["coverage_fraction", "cell_lengths", "coverage_for_window"]
+__all__ = ["coverage_fraction", "cell_lengths", "coverage_for_window",
+           "suffix_coverage"]
+
+_EPS = np.finfo(np.float64).eps
+# residue zeroing (suffix_coverage): a fixed floor, crop-independent,
+# and the interpolation/summation bound factor for extreme rows
+_TINY = 1e-10
+_RESIDUE = 8.0
 
 
 def _clip_segments_to_band(u0, w0, u1, w1, nrows):
@@ -113,7 +120,7 @@ def _interval_measure(u0, w0, u1, w1, thresh, side):
     return m * dw, lo, hi
 
 
-def _accumulate_ring(u, w, nrows, ncols, darea, dcover):
+def _accumulate_ring(u, w, nrows, ncols, darea, dcover, pieces):
     u0, w0, u1, w1 = u[:-1], w[:-1], u[1:], w[1:]
     m = w0 != w1  # horizontal edges contribute no signed area
     u0, w0, u1, w1 = u0[m], w0[m], u1[m], w1[m]
@@ -129,6 +136,7 @@ def _accumulate_ring(u, w, nrows, ncols, darea, dcover):
     nz = dv_right != 0.0
     if np.any(nz):
         np.add.at(dcover, (row[nz], np.full(nz.sum(), ncols)), dv_right[nz])
+        pieces += np.bincount(row[nz], minlength=nrows)
 
     # middle portion: clamp to 0 <= u <= ncols, then split at columns
     du = pu1 - pu0
@@ -180,6 +188,7 @@ def _accumulate_ring(u, w, nrows, ncols, darea, dcover):
     pdw = cw1 - cw0
     np.add.at(darea, (srow, col), (0.5 * (cu0 + cu1) - col) * pdw)
     np.add.at(dcover, (srow, col), pdw)
+    pieces += np.bincount(srow, minlength=nrows)
 
 
 def _rect_coverage(bounds, xmin, ymin_w, dx, dy, nrows, ncols):
@@ -189,6 +198,35 @@ def _rect_coverage(bounds, xmin, ymin_w, dx, dy, nrows, ncols):
     covx = np.clip((np.minimum(x1, cx[1:]) - np.maximum(x0, cx[:-1])) / dx, 0.0, 1.0)
     covy = np.clip((np.minimum(y1, cy[1:]) - np.maximum(y0, cy[:-1])) / dy, 0.0, 1.0)
     return np.outer(covy, covx)  # bottom-up rows
+
+
+def suffix_coverage(darea: np.ndarray, dcover: np.ndarray, pieces: np.ndarray,
+                    row: np.ndarray, ncols: np.ndarray) -> np.ndarray:
+    """Cell coverage from the scanline accumulators (darea/dcover of
+    shape (rows, ncols+1), the last column the virtual strip right of
+    the window): partial area plus the suffix sum of full-width strips
+    strictly to the right, clipped to [0, 1].
+
+    Strips that cancel in exact arithmetic — edges entering and leaving
+    the row right of a cell no ring touches — leave float residues of a
+    few 1e-16 (sub-segment endpoints are interpolated in window
+    coordinates), and which cells carry one depends on where the window
+    was cropped (per tile vs whole zone), so min/max would count
+    different cells.  A cell whose |value| is at most the row's
+    rounding bound is therefore zeroed.  The bound is the fixed floor
+    _TINY (so the rule itself does not depend on the crop), raised only
+    for rows whose own bound _RESIDUE · ε · pieces · (pieces + row + 1
+    + ncols) exceeds it: ``pieces`` (per accumulator row) counts the
+    ring sub-segments scattered into the row, ``row`` is the row's
+    index inside its window (bottom-up) and ``ncols`` the window width.
+    Every input is per accumulator row or per cell, so the batch kernel
+    (concatenated windows, zero padding beyond each window's virtual
+    column) zeroes exactly the same cells as the per-pair kernel."""
+    suffix = np.cumsum(dcover[:, ::-1], axis=1)[:, ::-1]
+    cov = darea[:, :-1] + suffix[:, 1:]
+    bound = np.maximum(_TINY, _RESIDUE * _EPS * pieces * (pieces + row + 1 + ncols))
+    cov[np.abs(cov) <= bound[:, None]] = 0.0
+    return np.clip(cov, 0.0, 1.0)
 
 
 def coverage_fraction(geom: Geometry, xmin: float, ymax: float, dx: float, dy: float,
@@ -203,14 +241,12 @@ def coverage_fraction(geom: Geometry, xmin: float, ymax: float, dx: float, dy: f
         return np.asarray(out[::-1], dtype=np.float32)
     darea = np.zeros((nrows, ncols + 1), dtype=np.float64)
     dcover = np.zeros((nrows, ncols + 1), dtype=np.float64)
+    pieces = np.zeros(nrows, dtype=np.int64)
     for ring in geom.rings:
         u = (ring[:, 0] - xmin) / dx
         w = (ring[:, 1] - ymin_w) / dy
-        _accumulate_ring(u, w, nrows, ncols, darea, dcover)
-    # suffix over columns strictly to the right (incl. virtual column)
-    suffix = np.cumsum(dcover[:, ::-1], axis=1)[:, ::-1]
-    cov = darea[:, :ncols] + suffix[:, 1:]
-    cov = np.clip(cov, 0.0, 1.0)
+        _accumulate_ring(u, w, nrows, ncols, darea, dcover, pieces)
+    cov = suffix_coverage(darea, dcover, pieces, np.arange(nrows), ncols)
     return np.asarray(cov[::-1], dtype=np.float32)
 
 

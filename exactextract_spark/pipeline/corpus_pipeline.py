@@ -32,6 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from .packing import default_blocks
 from .text import _QUALITY_KEEP, text_stats, text_stats_oracle
 
 from . import stage_cache as _stage_cache
@@ -66,9 +67,8 @@ def corpus_pipeline(spark: SparkSession, sf_dir: str,
                  .select("w.*")
                  .transform(_stage_cache))
     # scale-adaptive prefix-sum blocking (hex buckets; block count
-    # never leaks into the result — see packing._default_blocks)
-    from .packing import _default_blocks
-    blocks = _default_blocks(spark, cap=256)
+    # never leaks into the result — see packing.default_blocks)
+    blocks = default_blocks(spark, cap=256)
     k = max(1, -(-256 // blocks))
     d = survivors.withColumn(
         "_blk", F.expr("conv(substring(h, 1, 2), 16, 10)").cast("long")) \

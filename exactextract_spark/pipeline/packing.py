@@ -41,17 +41,24 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-__all__ = ["pack_documents", "shuffle_documents"]
+__all__ = ["pack_documents", "shuffle_documents", "default_blocks"]
 
 
-def _default_blocks(spark: SparkSession, cap: int | None = None) -> int:
+def default_blocks(spark: SparkSession, cap: int | None = None) -> int:
     """Scale-adaptive prefix-sum block count: 4x the session's
     parallelism (finer than the core count so the hash-partitioned
     blocks balance — blocks == partitions leaves ~1/e of the cores
     idle by balls-in-bins), optionally capped (hex-byte blocking
     cannot exceed 256 buckets).  The block count never leaks into any
-    result — prefix sum is associative over ordered disjoint blocks."""
-    n = 4 * max(1, spark.sparkContext.defaultParallelism)
+    result — prefix sum is associative over ordered disjoint blocks.
+
+    Spark Connect sessions have no SparkContext; their parallelism is
+    read from ``spark.sql.shuffle.partitions`` instead."""
+    try:
+        par = spark.sparkContext.defaultParallelism
+    except (NotImplementedError, AttributeError):
+        par = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n = 4 * max(1, par)
     return min(n, cap) if cap else n
 
 
@@ -59,7 +66,7 @@ def pack_documents(spark: SparkSession, sf_dir: str,
                    budget: int = 4096,
                    num_partitions: int | None = None) -> DataFrame:
     if num_partitions is None:
-        num_partitions = _default_blocks(spark)
+        num_partitions = default_blocks(spark)
     docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
             .select("doc_id", "n_chars"))
     lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
@@ -110,7 +117,7 @@ def shuffle_documents(spark: SparkSession, sf_dir: str,
     global-order window, a broadcast of num_partitions rows — the
     permutation of 10^12 docs never funnels through one task."""
     if num_partitions is None:
-        num_partitions = _default_blocks(spark, cap=256)
+        num_partitions = default_blocks(spark, cap=256)
     docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
             .select("doc_id"))
     k = max(1, -(-256 // num_partitions))  # hex-byte buckets per block

@@ -18,8 +18,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
-from .extract import attach_bbox, count_and_validate, zone_tile_pairs
-from .geom import Geometry, parse_wkt
+from .extract import prepare_zones, zone_tile_pairs
+from .geom import GEOM_COLS, Geometry, ZoneArrays
 
 __all__ = ["point_in_polygon", "knn_tiles", "points_in_geom",
            "sample_points"]
@@ -206,20 +206,20 @@ def point_in_polygon(points: DataFrame, zones: DataFrame, *,
     hash-joins on (tile_row, tile_col); never a bbox range condition
     (which would plan as BroadcastNestedLoopJoin, O(points × zones)).
     Below ``broadcast_limit`` zones the exploded zone side is broadcast
-    and geometries ride a SparkContext broadcast dict; above it the
-    join shuffles both sides by tile key and geometry WKT travels in
-    the join (AQE handles skewed tiles).
+    and the parsed geometry rides a SparkContext broadcast
+    (extract.prepare_zones); above it the join shuffles both sides by
+    tile key and the geometry arrays travel in the join (AQE handles
+    skewed tiles).
 
     ``grid``/``tile``: optional tile lattice (same dict shape as the
     zonal grid); defaults to a ~sqrt(n_zones)-per-side lattice over the
     zones' bounding box."""
     import math
 
-    spark = zones.sparkSession
-    had_bbox = "xmin" in zones.columns
-    zb = attach_bbox(zones)
-    # one action: count for the lattice sizing + invalid-geometry check
-    n_zones = count_and_validate(zb, validate=not had_bbox)
+    # one validating action that also counts the zones (lattice sizing
+    # + strategy); the parsed geometry is broadcast below the limit
+    prep = prepare_zones(zones, "auto", limit=broadcast_limit)
+    zb, n_zones = prep.zones_b, prep.n_zones
     if grid is not None:
         t = int(tile or grid.get("tile") or 64)
         gx, gy = float(grid["grid_xmin"]), float(grid["grid_ymax"])
@@ -237,16 +237,12 @@ def point_in_polygon(points: DataFrame, zones: DataFrame, *,
     lattice = dict(grid_xmin=gx, grid_ymax=gy, dx=tw, dy=th,
                    grid_nrows=ntr, grid_ncols=ntc)
 
-    broadcast_zones = n_zones <= broadcast_limit
-    cols = ["zone_id", "xmin", "ymin", "xmax", "ymax"] + \
-        ([] if broadcast_zones else ["geometry"])
-    zpairs = zone_tile_pairs(zb.select(*dict.fromkeys(cols + ["geometry"])),
-                             lattice, 1).select(*cols, "tile_row", "tile_col")
-    lookup = None
-    if broadcast_zones:
-        geoms = {r["zone_id"]: r["geometry"]
-                 for r in zb.select("zone_id", "geometry").collect()}
-        lookup = spark.sparkContext.broadcast(geoms)
+    lookup = prep.lookup
+    geo = [] if lookup is not None else list(GEOM_COLS)
+    cols = ["zone_id", "xmin", "ymin", "xmax", "ymax"] + geo
+    zpairs = zone_tile_pairs(zb.select(*cols), lattice, 1) \
+        .select(*cols, "tile_row", "tile_col")
+    if lookup is not None:
         zpairs = F.broadcast(zpairs)
 
     # clamp point tile keys into the lattice: a point outside an
@@ -264,8 +260,7 @@ def point_in_polygon(points: DataFrame, zones: DataFrame, *,
     cand = p.join(zpairs, ["tile_row", "tile_col"]) \
         .where((F.col("x") >= F.col("xmin")) & (F.col("x") <= F.col("xmax")) &
                (F.col("y") >= F.col("ymin")) & (F.col("y") <= F.col("ymax"))) \
-        .select("point_id", "x", "y", "zone_id",
-                *([] if broadcast_zones else ["geometry"]))
+        .select("point_id", "x", "y", "zone_id", *geo)
 
     schema = T.StructType([
         T.StructField("point_id", T.LongType()),
@@ -273,19 +268,16 @@ def point_in_polygon(points: DataFrame, zones: DataFrame, *,
     ])
 
     def kernel(batches):
-        cache: dict = {}
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             out_pid, out_zid = [], []
             for zid, grp in pdf.groupby("zone_id", sort=False):
-                geom = cache.get(zid)
-                if geom is None:
-                    wkt = lookup.value[zid] if lookup is not None \
-                        else grp["geometry"].iloc[0]
-                    if len(cache) > 65536:
-                        cache.clear()
-                    geom = cache[zid] = parse_wkt(wkt)
+                if lookup is not None:
+                    za = lookup.value
+                    geom = za.geometry(int(za.ordinals([zid])[0]))
+                else:
+                    geom = ZoneArrays.from_records([grp.iloc[0]]).geometry(0)
                 ins = points_in_geom(geom, grp["x"].to_numpy(), grp["y"].to_numpy())
                 out_pid.extend(grp["point_id"].to_numpy()[ins])
                 out_zid.extend([zid] * int(ins.sum()))

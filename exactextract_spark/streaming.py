@@ -24,11 +24,9 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from . import extract as _extract
 from . import io as eio
-from .extract import (aggregate_partials, attach_bbox, count_and_validate,
-                      join_weight_frame, prepare_weight_frame,
-                      raise_on_invalid_zones, run_kernel, zone_tile_pairs)
+from .extract import (aggregate_partials, join_weight_frame, prepare_weight_frame,
+                      prepare_zones, run_kernel, zone_lists)
 from .ops import group_ops_by_key, parse_ops
 
 __all__ = ["StreamingZonalWriter", "stream_zonal_from_dir"]
@@ -40,9 +38,6 @@ class StreamingZonalWriter:
     def __init__(self, zones: DataFrame, grid: dict, ops, path: str,
                  raster_id: str, meta: dict, tile_size: int | None = None,
                  strategy: str = "auto", weight_tiles: DataFrame | None = None):
-        if strategy not in ("auto", "broadcast", "shuffle"):
-            raise ValueError(f"unknown strategy {strategy!r}: "
-                             "expected auto|broadcast|shuffle")
         self.spark = zones.sparkSession
         self.grid = grid
         self.tile_size = tile_size or grid.get("tile") or 64
@@ -59,41 +54,16 @@ class StreamingZonalWriter:
         self.path = path.rstrip("/")
         self.raster_id = raster_id
         self.meta = meta
-        had_bbox = "xmin" in zones.columns
-        zones_b = attach_bbox(zones).persist()
-        # same guard as the batch path (extract.py ZonalExtractor): the
-        # zone geometries are collected to the driver ONLY below the
-        # broadcast limit; above it the (zone_id, geometry) structs ride
-        # the per-tile hit-list through the shuffle instead — a 10⁸-zone
-        # streaming job must never OOM the driver at construction.
-        if strategy == "auto":
-            strategy = ("broadcast"
-                        if count_and_validate(zones_b, validate=not had_bbox)
-                        <= _extract.BROADCAST_ZONE_LIMIT else "shuffle")
-        elif not had_bbox:
-            raise_on_invalid_zones(zones_b)
-        self.strategy = strategy
-        self.zones_b = zones_b
-        self.geom_lookup = None
-        if strategy == "broadcast":
-            geoms = {r["zone_id"]: r["geometry"]
-                     for r in zones_b.select("zone_id", "geometry").collect()}
-            self.geom_lookup = self.spark.sparkContext.broadcast(geoms)
-            pairs = zone_tile_pairs(
-                zones_b.select("zone_id", "xmin", "ymin", "xmax", "ymax"),
-                grid, self.tile_size)
-            self.pairs_agg = (pairs.groupBy("tile_row", "tile_col")
-                              .agg(F.collect_list("zone_id")
-                                   .alias("zone_ids"))).persist()
-        else:
-            pairs = zone_tile_pairs(
-                zones_b.select("zone_id", "geometry",
-                               "xmin", "ymin", "xmax", "ymax"),
-                grid, self.tile_size)
-            self.pairs_agg = (pairs.groupBy("tile_row", "tile_col")
-                              .agg(F.collect_list(
-                                   F.struct("zone_id", "geometry"))
-                                   .alias("zone_structs"))).persist()
+        # same zone prep as the batch path (extract.prepare_zones): the
+        # parsed geometry is broadcast ONLY below the broadcast limit;
+        # above it the geometry arrays ride the per-tile hit-list
+        # through the shuffle instead — a 10⁸-zone streaming job must
+        # never OOM the driver at construction.
+        prep = prepare_zones(zones, strategy, persist=True)
+        self.strategy = prep.strategy
+        self.zones_b = prep.zones_b
+        self.geom_lookup = prep.lookup
+        self.pairs_agg = zone_lists(prep, grid, self.tile_size).persist()
 
     def process_batch(self, docs_batch: DataFrame, batch_id: int) -> None:
         # Exactly-once under foreachBatch replay: partials are stamped

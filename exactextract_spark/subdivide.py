@@ -25,12 +25,13 @@ mapInPandas kernel that emits one row per covered cell:
   assembly fails on a degenerate input, the cell falls back to a
   Sutherland–Hodgman clip (area-identical, possibly bridged WKT).
 
-Zone-count scaling: below ``BROADCAST_ZONE_LIMIT`` zones the geometry
-rides a SparkContext broadcast and the per-tile zone hit-list joins
-broadcast; above it the operator switches to the shuffle strategy
-(geometry WKT travels inside the per-tile zone list, each tile row
-crosses the shuffle exactly once) — the same two strategies as
-ZonalExtractor, so there is no upper bound on the zone count.
+Zone-count scaling: the zone prep is ZonalExtractor's
+(extract.prepare_zones): below ``BROADCAST_ZONE_LIMIT`` zones the
+parsed geometry arrays ride a SparkContext broadcast and the per-tile
+zone hit-list joins broadcast; above it the operator switches to the
+shuffle strategy (the geometry arrays travel inside the per-tile zone
+list, each tile row crosses the shuffle exactly once), so there is no
+upper bound on the zone count.
 """
 
 from __future__ import annotations
@@ -41,9 +42,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from .extract import (BROADCAST_ZONE_LIMIT, attach_bbox, count_and_validate,
-                      raise_on_invalid_zones, zone_tile_pairs)
-from .geom import parse_wkt
+from .extract import pair_zones, prepare_zones, zone_lists
+from .geom import AREAL
 from .kernel import coverage_fraction
 from .traversal import grid_cell_chains, left_hand_rings
 
@@ -162,47 +162,19 @@ def subdivide(zones: DataFrame, tiles: DataFrame, *,
     """One row per (zone, covered cell) with the covered piece's exact
     coverage fraction, bbox and polygon WKT.  Purely geometric — raster
     values are never read (the tile table supplies the windowing)."""
-    if strategy not in ("auto", "broadcast", "shuffle"):
-        raise ValueError(f"unknown strategy {strategy!r}: "
-                         "expected 'auto', 'broadcast' or 'shuffle'")
-    spark = zones.sparkSession
     if grid is None:
         grid = tiles.select("grid_xmin", "grid_ymax", "dx", "dy",
                             "grid_nrows", "grid_ncols").first().asDict()
     if tile_size is None:
         from .grid import infer_tile_size
         tile_size = infer_tile_size(grid, tiles)
-    had_bbox = "xmin" in zones.columns
-    zones_b = attach_bbox(zones)
-    if strategy == "auto":
-        # one action: zone count for the strategy choice + loud
-        # invalid-geometry check (skipped for caller-supplied bboxes)
-        strategy = "broadcast" \
-            if count_and_validate(zones_b, validate=not had_bbox) \
-            <= BROADCAST_ZONE_LIMIT else "shuffle"
-    elif not had_bbox:
-        raise_on_invalid_zones(zones_b)
-
-    lookup = None
-    if strategy == "broadcast":
-        geoms = {r["zone_id"]: r["geometry"]
-                 for r in zones_b.select("zone_id", "geometry").collect()}
-        lookup = spark.sparkContext.broadcast(geoms)
-        pairs = zone_tile_pairs(
-            zones_b.select("zone_id", "xmin", "ymin", "xmax", "ymax"),
-            grid, tile_size)
-        pairs_agg = pairs.groupBy("tile_row", "tile_col") \
-            .agg(F.collect_list("zone_id").alias("zone_ids"))
+    # one validating action (+ zone count for the auto strategy), then
+    # the parsed geometry is broadcast or rides the per-tile zone lists
+    prep = prepare_zones(zones, strategy)
+    lookup = prep.lookup
+    pairs_agg = zone_lists(prep, grid, tile_size)
+    if prep.strategy == "broadcast":
         pairs_agg = F.broadcast(pairs_agg)
-    else:
-        # huge zone tables: geometry WKT rides the per-tile zone list,
-        # one row per tile so the tile metadata crosses the shuffle once
-        pairs = zone_tile_pairs(
-            zones_b.select("zone_id", "geometry", "xmin", "ymin", "xmax", "ymax"),
-            grid, tile_size)
-        pairs_agg = pairs.groupBy("tile_row", "tile_col") \
-            .agg(F.collect_list(F.struct("zone_id", "geometry"))
-                 .alias("zone_structs"))
     joined = tiles.select("tile_row", "tile_col", "row0", "col0",
                           "nrows", "ncols", "grid_xmin", "grid_ymax",
                           "dx", "dy", "grid_ncols") \
@@ -211,9 +183,11 @@ def subdivide(zones: DataFrame, tiles: DataFrame, *,
     mcf = np.float32(min_coverage_frac)
 
     def kernel(batches):
-        cache: dict = {}
         for pdf in batches:
-            grouped_structs = "zone_structs" in pdf.columns
+            za, prow, zo = pair_zones(pdf, lookup)
+            if (za.kind[zo] != AREAL).any():
+                raise ValueError("subdivide requires areal geometries")
+            lo_p = np.searchsorted(prow, np.arange(len(pdf) + 1))
             # columnar accumulators for the vectorized branches
             acc = {c: [] for c in _COLS}
 
@@ -230,7 +204,9 @@ def subdivide(zones: DataFrame, tiles: DataFrame, *,
                 acc["y1"].append(py1)
                 acc["wkt"].append(wkt)
 
-            for rec in pdf.to_dict("records"):
+            tiles_pdf = pdf.drop(columns=[c for c in ("zone_ids", "zone_structs")
+                                          if c in pdf.columns])
+            for j, rec in enumerate(tiles_pdf.to_dict("records")):
                 nr, nc = int(rec["nrows"]), int(rec["ncols"])
                 row0, col0 = int(rec["row0"]), int(rec["col0"])
                 dx, dy = float(rec["dx"]), float(rec["dy"])
@@ -238,21 +214,11 @@ def subdivide(zones: DataFrame, tiles: DataFrame, *,
                 gncols = int(rec["grid_ncols"])
                 xmin_t = gx + col0 * dx
                 ymax_t = gy - row0 * dy
-                entries = rec["zone_structs"] if grouped_structs \
-                    else rec["zone_ids"]
-                for z_entry in entries:
-                    zid = z_entry["zone_id"] if grouped_structs else z_entry
-                    got = cache.get(zid)
-                    if got is None:
-                        wkt_in = z_entry["geometry"] if grouped_structs \
-                            else lookup.value[zid]
-                        g = parse_wkt(wkt_in)
-                        if g.kind != "areal":
-                            raise ValueError("subdivide requires areal geometries")
-                        if len(cache) > 65536:
-                            cache.clear()
-                        got = cache[zid] = (g, g.bbox, g.is_rectangle())
-                    g, (bx0, by0, bx1, by1), is_rect = got
+                for p in range(lo_p[j], lo_p[j + 1]):
+                    o = int(zo[p])
+                    zid = za.zone_id[o]
+                    g = za.geometry(o)
+                    (bx0, by0, bx1, by1), is_rect = g.bbox, bool(za.is_rect[o])
                     c0z = min(max(int(math.floor((bx0 - xmin_t) / dx)), 0), nc - 1)
                     c1z = min(max(int(math.ceil((bx1 - xmin_t) / dx)), c0z + 1), nc)
                     r0z = min(max(int(math.floor((ymax_t - by1) / dy)), 0), nr - 1)

@@ -14,8 +14,8 @@ import numpy as np
 import pytest
 
 from exactextract_spark.accumulate import accumulate_pair
-from exactextract_spark.batchkernel import accumulate_pairs_batch, zone_segments
-from exactextract_spark.geom import parse_wkt
+from exactextract_spark.batchkernel import accumulate_pairs_batch
+from exactextract_spark.geom import parse_wkt_batch
 from exactextract_spark.kernel import coverage_for_window
 from exactextract_spark.ops import group_ops_by_key, parse_ops
 
@@ -73,17 +73,17 @@ def test_batch_equals_perpair_fuzz(seed):
 
     pairs = []
     tile_vals = {}
-    seg_cache = {}
     want_rows = []
+    zones = parse_wkt_batch([_rand_poly(rng, gx, gx + G) for _ in range(12)],
+                            zone_id=np.array([f"z{z}" for z in range(12)], dtype=object))
     for z in range(12):
-        g = parse_wkt(_rand_poly(rng, gx, gx + G))
+        g = zones.geometry(z)
         zid = f"z{z}"
-        seg_cache[zid] = zone_segments(g)
         bx0, by0, bx1, by1 = g.bbox
         for tr in range(G // T):
             for tc in range(G // T):
                 row0, col0 = tr * T, tc * T
-                key = (tr, tc)
+                key = tr * (G // T) + tc
                 if key not in tile_vals:
                     tile_vals[key] = (vals[row0:row0 + T, col0:col0 + T],
                                       w[row0:row0 + T, col0:col0 + T])
@@ -94,8 +94,7 @@ def test_batch_equals_perpair_fuzz(seed):
                 c1z = min(max(int(math.ceil((bx1 - xmin) / dx)), c0z + 1), T)
                 r0z = min(max(int(math.floor((ymax - by1) / dy)), 0), T - 1)
                 r1z = min(max(int(math.ceil((ymax - by0) / dy)), r0z + 1), T)
-                pairs.append((zid, key, r0z, r1z, c0z, c1z, g,
-                              row0, col0, -999.0, None, None, ()))
+                pairs.append((z, key, r0z, r1z, c0z, c1z, row0, col0))
                 # per-pair reference
                 tv, tw = tile_vals[key]
                 cov = coverage_for_window(g, xmin + c0z * dx, ymax - r0z * dy,
@@ -130,11 +129,15 @@ def test_batch_equals_perpair_fuzz(seed):
             cols += [p + "min_v", p + "min_cell", p + "max_v", p + "max_cell"]
         if req.histogram:
             cols += [p + "hist_v", p + "hist_ci", p + "hist_ciw"]
-    got = accumulate_pairs_batch(pairs, tile_vals, key_specs,
+    cols_of = np.array(pairs, dtype=np.int64).T
+    batch = dict(zip(("zone", "tile", "r0", "r1", "c0", "c1", "row0", "col0"), cols_of))
+    batch.update(nodata=np.full(len(pairs), -999.0), w_nodata=np.full(len(pairs), np.nan),
+                 raster_id=None, pt=np.zeros((len(pairs), 0), dtype=np.int64))
+    got = accumulate_pairs_batch(batch, zones, tile_vals, key_specs,
                                  has_weights=True, passthrough=(),
                                  col_names=cols, grid_ncols=G, grid_xmin=gx,
                                  grid_ymax=gy, dx=dx, dy=dy,
-                                 multi_raster=False, seg_cache=seg_cache)
+                                 multi_raster=False)
     assert len(got) == len(want_rows), (len(got), len(want_rows))
     # batch rows come out pair-ordered like the reference loop; the
     # histogram rides each pair row as three parallel arrays

@@ -29,10 +29,15 @@ def test_include_cols_projection(spark):
 
 
 def test_invalid_wkt_raises(spark):
+    """Malformed WKT fails in zone prep, before any kernel job: the
+    error comes from building the query, not from collecting it."""
     tiles = tiles_from_array(spark, ARANGE9)
-    zones = spark.createDataFrame([("z0", "POLYGON ((not wkt")], ["zone_id", "geometry"])
-    with pytest.raises(Exception):
-        exact_extract(zones, tiles, ["count"]).collect()
+    for wkt in ("POLYGON ((not wkt",
+                "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0)",      # unbalanced
+                "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0)))"):
+        zones = spark.createDataFrame([("z0", wkt)], ["zone_id", "geometry"])
+        with pytest.raises(ValueError, match="invalid zone geometry"):
+            exact_extract(zones, tiles, ["count"])
 
 
 def test_duplicate_output_names_rejected(spark):

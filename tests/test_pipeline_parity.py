@@ -992,3 +992,24 @@ def test_verified_pairs_fused_differential(spark, tmp_path):
                 os.environ["EXACTEXTRACT_MINHASH_ARROW"] = prior
         assert len(a) > 0 or src == SF_DIR, "edge corpus must pair up"
         assert a.equals(b), (src, a, b)
+
+
+def test_default_blocks_without_spark_context():
+    """Spark Connect sessions have no SparkContext: the block count
+    falls back to spark.sql.shuffle.partitions."""
+    from exactextract_spark.pipeline.packing import default_blocks
+
+    class _Conf:
+        def get(self, key):
+            assert key == "spark.sql.shuffle.partitions"
+            return "6"
+
+    class _ConnectSession:
+        conf = _Conf()
+
+        @property
+        def sparkContext(self):
+            raise NotImplementedError("sparkContext() is not supported in Spark Connect")
+
+    assert default_blocks(_ConnectSession()) == 24
+    assert default_blocks(_ConnectSession(), cap=16) == 16
