@@ -10,7 +10,7 @@ key, so the join is shuffle-free), then a single Arrow-batched
 and re-encodes — the only Python stage, vectorized per tile, never
 per cell.  The derived table carries dtype=float64 with undefined
 cells as NaN, which the kernel already treats as nodata
-(accumulate.py: ``defined &= ~isnan``), so every downstream operator
+(batchkernel.py: ``defined_s = ~np.isnan(v) & ...``), so every downstream operator
 (weights, histograms, quantiles, subdivide) works unchanged.
 
 Reference parity: exactextract itself leaves band math to GDAL VRT

@@ -1,12 +1,12 @@
-"""Batch-vectorized coverage + accumulation across (zone, tile) pairs.
+"""Batch-vectorized coverage + accumulation across (zone, tile) pairs:
+the engine's one zonal statistics path.
 
-The per-pair kernel (kernel.coverage_for_window + accumulate.accumulate_pair)
-costs ~600µs of Python/numpy dispatch per pair — ~40 small-array numpy
-calls for a 12-vertex polygon on a 28×28 window.  That cost is per
-PAIR, not per cell, so it is the wall-time ceiling at scale: 10⁹ pairs
-would spend days in dispatch regardless of core count.  This module
-collapses the whole (zone × tile) batch into flat numpy streams so the
-dispatch cost is per BATCH:
+Per-pair Python/numpy dispatch costs ~600µs per pair — ~40 small-array
+numpy calls for a 12-vertex polygon on a 28×28 window.  That cost is
+per PAIR, not per cell, so it would be the wall-time ceiling at scale:
+10⁹ pairs would spend days in dispatch regardless of core count.  This
+module collapses a whole chunk of (zone, tile) pairs into flat numpy
+streams so the dispatch cost is per CHUNK:
 
 - polygon coverage: every pair's ring edges are concatenated into one
   segment stream (with a pair-id column) and pushed through the same
@@ -15,64 +15,46 @@ dispatch cost is per BATCH:
   bounds instead of scalars; np.add.at scatters into one tall
   accumulator whose rows are the concatenated pair windows (window
   height/width are tile-bounded, so the padded width is ≤ tile size).
-  The arithmetic is element-for-element the per-pair kernel's
-  (/root/reference/src/raster_cell_intersection.cpp semantics; see
+  The arithmetic is element-for-element kernel.coverage_fraction's
+  (reference raster_cell_intersection.cpp semantics; see
   kernel.py for the derivation), and the scatter order per target cell
-  is preserved, so COVERAGE is bit-identical to the per-pair path.
-  Aggregate float sums are bit-identical on exactly-representable data
-  (the driver fixture) and within 1 ulp otherwise (np.sum in
-  accumulate_pair is pairwise; np.bincount here is sequential).
-- rectangle coverage: closed-form per-axis overlap evaluated directly
-  on the cell stream (same formula as kernel._rect_coverage,
-  reference raster_cell_intersection.cpp:177-266).
+  is preserved, so COVERAGE is bit-identical to the per-window kernel.
+- rectangle coverage: the closed-form overlap per axis — one value per
+  (pair, column) and per (pair, row), the same floats as
+  kernel._rect_coverage (reference raster_cell_intersection.cpp:177-266)
+  — whose product is gathered onto the cell stream.
+- linear geometries: kernel.coverage_for_window per pair (traversal
+  length per cell, the reference's dispatch) written into the stream.
 - statistics: per-pair sums become np.bincount over the pair-id;
-  min/max with first-seen-cell tie-break become np.minimum.reduceat
-  over pair segment starts (tie rule: lowest cell_id,
+  min/max become np.minimum/maximum.reduceat over the pairs' segments
+  of the compacted stream, and the extreme's cell is the segment's
+  first cell holding it (tie rule: lowest cell_id,
   raster_stats.h:299-311); the histogram becomes a combined
-  (pair, value) np.unique + bincount, which preserves the per-pair
-  stream-order float addition of accumulate.accumulate_pair.
+  (pair, value) np.unique + bincount, which preserves each pair's
+  stream-order float addition; area_* coverage weights are a float32
+  factor per global row; stored cells are per-pair slices of the
+  compacted stream.  Only the opt-in stable variance's per-pair West
+  state (variance.h:20-72) loops over pairs (np.sum per pair).
 
-Not batched (per-pair fallback in extract.run_kernel): linear
-geometries, stored-cell arrays (req.cells), the opt-in stable variance,
-and the area_* coverage weights.  Set EXACTEXTRACT_BATCH=0 to force the
-per-pair path everywhere (used by the equality tests).
+Float sums are bit-identical to a per-pair np.sum on exactly
+representable data (the quarter-aligned fixture) and within 1 ulp otherwise
+(np.sum is pairwise, np.bincount sequential); the per-pair reference
+lives in tests/accumulate_reference.py.
 """
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 
-from .kernel import suffix_coverage
+from .geom import AREAL
+from .grid import spherical_row_areas
+from .kernel import coverage_for_window, suffix_coverage
 
-__all__ = ["batch_eligible", "accumulate_pairs_batch", "CHUNK_CELLS"]
+__all__ = ["accumulate_pairs_batch", "CHUNK_CELLS"]
 
-CHUNK_CELLS = int(os.environ.get("EXACTEXTRACT_BATCH_CHUNK", "4000000"))
-
-# Rectangle windows LARGER than this route to the per-pair path: the
-# per-pair rectangle kernel is O(nrows+ncols) closed-form (outer
-# product) while the flat stream is O(cells), so for big windows the
-# per-pair path wins despite its ~100µs dispatch.  Isolated microbench
-# puts the crossover near 1024 cells (batch 2.1x faster at 256,
-# break-even at 1024, per-pair 2.4x faster at 4096), but in the full
-# pipeline (Arrow batch + value-stream build) 512 measured slightly
-# better on the 1e9-px rect workload, so the default stays
-# conservative.  Non-rectangle pairs always batch — the batched
-# scanline coverage is ~2µs/pair vs ~430µs per-pair, which dominates
-# the stream-stats overhead at every window size up to a full tile.
-RECT_BATCH_MAX_CELLS = int(os.environ.get("EXACTEXTRACT_RECT_BATCH_CELLS", "512"))
-
-def batch_eligible(keygroups) -> bool:
-    if os.environ.get("EXACTEXTRACT_BATCH", "1") != "1":
-        return False
-    for key, req, _ in keygroups:
-        if req.cells or req.stable_variance:
-            return False
-        if key[3] not in ("fraction", "none"):  # coverage_weight area_*
-            return False
-    return True
+# window cells per kernel chunk (bounds decoded-tile + stream memory)
+CHUNK_CELLS = 4_000_000
 
 
 def _poly_coverage(zone, zones, idx, nrw, ncw, xmin_w, ymin_w, dx, dy):
@@ -227,10 +209,46 @@ def _poly_coverage(zone, zones, idx, nrw, ncw, xmin_w, ymin_w, dx, dy):
                            win_cols).astype(np.float32), off
 
 
+def _rect_axis(lo, n, b0, b1, d):
+    """Closed-form overlap of [b0, b1] with each of a pair's ``n`` cells
+    along one axis (cell k spans lo + d*k .. lo + d*(k+1), the float ops
+    of kernel._rect_coverage), flattened over the pairs.  Returns
+    (overlap, offset of each pair's first cell)."""
+    off = np.cumsum(n) - n
+    pid = np.repeat(np.arange(n.size), n)
+    k = np.arange(pid.size) - off[pid]
+    e0 = lo[pid] + d * k
+    e1 = lo[pid] + d * (k + 1)
+    return np.clip((np.minimum(b1[pid], e1) - np.maximum(b0[pid], e0)) / d,
+                   0.0, 1.0), off
+
+
+def _row_cells(start, length):
+    """start[k], start[k]+1, ..., start[k]+length[k]-1 for every k,
+    concatenated: stream positions (or any per-cell index) of whole
+    window rows."""
+    return np.repeat(start - (np.cumsum(length) - length), length) \
+        + np.arange(int(length.sum()))
+
+
+def _area_factor(coverage_weight, gr, grid_ymax, dx, dy):
+    """float32 cell area for the global rows ``gr`` under the area_*
+    coverage weights — the reference's float area raster
+    (raster_stats.h:277-296, raster_area.h:42-86) — or None."""
+    if coverage_weight == "area_cartesian":
+        return np.full(gr.size, np.float32(dx * dy))
+    unit = {"area_spherical_m2": 1.0, "area_spherical_km2": 1e-6}.get(coverage_weight)
+    if unit is None:
+        return None
+    lo = int(gr.min())
+    rows = spherical_row_areas(grid_ymax, dy, lo, int(gr.max()) - lo + 1, unit) * dx
+    return rows.astype(np.float32)[gr - lo]
+
+
 def accumulate_pairs_batch(pairs, zones, tile_vals, key_specs, *, has_weights,
                            passthrough, col_names, grid_ncols,
                            grid_xmin, grid_ymax, dx, dy, multi_raster):
-    """Process a chunk of areal (zone, tile) pairs; returns one columnar
+    """Process a chunk of (zone, tile) pairs; returns one columnar
     pandas DataFrame of partial-state rows (columns = col_names).
 
     pairs: dict of equal-length arrays (built in extract.run_kernel) —
@@ -250,51 +268,60 @@ def accumulate_pairs_batch(pairs, zones, tile_vals, key_specs, *, has_weights,
     gr0 = row0g + r0
     gc0 = col0g + c0
     # two-step origin arithmetic — tile origin first, then the window
-    # offset — so the floats match the per-pair path exactly even when
-    # grid origin/resolution are not exactly representable
-    # (extract.py computes xmin = gx + col0*dx, then xmin + c0z*dx)
+    # offset (xmin = gx + col0*dx, then xmin + c0z*dx) — so each
+    # window's floats are those of its tile, whatever the grid origin
+    # and resolution
     xmin_w = (grid_xmin + col0g * dx) + c0 * dx
     ymax_w = (grid_ymax - row0g * dy) - r0 * dy
     ymin_w = ymax_w - nrw * dy
     nodata = pairs["nodata"]
     w_nodata = pairs["w_nodata"]
     is_rect = zones.is_rect[zone]
+    areal = zones.kind[zone] == AREAL
 
     # --- coverage ---------------------------------------------------------
-    poly_idx = np.flatnonzero(~is_rect)
+    poly_idx = np.flatnonzero(areal & ~is_rect)
     cov2d = off = None
     if poly_idx.size:
         cov2d, off = _poly_coverage(zone, zones, poly_idx, nrw, ncw,
                                     xmin_w, ymin_w, dx, dy)
 
-    # --- cell stream (top-down rows, matching accumulate_pair order) -----
+    # --- cell stream: the pairs' windows in order, each row-major with
+    # rows top-down.  Indices are built per window ROW (pair rows_p,
+    # top-down row row_r, first cell row_start) and expanded with
+    # repeats, so per-cell index work stays a few passes ------------------
     areas = nrw * ncw
     total = int(areas.sum())
-    pid = np.repeat(np.arange(P), areas)
     starts = np.cumsum(areas) - areas
-    ordn = np.arange(total) - np.repeat(starts, areas)
-    r_td, cc = np.divmod(ordn, ncw[pid])
-    gr = gr0[pid] + r_td
-    gc = gc0[pid] + cc
+    pid = np.repeat(np.arange(P), areas)
+    rows_p = np.repeat(np.arange(P), nrw)
+    row_r = np.arange(rows_p.size) - np.repeat(np.cumsum(nrw) - nrw, nrw)
+    row_len = ncw[rows_p]
+    row_start = starts[rows_p] + row_r * row_len
+    gr_row = gr0[rows_p] + row_r
 
     cov = np.empty(total, dtype=np.float32)
-    rc = is_rect[pid]
-    if rc.any():
-        ri = np.flatnonzero(rc)
-        bx0, by0, bx1, by1 = zones.bbox[zone].T
-        pri = pid[ri]
-        x_lo = xmin_w[pri] + dx * cc[ri]
-        y_lo = ymin_w[pri] + dy * (nrw[pri] - 1 - r_td[ri])
-        covx = np.clip((np.minimum(bx1[pri], x_lo + dx) -
-                        np.maximum(bx0[pri], x_lo)) / dx, 0.0, 1.0)
-        covy = np.clip((np.minimum(by1[pri], y_lo + dy) -
-                        np.maximum(by0[pri], y_lo)) / dy, 0.0, 1.0)
-        cov[ri] = (covx * covy).astype(np.float32)
+    rect_row = is_rect[rows_p]
+    if rect_row.any():
+        bb = zones.bbox[zone]
+        covx, xoff = _rect_axis(xmin_w, np.where(is_rect, ncw, 0),
+                                bb[:, 0], bb[:, 2], dx)
+        covy, yoff = _rect_axis(ymin_w, np.where(is_rect, nrw, 0),
+                                bb[:, 1], bb[:, 3], dy)
+        rp, rl = rows_p[rect_row], row_len[rect_row]
+        cy = covy[yoff[rp] + nrw[rp] - 1 - row_r[rect_row]]  # bottom-up row
+        at = slice(None) if rect_row.all() else _row_cells(row_start[rect_row], rl)
+        cov[at] = (np.repeat(cy, rl) * covx[_row_cells(xoff[rp], rl)]).astype(np.float32)
     if poly_idx.size:
-        pi = np.flatnonzero(~rc)
-        ppi = pid[pi]
-        acc_row = off[ppi] + (nrw[ppi] - 1 - r_td[pi])
-        cov[pi] = cov2d[acc_row, cc[pi]]
+        poly_row = ~rect_row & areal[rows_p]
+        pp, pl = rows_p[poly_row], row_len[poly_row]
+        acc = off[pp] + nrw[pp] - 1 - row_r[poly_row]  # accumulator row
+        at = slice(None) if poly_row.all() else _row_cells(row_start[poly_row], pl)
+        cov[at] = cov2d.ravel()[_row_cells(acc * cov2d.shape[1], pl)]
+    for p in np.flatnonzero(~areal):
+        cov[starts[p]:starts[p] + areas[p]] = coverage_for_window(
+            zones.geometry(int(zone[p])), xmin_w[p], ymax_w[p], dx, dy,
+            int(nrw[p]), int(ncw[p])).ravel()
 
     # --- value / weight streams (cheap per-pair window slices) -----------
     v_parts = []
@@ -312,13 +339,16 @@ def accumulate_pairs_batch(pairs, zones, tile_vals, key_specs, *, has_weights,
     wv = np.concatenate(w_parts).astype(np.float64, copy=False) \
         if has_weights else None
 
-    nd_s = nodata[pid]
     # shared across keys: definedness depends only on the value stream
-    defined_s = ~np.isnan(v) & (v != nd_s)
-    need_cellid = any(req.minmax or req.pair_topk
-                      for _, req, _, _ in key_specs)
-    cell_id = gr * grid_ncols + gc if need_cellid else None
-    cov64 = None  # lazy shared float64 coverage
+    defined_s = ~np.isnan(v) & (v != np.repeat(nodata, areas))
+
+    def cell_of(pos):
+        """Global cell_id of stream positions ``pos``."""
+        p = pid[pos]
+        r, c = np.divmod(pos - starts[p], ncw[p])
+        return (gr0[p] + r) * grid_ncols + gc0[p] + c
+
+    cov_of = {}  # coverage weight -> effective float32 coverage stream
     wdef_s = None
     rid_arr = None
     if multi_raster:
@@ -338,21 +368,14 @@ def accumulate_pairs_batch(pairs, zones, tile_vals, key_specs, *, has_weights,
         if multi_raster:
             # per-pair raster match gathered onto the stream (a direct
             # object-array compare would run per CELL)
-            s = s & np.fromiter((r == vname for r in rid_arr),
-                                dtype=bool, count=P)[pid]
+            s = s & np.repeat(np.fromiter((r == vname for r in rid_arr),
+                                          dtype=bool, count=P), areas)
         if dv is not None:
             vals = np.where(defined_s, v, dv)
             used = s
         else:
             vals = v
             used = s & defined_s
-        if cw == "none":
-            c64 = np.ones(total)
-        else:
-            if cov64 is None:
-                cov64 = cov.astype(np.float64)
-            c64 = cov64
-
         upid = pid[used]
         n_per = np.bincount(upid, minlength=P)
         active = n_per > 0
@@ -360,32 +383,73 @@ def accumulate_pairs_batch(pairs, zones, tile_vals, key_specs, *, has_weights,
             key_results.append(None)
             continue
         active_any |= active
-        cu = c64[used]
+        # effective coverage: the threshold above reads the raw coverage;
+        # NONE resets to 1 after it, area_* multiplies in float32
+        # (raster_stats.h:277-296)
+        if cw == "none":
+            cu = np.ones(upid.size)
+        else:
+            if cw not in cov_of:
+                f = _area_factor(cw, gr_row, grid_ymax, dx, dy)
+                cov_of[cw] = cov if f is None else cov * np.repeat(f, row_len)
+            cu = cov_of[cw][used].astype(np.float64)
         vu = vals[used]
+        # each active pair's first cell in the compacted streams (upid
+        # is sorted, so a pair's segment ends where the next active
+        # pair's begins)
+        act_idx = np.flatnonzero(active)
+        seg = np.searchsorted(upid, act_idx)
+
+        def per_pair(ufunc, arr, fill):
+            red = np.full(P, fill, dtype=arr.dtype)
+            red[act_idx] = ufunc.reduceat(arr, seg)
+            return red
+
         res = {"n": n_per,
                "sum_c": np.bincount(upid, weights=cu, minlength=P),
                "sum_cx": np.bincount(upid, weights=vu * cu, minlength=P),
                "active": active}
         if req.variance:
             res["sum_cx2"] = np.bincount(upid, weights=vu * vu * cu, minlength=P)
+        if req.stable_variance:
+            # per-pair West state (variance.h:20-72), Chan-merged across
+            # pairs at agg time.  Summed per pair with np.sum (pairwise),
+            # not bincount: the merge amplifies the last-ulp rounding of
+            # each pair's mean into ~1e-9 relative variance error at
+            # |mean|/sd = 1e9, so the floats stay those of the per-pair
+            # reference (tests/accumulate_reference.py)
+            var = np.full((3, P), np.nan)
+            for p, a, b in zip(act_idx, seg, np.append(seg[1:], upid.size)):
+                cp, xp = cu[a:b], vu[a:b]
+                wsum = cp.sum()
+                mean = (xp * cp).sum() / wsum
+                d = xp - mean
+                var[:, p] = wsum, mean, (d * d * cp).sum()
+            res["var_w"], res["var_mean"], res["var_m2"] = var
 
-        wres_used = None
-        if req.weighted:
-            if wdef_s is None:
-                wdef_s = ~np.isnan(wv) & (wv != w_nodata[pid])
-            wu = wv[used]
-            wdef_u = wdef_s[used]
-            wres_used = np.where(wdef_u, wu, np.nan if dwt is None else dwt)
-            # undefined weights (no default): flag per pair and zero-
-            # fill the scalar sums (see accumulate.accumulate_pair —
-            # NaN would become SQL NULL through Arrow)
-            if dwt is None:
-                res["w_undef"] = np.bincount(upid[~wdef_u], minlength=P) > 0
-                ws_u = np.where(wdef_u, wu, 0.0)
+        # weights (the weight raster also serves as the second variable
+        # y): undefined cells take default_weight, else NaN — kept in
+        # the stored cells and histograms, but NaN cannot ride a
+        # top-level partial (pandas NaN becomes SQL NULL, which sum()
+        # would silently skip), so the scalar sums are zero-filled and
+        # the pair carries an explicit w_undef / y_undef flag that the
+        # finalize turns back into the reference's NaN propagation
+        # (raster_stats.h:252-296)
+        w_used = None
+        if req.weighted or req.cells_weights or req.needs_y:
+            fill = np.nan if dwt is None else dwt
+            if wv is None:
+                w_used = np.full(upid.size, fill)
             else:
-                res["w_undef"] = np.zeros(P, dtype=bool)
-                ws_u = wres_used
-            ciwi_u = cu * ws_u
+                if wdef_s is None:
+                    wdef_s = ~np.isnan(wv) & (wv != w_nodata[pid])
+                w_used = np.where(wdef_s[used], wv[used], fill)
+            w_nan = np.isnan(w_used)
+            w_fill = np.where(w_nan, 0.0, w_used)
+            w_undef = np.bincount(upid[w_nan], minlength=P) > 0
+        if req.weighted:
+            ciwi_u = cu * w_fill
+            res["w_undef"] = w_undef
             res["sum_cw"] = np.bincount(upid, weights=ciwi_u, minlength=P)
             res["sum_cxw"] = np.bincount(upid, weights=vu * ciwi_u, minlength=P)
             if req.weighted_variance:
@@ -394,64 +458,39 @@ def accumulate_pairs_batch(pairs, zones, tile_vals, key_specs, *, has_weights,
 
         if req.minmax:
             # min/max + first-seen tie cell over the COMPACTED stream:
-            # per-pair segment starts via searchsorted (upid is sorted).
-            # The streams are padded with one neutral element so empty
-            # trailing segments (cstarts == len) stay valid reduceat
-            # indices without truncating the last active segment;
-            # empty segments produce neutral values that `active` masks.
-            cstarts = np.searchsorted(upid, np.arange(P))
-            cid_u = cell_id[used]
-            minv = np.minimum.reduceat(np.append(vu, np.inf), cstarts)
-            maxv = np.maximum.reduceat(np.append(vu, -np.inf), cstarts)
-            LARGE = np.iinfo(np.int64).max
-            cand_min = np.where(vu == minv[upid], cid_u, LARGE)
-            cand_max = np.where(vu == maxv[upid], cid_u, LARGE)
-            res["min_v"] = minv
-            res["max_v"] = maxv
-            res["min_cell"] = np.minimum.reduceat(np.append(cand_min, LARGE), cstarts)
-            res["max_cell"] = np.minimum.reduceat(np.append(cand_max, LARGE), cstarts)
+            # a window is row-major, so within a pair the first cell
+            # holding the extreme is the lowest cell_id among equal
+            # values (raster_stats.h:299-311)
+            upos = np.flatnonzero(used)
+            for name, ufunc, fill in (("min", np.minimum, np.inf),
+                                      ("max", np.maximum, -np.inf)):
+                ext = per_pair(ufunc, vu, fill)
+                hit = np.flatnonzero(vu == ext[upid])
+                cell = np.zeros(P, dtype=np.int64)
+                cell[act_idx] = cell_of(upos[hit[np.searchsorted(hit, seg)]])
+                res[name + "_v"] = ext
+                res[name + "_cell"] = cell
 
-        # --- two-raster partials (y = the weight raster; NaN where y is
-        # undefined, matching the stored-array path's NaN weights) ---
-        y_used = wres_used
-        if y_used is None and req.needs_y:
-            if wv is None:
-                # no weight raster joined: y is undefined everywhere —
-                # same NaN semantics as the per-pair path's default fill
-                y_used = np.full(int(used.sum()),
-                                 np.nan if dwt is None else dwt)
-            else:
-                if wdef_s is None:
-                    wdef_s = ~np.isnan(wv) & (wv != w_nodata[pid])
-                wu2 = wv[used]
-                y_used = np.where(wdef_s[used], wu2,
-                                  np.nan if dwt is None else dwt)
+        # --- two-raster partials (y = the weight raster) ---
         if req.xy_moments or req.xy_change:
-            # per-pair undefined-y flag + zero-filled sums: a top-level
-            # NaN partial becomes SQL NULL at the Arrow boundary and
-            # F.sum/F.max silently skip it (see accumulate.accumulate_pair)
-            y_nan = np.isnan(y_used)
-            res["y_undef"] = np.bincount(upid[y_nan], minlength=P) > 0
-            y_fill = np.where(y_nan, 0.0, y_used)
+            res["y_undef"] = w_undef
         if req.xy_moments:
-            cyu = y_fill * cu
+            cyu = w_fill * cu
             res["sum_cy"] = np.bincount(upid, weights=cyu, minlength=P)
-            res["sum_cy2"] = np.bincount(upid, weights=y_fill * cyu,
+            res["sum_cy2"] = np.bincount(upid, weights=w_fill * cyu,
                                          minlength=P)
             res["sum_cxy"] = np.bincount(upid, weights=vu * cyu, minlength=P)
         if req.xy_change:
-            delta = vu - y_used
+            delta = vu - w_used
             chm = delta != 0  # NaN != 0 is True — same as SQL x != y
             res["chg_c"] = np.bincount(upid[chm], weights=cu[chm],
                                        minlength=P)
-            dfill = np.where(y_nan, 0.0, delta)
+            dfill = np.where(w_nan, 0.0, delta)
             res["chg_sd"] = np.bincount(upid, weights=dfill * cu, minlength=P)
-            cstarts_c = np.searchsorted(upid, np.arange(P))
-            res["chg_maxad"] = np.maximum.reduceat(
-                np.append(np.abs(dfill), -np.inf), cstarts_c)
+            res["chg_maxad"] = per_pair(np.maximum, np.abs(dfill), -np.inf)
         if req.pair_topk:
             k = int(req.pair_topk)
-            cid_u = cell_id[used]
+            cid_u = cell_of(np.flatnonzero(used))
             # per-pair (value desc, cell_id asc) order; upid is already
             # non-decreasing so segments stay contiguous after lexsort
             order = np.lexsort((cid_u, -vu, upid))
@@ -466,7 +505,7 @@ def accumulate_pairs_batch(pairs, zones, tile_vals, key_specs, *, has_weights,
             res["_topk"] = (cid_u[sel_i], vu[sel_i], cu[sel_i], lo_t, hi_t)
         if req.pair_hist:
             ux, ix = np.unique(vu, return_inverse=True)
-            uy, iy = np.unique(y_used, return_inverse=True)
+            uy, iy = np.unique(w_used, return_inverse=True)
             code1 = ix.astype(np.int64) * uy.size + iy
             u1, i1 = np.unique(code1, return_inverse=True)
             comb2 = upid.astype(np.int64) * u1.size + i1
@@ -485,11 +524,11 @@ def accumulate_pairs_batch(pairs, zones, tile_vals, key_specs, *, has_weights,
             nu = len(uniq_v)
             comb = upid.astype(np.int64) * nu + inv_v
             uc, inv2 = np.unique(comb, return_inverse=True)
-            # bincount adds in stream order — same float addition order
-            # as accumulate_pair's per-pair histogram
+            # bincount adds in stream order — each pair's buckets sum in
+            # its own cell order
             hci = np.bincount(inv2, weights=cu)
-            if req.weighted and wres_used is not None:
-                hciw = np.bincount(inv2, weights=cu * wres_used)
+            if req.weighted:
+                hciw = np.bincount(inv2, weights=cu * w_used)
             else:
                 hciw = np.zeros_like(hci)
             pair_of = uc // nu
@@ -497,6 +536,18 @@ def accumulate_pairs_batch(pairs, zones, tile_vals, key_specs, *, has_weights,
             lo_b = np.searchsorted(pair_of, np.arange(P), side="left")
             hi_b = np.searchsorted(pair_of, np.arange(P), side="right")
             res["_hist"] = (val_of, hci, hciw, lo_b, hi_b)
+        if req.cells:
+            # stored cells (raster_stats.h:759-765) in stream order: the
+            # post-transform coverage, NaN weights unless requested
+            wcol = w_used if w_used is not None else np.full(upid.size, np.nan)
+            cid_u = cell_of(np.flatnonzero(used))
+            gr_u, gc_u = np.divmod(cid_u, grid_ncols)
+            recs = list(zip(cid_u.tolist(), vu.tolist(), cu.tolist(),
+                            wcol.tolist(),
+                            (grid_xmin + (gc_u + 0.5) * dx).tolist(),
+                            (grid_ymax - (gr_u + 0.5) * dy).tolist()))
+            bnd = np.searchsorted(upid, np.arange(P + 1))
+            res["_cells"] = (recs, bnd[:-1], bnd[1:])
         key_results.append(res)
 
     rows = np.flatnonzero(active_any)
@@ -519,23 +570,27 @@ def accumulate_pairs_batch(pairs, zones, tile_vals, key_specs, *, has_weights,
             a[sel] = vals_arr[rows][sel]
             return a
 
+        def flag(vals_arr):
+            a = np.full(rows.size, None, dtype=object)
+            a[sel] = [bool(b) for b in vals_arr[rows][sel]]
+            return a
+
         out[pfx + "n"] = col(res["n"].astype(np.float64))
         out[pfx + "sum_c"] = col(res["sum_c"])
         out[pfx + "sum_cx"] = col(res["sum_cx"])
         if req.variance:
             out[pfx + "sum_cx2"] = col(res["sum_cx2"])
+        if req.stable_variance:
+            for name in ("var_w", "var_mean", "var_m2"):
+                out[pfx + name] = col(res[name])
         if req.weighted:
             out[pfx + "sum_cw"] = col(res["sum_cw"])
             out[pfx + "sum_cxw"] = col(res["sum_cxw"])
-            wu_col = np.full(rows.size, None, dtype=object)
-            wu_col[sel] = [bool(b) for b in res["w_undef"][rows][sel]]
-            out[pfx + "w_undef"] = wu_col
+            out[pfx + "w_undef"] = flag(res["w_undef"])
             if req.weighted_variance:
                 out[pfx + "sum_cx2w"] = col(res["sum_cx2w"])
         if req.xy_moments or req.xy_change:
-            yu_col = np.full(rows.size, None, dtype=object)
-            yu_col[sel] = [bool(b) for b in res["y_undef"][rows][sel]]
-            out[pfx + "y_undef"] = yu_col
+            out[pfx + "y_undef"] = flag(res["y_undef"])
         if req.xy_moments:
             out[pfx + "sum_cy"] = col(res["sum_cy"])
             out[pfx + "sum_cy2"] = col(res["sum_cy2"])
@@ -565,6 +620,8 @@ def accumulate_pairs_batch(pairs, zones, tile_vals, key_specs, *, has_weights,
     # (measured 2.5× faster than exploded scalar bucket rows at 150k
     # zones × 97 buckets).  NaN weighted sums survive inside array
     # elements (only top-level NaN becomes SQL NULL at the boundary).
+    # Stored cells are the one array<struct> column (a list of tuples
+    # per pair row).
     for (i, req, _vname, _kwargs), res in zip(key_specs, key_results):
         if res is None:
             continue
@@ -589,6 +646,9 @@ def accumulate_pairs_batch(pairs, zones, tile_vals, key_specs, *, has_weights,
                                  ((pfx + "topk_cell", tcell),
                                   (pfx + "topk_v", tv),
                                   (pfx + "topk_cov", tcov))))
+        if req.cells:
+            recs, lo_c, hi_c = res["_cells"]
+            array_groups.append((lo_c, hi_c, ((pfx + "cells", recs),)))
         for lo_b, hi_b, named in array_groups:
             for name, arr in named:
                 col_o = np.empty(rows.size, dtype=object)
@@ -598,13 +658,14 @@ def accumulate_pairs_batch(pairs, zones, tile_vals, key_specs, *, has_weights,
                         col_o[o] = arr[lo_b[g]:hi_b[g]]
                 out[name] = col_o
 
-    # a key inactive across the whole chunk leaves its histogram
-    # columns missing — they must reindex to None objects, not NaN
-    # floats (the Arrow array converter iterates non-None values)
+    # a key inactive across the whole chunk leaves its array columns
+    # missing — they must reindex to None objects, not NaN floats (the
+    # Arrow array converter iterates non-None values)
     for i, req, _vname, _kwargs in key_specs:
         suffixes = (("hist_v", "hist_ci", "hist_ciw") if req.histogram else ()) \
             + (("hist2_v", "hist2_w", "hist2_c") if req.pair_hist else ()) \
-            + (("topk_cell", "topk_v", "topk_cov") if req.pair_topk else ())
+            + (("topk_cell", "topk_v", "topk_cov") if req.pair_topk else ()) \
+            + (("cells",) if req.cells else ())
         for suffix in suffixes:
             name = f"k{i}_{suffix}"
             if name not in out:

@@ -6,7 +6,7 @@ Iceberg-snapshot checkpoints with per-partition lineage and metrics".
 The engine realizes this as batch-incremental processing (the reference
 is strictly batch — SURVEY.md §2.4): the unit of recovery is the TILE,
 because every scalar/histogram partial state is
-associative-commutative and merges exactly (accumulate.py).
+associative-commutative and merges exactly (batchkernel.py).
 
 Layout under ``path`` (plain parquet here; in production each commit
 maps to one Iceberg snapshot append — the semantics are identical:

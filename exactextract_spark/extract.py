@@ -52,10 +52,8 @@ import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
-from .accumulate import accumulate_pair
-from .geom import AREAL, GEOM_COLS, INVALID, ZoneArrays, parse_wkt_batch
-from .io import decode_tile, decode_value_tile
-from .kernel import coverage_for_window
+from .geom import GEOM_COLS, INVALID, ZoneArrays, parse_wkt_batch
+from .io import decode_value_tile
 from .ops import Op, group_ops_by_key, parse_ops
 
 __all__ = ["exact_extract", "attach_bbox", "zone_tile_pairs", "run_kernel",
@@ -127,6 +125,8 @@ _GEOM_FIELDS = [T.StructField("_geom_kind", T.ByteType()),
                 T.StructField("_geom_xy", T.ArrayType(T.DoubleType())),
                 T.StructField("_geom_rings", T.ArrayType(T.IntegerType()))]
 _BBOX = ("xmin", "ymin", "xmax", "ymax")
+# the grid every tile of one extraction shares (run_kernel checks it)
+_GRID_COLS = ("grid_xmin", "grid_ymax", "dx", "dy", "grid_ncols")
 
 
 def attach_bbox(zones: DataFrame) -> DataFrame:
@@ -431,15 +431,16 @@ def run_kernel(joined: DataFrame, keygroups, *, geom_lookup=None,
     Pair assembly is vectorized per Arrow batch: the hit-lists are
     flattened to (tile row, zone ordinal) arrays and every pair's
     zone-bbox ∩ tile crop window is computed with numpy from the
-    zones' parsed bboxes.  Areal pairs are routed through the
-    batch-vectorized path (batchkernel.py): coverage + statistics for
-    the whole (zone × tile) batch are computed with flat numpy streams,
-    so Python dispatch cost is per batch, not per pair.  Linear
-    geometries, stored-cell arrays, stable variance and area_* coverage
-    weights fall back to the per-pair path (kernel.py +
-    accumulate.py)."""
-    from .batchkernel import (CHUNK_CELLS, RECT_BATCH_MAX_CELLS,
-                              accumulate_pairs_batch, batch_eligible)
+    zones' parsed bboxes.  The pairs are cut into chunks of about
+    CHUNK_CELLS window cells (a tile's pairs stay in one chunk) and
+    each chunk goes through batchkernel.accumulate_pairs_batch, the
+    one statistics path: coverage + statistics for every pair —
+    areal or linear, any window size, any op set — are flat numpy
+    streams, so Python dispatch cost is per chunk, not per pair.
+    All tiles must share one grid (``_GRID_COLS``): the tile
+    assignment already used the first tile's grid, so a batch whose
+    tiles disagree raises ValueError."""
+    from .batchkernel import CHUNK_CELLS, accumulate_pairs_batch
 
     schema = _partial_schema(keygroups, passthrough)
     # key[0] is the logical raster name; when the joined rows carry a
@@ -451,9 +452,6 @@ def run_kernel(joined: DataFrame, keygroups, *, geom_lookup=None,
         for i, (key, req, _) in enumerate(keygroups)]
     multi_raster = len({k[0] for k, _, _ in keygroups}) > 1
     col_names = [f.name for f in schema.fields]
-    _arr_cols = [f.name for f in schema.fields
-                 if isinstance(f.dataType, T.ArrayType)]
-    use_batch = batch_eligible(keygroups)
 
     def opt(pdf, c):
         return pdf[c].to_numpy() if c in pdf.columns else None
@@ -472,19 +470,18 @@ def run_kernel(joined: DataFrame, keygroups, *, geom_lookup=None,
             n_rows = len(pdf)
             if n_rows == 0:
                 continue
+            mixed = [c for c in _GRID_COLS if pdf[c].nunique() > 1]
+            if mixed:
+                raise ValueError(
+                    "tiles of one extraction must share one grid; these "
+                    f"columns differ between tiles: {', '.join(mixed)}")
             za, prow, zo = pair_zones(pdf, geom_lookup)
             g = lambda c: pdf[c].to_numpy()
-            # the batch path evaluates grid constants once per batch;
-            # heterogeneous grids (not produced by any current source,
-            # but possible with hand-unioned tile tables) fall back
-            uniform = all(pdf[c].nunique() <= 1 for c in
-                          ("grid_xmin", "grid_ymax", "dx", "dy", "grid_ncols"))
             nr_a, nc_a = g("nrows").astype(np.int64), g("ncols").astype(np.int64)
             r0_a, c0_a = g("row0").astype(np.int64), g("col0").astype(np.int64)
-            gx_a = g("grid_xmin").astype(np.float64)
-            gy_a = g("grid_ymax").astype(np.float64)
-            dx_a, dy_a = g("dx").astype(np.float64), g("dy").astype(np.float64)
-            gnc_a = g("grid_ncols")
+            gx, gy = float(pdf["grid_xmin"].iat[0]), float(pdf["grid_ymax"].iat[0])
+            dx, dy = float(pdf["dx"].iat[0]), float(pdf["dy"].iat[0])
+            gnc = int(pdf["grid_ncols"].iat[0])
             buf_a, dt_a = g("values"), g("dtype")
             nd_a = pdf["nodata"].to_numpy(dtype=np.float64, na_value=np.nan)
             # optional on-read transform columns (scale/offset, mask band)
@@ -513,22 +510,18 @@ def run_kernel(joined: DataFrame, keygroups, *, geom_lookup=None,
             params = [row_params(j) for j in range(n_rows)]
             nd_row = np.array([np.nan if q[3] is None else q[3] for q in params])
             wn_row = np.array([np.nan if q[6] is None else q[6] for q in params])
-            decoded: dict = {}
 
             def decode_row(j):
-                got = decoded.get(j)
-                if got is None:
-                    sc, of, mk, _nd, nd_raw, wt, _wn0 = params[j]
-                    nr, nc = int(nr_a[j]), int(nc_a[j])
-                    tv = decode_value_tile(buf_a[j], dt_a[j], nr, nc, nodata=nd_raw,
-                                           scale=sc, offset=of, mask_buf=mk)
-                    tw = None
-                    if has_weights and wbuf_a[j] is not None:
-                        wsc, wof, wmk, wnd = wt
-                        tw = decode_value_tile(wbuf_a[j], wdt_a[j], nr, nc, nodata=wnd,
-                                               scale=wsc, offset=wof, mask_buf=wmk)
-                    got = decoded[j] = (tv, tw)
-                return got
+                sc, of, mk, _nd, nd_raw, wt, _wn0 = params[j]
+                nr, nc = int(nr_a[j]), int(nc_a[j])
+                tv = decode_value_tile(buf_a[j], dt_a[j], nr, nc, nodata=nd_raw,
+                                       scale=sc, offset=of, mask_buf=mk)
+                tw = None
+                if has_weights and wbuf_a[j] is not None:
+                    wsc, wof, wmk, wnd = wt
+                    tw = decode_value_tile(wbuf_a[j], wdt_a[j], nr, nc, nodata=wnd,
+                                           scale=wsc, offset=wof, mask_buf=wmk)
+                return tv, tw
 
             # --- pair windows: crop to the zone-bbox ∩ tile sub-window
             # so kernel work scales with the zone, not the tile (the
@@ -536,27 +529,22 @@ def run_kernel(joined: DataFrame, keygroups, *, geom_lookup=None,
             # without rings (EMPTY) cover nothing and are dropped.
             live = za.ring_off[zo + 1] > za.ring_off[zo]
             prow, zo = prow[live], zo[live]
-            xmin_r = gx_a + c0_a * dx_a
-            ymax_r = gy_a - r0_a * dy_a
+            xmin_r = gx + c0_a * dx
+            ymax_r = gy - r0_a * dy
             bb = za.bbox[zo]
             xm, ym = xmin_r[prow], ymax_r[prow]
-            dxp, dyp = dx_a[prow], dy_a[prow]
             ncp, nrp = nc_a[prow], nr_a[prow]
-            c0z = np.clip(np.floor((bb[:, 0] - xm) / dxp), 0, ncp - 1)
-            c1z = np.minimum(np.maximum(np.ceil((bb[:, 2] - xm) / dxp), c0z + 1), ncp)
-            r0z = np.clip(np.floor((ym - bb[:, 3]) / dyp), 0, nrp - 1)
-            r1z = np.minimum(np.maximum(np.ceil((ym - bb[:, 1]) / dyp), r0z + 1), nrp)
+            c0z = np.clip(np.floor((bb[:, 0] - xm) / dx), 0, ncp - 1)
+            c1z = np.minimum(np.maximum(np.ceil((bb[:, 2] - xm) / dx), c0z + 1), ncp)
+            r0z = np.clip(np.floor((ym - bb[:, 3]) / dy), 0, nrp - 1)
+            r1z = np.minimum(np.maximum(np.ceil((ym - bb[:, 1]) / dy), r0z + 1), nrp)
             c0z, c1z, r0z, r1z = (a.astype(np.int64) for a in (c0z, c1z, r0z, r1z))
             cells = (r1z - r0z) * (c1z - c0z)
-            is_rect = za.is_rect[zo]
-            batched = (za.kind[zo] == AREAL) & (~is_rect | (cells <= RECT_BATCH_MAX_CELLS)) \
-                if use_batch and uniform else np.zeros(zo.size, dtype=bool)
 
-            # chunk boundaries between tile rows: a chunk's batched
-            # pairs hold >= CHUNK_CELLS window cells (bounds decoded-tile
-            # + stream memory); a tile's pairs stay in one chunk
-            row_cells = np.bincount(prow[batched], weights=cells[batched],
-                                    minlength=n_rows)
+            # chunk boundaries between tile rows: a chunk's pairs hold
+            # >= CHUNK_CELLS window cells (bounds decoded-tile + stream
+            # memory); a tile's pairs stay in one chunk
+            row_cells = np.bincount(prow, weights=cells, minlength=n_rows)
             bounds, acc = [0], 0
             for j in range(n_rows):
                 acc += row_cells[j]
@@ -567,31 +555,14 @@ def run_kernel(joined: DataFrame, keygroups, *, geom_lookup=None,
                 bounds.append(n_rows)
             pair_lo = np.searchsorted(prow, bounds)
 
-            out_rows = []
-            for ci in range(len(bounds) - 1):
-                decoded.clear()
-                sl = slice(pair_lo[ci], pair_lo[ci + 1])
-                for p in np.flatnonzero(~batched[sl]) + sl.start:
-                    j = int(prow[p])
-                    rec = _per_pair(za.geometry(int(zo[p])), za.zone_id[zo[p]], j, int(r0z[p]), int(r1z[p]), int(c0z[p]), int(c1z[p]),
-                                    params[j], decode_row,
-                                    row0=int(r0_a[j]), col0=int(c0_a[j]),
-                                    xmin=float(xmin_r[j]), ymax=float(ymax_r[j]),
-                                    dx=float(dx_a[j]), dy=float(dy_a[j]),
-                                    grid=(int(gnc_a[j]), float(gx_a[j]), float(gy_a[j])),
-                                    rid=rid_a[j] if multi_raster else None,
-                                    pt=dict(zip(passthrough, pt_rows[j].tolist())),
-                                    key_specs=key_specs, multi_raster=multi_raster)
-                    if rec is not None:
-                        out_rows.append(rec)
-                bi = np.flatnonzero(batched[sl]) + sl.start
-                if bi.size == 0:
+            for lo, hi in zip(pair_lo[:-1], pair_lo[1:]):
+                if lo == hi:
                     continue
-                bj = prow[bi]
-                for j in np.unique(bj):
-                    decode_row(int(j))
-                pairs = {"zone": zo[bi], "tile": bj,
-                         "r0": r0z[bi], "r1": r1z[bi], "c0": c0z[bi], "c1": c1z[bi],
+                bj = prow[lo:hi]
+                decoded = {int(j): decode_row(int(j)) for j in np.unique(bj)}
+                pairs = {"zone": zo[lo:hi], "tile": bj,
+                         "r0": r0z[lo:hi], "r1": r1z[lo:hi],
+                         "c0": c0z[lo:hi], "c1": c1z[lo:hi],
                          "row0": r0_a[bj], "col0": c0_a[bj],
                          "nodata": nd_row[bj], "w_nodata": wn_row[bj],
                          "raster_id": rid_a[bj] if multi_raster else None,
@@ -599,72 +570,15 @@ def run_kernel(joined: DataFrame, keygroups, *, geom_lookup=None,
                 frame = accumulate_pairs_batch(
                     pairs, za, decoded, key_specs,
                     has_weights=has_weights, passthrough=passthrough,
-                    col_names=col_names, grid_ncols=int(gnc_a[0]),
-                    grid_xmin=float(gx_a[0]), grid_ymax=float(gy_a[0]),
-                    dx=float(dx_a[0]), dy=float(dy_a[0]),
+                    col_names=col_names, grid_ncols=gnc,
+                    grid_xmin=gx, grid_ymax=gy, dx=dx, dy=dy,
                     multi_raster=multi_raster)
                 if len(frame):
                     yield frame
-            decoded.clear()
             if progress_acc is not None:
                 progress_acc.add(n_rows)
-            if not out_rows:
-                yield pd.DataFrame(columns=col_names)
-                continue
-            out = pd.DataFrame(out_rows, columns=col_names)
-            # rows that carry only some keys' fields leave the other
-            # keys' array columns as NaN floats — Arrow needs None
-            for c in _arr_cols:
-                if c in out.columns:
-                    out[c] = [v if isinstance(v, (list, np.ndarray)) else None
-                              for v in out[c]]
-            yield out
 
     return joined.mapInPandas(kernel, schema=schema)
-
-
-def _per_pair(geom, zid, j, r0z, r1z, c0z, c1z, params, decode_row, *,
-              row0, col0, xmin, ymax, dx, dy, grid, rid, pt, key_specs,
-              multi_raster):
-    """One (zone, tile) pair through the per-pair kernel
-    (kernel.coverage_for_window + accumulate.accumulate_pair): the
-    route for linear geometries, large rectangles and the op sets the
-    batch path does not cover.  Returns the partial row or None."""
-    nrw, ncw = r1z - r0z, c1z - c0z
-    cov = coverage_for_window(geom, xmin + c0z * dx, ymax - r0z * dy,
-                              dx, dy, nrw, ncw)
-    if not cov.any():
-        return None
-    _sc, _of, _mk, nd, _nd_raw, _wt, w_nodata = params
-    # decode once per tile row (read-once dedup,
-    # feature_sequential_processor.cpp:85-113)
-    vals, wvals = decode_row(j)
-    gnc, gx, gy = grid
-    rec = {"zone_id": zid, **pt}
-    any_key = False
-    for i, req, vname, kwargs in key_specs:
-        if multi_raster and vname != rid:
-            continue
-        part = accumulate_pair(
-            cov, vals[r0z:r1z, c0z:c1z], req=req, nodata=nd,
-            weights=None if wvals is None else wvals[r0z:r1z, c0z:c1z],
-            weight_nodata=w_nodata,
-            row0=row0 + r0z, col0=col0 + c0z, grid_ncols=gnc,
-            grid_xmin=gx, grid_ymax=gy, dx=dx, dy=dy, **kwargs)
-        if part is None:
-            continue
-        any_key = True
-        hist = part.pop("hist", None)
-        for k, v in part.items():
-            rec[f"k{i}_{k}"] = v
-        if hist is not None:
-            # parallel primitive arrays (see _partial_schema); numpy
-            # arrays convert per-row C-level, never per-element Python
-            uniq, hci, hciw = hist
-            rec[f"k{i}_hist_v"] = uniq
-            rec[f"k{i}_hist_ci"] = hci
-            rec[f"k{i}_hist_ciw"] = hciw
-    return rec if any_key else None
 
 
 def _quantile_udf(q: float):

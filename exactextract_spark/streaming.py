@@ -5,7 +5,7 @@ The reference is strictly batch (SURVEY.md §2.4); this engine adds the
 streaming shape a 100 TB pipeline actually uses: raster-tile documents
 land continuously (new acquisitions), and per-zone statistics must stay
 queryable.  Because every scalar/histogram state is
-associative-commutative (accumulate.py), streaming ingest is just the
+associative-commutative (batchkernel.py), streaming ingest is just the
 checkpoint machinery driven by a stream:
 
     docs readStream → foreachBatch:

@@ -1,8 +1,10 @@
-"""Per-(zone, tile) partial-state accumulation (numpy, runs inside the
-vectorized Spark kernel UDF).
+"""Differential reference for the batch statistics kernel: the
+engine's former per-(zone, tile) accumulator, kept only to cross-check
+``exactextract_spark.batchkernel.accumulate_pairs_batch`` one pair at a
+time (tests/test_batchkernel_fuzz.py).
 
 Computes the mergeable sufficient statistics of the reference's
-``RasterStats`` (/root/reference/src/raster_stats.h:82-834) for one zone
+``RasterStats`` (raster_stats.h:82-834) for one zone
 x one tile:
 
 - ``sum_c``/``sum_cx``/``sum_cw``/``sum_cxw`` — the four sums
@@ -33,12 +35,18 @@ raster_stats.h:155-296 exactly:
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 
-from .grid import spherical_row_areas
-from .ops import StatRequirements
+from exactextract_spark.batchkernel import accumulate_pairs_batch
+from exactextract_spark.extract import _partial_schema
+from exactextract_spark.geom import parse_wkt_batch
+from exactextract_spark.grid import spherical_row_areas
+from exactextract_spark.kernel import coverage_for_window
+from exactextract_spark.ops import StatRequirements, group_ops_by_key, parse_ops
 
-__all__ = ["accumulate_pair"]
+__all__ = ["accumulate_pair", "batch_and_reference"]
 
 
 def _area_factor(coverage_weight: str, ymax: float, dy: float, dx: float,
@@ -213,8 +221,6 @@ def accumulate_pair(cov: np.ndarray, values: np.ndarray, *,
             hciw = np.bincount(inv, weights=ccov * w)
         else:
             hciw = np.zeros_like(hci)
-        # arrays, not tuples: run_kernel expands these into exploded
-        # scalar partial rows (one per (pair, value) bucket)
         out["hist"] = (uniq, hci, hciw)
 
     if req.cells:
@@ -228,3 +234,76 @@ def accumulate_pair(cov: np.ndarray, values: np.ndarray, *,
             for cid, v, cv, ww, x, y in zip(cell_ids, cvals, stored_cov, wcol, xs, ys)
         ]
     return out
+
+
+def batch_and_reference(ops, wkts, vals, weights, *, tile, gx, gy,
+                        dx=1.0, dy=1.0, nodata=-999.0):
+    """Runs the zones ``wkts`` over the raster ``vals`` (weight raster
+    ``weights``, both 2-D, tiled by ``tile`` with ragged edge tiles)
+    through extract.run_kernel's two inner steps: every (zone, tile)
+    pair with its zone-bbox crop window through
+    batchkernel.accumulate_pairs_batch, and pair by pair through
+    kernel.coverage_for_window + accumulate_pair.  Returns (keygroups,
+    batch rows, reference rows), both lists of dicts in pair order; a
+    reference row carries the histogram as ``k{i}_hist`` = (values,
+    sum_ci, sum_ciwi) and a ``_tile`` key."""
+    kg = group_ops_by_key(parse_ops(ops, weights="weights"))
+    key_specs = [(i, req, key[0], dict(
+        min_coverage_frac=key[2], coverage_weight=key[3],
+        default_value=key[4], default_weight=key[5], bin_width=key[6]))
+        for i, (key, req, _) in enumerate(kg)]
+    nr, nc = vals.shape
+    zones = parse_wkt_batch(list(wkts), zone_id=np.array(
+        [f"z{z}" for z in range(len(wkts))], dtype=object))
+    tiles = {}
+    for row0 in range(0, nr, tile):
+        for col0 in range(0, nc, tile):
+            win = np.s_[row0:row0 + tile, col0:col0 + tile]
+            tiles[len(tiles)] = (row0, col0, vals[win], weights[win])
+
+    pairs, want = [], []
+    for z in range(len(zones)):
+        g = zones.geometry(z)
+        bx0, by0, bx1, by1 = g.bbox
+        for key, (row0, col0, tv, tw) in tiles.items():
+            T_r, T_c = tv.shape
+            xmin = gx + col0 * dx
+            ymax = gy - row0 * dy
+            c0z = min(max(int(math.floor((bx0 - xmin) / dx)), 0), T_c - 1)
+            c1z = min(max(int(math.ceil((bx1 - xmin) / dx)), c0z + 1), T_c)
+            r0z = min(max(int(math.floor((ymax - by1) / dy)), 0), T_r - 1)
+            r1z = min(max(int(math.ceil((ymax - by0) / dy)), r0z + 1), T_r)
+            pairs.append((z, key, r0z, r1z, c0z, c1z, row0, col0))
+            cov = coverage_for_window(g, xmin + c0z * dx, ymax - r0z * dy,
+                                      dx, dy, r1z - r0z, c1z - c0z)
+            if not cov.any():
+                continue
+            rec = {"zone_id": f"z{z}", "_tile": key}
+            any_key = False
+            for i, req, _vn, kwargs in key_specs:
+                part = accumulate_pair(
+                    cov, tv[r0z:r1z, c0z:c1z], req=req, nodata=nodata,
+                    weights=tw[r0z:r1z, c0z:c1z], weight_nodata=None,
+                    row0=row0 + r0z, col0=col0 + c0z, grid_ncols=nc,
+                    grid_xmin=gx, grid_ymax=gy, dx=dx, dy=dy, **kwargs)
+                if part is None:
+                    continue
+                any_key = True
+                for k, v in part.items():
+                    rec[f"k{i}_{k}"] = v
+            if any_key:
+                want.append(rec)
+
+    cols = [f.name for f in _partial_schema(kg).fields]
+    batch = dict(zip(("zone", "tile", "r0", "r1", "c0", "c1", "row0", "col0"),
+                     np.array(pairs, dtype=np.int64).T))
+    batch.update(nodata=np.full(len(pairs), nodata),
+                 w_nodata=np.full(len(pairs), np.nan), raster_id=None,
+                 pt=np.zeros((len(pairs), 0), dtype=np.int64))
+    tile_vals = {k: (tv, tw) for k, (_r, _c, tv, tw) in tiles.items()}
+    got = accumulate_pairs_batch(batch, zones, tile_vals, key_specs,
+                                 has_weights=True, passthrough=(),
+                                 col_names=cols, grid_ncols=nc, grid_xmin=gx,
+                                 grid_ymax=gy, dx=dx, dy=dy,
+                                 multi_raster=False)
+    return kg, got.to_dict("records"), want

@@ -1,10 +1,13 @@
-"""The batch-vectorized kernel path (batchkernel.py, the default) must
-produce exactly the same results as the per-pair path
-(EXACTEXTRACT_BATCH=0) across the full stat surface."""
+"""The batch kernel (batchkernel.accumulate_pairs_batch, the one zonal
+statistics path) must produce exactly the per-pair reference's partial
+states (kernel.coverage_for_window + tests/accumulate_reference.py)
+across the full stat surface, and its chunking must not change results.
+The ZOO raster is integer-valued, so even the float sums are exact."""
 
 import numpy as np
 import pytest
 
+from accumulate_reference import batch_and_reference
 from exactextract_spark.extract import exact_extract
 from exactextract_spark.io import tiles_from_array
 
@@ -32,49 +35,51 @@ OPS = ["count", "sum", "mean", "min", "max", "variance", "stdev",
        "hist_bw=variety(bin_width=10)"]
 
 
-def _run(spark, monkeypatch, batch: bool, tile: int = 6):
-    monkeypatch.setenv("EXACTEXTRACT_BATCH", "1" if batch else "0")
+def _zoo_raster():
     rng = np.random.default_rng(7)
     data = rng.integers(0, 50, size=(20, 20)).astype(np.float64)
     data[3, 4] = -999
     data[11, 7] = np.nan
     w = (np.arange(400, dtype=np.float64) % 7).reshape(20, 20)
-    zdf = spark.createDataFrame(ZOO, ["zone_id", "geometry"])
-    t = tiles_from_array(spark, data, nodata=-999, tile=tile)
-    wt = tiles_from_array(spark, w, tile=tile, raster_id="w")
-    res = exact_extract(zdf, t, OPS, weight_tiles=wt)
-    return {r["zone_id"]: r.asDict() for r in res.collect()}
+    return data, w
+
+
+def _same(a, b) -> bool:
+    if b is None or (isinstance(b, float) and np.isnan(b)):
+        return a is None or (isinstance(a, float) and np.isnan(a))
+    return a == b
 
 
 @pytest.mark.parametrize("tile", [6, 32])
-def test_batch_equals_perpair(spark, monkeypatch, tile):
-    want = _run(spark, monkeypatch, batch=False, tile=tile)
-    got = _run(spark, monkeypatch, batch=True, tile=tile)
-    assert set(got) == set(want)
-    for z in want:
-        for k, v in want[z].items():
-            if v is None or (isinstance(v, float) and np.isnan(v)):
-                assert got[z][k] is None or \
-                    (isinstance(got[z][k], float) and np.isnan(got[z][k])), (z, k, got[z][k], v)
-            else:
-                assert got[z][k] == v, (z, k, got[z][k], v)
+def test_batch_equals_perpair(tile):
+    data, w = _zoo_raster()
+    kg, got, want = batch_and_reference(OPS, [g for _, g in ZOO], data, w,
+                                        tile=tile, gx=0.0, gy=20.0)
+    assert len(got) == len(want)
+    for out_row, rec in zip(got, want):
+        assert out_row["zone_id"] == rec["zone_id"]
+        for c, a in out_row.items():
+            if "_hist_" in c:
+                continue
+            assert _same(a, rec.get(c)), (rec["zone_id"], rec["_tile"], c, a, rec.get(c))
+        for i, (_, req, _) in enumerate(kg):
+            h = rec.get(f"k{i}_hist")
+            if not req.histogram or h is None:
+                continue
+            for sfx, arr in zip(("hist_v", "hist_ci", "hist_ciw"), h):
+                np.testing.assert_array_equal(out_row[f"k{i}_{sfx}"], arr)
 
 
 def test_batch_equals_perpair_unweighted_with_chunking(spark, monkeypatch):
-    """Tiny chunk budget forces multiple flushes per partition."""
-    monkeypatch.setenv("EXACTEXTRACT_BATCH", "1")
+    """Tiny chunk budget forces multiple flushes per partition; the
+    results equal the default one-chunk run."""
     import exactextract_spark.batchkernel as bk
-    import exactextract_spark.extract as ex
-    monkeypatch.setattr(bk, "CHUNK_CELLS", 64)
 
     data = np.arange(1, 401, dtype=np.float64).reshape(20, 20)
     zdf = spark.createDataFrame(ZOO, ["zone_id", "geometry"])
     t = tiles_from_array(spark, data, tile=6)
-    got = {r["zone_id"]: r.asDict()
-           for r in exact_extract(zdf, t, ["count", "sum", "min", "max",
-                                           "median"]).collect()}
-    monkeypatch.setenv("EXACTEXTRACT_BATCH", "0")
-    want = {r["zone_id"]: r.asDict()
-            for r in exact_extract(zdf, t, ["count", "sum", "min", "max",
-                                            "median"]).collect()}
+    ops = ["count", "sum", "min", "max", "median"]
+    want = {r["zone_id"]: r.asDict() for r in exact_extract(zdf, t, ops).collect()}
+    monkeypatch.setattr(bk, "CHUNK_CELLS", 64)
+    got = {r["zone_id"]: r.asDict() for r in exact_extract(zdf, t, ops).collect()}
     assert got == want

@@ -1,35 +1,32 @@
 """Function-level differential fuzz: accumulate_pairs_batch vs the
-per-pair (coverage_for_window + accumulate_pair) composition on random
-polygons, windows, and nodata patterns.
+per-pair composition (kernel.coverage_for_window + the reference
+accumulator in tests/accumulate_reference.py) on random zones, windows,
+grids and nodata patterns — polygons, linear zones, large rectangles,
+the stable variance, stored cells and the area_* coverage weights.
 
-Counts, min/max values/cells and histogram entries must match
-BIT-EXACTLY (identical comparisons and bincount order on both paths).
-The weighted/unweighted SUMS are compared to 1-ulp-level relative
-tolerance: accumulate_pair uses np.sum (pairwise summation) while the
-batch path uses np.bincount (sequential), which differ in the last ulp
-on arbitrary real values — on integer-exact data (the driver fixture)
-both are exact."""
+Counts, min/max values/cells, histogram values and stored cells must
+match BIT-EXACTLY (identical comparisons and bincount order on both
+paths).  The weighted/unweighted SUMS (and the quantities derived from
+them: the stable variance's per-pair mean and M2, histogram bucket sums)
+are compared to 1-ulp-level relative tolerance: the reference uses
+np.sum (pairwise summation) while the batch path uses np.bincount
+(sequential), which differ in the last ulp on arbitrary real values —
+on integer-exact data (the quarter-aligned fixture) both are exact."""
+
+import re
 
 import numpy as np
 import pytest
 
-from exactextract_spark.accumulate import accumulate_pair
-from exactextract_spark.batchkernel import accumulate_pairs_batch
-from exactextract_spark.geom import parse_wkt_batch
-from exactextract_spark.kernel import coverage_for_window
-from exactextract_spark.ops import group_ops_by_key, parse_ops
+from accumulate_reference import batch_and_reference
 
 OPS = ["count", "sum", "mean", "min", "max", "variance",
        "weighted_mean", "weighted_sum", "variety", "median",
        "mc=sum(min_coverage_frac=0.4)", "dv=sum(default_value=7)"]
 
-
-def _key_specs():
-    kg = group_ops_by_key(parse_ops(OPS, weights="weights"))
-    return kg, [(i, req, key[0], dict(
-        min_coverage_frac=key[2], coverage_weight=key[3],
-        default_value=key[4], default_weight=key[5], bin_width=key[6]))
-        for i, (key, req, _) in enumerate(kg)]
+# fields holding float sums (or values derived from them)
+_SUMS = ("sum_c", "sum_cx", "sum_cx2", "sum_cw", "sum_cxw", "sum_cx2w",
+         "var_w", "var_mean", "var_m2")
 
 
 def _rand_poly(rng, lo, hi):
@@ -57,109 +54,77 @@ def _rand_poly(rng, lo, hi):
     return wkt
 
 
-@pytest.mark.parametrize("seed", range(8))
-def test_batch_equals_perpair_fuzz(seed):
-    rng = np.random.default_rng(seed)
-    kg, key_specs = _key_specs()
-    T = int(rng.integers(5, 20))          # tile size
-    G = T * int(rng.integers(1, 4))       # grid side
-    gx, gy = float(rng.integers(-5, 5)), float(G + rng.integers(-2, 3))
-    dx = dy = 1.0
+def _rand_line(rng, lo, hi):
+    """A LINESTRING or MULTILINESTRING; some vertices snap to grid
+    lines and some segments are axis-parallel."""
+    def part():
+        m = int(rng.integers(2, 8))
+        pts = rng.uniform(lo, hi, (m, 2))
+        snap = rng.random(m) < 0.3
+        pts[snap] = np.round(pts[snap])
+        if m > 2 and rng.random() < 0.5:
+            pts[1, 1] = pts[0, 1]  # horizontal segment
+        return "(" + ", ".join(f"{x} {y}" for x, y in pts) + ")"
+    if rng.random() < 0.5:
+        return "LINESTRING " + part()
+    return "MULTILINESTRING (" + ", ".join(
+        part() for _ in range(int(rng.integers(2, 4)))) + ")"
+
+
+def _rand_rect(rng, xlo, ylo, span):
+    """A rectangle inside [xlo, ylo] + span (a little beyond its lower
+    corner) wide enough that most of its tile windows exceed 512 cells
+    (tiles are >= 32 cells a side)."""
+    x0 = rng.uniform(xlo - 1, xlo + span / 3)
+    y0 = rng.uniform(ylo - 1, ylo + span / 3)
+    w, h = rng.uniform(span / 2, span, 2)
+    return (f"POLYGON (({x0} {y0}, {x0 + w} {y0}, {x0 + w} {y0 + h}, "
+            f"{x0} {y0 + h}, {x0} {y0}))")
+
+
+def _raster(rng, G):
+    """Random G x G values (nodata, NaN) and weights (missing weights)."""
     vals = rng.uniform(-50, 50, (G, G))
     vals[rng.random((G, G)) < 0.1] = -999.0          # nodata
     vals[rng.random((G, G)) < 0.05] = np.nan
     w = rng.uniform(0, 5, (G, G))
     w[rng.random((G, G)) < 0.03] = np.nan            # missing weights
+    return vals, w
 
-    pairs = []
-    tile_vals = {}
-    want_rows = []
-    zones = parse_wkt_batch([_rand_poly(rng, gx, gx + G) for _ in range(12)],
-                            zone_id=np.array([f"z{z}" for z in range(12)], dtype=object))
-    for z in range(12):
-        g = zones.geometry(z)
-        zid = f"z{z}"
-        bx0, by0, bx1, by1 = g.bbox
-        for tr in range(G // T):
-            for tc in range(G // T):
-                row0, col0 = tr * T, tc * T
-                key = tr * (G // T) + tc
-                if key not in tile_vals:
-                    tile_vals[key] = (vals[row0:row0 + T, col0:col0 + T],
-                                      w[row0:row0 + T, col0:col0 + T])
-                xmin = gx + col0 * dx
-                ymax = gy - row0 * dy
-                import math
-                c0z = min(max(int(math.floor((bx0 - xmin) / dx)), 0), T - 1)
-                c1z = min(max(int(math.ceil((bx1 - xmin) / dx)), c0z + 1), T)
-                r0z = min(max(int(math.floor((ymax - by1) / dy)), 0), T - 1)
-                r1z = min(max(int(math.ceil((ymax - by0) / dy)), r0z + 1), T)
-                pairs.append((z, key, r0z, r1z, c0z, c1z, row0, col0))
-                # per-pair reference
-                tv, tw = tile_vals[key]
-                cov = coverage_for_window(g, xmin + c0z * dx, ymax - r0z * dy,
-                                          dx, dy, r1z - r0z, c1z - c0z)
-                if not cov.any():
-                    continue
-                rec = {"zone_id": zid, "_tile": key}
-                any_key = False
-                for i, req, _vn, kwargs in key_specs:
-                    part = accumulate_pair(
-                        cov, tv[r0z:r1z, c0z:c1z], req=req, nodata=-999.0,
-                        weights=tw[r0z:r1z, c0z:c1z], weight_nodata=None,
-                        row0=row0 + r0z, col0=col0 + c0z, grid_ncols=G,
-                        grid_xmin=gx, grid_ymax=gy, dx=dx, dy=dy, **kwargs)
-                    if part is None:
-                        continue
-                    any_key = True
-                    for k, v in part.items():
-                        rec[f"k{i}_{k}"] = v
-                if any_key:
-                    want_rows.append(rec)
 
-    cols = ["zone_id"]
-    for i, (_, req, _) in enumerate(kg):
-        p = f"k{i}_"
-        cols += [p + "n", p + "sum_c", p + "sum_cx"]
-        if req.variance:
-            cols.append(p + "sum_cx2")
-        if req.weighted:
-            cols += [p + "sum_cw", p + "sum_cxw", p + "w_undef"]
-        if req.minmax:
-            cols += [p + "min_v", p + "min_cell", p + "max_v", p + "max_cell"]
-        if req.histogram:
-            cols += [p + "hist_v", p + "hist_ci", p + "hist_ciw"]
-    cols_of = np.array(pairs, dtype=np.int64).T
-    batch = dict(zip(("zone", "tile", "r0", "r1", "c0", "c1", "row0", "col0"), cols_of))
-    batch.update(nodata=np.full(len(pairs), -999.0), w_nodata=np.full(len(pairs), np.nan),
-                 raster_id=None, pt=np.zeros((len(pairs), 0), dtype=np.int64))
-    got = accumulate_pairs_batch(batch, zones, tile_vals, key_specs,
-                                 has_weights=True, passthrough=(),
-                                 col_names=cols, grid_ncols=G, grid_xmin=gx,
-                                 grid_ymax=gy, dx=dx, dy=dy,
-                                 multi_raster=False)
+def _assert_same(kg, got, want_rows):
     assert len(got) == len(want_rows), (len(got), len(want_rows))
     # batch rows come out pair-ordered like the reference loop; the
     # histogram rides each pair row as three parallel arrays
-    for out_row, rec in zip(got.to_dict("records"), want_rows):
+    for out_row, rec in zip(got, want_rows):
         assert out_row["zone_id"] == rec["zone_id"]
-        for c in cols[1:]:
+        for c in list(out_row)[1:]:
             a = out_row.get(c)
-            if "_hist_" in c:
-                continue  # compared below via the per-pair tuple
+            if "_hist_" in c or c.endswith("_cells"):
+                continue  # compared below
             b = rec.get(c)
             if b is None:
                 assert a is None or (isinstance(a, float) and np.isnan(a)), (c, a)
             elif isinstance(b, float) and np.isnan(b):
                 assert np.isnan(a), (c, a, b)
-            elif "sum_c" in c and isinstance(b, float):
+            elif c.split("_", 1)[1] in _SUMS:
                 assert a == pytest.approx(b, rel=1e-12), (c, a, b)
             else:
                 assert a == b, (c, a, b, rec["zone_id"], rec["_tile"])
         for i, (_, req, _) in enumerate(kg):
+            p = f"k{i}_"
+            if req.cells:
+                want = rec.get(p + "cells")
+                a = out_row.get(p + "cells")
+                if want is None:
+                    assert a is None or (isinstance(a, float) and np.isnan(a))
+                else:
+                    # stored cells: bit-exact, same order (NaN == NaN)
+                    np.testing.assert_array_equal(
+                        np.array(a, dtype=np.float64),
+                        np.array(want, dtype=np.float64))
             if not req.histogram:
                 continue
-            p = f"k{i}_"
             h = rec.get(p + "hist")
             if h is None:
                 for sfx in ("hist_v", "hist_ci", "hist_ciw"):
@@ -175,3 +140,101 @@ def test_batch_equals_perpair_fuzz(seed):
             nan_a = np.isnan(got_ciw)
             assert list(nan_a) == list(np.isnan(exp_ciw))
             assert got_ciw[~nan_a] == pytest.approx(exp_ciw[~nan_a], rel=1e-12)
+
+
+@pytest.mark.parametrize("seed", range(8))
+def test_batch_equals_perpair_fuzz(seed):
+    rng = np.random.default_rng(seed)
+    T = int(rng.integers(5, 20))          # tile size
+    G = T * int(rng.integers(1, 4))       # grid side
+    gx, gy = float(rng.integers(-5, 5)), float(G + rng.integers(-2, 3))
+    vals, w = _raster(rng, G)
+    wkts = [_rand_poly(rng, gx, gx + G) for _ in range(12)]
+    _assert_same(*batch_and_reference(OPS, wkts, vals, w, tile=T, gx=gx, gy=gy))
+
+
+@pytest.mark.parametrize("seed", range(4))
+def test_linear_zones_fuzz(seed):
+    """LINESTRING / MULTILINESTRING zones: coverage is the per-cell
+    traversal length (kernel.cell_lengths)."""
+    rng = np.random.default_rng(100 + seed)
+    T = int(rng.integers(5, 16))
+    G = T * int(rng.integers(1, 4))
+    gx, gy = float(rng.integers(-5, 5)), float(G + rng.integers(-2, 3))
+    wkts = [_rand_line(rng, gx, gx + G) for _ in range(10)]
+    _assert_same(*batch_and_reference(OPS + ["cell_id", "coverage"], wkts,
+                                      *_raster(rng, G), tile=T, gx=gx, gy=gy))
+
+
+@pytest.mark.parametrize("seed", range(4))
+def test_stable_variance_fuzz(seed):
+    rng = np.random.default_rng(200 + seed)
+    T = int(rng.integers(5, 20))
+    G = T * int(rng.integers(1, 4))
+    gx, gy = float(rng.integers(-5, 5)), float(G + rng.integers(-2, 3))
+    wkts = [_rand_poly(rng, gx, gx + G) for _ in range(10)]
+    ops = ["variance(stable=true)", "stdev(stable=true)", "count",
+           "vn=variance(stable=true,coverage_weight=none)",
+           "vm=variance(stable=true,min_coverage_frac=0.5)"]
+    _assert_same(*batch_and_reference(ops, wkts, *_raster(rng, G), tile=T,
+                                      gx=gx, gy=gy))
+
+
+@pytest.mark.parametrize("seed", range(4))
+def test_stored_cells_fuzz(seed):
+    rng = np.random.default_rng(300 + seed)
+    T = int(rng.integers(5, 20))
+    G = T * int(rng.integers(1, 4))
+    gx, gy = float(rng.integers(-5, 5)), float(G + rng.integers(-2, 3))
+    wkts = [_rand_poly(rng, gx, gx + G) for _ in range(10)]
+    ops = ["cell_id", "values", "coverage", "center_x", "center_y", "count",
+           "weights", "weighted_mean",
+           "cn=coverage(coverage_weight=none)",
+           "vd=values(default_value=3)",
+           "wd=weights(default_weight=2)"]
+    _assert_same(*batch_and_reference(ops, wkts, *_raster(rng, G), tile=T,
+                                      gx=gx, gy=gy))
+
+
+@pytest.mark.parametrize("seed", range(4))
+def test_area_weights_fuzz(seed):
+    """area_* coverage weights on a geographic grid (quarter-degree
+    cells, northern and southern rows)."""
+    rng = np.random.default_rng(400 + seed)
+    T = int(rng.integers(5, 16))
+    G = T * int(rng.integers(1, 4))
+    d = 0.25
+    gx, gy = float(rng.integers(-180, 170)), float(rng.integers(-60, 80))
+
+    def place(m):  # a vertex in cell units -> grid coordinates
+        return f"{gx + float(m[1]) * d} {gy - G * d + float(m[2]) * d}"
+    wkts = [re.sub(r"([-+.\deE]+) ([-+.\deE]+)", place, _rand_poly(rng, 0, G))
+            for _ in range(10)]
+    ops = ["count", "sum", "mean", "min", "max", "variety",
+           "ca=sum(coverage_weight=area_cartesian)",
+           "m2=mean(coverage_weight=area_spherical_m2)",
+           "k2=count(coverage_weight=area_spherical_km2)",
+           "c2=coverage(coverage_weight=area_spherical_m2)",
+           "c4=coverage(coverage_weight=area_cartesian)",
+           "w2=weighted_sum(coverage_weight=area_spherical_km2)"]
+    _assert_same(*batch_and_reference(ops, wkts, *_raster(rng, G), tile=T,
+                                      gx=gx, gy=gy, dx=d, dy=d))
+
+
+@pytest.mark.parametrize("seed", range(4))
+def test_large_rectangles_fuzz(seed):
+    """Rectangles whose tile windows exceed 512 cells, on a grid whose
+    origin and resolution are not exactly representable."""
+    rng = np.random.default_rng(500 + seed)
+    T = int(rng.integers(32, 48))
+    G = T * int(rng.integers(1, 3))
+    d = 0.3
+    gx, gy = -7.1, 3.7 + G * d
+    wkts = [_rand_rect(rng, gx, gy - G * d, G * d) for _ in range(6)]
+    ops = ["count", "sum", "mean", "min", "max", "median",
+           "weighted_sum", "coverage", "cell_id",
+           "mc=count(min_coverage_frac=0.5)"]
+    kg, got, want = batch_and_reference(ops, wkts, *_raster(rng, G), tile=T,
+                                        gx=gx, gy=gy, dx=d, dy=d)
+    assert max(len(r["k0_cells"]) for r in want) > 512
+    _assert_same(kg, got, want)

@@ -137,12 +137,10 @@ def test_salted_sum_deterministic(spark):
                    2: sum(range(2, 1000, 3))}
 
 
-@pytest.mark.parametrize("batch", ["1", "0"])
-def test_scale_offset_mask(spark, monkeypatch, batch):
+def test_scale_offset_mask(spark):
     """On-read transform semantics (reference raster.py:102-127,
     raster.h:108-127): nodata and mask evaluated on RAW values, then
-    value = raw*scale + offset.  Identical on both kernel routes."""
-    monkeypatch.setenv("EXACTEXTRACT_BATCH", batch)
+    value = raw*scale + offset."""
     raw = np.arange(16, dtype=np.int16).reshape(4, 4)
     raw[1, 1] = -1                       # nodata in raw units
     mask = np.ones((4, 4), dtype=np.uint8)
@@ -161,13 +159,11 @@ def test_scale_offset_mask(spark, monkeypatch, batch):
     assert r["max"] == pytest.approx(float(vals[keep].max()))
 
 
-@pytest.mark.parametrize("batch", ["1", "0"])
-def test_undefined_weight_nulls_weighted_stats(spark, monkeypatch, batch):
+def test_undefined_weight_nulls_weighted_stats(spark):
     """A single undefined weight (no default_weight) makes the weighted
     stats undefined for the zone — even when other TILES of the zone
     have fully-defined weights (the reference's NaN propagation must
     survive the partial-state merge)."""
-    monkeypatch.setenv("EXACTEXTRACT_BATCH", batch)
     from exactextract_spark.io import tiles_from_array
 
     vals = np.arange(64, dtype=np.float64).reshape(8, 8)
@@ -194,6 +190,22 @@ def test_undefined_weight_nulls_weighted_stats(spark, monkeypatch, batch):
                          weight_tiles=wt).collect()
     got2 = {r["zone_id"]: r["weighted_count"] for r in got2}
     assert got2["z"] == pytest.approx(63.0 + 2.0)
+
+
+def test_mixed_grids_raise(spark):
+    """Tiles of one extraction share one grid (tiles are assigned to
+    zones with the first tile's grid), so a tile table mixing two
+    resolutions fails, naming the differing column, instead of
+    computing statistics on cells the zone does not cover."""
+    fine = tiles_from_array(spark, np.ones((8, 8)), tile=4)
+    coarse = tiles_from_array(spark, np.full((8, 8), 2.0), tile=4, dx=2.0)
+    zones = spark.createDataFrame(
+        [("z", "POLYGON ((1 1, 7 1, 7 7, 1 7, 1 1))")], ["zone_id", "geometry"])
+    # one partition: both grids reach the kernel in one Arrow batch
+    tiles = fine.unionByName(coarse).coalesce(1)
+    with pytest.raises(Exception, match="differ between tiles: dx"):
+        exact_extract(zones, tiles, ["count", "sum"],
+                      strategy="broadcast").collect()
 
 
 def test_empty_geometry_yields_empty_stats(spark):
