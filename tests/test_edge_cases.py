@@ -137,16 +137,18 @@ def test_salted_sum_deterministic(spark):
                    2: sum(range(2, 1000, 3))}
 
 
-def test_scale_offset_mask(spark):
+@pytest.mark.parametrize("split", [0, 1])
+def test_scale_offset_mask(spark, split):
     """On-read transform semantics (reference raster.py:102-127,
     raster.h:108-127): nodata and mask evaluated on RAW values, then
-    value = raw*scale + offset."""
+    value = raw*scale + offset.  Identical whether the raster is one
+    tile (split=0) or four tiles whose partial states merge (split=1)."""
     raw = np.arange(16, dtype=np.int16).reshape(4, 4)
     raw[1, 1] = -1                       # nodata in raw units
     mask = np.ones((4, 4), dtype=np.uint8)
     mask[2, 2] = 0                       # masked out
     tiles = tiles_from_array(spark, raw, nodata=-1, scale=0.5, offset=10.0,
-                             mask=mask)
+                             mask=mask, tile=2 if split else 4)
     zones = spark.createDataFrame(
         [("z", "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))")], ["zone_id", "geometry"])
     r = exact_extract(zones, tiles, ["count", "sum", "mean", "min", "max"]).collect()[0]
@@ -159,18 +161,22 @@ def test_scale_offset_mask(spark):
     assert r["max"] == pytest.approx(float(vals[keep].max()))
 
 
-def test_undefined_weight_nulls_weighted_stats(spark):
+@pytest.mark.parametrize("split", [0, 1])
+def test_undefined_weight_nulls_weighted_stats(spark, split):
     """A single undefined weight (no default_weight) makes the weighted
     stats undefined for the zone — even when other TILES of the zone
-    have fully-defined weights (the reference's NaN propagation must
-    survive the partial-state merge)."""
+    have fully-defined weights (split=1: the reference's NaN propagation
+    must survive the partial-state merge).  With one tile (split=0) the
+    undefined cell shares the tile with the defined-only zone, which
+    must stay defined."""
     from exactextract_spark.io import tiles_from_array
 
     vals = np.arange(64, dtype=np.float64).reshape(8, 8)
     w = np.ones((8, 8))
-    w[1, 6] = -9  # weight nodata in the SECOND tile column (tile=4)
-    tiles = tiles_from_array(spark, vals, tile=4)
-    wt = tiles_from_array(spark, w, tile=4, raster_id="w", nodata=-9)
+    w[1, 6] = -9  # weight nodata in the SECOND tile column when split
+    tile = 4 if split else 8
+    tiles = tiles_from_array(spark, vals, tile=tile)
+    wt = tiles_from_array(spark, w, tile=tile, raster_id="w", nodata=-9)
     zones = spark.createDataFrame(
         [("z", "POLYGON ((0 0, 8 0, 8 8, 0 8, 0 0))"),
          ("ok", "POLYGON ((0 4, 4 4, 4 8, 0 8, 0 4))")],  # defined-only area
