@@ -25,6 +25,7 @@ streams so the dispatch cost is per CHUNK:
   — whose product is gathered onto the cell stream.
 - linear geometries: kernel.coverage_for_window per pair (traversal
   length per cell, the reference's dispatch) written into the stream.
+  These three make coverage_stream, which subdivide reads too.
 - statistics: per-pair sums become np.bincount over the pair-id;
   min/max become np.minimum/maximum.reduceat over the pairs' segments
   of the compacted stream, and the extreme's cell is the segment's
@@ -44,6 +45,8 @@ lives in tests/accumulate_reference.py.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 import numpy as np
 import pandas as pd
 
@@ -51,7 +54,7 @@ from .geom import AREAL
 from .grid import spherical_row_areas
 from .kernel import coverage_for_window, suffix_coverage
 
-__all__ = ["accumulate_pairs_batch", "CHUNK_CELLS"]
+__all__ = ["accumulate_pairs_batch", "coverage_stream", "CHUNK_CELLS"]
 
 # window cells per kernel chunk (bounds decoded-tile + stream memory)
 CHUNK_CELLS = 4_000_000
@@ -245,19 +248,33 @@ def _area_factor(coverage_weight, gr, grid_ymax, dx, dy):
     return rows.astype(np.float32)[gr - lo]
 
 
-def accumulate_pairs_batch(pairs, zones, tile_vals, key_specs, *, has_weights,
-                           passthrough, col_names, grid_ncols,
-                           grid_xmin, grid_ymax, dx, dy, multi_raster):
-    """Process a chunk of (zone, tile) pairs; returns one columnar
-    pandas DataFrame of partial-state rows (columns = col_names).
+@dataclass
+class CellStream:
+    """Every cell of a chunk's pair windows as one flat stream: the
+    windows in pair order, each row-major with rows top-down."""
+    cov: np.ndarray      # float32 coverage per cell
+    pid: np.ndarray      # pair of each cell
+    starts: np.ndarray   # per pair: first cell, window cells, width,
+    areas: np.ndarray    # and the global row/column of its top-left
+    ncw: np.ndarray      # cell
+    gr0: np.ndarray
+    gc0: np.ndarray
+    row_len: np.ndarray  # per window row: its width and global row
+    gr_row: np.ndarray
 
-    pairs: dict of equal-length arrays (built in extract.run_kernel) —
-      zone (ordinal into ``zones``, a geom.ZoneArrays), tile (key into
-      tile_vals), r0/r1/c0/c1 (crop window within the tile), row0/col0
-      (tile origin in the grid), nodata/w_nodata (NaN = none),
-      raster_id (object array; multi_raster only) and pt (P ×
-      len(passthrough) int64);
-    tile_vals: tile key -> (values 2-D, weight 2-D or None)."""
+    def rowcol(self, pos):
+        """(pair, global row, global column) of stream positions."""
+        p = self.pid[pos]
+        r, c = np.divmod(pos - self.starts[p], self.ncw[p])
+        return p, self.gr0[p] + r, self.gc0[p] + c
+
+
+def coverage_stream(pairs, zones, *, grid_xmin, grid_ymax, dx, dy) -> CellStream:
+    """Coverage of every cell of the pairs' windows (``pairs``: zone
+    ordinals into ``zones`` and crop windows r0/r1/c0/c1 inside tiles
+    at row0/col0, as built by extract.tile_pairs): scanline coverage
+    for polygons, the closed form for rectangles, traversal lengths for
+    linear zones."""
     zone = np.asarray(pairs["zone"], dtype=np.int64)
     P = zone.size
     r0, r1 = pairs["r0"], pairs["r1"]
@@ -265,8 +282,6 @@ def accumulate_pairs_batch(pairs, zones, tile_vals, key_specs, *, has_weights,
     nrw = r1 - r0
     ncw = c1 - c0
     row0g, col0g = pairs["row0"], pairs["col0"]
-    gr0 = row0g + r0
-    gc0 = col0g + c0
     # two-step origin arithmetic — tile origin first, then the window
     # offset (xmin = gx + col0*dx, then xmin + c0z*dx) — so each
     # window's floats are those of its tile, whatever the grid origin
@@ -274,22 +289,18 @@ def accumulate_pairs_batch(pairs, zones, tile_vals, key_specs, *, has_weights,
     xmin_w = (grid_xmin + col0g * dx) + c0 * dx
     ymax_w = (grid_ymax - row0g * dy) - r0 * dy
     ymin_w = ymax_w - nrw * dy
-    nodata = pairs["nodata"]
-    w_nodata = pairs["w_nodata"]
     is_rect = zones.is_rect[zone]
     areal = zones.kind[zone] == AREAL
 
-    # --- coverage ---------------------------------------------------------
     poly_idx = np.flatnonzero(areal & ~is_rect)
     cov2d = off = None
     if poly_idx.size:
         cov2d, off = _poly_coverage(zone, zones, poly_idx, nrw, ncw,
                                     xmin_w, ymin_w, dx, dy)
 
-    # --- cell stream: the pairs' windows in order, each row-major with
-    # rows top-down.  Indices are built per window ROW (pair rows_p,
-    # top-down row row_r, first cell row_start) and expanded with
-    # repeats, so per-cell index work stays a few passes ------------------
+    # indices are built per window ROW (pair rows_p, top-down row
+    # row_r, first cell row_start) and expanded with repeats, so
+    # per-cell index work stays a few passes
     areas = nrw * ncw
     total = int(areas.sum())
     starts = np.cumsum(areas) - areas
@@ -298,7 +309,6 @@ def accumulate_pairs_batch(pairs, zones, tile_vals, key_specs, *, has_weights,
     row_r = np.arange(rows_p.size) - np.repeat(np.cumsum(nrw) - nrw, nrw)
     row_len = ncw[rows_p]
     row_start = starts[rows_p] + row_r * row_len
-    gr_row = gr0[rows_p] + row_r
 
     cov = np.empty(total, dtype=np.float32)
     rect_row = is_rect[rows_p]
@@ -322,6 +332,34 @@ def accumulate_pairs_batch(pairs, zones, tile_vals, key_specs, *, has_weights,
         cov[starts[p]:starts[p] + areas[p]] = coverage_for_window(
             zones.geometry(int(zone[p])), xmin_w[p], ymax_w[p], dx, dy,
             int(nrw[p]), int(ncw[p])).ravel()
+    gr0 = row0g + r0
+    return CellStream(cov, pid, starts, areas, ncw, gr0, col0g + c0,
+                      row_len, gr0[rows_p] + row_r)
+
+
+def accumulate_pairs_batch(pairs, zones, tile_vals, key_specs, *, has_weights,
+                           passthrough, col_names, grid_ncols,
+                           grid_xmin, grid_ymax, dx, dy, multi_raster):
+    """Process a chunk of (zone, tile) pairs; returns one columnar
+    pandas DataFrame of partial-state rows (columns = col_names).
+
+    pairs: dict of equal-length arrays (built by extract.tile_pairs) —
+      zone (ordinal into ``zones``, a geom.ZoneArrays), tile (key into
+      tile_vals), r0/r1/c0/c1 (crop window within the tile), row0/col0
+      (tile origin in the grid), nodata/w_nodata (NaN = none),
+      raster_id (object array; multi_raster only) and pt (P ×
+      len(passthrough) int64);
+    tile_vals: tile key -> (values 2-D, weight 2-D or None)."""
+    zone = np.asarray(pairs["zone"], dtype=np.int64)
+    P = zone.size
+    r0, r1 = pairs["r0"], pairs["r1"]
+    c0, c1 = pairs["c0"], pairs["c1"]
+    nodata = pairs["nodata"]
+    w_nodata = pairs["w_nodata"]
+    cs = coverage_stream(pairs, zones, grid_xmin=grid_xmin,
+                         grid_ymax=grid_ymax, dx=dx, dy=dy)
+    cov, pid, areas = cs.cov, cs.pid, cs.areas
+    row_len, gr_row = cs.row_len, cs.gr_row
 
     # --- value / weight streams (cheap per-pair window slices) -----------
     v_parts = []
@@ -344,9 +382,8 @@ def accumulate_pairs_batch(pairs, zones, tile_vals, key_specs, *, has_weights,
 
     def cell_of(pos):
         """Global cell_id of stream positions ``pos``."""
-        p = pid[pos]
-        r, c = np.divmod(pos - starts[p], ncw[p])
-        return (gr0[p] + r) * grid_ncols + gc0[p] + c
+        _, gr, gc = cs.rowcol(pos)
+        return gr * grid_ncols + gc
 
     cov_of = {}  # coverage weight -> effective float32 coverage stream
     wdef_s = None

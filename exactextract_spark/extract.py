@@ -58,7 +58,7 @@ from .ops import Op, group_ops_by_key, parse_ops
 
 __all__ = ["exact_extract", "attach_bbox", "zone_tile_pairs", "run_kernel",
            "crs_matches", "raise_on_invalid_zones", "count_and_validate",
-           "prepare_zones", "zone_lists"]
+           "prepare_zones", "zone_lists", "tile_pairs"]
 
 BROADCAST_ZONE_LIMIT = 200_000
 
@@ -125,7 +125,7 @@ _GEOM_FIELDS = [T.StructField("_geom_kind", T.ByteType()),
                 T.StructField("_geom_xy", T.ArrayType(T.DoubleType())),
                 T.StructField("_geom_rings", T.ArrayType(T.IntegerType()))]
 _BBOX = ("xmin", "ymin", "xmax", "ymax")
-# the grid every tile of one extraction shares (run_kernel checks it)
+# the grid every tile of one extraction shares (tile_pairs checks it)
 _GRID_COLS = ("grid_xmin", "grid_ymax", "dx", "dy", "grid_ncols")
 
 
@@ -281,6 +281,87 @@ def pair_zones(pdf: pd.DataFrame, lookup) -> tuple:
     return za, rows, za.ordinals(flat)
 
 
+@dataclass
+class TilePairs:
+    """One batch of tile rows flattened to (zone, tile) pairs, each
+    with its crop window inside the tile, plus the batch's one grid.
+    ``chunks`` are (lo, hi) pair ranges cut between tile rows."""
+    zones: ZoneArrays
+    tile: np.ndarray     # tile row of each pair
+    zone: np.ndarray     # zone ordinal of each pair
+    r0: np.ndarray       # crop window rows [r0, r1), cols [c0, c1)
+    r1: np.ndarray
+    c0: np.ndarray
+    c1: np.ndarray
+    row0: np.ndarray     # per tile row: tile origin in the grid
+    col0: np.ndarray
+    grid: dict           # grid_xmin, grid_ymax, dx, dy (float), grid_ncols
+    chunks: list
+
+    def chunk(self, lo: int, hi: int) -> dict:
+        """The pairs [lo, hi) as the dict batchkernel reads."""
+        bj = self.tile[lo:hi]
+        return {"zone": self.zone[lo:hi], "tile": bj,
+                "r0": self.r0[lo:hi], "r1": self.r1[lo:hi],
+                "c0": self.c0[lo:hi], "c1": self.c1[lo:hi],
+                "row0": self.row0[bj], "col0": self.col0[bj]}
+
+
+def tile_pairs(pdf: pd.DataFrame, lookup, chunk_cells: int) -> TilePairs:
+    """Pair assembly shared by the zonal and subdivide kernels, for a
+    non-empty pandas batch of tile rows with zone hit-lists.
+
+    Every pair's window is the zone-bbox ∩ tile crop (the reference's
+    crop/shrink_to_fit, grid.h:145-238), computed with numpy from the
+    zones' parsed bboxes, so kernel work scales with the zone, not the
+    tile.  Zones without rings (EMPTY) cover nothing and are dropped.
+    Chunks hold at least ``chunk_cells`` window cells each (bounding
+    decoded-tile and stream memory); a tile's pairs stay in one chunk.
+    All tiles must share one grid (``_GRID_COLS``): tiles were assigned
+    to zones with the first tile's grid, so a batch whose tiles
+    disagree raises ValueError."""
+    mixed = [c for c in _GRID_COLS if pdf[c].nunique() > 1]
+    if mixed:
+        raise ValueError(
+            "tiles of one extraction must share one grid; these "
+            f"columns differ between tiles: {', '.join(mixed)}")
+    n_rows = len(pdf)
+    za, prow, zo = pair_zones(pdf, lookup)
+    g = lambda c: pdf[c].to_numpy().astype(np.int64)
+    nr_a, nc_a, r0_a, c0_a = g("nrows"), g("ncols"), g("row0"), g("col0")
+    gx, gy, dx, dy = (float(pdf[c].iat[0]) for c in _GRID_COLS[:4])
+    grid = {"grid_xmin": gx, "grid_ymax": gy, "dx": dx, "dy": dy,
+            "grid_ncols": int(pdf["grid_ncols"].iat[0])}
+
+    live = za.ring_off[zo + 1] > za.ring_off[zo]
+    prow, zo = prow[live], zo[live]
+    xmin_r = gx + c0_a * dx
+    ymax_r = gy - r0_a * dy
+    bb = za.bbox[zo]
+    xm, ym = xmin_r[prow], ymax_r[prow]
+    ncp, nrp = nc_a[prow], nr_a[prow]
+    c0z = np.clip(np.floor((bb[:, 0] - xm) / dx), 0, ncp - 1)
+    c1z = np.minimum(np.maximum(np.ceil((bb[:, 2] - xm) / dx), c0z + 1), ncp)
+    r0z = np.clip(np.floor((ym - bb[:, 3]) / dy), 0, nrp - 1)
+    r1z = np.minimum(np.maximum(np.ceil((ym - bb[:, 1]) / dy), r0z + 1), nrp)
+    c0z, c1z, r0z, r1z = (a.astype(np.int64) for a in (c0z, c1z, r0z, r1z))
+
+    row_cells = np.bincount(prow, weights=(r1z - r0z) * (c1z - c0z),
+                            minlength=n_rows)
+    bounds, acc = [0], 0
+    for j in range(n_rows):
+        acc += row_cells[j]
+        if acc >= chunk_cells:
+            bounds.append(j + 1)
+            acc = 0
+    if bounds[-1] != n_rows:
+        bounds.append(n_rows)
+    pair_lo = np.searchsorted(prow, bounds)
+    chunks = [(int(lo), int(hi)) for lo, hi in zip(pair_lo[:-1], pair_lo[1:])
+              if lo < hi]
+    return TilePairs(za, prow, zo, r0z, r1z, c0z, c1z, r0_a, c0_a, grid, chunks)
+
+
 def prepare_weight_frame(weight_tiles: DataFrame, grid: dict,
                          tile_size: int) -> DataFrame:
     """Weight tile payloads renamed to the w_* columns the kernel
@@ -428,18 +509,13 @@ def run_kernel(joined: DataFrame, keygroups, *, geom_lookup=None,
     ``zone_ids`` lists.  ``passthrough`` columns (e.g. tile ids for
     checkpoint lineage) are copied onto every partial row.
 
-    Pair assembly is vectorized per Arrow batch: the hit-lists are
-    flattened to (tile row, zone ordinal) arrays and every pair's
-    zone-bbox ∩ tile crop window is computed with numpy from the
-    zones' parsed bboxes.  The pairs are cut into chunks of about
-    CHUNK_CELLS window cells (a tile's pairs stay in one chunk) and
-    each chunk goes through batchkernel.accumulate_pairs_batch, the
-    one statistics path: coverage + statistics for every pair —
-    areal or linear, any window size, any op set — are flat numpy
-    streams, so Python dispatch cost is per chunk, not per pair.
-    All tiles must share one grid (``_GRID_COLS``): the tile
-    assignment already used the first tile's grid, so a batch whose
-    tiles disagree raises ValueError."""
+    Pair assembly (tile_pairs) is vectorized per Arrow batch: pairs,
+    crop windows and chunks come as numpy arrays, and each chunk goes
+    through batchkernel.accumulate_pairs_batch, the one statistics
+    path: coverage + statistics for every pair — areal or linear, any
+    window size, any op set — are flat numpy streams, so Python
+    dispatch cost is per chunk, not per pair.  Tiles of one batch must
+    share one grid (tile_pairs raises ValueError otherwise)."""
     from .batchkernel import CHUNK_CELLS, accumulate_pairs_batch
 
     schema = _partial_schema(keygroups, passthrough)
@@ -470,18 +546,9 @@ def run_kernel(joined: DataFrame, keygroups, *, geom_lookup=None,
             n_rows = len(pdf)
             if n_rows == 0:
                 continue
-            mixed = [c for c in _GRID_COLS if pdf[c].nunique() > 1]
-            if mixed:
-                raise ValueError(
-                    "tiles of one extraction must share one grid; these "
-                    f"columns differ between tiles: {', '.join(mixed)}")
-            za, prow, zo = pair_zones(pdf, geom_lookup)
+            tp = tile_pairs(pdf, geom_lookup, CHUNK_CELLS)
             g = lambda c: pdf[c].to_numpy()
             nr_a, nc_a = g("nrows").astype(np.int64), g("ncols").astype(np.int64)
-            r0_a, c0_a = g("row0").astype(np.int64), g("col0").astype(np.int64)
-            gx, gy = float(pdf["grid_xmin"].iat[0]), float(pdf["grid_ymax"].iat[0])
-            dx, dy = float(pdf["dx"].iat[0]), float(pdf["dy"].iat[0])
-            gnc = int(pdf["grid_ncols"].iat[0])
             buf_a, dt_a = g("values"), g("dtype")
             nd_a = pdf["nodata"].to_numpy(dtype=np.float64, na_value=np.nan)
             # optional on-read transform columns (scale/offset, mask band)
@@ -523,56 +590,17 @@ def run_kernel(joined: DataFrame, keygroups, *, geom_lookup=None,
                                            scale=wsc, offset=wof, mask_buf=wmk)
                 return tv, tw
 
-            # --- pair windows: crop to the zone-bbox ∩ tile sub-window
-            # so kernel work scales with the zone, not the tile (the
-            # reference's crop/shrink_to_fit, grid.h:145-238).  Zones
-            # without rings (EMPTY) cover nothing and are dropped.
-            live = za.ring_off[zo + 1] > za.ring_off[zo]
-            prow, zo = prow[live], zo[live]
-            xmin_r = gx + c0_a * dx
-            ymax_r = gy - r0_a * dy
-            bb = za.bbox[zo]
-            xm, ym = xmin_r[prow], ymax_r[prow]
-            ncp, nrp = nc_a[prow], nr_a[prow]
-            c0z = np.clip(np.floor((bb[:, 0] - xm) / dx), 0, ncp - 1)
-            c1z = np.minimum(np.maximum(np.ceil((bb[:, 2] - xm) / dx), c0z + 1), ncp)
-            r0z = np.clip(np.floor((ym - bb[:, 3]) / dy), 0, nrp - 1)
-            r1z = np.minimum(np.maximum(np.ceil((ym - bb[:, 1]) / dy), r0z + 1), nrp)
-            c0z, c1z, r0z, r1z = (a.astype(np.int64) for a in (c0z, c1z, r0z, r1z))
-            cells = (r1z - r0z) * (c1z - c0z)
-
-            # chunk boundaries between tile rows: a chunk's pairs hold
-            # >= CHUNK_CELLS window cells (bounds decoded-tile + stream
-            # memory); a tile's pairs stay in one chunk
-            row_cells = np.bincount(prow, weights=cells, minlength=n_rows)
-            bounds, acc = [0], 0
-            for j in range(n_rows):
-                acc += row_cells[j]
-                if acc >= CHUNK_CELLS:
-                    bounds.append(j + 1)
-                    acc = 0
-            if bounds[-1] != n_rows:
-                bounds.append(n_rows)
-            pair_lo = np.searchsorted(prow, bounds)
-
-            for lo, hi in zip(pair_lo[:-1], pair_lo[1:]):
-                if lo == hi:
-                    continue
-                bj = prow[lo:hi]
+            for lo, hi in tp.chunks:
+                pairs = tp.chunk(lo, hi)
+                bj = pairs["tile"]
                 decoded = {int(j): decode_row(int(j)) for j in np.unique(bj)}
-                pairs = {"zone": zo[lo:hi], "tile": bj,
-                         "r0": r0z[lo:hi], "r1": r1z[lo:hi],
-                         "c0": c0z[lo:hi], "c1": c1z[lo:hi],
-                         "row0": r0_a[bj], "col0": c0_a[bj],
-                         "nodata": nd_row[bj], "w_nodata": wn_row[bj],
-                         "raster_id": rid_a[bj] if multi_raster else None,
-                         "pt": pt_rows[bj]}
+                pairs.update(nodata=nd_row[bj], w_nodata=wn_row[bj],
+                             raster_id=rid_a[bj] if multi_raster else None,
+                             pt=pt_rows[bj])
                 frame = accumulate_pairs_batch(
-                    pairs, za, decoded, key_specs,
+                    pairs, tp.zones, decoded, key_specs,
                     has_weights=has_weights, passthrough=passthrough,
-                    col_names=col_names, grid_ncols=gnc,
-                    grid_xmin=gx, grid_ymax=gy, dx=dx, dy=dy,
-                    multi_raster=multi_raster)
+                    col_names=col_names, multi_raster=multi_raster, **tp.grid)
                 if len(frame):
                     yield frame
             if progress_acc is not None:

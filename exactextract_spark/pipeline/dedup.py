@@ -62,14 +62,6 @@ FROM documents"""
 
 _TC = TOKCODE_SPARK.format(t="t")
 # 3-token shingle codes; documents with <3 tokens collapse to one code
-_SHINGLES_SPARK = (
-    "CASE WHEN size(tc) >= 3 THEN "
-    f" transform(sequence(1, size(tc) - 2), i ->"
-    f"   ((element_at(tc, i) * {M} + element_at(tc, i + 1)) % {P} * {M}"
-    f"    + element_at(tc, i + 2)) % {P})"
-    " ELSE array(aggregate(tc, CAST(0 AS BIGINT), (a, c) -> (a * 31 + c) % 1000000007)) END")
-_TC_ARR_SPARK = (f"transform(split(trim(text), '\\\\s+'), t -> CAST({_TC} AS BIGINT))")
-
 _SHINGLES_DUCK = (
     "CASE WHEN len(tc) >= 3 THEN "
     f" list_transform(range(1, len(tc) - 1), i ->"
@@ -91,7 +83,8 @@ def _band_expr(prefix: str, b: int) -> str:
 def _token_codes(toks):
     """Per-token codes (ascii(t)*961 + ascii(substr(t,2,1))*31 +
     length(t)) for one Arrow batch of token lists, as a flat int64
-    stream plus per-doc ranges.  Exact _TC_ARR_SPARK semantics;
+    stream plus per-doc ranges.  Exact semantics of the Spark SQL
+    token-code expression (tests/dedup_reference.py);
     non-ASCII tokens (byte != codepoint) take a per-token Python
     fallback with the same ascii()/substr()/length() behaviour.
     Returns (valid, n_docs, tc, off0, n_tok)."""
@@ -146,7 +139,8 @@ def _shingle_streams(toks):
     ``sh`` is the flat shingle-code stream in document order, ``fold``
     the short-document (< 3 tokens) Horner fold per doc, and
     ``starts``/``sh_count`` the per-doc segments of ``sh``.  Identical
-    integer formulas to _SHINGLES_SPARK; all intermediates < 2^63."""
+    integer formulas to the DuckDB oracle's _SHINGLES_DUCK; all
+    intermediates < 2^63."""
     import numpy as np
 
     valid, n_docs, tc, off0, n_tok = _token_codes(toks)
@@ -202,7 +196,7 @@ def _minhash_arrow_kernel(schema):
     numpy int64 streams over the Arrow list buffers — the interpreted
     CodegenFallback higher-order functions were ~60% of the 1M-doc
     minhash wall (5.5 s of 13 s measured).  Bit-exact by differential
-    test against the SQL path (tests + EXACTEXTRACT_MINHASH_ARROW=0)."""
+    test against the SQL expression path (tests/dedup_reference.py)."""
     import pyarrow as pa
 
     def run(batches):
@@ -337,50 +331,32 @@ def _toks_frame(spark: SparkSession, sf_dir: str):
 
 def _distinct_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, sh array<bigint>): each document's distinct 3-token
-    shingle codes.  Arrow-vectorized by default (sorted distinct; every
-    consumer is order-independent); EXACTEXTRACT_MINHASH_ARROW=0
-    selects the SQL expression path."""
-    import os
+    shingle codes, Arrow-vectorized (sorted distinct; every consumer is
+    order-independent)."""
+    import pyarrow as pa
 
-    if os.environ.get("EXACTEXTRACT_MINHASH_ARROW", "1") == "1":
-        import pyarrow as pa
-
-        toks, id_type, pa_id = _toks_frame(spark, sf_dir)
-        pa_schema = pa.schema(
-            [pa.field("doc_id", pa_id),
-             pa.field("sh", pa.list_(pa.int64()))])
-        return toks.mapInArrow(_shingles_arrow_kernel(pa_schema),
-                               schema=f"doc_id {id_type}, sh array<bigint>")
-    return _docs(spark, sf_dir).selectExpr("doc_id", f"{_TC_ARR_SPARK} AS tc") \
-        .selectExpr("doc_id", f"array_distinct({_SHINGLES_SPARK}) AS sh")
+    toks, id_type, pa_id = _toks_frame(spark, sf_dir)
+    pa_schema = pa.schema(
+        [pa.field("doc_id", pa_id),
+         pa.field("sh", pa.list_(pa.int64()))])
+    return toks.mapInArrow(_shingles_arrow_kernel(pa_schema),
+                           schema=f"doc_id {id_type}, sh array<bigint>")
 
 
 def minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16 minhashes over 3-token shingles, folded into 4 LSH bands.
+    The arithmetic runs in a vectorized Arrow kernel
+    (_minhash_arrow_kernel)."""
+    import pyarrow as pa
 
-    The arithmetic runs in a vectorized Arrow kernel by default
-    (_minhash_arrow_kernel); EXACTEXTRACT_MINHASH_ARROW=0 selects the
-    pure-SQL expression path (bit-identical — differential-tested)."""
-    import os
-
-    if os.environ.get("EXACTEXTRACT_MINHASH_ARROW", "1") == "1":
-        import pyarrow as pa
-
-        toks, id_type, pa_id = _toks_frame(spark, sf_dir)
-        out_schema_str = ", ".join(
-            [f"doc_id {id_type}"] + [f"band{b} long" for b in range(N_BANDS)])
-        pa_schema = pa.schema(
-            [pa.field("doc_id", pa_id)]
-            + [pa.field(f"band{b}", pa.int64()) for b in range(N_BANDS)])
-        return toks.mapInArrow(_minhash_arrow_kernel(pa_schema),
-                               schema=out_schema_str)
-    d = _docs(spark, sf_dir).selectExpr("doc_id", f"{_TC_ARR_SPARK} AS tc") \
-        .selectExpr("doc_id", f"{_SHINGLES_SPARK} AS sh")
-    mh = [f"array_min(transform(sh, s -> ({MINHASH_A[j]} * s + {MINHASH_B[j]}) % {P})) AS mh{j}"
-          for j in range(len(MINHASH_A))]
-    d = d.selectExpr("doc_id", *mh)
-    bands = [F.expr(_band_expr("mh", b)).alias(f"band{b}") for b in range(N_BANDS)]
-    return d.select("doc_id", *bands)
+    toks, id_type, pa_id = _toks_frame(spark, sf_dir)
+    out_schema_str = ", ".join(
+        [f"doc_id {id_type}"] + [f"band{b} long" for b in range(N_BANDS)])
+    pa_schema = pa.schema(
+        [pa.field("doc_id", pa_id)]
+        + [pa.field(f"band{b}", pa.int64()) for b in range(N_BANDS)])
+    return toks.mapInArrow(_minhash_arrow_kernel(pa_schema),
+                           schema=out_schema_str)
 
 
 def minhash_signature_oracle() -> str:
@@ -412,11 +388,24 @@ def minhash_band_long(spark: SparkSession, sf_dir: str) -> DataFrame:
       posexplode the keys are generator outputs — pushdown stops at the
       Generate — and the persist makes the signature a materialized
       table (which is also how a 100 TB pipeline would stage it)."""
-    sig = minhash_signature(spark, sf_dir)
+    return _band_long(minhash_signature(spark, sf_dir)).transform(_stage_cache)
+
+
+def _band_long(sig: DataFrame) -> DataFrame:
+    """(doc_id, band_idx, bk): a signature's band columns as rows."""
     return sig.select(
         "doc_id",
         F.posexplode(F.array(*[F.col(f"band{b}") for b in range(N_BANDS)]))
-         .alias("band_idx", "bk")).transform(_stage_cache)
+         .alias("band_idx", "bk"))
+
+
+def _pairs_from_band_long(long: DataFrame) -> DataFrame:
+    """Distinct (doc_a < doc_b) pairs sharing a (band_idx, bk) key."""
+    l = long.select(F.col("doc_id").alias("doc_a"), "band_idx", "bk")
+    r = long.select(F.col("doc_id").alias("doc_b"), "band_idx", "bk")
+    return (l.join(r, ["band_idx", "bk"])
+            .where(F.col("doc_a") < F.col("doc_b"))
+            .select("doc_a", "doc_b").distinct())
 
 
 def minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -424,12 +413,7 @@ def minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join on (band_idx, band_key) over the long signature table
     (see minhash_band_long for why not per-band joins on computed
     keys)."""
-    long = minhash_band_long(spark, sf_dir)
-    l = long.select(F.col("doc_id").alias("doc_a"), "band_idx", "bk")
-    r = long.select(F.col("doc_id").alias("doc_b"), "band_idx", "bk")
-    return (l.join(r, ["band_idx", "bk"])
-            .where(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b").distinct())
+    return _pairs_from_band_long(minhash_band_long(spark, sf_dir))
 
 
 def minhash_pairs_oracle() -> str:
@@ -488,8 +472,7 @@ def _bit_majority_kernel(schema, nbits, sim60):
 
 def _simhash_table(spark: SparkSession, sf_dir: str, nbits: int,
                    sim60: bool, out_col: str) -> DataFrame:
-    """(doc_id, <out_col>) SimHash fingerprints, Arrow-vectorized
-    (EXACTEXTRACT_MINHASH_ARROW=0 selects the SQL expression path)."""
+    """(doc_id, <out_col>) SimHash fingerprints, Arrow-vectorized."""
     import pyarrow as pa
 
     toks, id_type, pa_id = _toks_frame(spark, sf_dir)
@@ -503,19 +486,9 @@ def _simhash_table(spark: SparkSession, sf_dir: str, nbits: int,
 
 def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-bit SimHash over token codes (bit-majority of code bits),
-    Arrow-vectorized by default (_bit_majority_kernel; differential-
-    tested against the expression path)."""
-    import os
-
-    if os.environ.get("EXACTEXTRACT_MINHASH_ARROW", "1") == "1":
-        return _simhash_table(spark, sf_dir, SIMHASH_BITS, False, "simhash")
-    return _docs(spark, sf_dir).selectExpr(
-        "doc_id", f"{_TC_ARR_SPARK} AS tc").selectExpr(
-        "doc_id",
-        f"aggregate(sequence(0, {SIMHASH_BITS - 1}), CAST(0 AS BIGINT), (acc, b) -> acc + "
-        f"  CASE WHEN aggregate(tc, CAST(0 AS BIGINT),"
-        f"       (a, c) -> a + CASE WHEN (c >> b) % 2 = 1 THEN 1 ELSE -1 END) > 0"
-        f"  THEN shiftleft(CAST(1 AS BIGINT), b) ELSE CAST(0 AS BIGINT) END) AS simhash")
+    Arrow-vectorized (_bit_majority_kernel; differential-tested against
+    the expression path in tests/dedup_reference.py)."""
+    return _simhash_table(spark, sf_dir, SIMHASH_BITS, False, "simhash")
 
 
 def simhash_oracle() -> str:
@@ -546,13 +519,6 @@ _SIM60_HALF = ("CASE WHEN b < 30 THEN ({c} * 2654435761) % 1073741824"
                " ELSE ({c} * 2246822519 + 3266489917) % 1073741824 END")
 _SIM60_BIT = "CASE WHEN b < 30 THEN b ELSE b - 30 END"
 
-_SIM60_SPARK = (
-    "aggregate(sequence(0, 59), CAST(0 AS BIGINT), (acc, b) -> acc + "
-    " CASE WHEN aggregate(tc, CAST(0 AS BIGINT), (a, c) -> a + "
-    f"  CASE WHEN (({_SIM60_HALF.format(c='c')}) >> ({_SIM60_BIT})) % 2 = 1"
-    "   THEN 1 ELSE -1 END) > 0"
-    "  THEN shiftleft(CAST(1 AS BIGINT), b) ELSE CAST(0 AS BIGINT) END)")
-
 _SIM60_DUCK = (
     "CAST(list_sum(list_transform(range(0, 60), b ->"
     " CASE WHEN list_sum(list_transform(tc, c ->"
@@ -566,14 +532,7 @@ def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH candidates (one equi-join on the long (band_idx, bucket) table,
     see minhash_band_long for why not per-band joins on computed keys)
     verified with the exact popcount of the fingerprint XOR."""
-    import os
-
-    if os.environ.get("EXACTEXTRACT_MINHASH_ARROW", "1") == "1":
-        s = _simhash_table(spark, sf_dir, 60, True, "sim")
-    else:
-        s = _docs(spark, sf_dir) \
-            .selectExpr("doc_id", f"{_TC_ARR_SPARK} AS tc") \
-            .selectExpr("doc_id", f"{_SIM60_SPARK} AS sim")
+    s = _simhash_table(spark, sf_dir, 60, True, "sim")
     bucket = [F.expr(f"(sim >> {SIM60_BAND_BITS * b}) % {1 << SIM60_BAND_BITS}")
               for b in range(SIM60_BANDS)]
     long = s.select("doc_id", "sim",
@@ -613,42 +572,30 @@ def minhash_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     >= 0.5.  At 100 TB the candidate set is tiny relative to all-pairs,
     and verification is one join back to the shingle table.
 
-    On the Arrow path the shingle lists and band keys come from ONE
-    fused kernel pass (one corpus scan/tokenize instead of two); the
-    persisted fused table then feeds both the band self-join (keys are
-    materialized, so no computed-key pushdown — see minhash_band_long)
-    and both sides of the verify join."""
-    import os
+    The shingle lists and band keys come from ONE fused Arrow kernel
+    pass (one corpus scan/tokenize instead of two); the persisted fused
+    table then feeds both the band self-join (keys are materialized, so
+    no computed-key pushdown — see minhash_band_long) and both sides of
+    the verify join."""
+    import pyarrow as pa
 
-    if os.environ.get("EXACTEXTRACT_MINHASH_ARROW", "1") == "1":
-        import pyarrow as pa
+    toks, id_type, pa_id = _toks_frame(spark, sf_dir)
+    pa_schema = pa.schema(
+        [pa.field("doc_id", pa_id),
+         pa.field("sh", pa.list_(pa.int64()))]
+        + [pa.field(f"band{b}", pa.int64()) for b in range(N_BANDS)])
+    out_schema = ", ".join(
+        [f"doc_id {id_type}", "sh array<bigint>"]
+        + [f"band{b} long" for b in range(N_BANDS)])
+    fused = toks.mapInArrow(_fused_arrow_kernel(pa_schema),
+                            schema=out_schema).transform(_stage_cache)
+    return _jaccard_verified(_pairs_from_band_long(_band_long(fused)),
+                             fused.select("doc_id", "sh"))
 
-        toks, id_type, pa_id = _toks_frame(spark, sf_dir)
-        pa_schema = pa.schema(
-            [pa.field("doc_id", pa_id),
-             pa.field("sh", pa.list_(pa.int64()))]
-            + [pa.field(f"band{b}", pa.int64()) for b in range(N_BANDS)])
-        out_schema = ", ".join(
-            [f"doc_id {id_type}", "sh array<bigint>"]
-            + [f"band{b} long" for b in range(N_BANDS)])
-        fused = toks.mapInArrow(_fused_arrow_kernel(pa_schema),
-                                schema=out_schema).transform(_stage_cache)
-        long = fused.select(
-            "doc_id",
-            F.posexplode(F.array(*[F.col(f"band{b}")
-                                   for b in range(N_BANDS)]))
-             .alias("band_idx", "bk"))
-        l = long.select(F.col("doc_id").alias("doc_a"), "band_idx", "bk")
-        r = long.select(F.col("doc_id").alias("doc_b"), "band_idx", "bk")
-        cand = (l.join(r, ["band_idx", "bk"])
-                .where(F.col("doc_a") < F.col("doc_b"))
-                .select("doc_a", "doc_b").distinct())
-        sh = fused.select("doc_id", "sh")
-    else:
-        # persisted: referenced by both sides of the verify join, and the
-        # shingle expressions are interpreted HOFs worth evaluating once
-        sh = _distinct_shingles(spark, sf_dir).transform(_stage_cache)
-        cand = minhash_pairs(spark, sf_dir)
+
+def _jaccard_verified(cand: DataFrame, sh: DataFrame) -> DataFrame:
+    """Candidate pairs joined to both docs' distinct shingle lists,
+    keeping exact Jaccard >= 0.5."""
     a = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     return (cand.join(a, "doc_a").join(b, "doc_b")

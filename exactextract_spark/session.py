@@ -28,10 +28,30 @@ def job_progress(spark: SparkSession) -> dict:
     return out
 
 
+def host_defaults() -> tuple[int, str]:
+    """(cores, driver memory) for a local session sized to this host:
+    the cores this process may run on and min(16g, physical RAM / 3),
+    so the local-mode JVM (driver + executors in one heap) leaves room
+    for the Python workers.  SPARK_GRAFT_CPUS and SPARK_DRIVER_MEM
+    override each."""
+    cores = os.environ.get("SPARK_GRAFT_CPUS")
+    if not cores:
+        try:
+            cores = len(os.sched_getaffinity(0))
+        except AttributeError:  # no affinity API off Linux
+            cores = os.cpu_count() or 1
+    mem = os.environ.get("SPARK_DRIVER_MEM")
+    if not mem:
+        ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+        mem = f"{min(16 * 1024, ram_mb // 3)}m"
+    return int(cores), mem
+
+
 def get_spark(app: str = "exactextract-spark", cores: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
+    host_cores, driver_mem = host_defaults()
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = host_cores
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     return (SparkSession.builder
@@ -42,11 +62,8 @@ def get_spark(app: str = "exactextract-spark", cores: int | None = None,
             .config("spark.sql.adaptive.skewJoin.enabled", "true")
             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
             .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-            # local-mode JVM = driver + executors in one heap: size it so
-            # staged pipeline caches (shingle/band tables) plus 10M-row
-            # window state fit without eviction churn (the host has
-            # 128 GiB; override via SPARK_DRIVER_MEM for smaller hosts
-            # or cluster mode, where executors carry their own memory)
-            .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+            # local-mode JVM = driver + executors in one heap (cluster
+            # mode: executors carry their own memory)
+            .config("spark.driver.memory", driver_mem)
             .config("spark.ui.enabled", "false")
             .getOrCreate())

@@ -18,7 +18,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
-from .extract import prepare_zones, zone_tile_pairs
+from .extract import BROADCAST_ZONE_LIMIT, prepare_zones, zone_tile_pairs
 from .geom import GEOM_COLS, Geometry, ZoneArrays
 
 __all__ = ["point_in_polygon", "knn_tiles", "points_in_geom",
@@ -189,9 +189,6 @@ def points_in_geom(geom: Geometry, xs: np.ndarray, ys: np.ndarray,
                   (xs < (a1 - a0) * (ys - b0) / (b1 - b0) + a0)
         inside ^= np.bitwise_xor.reduce(crosses, axis=0)
     return inside
-
-
-BROADCAST_ZONE_LIMIT = 200_000
 
 
 def point_in_polygon(points: DataFrame, zones: DataFrame, *,

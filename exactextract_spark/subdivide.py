@@ -7,12 +7,17 @@ mapInPandas kernel that emits one row per covered cell:
 
     (zone_id, cell_id, coverage, x0, y0, x1, y1, wkt)
 
-- coverage comes from the exact scanline kernel (kernel.py), so it is
-  identical to what the stats pipeline sees;
+The kernel is on the zonal kernel's pair path: extract.tile_pairs
+builds the (zone, tile) pairs, their crop windows and chunks, and
+batchkernel.coverage_stream computes every window cell's coverage, so
+coverage is bit-identical to what the statistics see (as the
+reference feeds both from one RasterCellIntersection).  Per chunk:
+
+- cells with coverage > min_coverage_frac are selected from the
+  stream in one pass, with their ids and cell boxes;
 - fully-covered cells (coverage == 1) and every cell of a rectangle
-  zone are CLOSED-FORM and fully vectorized — cell ids, bboxes and the
-  WKT strings are built as flat array operations (pyarrow), no
-  per-cell Python;
+  zone are CLOSED-FORM boxes — bboxes and WKT strings are flat array
+  operations (pyarrow), no per-cell Python;
 - boundary cells of general polygons are reassembled EXACTLY with the
   reference's left-hand-rings construction (traversal.py, reference
   traversal_areas.cpp:94-256): a concave polygon that exits and
@@ -21,9 +26,10 @@ mapInPandas kernel that emits one row per covered cell:
   chains for ALL of a zone's boundary cells come from ONE batched
   edge→cell incidence pass + vectorized segment clip
   (traversal.grid_cell_chains), so a 20k-edge coastline ring costs
-  O(edges + incidences), not O(edges × boundary cells).  If ring
-  assembly fails on a degenerate input, the cell falls back to a
-  Sutherland–Hodgman clip (area-identical, possibly bridged WKT).
+  O(edges + incidences), not O(edges × boundary cells).  A cell whose
+  chains do not assemble (a vertex an ulp inside a cell edge, see
+  _clip_fallback) gets a Sutherland–Hodgman clip instead
+  (area-identical, possibly bridged WKT).
 
 Zone-count scaling: the zone prep is ZonalExtractor's
 (extract.prepare_zones): below ``BROADCAST_ZONE_LIMIT`` zones the
@@ -36,15 +42,13 @@ upper bound on the zone count.
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from .extract import pair_zones, prepare_zones, zone_lists
+from .batchkernel import CHUNK_CELLS, coverage_stream
+from .extract import prepare_zones, tile_pairs, zone_lists
 from .geom import AREAL
-from .kernel import coverage_fraction
 from .traversal import grid_cell_chains, left_hand_rings
 
 __all__ = ["subdivide", "clip_ring_box"]
@@ -155,6 +159,149 @@ _SCHEMA = T.StructType([
 _COLS = [f.name for f in _SCHEMA.fields]
 
 
+def _clip_fallback(rings, box):
+    """Sutherland–Hodgman piece of a boundary cell whose traversal
+    chains do not assemble into rings: (x0, y0, x1, y1, wkt), or None
+    when nothing of the zone lies in the cell.  Reached when a ring
+    vertex sits an ulp inside a cell edge and the edge entering it is
+    dropped as a single-parameter graze, so a chain starts off the box
+    boundary (tests/test_subdivide.py::test_subdivide_clip_fallback)."""
+    parts = [pts for pts in (clip_ring_box(r, *box) for r in rings)
+             if len(pts) >= 3]
+    if not parts:
+        return None
+    xs = [p[0] for pts in parts for p in pts]
+    ys = [p[1] for pts in parts for p in pts]
+    return min(xs), min(ys), max(xs), max(ys), _ring_wkt(parts)
+
+
+def _boundary_pieces(b, zone, gr, gc, cells, zones, grid):
+    """Exact pieces of the boundary cells ``b`` (stream selections) by
+    left-hand-ring reassembly.  The traversal chains of all of a zone's
+    boundary cells come from one batched incidence pass over its edges
+    (traversal.grid_cell_chains), so per-cell Python is only the short
+    chain walk and ring assembly.  Returns [(selections, x0, y0, x1,
+    y1, wkt)] for the assembled cells (bboxes and WKT built in one
+    vectorized pass) and for the clip-fallback cells."""
+    import pyarrow as pa
+
+    gx, gy, dx, dy = (grid[c] for c in ("grid_xmin", "grid_ymax", "dx", "dy"))
+    cx0, cy0, cx1, cy1 = cells
+    b = b[np.argsort(zone[b], kind="stable")]
+    runs = np.flatnonzero(np.r_[True, zone[b][1:] != zone[b][:-1]])
+    kept = []
+    cell_np = []      # polys per cell
+    poly_nr = []      # rings per poly
+    ring_nc = []      # coords per ring
+    co_x = []         # flat coordinate stream
+    co_y = []
+    fallback = []
+    for s, e in zip(runs.tolist(), np.r_[runs[1:], b.size].tolist()):
+        rings = zones.geometry(int(zone[b[s]])).rings
+        sel = b[s:e]
+        chains = grid_cell_chains(rings, gr[sel], gc[sel], gx, gy, dx, dy)
+        for k, lists in zip(sel.tolist(), chains):
+            box = (float(cx0[k]), float(cy0[k]), float(cx1[k]), float(cy1[k]))
+            try:
+                polys = left_hand_rings(box, lists)
+            except ValueError:
+                piece = _clip_fallback(rings, box)
+                if piece is not None:
+                    fallback.append((k, *piece))
+                continue
+            if not polys:
+                continue
+            kept.append(k)
+            cell_np.append(len(polys))
+            for poly in polys:
+                poly_nr.append(len(poly))
+                for ring in poly:
+                    ring_nc.append(len(ring))
+                    rxs, rys = zip(*ring)
+                    co_x.extend(rxs)
+                    co_y.extend(rys)
+    out = []
+    if kept:
+        cxf = np.asarray(co_x)
+        cyf = np.asarray(co_y)
+        # one offset hierarchy drives both the WKT list joins and the
+        # bbox spans: the coord index at cell k's start is
+        # rc_off[pr_off[cp_off[k]]]
+        cp_off = _offsets(cell_np)
+        pr_off = _offsets(poly_nr)
+        rc_off = _offsets(ring_nc)
+        spans = rc_off[pr_off[cp_off]][:-1]
+        # per-cell bbox (holes never extend beyond their shell, so
+        # all-ring min/max == shell-only)
+        out.append((np.array(kept, dtype=np.int64),
+                    np.minimum.reduceat(cxf, spans),
+                    np.minimum.reduceat(cyf, spans),
+                    np.maximum.reduceat(cxf, spans),
+                    np.maximum.reduceat(cyf, spans),
+                    _batch_polygons_wkt(cp_off, pr_off, rc_off, cxf, cyf)))
+    if fallback:
+        k, x0, y0, x1, y1, wkt = zip(*fallback)
+        out.append((np.array(k, dtype=np.int64), np.array(x0), np.array(y0),
+                    np.array(x1), np.array(y1), pa.array(wkt, type=pa.string())))
+    return out
+
+
+def _chunk_pieces(pairs, zones, grid, min_coverage_frac):
+    """One row per covered cell of a chunk's pairs (_COLS), or None.
+    Cells come from the zonal kernel's coverage stream; rectangle zones
+    and full cells are closed-form boxes, built for the whole chunk in
+    one vectorized pass; only boundary cells of general polygons take
+    per-cell ring assembly."""
+    import pyarrow as pa
+
+    gx, gy, dx, dy = (grid[c] for c in ("grid_xmin", "grid_ymax", "dx", "dy"))
+    cs = coverage_stream(pairs, zones, grid_xmin=gx, grid_ymax=gy, dx=dx, dy=dy)
+    pos = np.flatnonzero(cs.cov > min_coverage_frac)
+    if pos.size == 0:
+        return None
+    p, gr, gc = cs.rowcol(pos)
+    zone = pairs["zone"][p]
+    cv = cs.cov[pos].astype(np.float64)
+    cx0 = gx + gc * dx
+    cy1 = gy - gr * dy
+    cx1 = cx0 + dx
+    cy0 = cy1 - dy
+    rect = zones.is_rect[zone]
+    closed = rect | (cv >= 1.0)
+
+    # every covered cell of a rectangle zone is the zone bbox clipped to
+    # the cell; every full cell is the cell box
+    k = np.flatnonzero(closed)
+    bb = zones.bbox[zone[k]]
+    rk = rect[k]
+    px0 = np.where(rk, np.maximum(bb[:, 0], cx0[k]), cx0[k])
+    py0 = np.where(rk, np.maximum(bb[:, 1], cy0[k]), cy0[k])
+    px1 = np.where(rk, np.minimum(bb[:, 2], cx1[k]), cx1[k])
+    py1 = np.where(rk, np.minimum(bb[:, 3], cy1[k]), cy1[k])
+    out = [(k, px0, py0, px1, py1, _box_wkt_vec(px0, py0, px1, py1))]
+    b = np.flatnonzero(~closed)
+    if b.size:
+        out += _boundary_pieces(b, zone, gr, gc, (cx0, cy0, cx1, cy1),
+                                zones, grid)
+    sel = np.concatenate([o[0] for o in out])
+    # the wkt column stays an ARROW string array end-to-end: pandas
+    # ArrowDtype passes through Spark's Arrow serializer zero-copy
+    # (StringType has no per-element converter), skipping 10⁶s of
+    # PyUnicode allocations per batch.  Single chunk: the serializer's
+    # StructArray.from_arrays rejects ChunkedArray columns
+    wkt = pa.chunked_array([pa.concat_arrays([o[5] for o in out])])
+    return pd.DataFrame({
+        "zone_id": zones.zone_id[zone[sel]],
+        "cell_id": gr[sel] * grid["grid_ncols"] + gc[sel],
+        "coverage": cv[sel],
+        "x0": np.concatenate([o[1] for o in out]),
+        "y0": np.concatenate([o[2] for o in out]),
+        "x1": np.concatenate([o[3] for o in out]),
+        "y1": np.concatenate([o[4] for o in out]),
+        "wkt": pd.arrays.ArrowExtensionArray(wkt),
+    })
+
+
 def subdivide(zones: DataFrame, tiles: DataFrame, *,
               grid: dict | None = None, tile_size: int | None = None,
               min_coverage_frac: float = 0.0,
@@ -184,194 +331,14 @@ def subdivide(zones: DataFrame, tiles: DataFrame, *,
 
     def kernel(batches):
         for pdf in batches:
-            za, prow, zo = pair_zones(pdf, lookup)
-            if (za.kind[zo] != AREAL).any():
-                raise ValueError("subdivide requires areal geometries")
-            lo_p = np.searchsorted(prow, np.arange(len(pdf) + 1))
-            # columnar accumulators for the vectorized branches
-            acc = {c: [] for c in _COLS}
-
-            def emit(zid, cid, cv, px0, py0, px1, py1, wkt):
-                n = len(cid)
-                if n == 0:
-                    return
-                acc["zone_id"].append(np.full(n, zid, dtype=object))
-                acc["cell_id"].append(cid)
-                acc["coverage"].append(cv)
-                acc["x0"].append(px0)
-                acc["y0"].append(py0)
-                acc["x1"].append(px1)
-                acc["y1"].append(py1)
-                acc["wkt"].append(wkt)
-
-            tiles_pdf = pdf.drop(columns=[c for c in ("zone_ids", "zone_structs")
-                                          if c in pdf.columns])
-            for j, rec in enumerate(tiles_pdf.to_dict("records")):
-                nr, nc = int(rec["nrows"]), int(rec["ncols"])
-                row0, col0 = int(rec["row0"]), int(rec["col0"])
-                dx, dy = float(rec["dx"]), float(rec["dy"])
-                gx, gy = float(rec["grid_xmin"]), float(rec["grid_ymax"])
-                gncols = int(rec["grid_ncols"])
-                xmin_t = gx + col0 * dx
-                ymax_t = gy - row0 * dy
-                for p in range(lo_p[j], lo_p[j + 1]):
-                    o = int(zo[p])
-                    zid = za.zone_id[o]
-                    g = za.geometry(o)
-                    (bx0, by0, bx1, by1), is_rect = g.bbox, bool(za.is_rect[o])
-                    c0z = min(max(int(math.floor((bx0 - xmin_t) / dx)), 0), nc - 1)
-                    c1z = min(max(int(math.ceil((bx1 - xmin_t) / dx)), c0z + 1), nc)
-                    r0z = min(max(int(math.floor((ymax_t - by1) / dy)), 0), nr - 1)
-                    r1z = min(max(int(math.ceil((ymax_t - by0) / dy)), r0z + 1), nr)
-                    cov = coverage_fraction(g, xmin_t + c0z * dx, ymax_t - r0z * dy,
-                                            dx, dy, r1z - r0z, c1z - c0z)
-                    rr, cc = np.nonzero(cov > mcf)
-                    if rr.size == 0:
-                        continue
-                    cv = cov[rr, cc].astype(np.float64)
-                    gr = (row0 + r0z + rr).astype(np.int64)
-                    gc = (col0 + c0z + cc).astype(np.int64)
-                    cid = gr * gncols + gc
-                    cx0 = gx + gc * dx
-                    cy1 = gy - gr * dy
-                    cx1 = cx0 + dx
-                    cy0 = cy1 - dy
-
-                    if is_rect:
-                        # closed form for EVERY covered cell of a
-                        # rectangle zone (full cells clip to the cell box)
-                        px0 = np.maximum(bx0, cx0)
-                        py0 = np.maximum(by0, cy0)
-                        px1 = np.minimum(bx1, cx1)
-                        py1 = np.minimum(by1, cy1)
-                        emit(zid, cid, cv, px0, py0, px1, py1,
-                             _box_wkt_vec(px0, py0, px1, py1))
-                        continue
-
-                    full = cv >= 1.0
-                    if full.any():
-                        fi = np.flatnonzero(full)
-                        emit(zid, cid[fi], cv[fi], cx0[fi], cy0[fi],
-                             cx1[fi], cy1[fi],
-                             _box_wkt_vec(cx0[fi], cy0[fi], cx1[fi], cy1[fi]))
-                    bi = np.flatnonzero(~full)
-                    if bi.size == 0:
-                        continue
-                    # boundary cells: exact left-hand-ring reassembly.
-                    # The traversal chains for ALL boundary cells come
-                    # from ONE batched incidence pass over the zone's
-                    # edge stream (grid_cell_chains) — per-cell Python
-                    # work is only the (tiny) chain walk + ring
-                    # assembly, so a coastline-shaped zone no longer
-                    # pays an O(edges) numpy scan per boundary cell
-                    cell_lists = grid_cell_chains(
-                        g.rings, gr[bi], gc[bi], gx, gy, dx, dy)
-                    # assembled cells: record the polygon STRUCTURE
-                    # (counts + flat coordinate stream); strings, bboxes
-                    # and arrays are built in one vectorized pass below
-                    b_cid = []
-                    b_cv = []
-                    cell_np = []      # polys per cell
-                    poly_nr = []      # rings per poly
-                    ring_nc = []      # coords per ring
-                    co_x = []         # flat coordinate stream
-                    co_y = []
-                    # Sutherland–Hodgman fallback cells (rare): per-cell
-                    # python strings, emitted separately
-                    f_cid = []
-                    f_cv = []
-                    f_px0 = []
-                    f_py0 = []
-                    f_px1 = []
-                    f_py1 = []
-                    f_wkt = []
-                    for k, lists in zip(bi, cell_lists):
-                        ex0, ey0 = float(cx0[k]), float(cy0[k])
-                        ex1, ey1 = float(cx1[k]), float(cy1[k])
-                        try:
-                            polys = left_hand_rings(
-                                (ex0, ey0, ex1, ey1), lists)
-                            if not polys:
-                                continue
-                        except ValueError:
-                            # degenerate traversal: Sutherland–Hodgman
-                            # fallback (area-identical, bridged WKT)
-                            parts = []
-                            for ring in g.rings:
-                                pts = clip_ring_box(ring, ex0, ey0, ex1, ey1)
-                                if len(pts) >= 3:
-                                    parts.append(pts)
-                            if not parts:
-                                continue
-                            xs = [p[0] for pts in parts for p in pts]
-                            ys = [p[1] for pts in parts for p in pts]
-                            f_cid.append(cid[k])
-                            f_cv.append(cv[k])
-                            f_px0.append(min(xs))
-                            f_py0.append(min(ys))
-                            f_px1.append(max(xs))
-                            f_py1.append(max(ys))
-                            f_wkt.append(_ring_wkt(parts))
-                            continue
-                        b_cid.append(cid[k])
-                        b_cv.append(cv[k])
-                        cell_np.append(len(polys))
-                        for poly in polys:
-                            poly_nr.append(len(poly))
-                            for ring in poly:
-                                ring_nc.append(len(ring))
-                                rxs, rys = zip(*ring)
-                                co_x.extend(rxs)
-                                co_y.extend(rys)
-                    import pyarrow as pa
-                    if b_cid:
-                        cxf = np.asarray(co_x)
-                        cyf = np.asarray(co_y)
-                        # one offset hierarchy drives both the WKT list
-                        # joins and the bbox spans: the coord index at
-                        # cell k's start is rc_off[pr_off[cp_off[k]]]
-                        cp_off = _offsets(cell_np)
-                        pr_off = _offsets(poly_nr)
-                        rc_off = _offsets(ring_nc)
-                        spans = rc_off[pr_off[cp_off]]
-                        # per-cell bbox (holes never extend beyond their
-                        # shell, so all-ring min/max == shell-only)
-                        emit(zid, np.array(b_cid, dtype=np.int64),
-                             np.array(b_cv),
-                             np.minimum.reduceat(cxf, spans[:-1]),
-                             np.minimum.reduceat(cyf, spans[:-1]),
-                             np.maximum.reduceat(cxf, spans[:-1]),
-                             np.maximum.reduceat(cyf, spans[:-1]),
-                             _batch_polygons_wkt(cp_off, pr_off,
-                                                 rc_off, cxf, cyf))
-                    if f_cid:
-                        emit(zid, np.array(f_cid, dtype=np.int64),
-                             np.array(f_cv), np.array(f_px0),
-                             np.array(f_py0), np.array(f_px1),
-                             np.array(f_py1),
-                             pa.array(f_wkt, type=pa.string()))
-
-            if not acc["cell_id"]:
-                yield pd.DataFrame(columns=_COLS)
+            if len(pdf) == 0:
                 continue
-            import pyarrow as pa
-            # the wkt column stays an ARROW string array end-to-end:
-            # pandas ArrowDtype passes through Spark's Arrow serializer
-            # zero-copy (StringType has no per-element converter),
-            # skipping 10⁶s of PyUnicode allocations per batch
-            # single chunk: the serializer's StructArray.from_arrays
-            # rejects ChunkedArray columns
-            wkt_col = pd.arrays.ArrowExtensionArray(pa.chunked_array(
-                [pa.chunked_array(acc["wkt"]).combine_chunks()]))
-            yield pd.DataFrame({
-                "zone_id": np.concatenate(acc["zone_id"]),
-                "cell_id": np.concatenate(acc["cell_id"]),
-                "coverage": np.concatenate(acc["coverage"]),
-                "x0": np.concatenate(acc["x0"]),
-                "y0": np.concatenate(acc["y0"]),
-                "x1": np.concatenate(acc["x1"]),
-                "y1": np.concatenate(acc["y1"]),
-                "wkt": wkt_col,
-            })
+            tp = tile_pairs(pdf, lookup, CHUNK_CELLS)
+            if (tp.zones.kind[tp.zone] != AREAL).any():
+                raise ValueError("subdivide requires areal geometries")
+            for lo, hi in tp.chunks:
+                frame = _chunk_pieces(tp.chunk(lo, hi), tp.zones, tp.grid, mcf)
+                if frame is not None:
+                    yield frame
 
     return joined.mapInPandas(kernel, schema=_SCHEMA)

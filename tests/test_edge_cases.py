@@ -6,6 +6,7 @@ import pytest
 
 from exactextract_spark.extract import exact_extract
 from exactextract_spark.io import tiles_from_array
+from exactextract_spark.subdivide import subdivide
 
 ARANGE9 = np.arange(1, 10, dtype=np.float64).reshape(3, 3)
 SQ = "POLYGON ((0.5 0.5, 2.5 0.5, 2.5 2.5, 0.5 2.5, 0.5 0.5))"
@@ -202,7 +203,8 @@ def test_mixed_grids_raise(spark):
     """Tiles of one extraction share one grid (tiles are assigned to
     zones with the first tile's grid), so a tile table mixing two
     resolutions fails, naming the differing column, instead of
-    computing statistics on cells the zone does not cover."""
+    computing statistics (or subdivide pieces) on cells the zone does
+    not cover."""
     fine = tiles_from_array(spark, np.ones((8, 8)), tile=4)
     coarse = tiles_from_array(spark, np.full((8, 8), 2.0), tile=4, dx=2.0)
     zones = spark.createDataFrame(
@@ -212,6 +214,9 @@ def test_mixed_grids_raise(spark):
     with pytest.raises(Exception, match="differ between tiles: dx"):
         exact_extract(zones, tiles, ["count", "sum"],
                       strategy="broadcast").collect()
+    # subdivide takes its pairs and windows from the same helper
+    with pytest.raises(Exception, match="differ between tiles: dx"):
+        subdivide(zones, tiles, strategy="broadcast").collect()
 
 
 def test_empty_geometry_yields_empty_stats(spark):

@@ -901,11 +901,11 @@ def test_asof_join_matches_pandas_merge_asof(spark):
 
 
 def test_minhash_arrow_differential(spark, tmp_path):
-    """The Arrow minhash/shingle kernels are bit-equal to the SQL
-    expression path (EXACTEXTRACT_MINHASH_ARROW=0), including edge
+    """The Arrow minhash/shingle/simhash kernels are bit-equal to the
+    SQL expression path (tests/dedup_reference.py), including edge
     documents: empty text, 1-2 tokens (Horner fold), unicode tokens
     (per-token fallback), and NULL text."""
-    import os
+    import dedup_reference as R
 
     from exactextract_spark.pipeline import dedup as D
 
@@ -917,34 +917,17 @@ def test_minhash_arrow_differential(spark, tmp_path):
         "n_chars": [0, 3, 8, 24, 9, 0],
     }).to_parquet(tmp_path / "documents.parquet")
 
-    def _sim16(spark_, src_):
-        return D.simhash(spark_, src_)
-
     def _sim60(spark_, src_):
-        import os
-        if os.environ.get("EXACTEXTRACT_MINHASH_ARROW", "1") == "1":
-            return D._simhash_table(spark_, src_, 60, True, "sim")
-        return D._docs(spark_, src_) \
-            .selectExpr("doc_id", f"{D._TC_ARR_SPARK} AS tc") \
-            .selectExpr("doc_id", f"{D._SIM60_SPARK} AS sim")
+        return D._simhash_table(spark_, src_, 60, True, "sim")
 
-    prior = os.environ.get("EXACTEXTRACT_MINHASH_ARROW")
-    for fn in (D.minhash_signature, D._distinct_shingles, _sim16, _sim60):
+    for fn, ref in ((D.minhash_signature, R.minhash_signature),
+                    (D._distinct_shingles, R.distinct_shingles),
+                    (D.simhash, R.simhash), (_sim60, R.sim60)):
         for src in (SF_DIR, str(tmp_path)):
-            try:
-                # force the Arrow path for side a (a preset =0 in the
-                # environment would otherwise compare SQL vs SQL)
-                os.environ["EXACTEXTRACT_MINHASH_ARROW"] = "1"
-                a = fn(spark, src).toPandas() \
-                    .sort_values("doc_id").reset_index(drop=True)
-                os.environ["EXACTEXTRACT_MINHASH_ARROW"] = "0"
-                b = fn(spark, src).toPandas() \
-                    .sort_values("doc_id").reset_index(drop=True)
-            finally:
-                if prior is None:
-                    os.environ.pop("EXACTEXTRACT_MINHASH_ARROW", None)
-                else:
-                    os.environ["EXACTEXTRACT_MINHASH_ARROW"] = prior
+            a = fn(spark, src).toPandas() \
+                .sort_values("doc_id").reset_index(drop=True)
+            b = ref(spark, src).toPandas() \
+                .sort_values("doc_id").reset_index(drop=True)
             assert list(a.columns) == list(b.columns)
             if "sh" in a.columns:
                 # sorted-distinct vs first-occurrence order: compare as
@@ -960,10 +943,10 @@ def test_minhash_arrow_differential(spark, tmp_path):
 
 def test_verified_pairs_fused_differential(spark, tmp_path):
     """minhash_verified_pairs' fused one-pass Arrow kernel is bit-equal
-    to the pure SQL composition (EXACTEXTRACT_MINHASH_ARROW=0) — pair
-    set AND jaccard values — on the sf fixture and on a corpus with
-    exact duplicates, near-duplicates, short and NULL docs."""
-    import os
+    to the pure SQL composition (tests/dedup_reference.py) — pair set
+    AND jaccard values — on the sf fixture and on a corpus with exact
+    duplicates, near-duplicates, short and NULL docs."""
+    import dedup_reference as R
 
     from exactextract_spark.pipeline import dedup as D
 
@@ -976,20 +959,11 @@ def test_verified_pairs_fused_differential(spark, tmp_path):
         "n_chars": [15, 15, 15, 3, 0, 0, 15],
     }).to_parquet(tmp_path / "documents.parquet")
 
-    prior = os.environ.get("EXACTEXTRACT_MINHASH_ARROW")
     for src in (SF_DIR, str(tmp_path)):
-        try:
-            os.environ["EXACTEXTRACT_MINHASH_ARROW"] = "1"
-            a = D.minhash_verified_pairs(spark, src).toPandas() \
-                .sort_values(["doc_a", "doc_b"]).reset_index(drop=True)
-            os.environ["EXACTEXTRACT_MINHASH_ARROW"] = "0"
-            b = D.minhash_verified_pairs(spark, src).toPandas() \
-                .sort_values(["doc_a", "doc_b"]).reset_index(drop=True)
-        finally:
-            if prior is None:
-                os.environ.pop("EXACTEXTRACT_MINHASH_ARROW", None)
-            else:
-                os.environ["EXACTEXTRACT_MINHASH_ARROW"] = prior
+        a = D.minhash_verified_pairs(spark, src).toPandas() \
+            .sort_values(["doc_a", "doc_b"]).reset_index(drop=True)
+        b = R.minhash_verified_pairs(spark, src).toPandas() \
+            .sort_values(["doc_a", "doc_b"]).reset_index(drop=True)
         assert len(a) > 0 or src == SF_DIR, "edge corpus must pair up"
         assert a.equals(b), (src, a, b)
 

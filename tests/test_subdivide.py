@@ -133,7 +133,7 @@ def test_batch_polygons_wkt_matches_scalar():
 
     from exactextract_spark.kernel import coverage_fraction
     from exactextract_spark.subdivide import _batch_polygons_wkt, _offsets
-    from exactextract_spark.traversal import covered_polygons, polygons_wkt
+    from traversal_reference import covered_polygons, polygons_wkt
 
     def compare(cells_polys):
         want = [polygons_wkt(p) for p in cells_polys]
@@ -225,3 +225,153 @@ def test_subdivide_long_chord_zone(spark):
     shell = _p(wkt).rings[0]
     want = abs(ring_area([tuple(p) for p in shell]))
     assert total == pytest.approx(want, rel=1e-6)
+
+
+def _star(rng, cx, cy, m, rmin, rmax):
+    ang = (np.arange(m) + rng.uniform(0.05, 0.95, m)) * (2 * np.pi / m)
+    rad = rng.uniform(rmin, rmax, m)
+    return list(zip(cx + rad * np.cos(ang), cy + rad * np.sin(ang)))
+
+
+def _ring(pts):
+    return "(" + ", ".join(f"{x!r} {y!r}" for x, y in pts + pts[:1]) + ")"
+
+
+def _fuzz_zones(rng, gx, gy, d, G):
+    """Stars (8-13 vertices), stars with a square hole, concave
+    multi-prong U shapes and rectangles inside a G x G grid of cell
+    size ``d`` with top-left (gx, gy)."""
+    zones = []
+    for i in range(12):
+        cx = gx + rng.uniform(0.3, 0.7) * G * d
+        cy = gy - rng.uniform(0.3, 0.7) * G * d
+        kind = i % 4
+        if kind == 0:
+            wkt = "POLYGON (" + _ring(_star(rng, cx, cy, int(rng.integers(8, 14)),
+                                            1.0 * d, 9.0 * d)) + ")"
+        elif kind == 1:
+            shell = _star(rng, cx, cy, int(rng.integers(8, 14)), 4.0 * d, 9.0 * d)
+            # corners within half the shell's min radius: inside the star
+            h = 1.4 * d
+            hole = [(cx - h, cy - h), (cx - h, cy + h), (cx + h, cy + h), (cx + h, cy - h)]
+            wkt = "POLYGON (" + _ring(shell) + ", " + _ring(hole) + ")"
+        elif kind == 2:
+            w = d * rng.uniform(0.4, 2.5)
+            x, top = cx, cy + 8 * d
+            pts = [(cx, cy)]
+            for _ in range(int(rng.integers(2, 5))):
+                pts += [(x + w, cy + rng.uniform(0.2, 1.0) * d), (x + w, top),
+                        (x + 2 * w, top), (x + 2 * w, cy - rng.uniform(0.0, 1.0) * d)]
+                x += 2 * w
+            pts += [(x + w, cy - 3 * d), (cx, cy - 3 * d)]
+            wkt = "POLYGON (" + _ring(pts) + ")"
+        else:
+            x0, y0 = cx - rng.uniform(0.2, 6) * d, cy - rng.uniform(0.2, 6) * d
+            x1, y1 = cx + rng.uniform(0.2, 6) * d, cy + rng.uniform(0.2, 6) * d
+            wkt = "POLYGON (" + _ring([(x0, y0), (x1, y0), (x1, y1), (x0, y1)]) + ")"
+        zones.append((f"z{i}", wkt))
+    return zones
+
+
+def _box_wkt(x0, y0, x1, y1):
+    return f"POLYGON (({x0!r} {y0!r}, {x1!r} {y0!r}, {x1!r} {y1!r}, {x0!r} {y1!r}, {x0!r} {y0!r}))"
+
+
+@pytest.mark.parametrize("gx,gy,d,tile", [(0.0, 40.0, 1.0, 7),
+                                          (0.0, 40.0, 1.0, 64),
+                                          (-13.37, 50.3, 0.3, 16)])
+def test_subdivide_matches_per_cell_reference(spark, gx, gy, d, tile):
+    """subdivide (pair windows, the zonal kernel's coverage stream,
+    vectorized box pieces, batched boundary chains) equals a per-cell
+    reference: coverage_fraction over each zone's whole window, the
+    zone bbox ∩ cell box for rectangles and full cells, and the scalar
+    traversal producer (covered_polygons) for boundary cells.  Cell
+    sets and coverage bits are identical and the WKT parses to the same
+    coordinates."""
+    from exactextract_spark.geom import parse_wkt_batch
+    from exactextract_spark.kernel import coverage_fraction
+    from traversal_reference import covered_polygons, polygons_wkt
+    import pyarrow as pa
+
+    G = 40
+    zones = _fuzz_zones(np.random.default_rng(int(d * 10) + tile), gx, gy, d, G)
+    tiles = tiles_from_array(spark, np.zeros((G, G)), xmin=gx, ymax=gy,
+                             dx=d, dy=d, tile=tile)
+    got = {(r["zone_id"], r["cell_id"]): r for r in
+           subdivide(spark.createDataFrame(zones, ["zone_id", "geometry"]),
+                     tiles).collect()}
+    za = parse_wkt_batch(pa.array([w for _, w in zones]))
+    want = {}
+    for o, (zid, _) in enumerate(zones):
+        g = za.geometry(o)
+        bx0, by0, bx1, by1 = g.bbox
+        c0 = max(int(np.floor((bx0 - gx) / d)), 0)
+        c1 = min(int(np.ceil((bx1 - gx) / d)), G)
+        r0 = max(int(np.floor((gy - by1) / d)), 0)
+        r1 = min(int(np.ceil((gy - by0) / d)), G)
+        cov = coverage_fraction(g, gx + c0 * d, gy - r0 * d, d, d, r1 - r0, c1 - c0)
+        for rr, cc in zip(*np.nonzero(cov > 0)):
+            gr, gc = r0 + int(rr), c0 + int(cc)
+            x0 = gx + gc * d
+            y1 = gy - gr * d
+            x1, y0 = x0 + d, y1 - d
+            cv = float(cov[rr, cc])
+            if g.is_rectangle():
+                wkt = _box_wkt(max(bx0, x0), max(by0, y0), min(bx1, x1), min(by1, y1))
+            elif cv >= 1.0:
+                wkt = _box_wkt(x0, y0, x1, y1)
+            else:
+                wkt = polygons_wkt(covered_polygons(g.rings, x0, y0, x1, y1))
+            want[(zid, gr * G + gc)] = (cv, wkt)
+    assert set(got) == set(want)
+    assert {r["zone_id"] for r in got.values()} == {z for z, _ in zones}
+    for key, (cv, wkt) in want.items():
+        r = got[key]
+        assert r["coverage"] == cv, key
+        ga, gb = parse_wkt(r["wkt"]), parse_wkt(wkt)
+        assert len(ga.rings) == len(gb.rings), (key, r["wkt"], wkt)
+        for a, b in zip(ga.rings, gb.rings):
+            assert np.array_equal(a, b), (key, r["wkt"], wkt)
+        assert (r["x0"], r["y0"], r["x1"], r["y1"]) == gb.bbox, key
+
+
+def test_subdivide_clip_fallback(spark):
+    """A vertex 2 ulps inside a cell's right edge: the edge entering
+    the cell through that edge clips to a single parameter value and is
+    dropped, so the cell's only chain starts at the vertex, off the box
+    boundary, and left_hand_rings cannot assemble it.  subdivide then
+    emits the cell's Sutherland–Hodgman piece, whose area equals the
+    kernel coverage.  (Found by fuzzing boundary cells of stars, coasts
+    and holed zones with near-gridline vertices on non-unit grids.)"""
+    from exactextract_spark.traversal import grid_cell_chains, left_hand_rings
+
+    gx, gy, dx, dy = -13.37, 1000.7, 0.25, 0.7
+    wkt = ("POLYGON ((-1.8699999999999994 973.8597657774253, "
+           "-3.0931066703165757 974.926211179045, "
+           "-3.4069088262989187 973.3398497191356, "
+           "-6.391217253050561 973.7327668303981, "
+           "-6.177324142948299 972.4471240220197, "
+           "-3.6199999999999997 969.2, "
+           "-2.1226533951536206 970.7844510419535, "
+           "-0.6199999999999993 970.6000000000001, "
+           "-1.8699999999999994 973.8597657774253))")
+    gr, gc = 38, 45
+    x0, y1 = gx + gc * dx, gy - gr * dy
+    box = (x0, y1 - dy, x0 + dx, y1)
+    chains = grid_cell_chains(parse_wkt(wkt).rings, np.array([gr]),
+                              np.array([gc]), gx, gy, dx, dy)[0]
+    with pytest.raises(ValueError, match="not on box boundary"):
+        left_hand_rings(box, chains)
+
+    tiles = tiles_from_array(spark, np.zeros((60, 60)), xmin=gx, ymax=gy,
+                             dx=dx, dy=dy, tile=16)
+    zones = spark.createDataFrame([("s", wkt)], ["zone_id", "geometry"])
+    rows = {r["cell_id"]: r for r in subdivide(zones, tiles).collect()}
+    r = rows[gr * 60 + gc]
+    assert 0.0 < r["coverage"] < 1.0
+    assert _wkt_area(r["wkt"]) == pytest.approx(r["coverage"] * dx * dy, rel=1e-6)
+    assert box[0] <= r["x0"] < r["x1"] <= box[2]
+    assert box[1] <= r["y0"] < r["y1"] <= box[3]
+    want = sum(ring_signed_area(ring) for ring in parse_wkt(wkt).rings)
+    got = sum(v["coverage"] for v in rows.values()) * dx * dy
+    assert got == pytest.approx(want, rel=1e-6)

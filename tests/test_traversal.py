@@ -11,9 +11,8 @@ sequence.
 import numpy as np
 import pytest
 
-from exactextract_spark.traversal import (box_traversals, covered_polygons,
-                                          left_hand_rings, polygons_wkt,
-                                          ring_area)
+from exactextract_spark.traversal import left_hand_rings, ring_area
+from traversal_reference import box_traversals, covered_polygons, polygons_wkt
 
 BOX = (0.0, 0.0, 10.0, 10.0)
 
@@ -322,7 +321,7 @@ def test_grid_cell_chains_matches_per_cell_fuzz(seed):
     scale path is a pure reorganization, not an approximation."""
     from exactextract_spark.geom import Geometry, parse_wkt
     from exactextract_spark.spatial import points_in_geom
-    from exactextract_spark.traversal import box_traversals, grid_cell_chains
+    from exactextract_spark.traversal import grid_cell_chains
 
     rng = np.random.default_rng(100 + seed)
     G = 12
@@ -417,7 +416,7 @@ def test_single_chain_fast_path_matches_generic(seed, monkeypatch):
             cell = (float(c), float(G - 1 - r), float(c + 1), float(G - r))
             def run():
                 try:
-                    return tv.covered_polygons(g.rings, *cell)
+                    return covered_polygons(g.rings, *cell)
                 except ValueError as e:
                     return ("raise", str(e))
             fast = run()
@@ -432,7 +431,7 @@ def test_grid_cell_chains_huge_coordinates():
     batched producer must match per-cell box_traversals on a triangle
     with two far-away vertices whose edges sweep through the window."""
     from exactextract_spark.geom import parse_wkt
-    from exactextract_spark.traversal import box_traversals, grid_cell_chains
+    from exactextract_spark.traversal import grid_cell_chains
 
     g = parse_wkt("POLYGON ((1.5 1.5, 1e30 1.7, 1.5 3.5, 1.5 1.5))")
     G = 6
