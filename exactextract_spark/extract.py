@@ -7,9 +7,10 @@ raster_parallel_processor.cpp:83-232).  The reference's 5-stage oneTBB
 pipeline maps onto the Spark plan one-to-one:
 
   1. subgrid work list            -> the tile table (one row per tile)
-  2. STRtree feature-hit query    -> zone-bbox → tile-range explode +
-                                     equi-join on (tile_row, tile_col);
-                                     the grid itself is the spatial index
+  2. STRtree feature-hit query    -> zone bbox → tile range, as one
+                                     numpy CSR of zone ordinals per tile
+                                     key (tile_hits); the grid itself is
+                                     the spatial index
   3. raster window read           -> tile payload column scan
   4. coverage + block-local stats -> Arrow-batched mapInPandas kernel
                                      emitting partial-state rows
@@ -28,15 +29,24 @@ and the flat geometry arrays (GEOM_COLS: kind, interleaved x/y
 coordinates, ring offsets).  Nothing downstream parses WKT again.
 
 Join strategies:
-- "broadcast" (default for small/medium zone sets): only (zone_id,
-  tile_row, tile_col) pairs enter the broadcast hash join; the zone
-  geometry travels as one SparkContext broadcast of flat numpy arrays
-  (geom.ZoneArrays, indexed by a dense zone ordinal) straight to the
-  kernel, so the big tile payloads are NEVER shuffled — the kernel runs
-  in the same stage as the tile scan.
-- "shuffle": for huge zone tables; the per-tile zone lists carry the
-  same geometry arrays (not WKT) and the join shuffles by tile key
+- "broadcast" (default for small/medium zone sets): zone prep is ONE
+  Spark job — a collect of the parsed zones that counts them, picks
+  the strategy, validates them and feeds tile_hits.  The zone geometry
+  (geom.ZoneArrays, indexed by a dense zone ordinal) and the tile
+  hit-list CSR travel as one SparkContext broadcast straight to the
+  kernel.  There is no join: the tiles are filtered by a predicate
+  holding the hit tile keys as a bitmap literal, and the kernel
+  gathers each tile's zone ordinals from the CSR by key.  The big tile
+  payloads are NEVER shuffled — the kernel runs in the same stage as
+  the tile scan.
+- "shuffle": for huge zone tables; a mapInArrow explodes each zone to
+  its tiles with the same tile_hits, the per-tile zone lists carry the
+  geometry arrays (not WKT) and the join shuffles by tile key
   (payloads move exactly once).  AQE handles skewed tile keys.
+
+Pairs are keyed by zone ordinal (one per zone ROW) on both strategies:
+zones sharing a zone_id each contribute their own geometry, and their
+partial states merge under that id.
 
 Variance is carried as (Σc, Σcx, Σcx²) so partial states merge exactly —
 lifting the reference's parallel-strategy restriction
@@ -50,15 +60,16 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
-from .geom import GEOM_COLS, INVALID, ZoneArrays, parse_wkt_batch
+from .geom import GEOM_COLS, INVALID, ZoneArrays, _gather_ranges, parse_wkt_batch
 from .io import decode_value_tile
 from .ops import Op, group_ops_by_key, parse_ops
 
 __all__ = ["exact_extract", "attach_bbox", "zone_tile_pairs", "run_kernel",
-           "crs_matches", "raise_on_invalid_zones", "count_and_validate",
-           "prepare_zones", "zone_lists", "tile_pairs"]
+           "crs_matches", "raise_on_invalid_zones", "prepare_zones",
+           "tile_hits", "zone_lists", "join_zone_lists", "tile_pairs"]
 
 BROADCAST_ZONE_LIMIT = 200_000
 
@@ -145,7 +156,7 @@ def attach_bbox(zones: DataFrame) -> DataFrame:
     row for every feature).  Invalid WKT (unsupported POINT zones,
     garbage, unbalanced parentheses, odd coordinate counts, Z/M
     coordinates) gets NULL bbox and geometry columns here; consumers
-    fail loudly via count_and_validate() / raise_on_invalid_zones().
+    fail loudly via prepare_zones() / raise_on_invalid_zones().
     The Python stage is opaque to the optimizer, so no raising
     expression can be reordered onto rows a filter below it drops.
 
@@ -179,28 +190,121 @@ def raise_on_invalid_zones(zones_b: DataFrame) -> None:
     bad = zones_b.where(F.col("_geom_kind").isNull()) \
                  .select("geometry").limit(1).collect()
     if bad:
-        raise ValueError(f"invalid zone geometry {str(bad[0][0])[:80]!r}")
+        _raise_invalid(bad[0][0])
 
 
-def count_and_validate(zones_b: DataFrame) -> int:
-    """Zone count and invalid-geometry check in ONE action (consumers
-    that need both would otherwise scan the zone table twice)."""
-    bad = F.col("_geom_kind").isNull()
-    row = zones_b.agg(F.count("*").alias("n"),
-                      F.sum(bad.cast("long")).alias("bad"),
-                      F.first(F.when(bad, F.col("geometry")),
-                              ignorenulls=True).alias("ex")).first()
-    if row["bad"]:
-        raise ValueError(f"invalid zone geometry {str(row['ex'])[:80]!r}")
-    return row["n"]
+def _raise_invalid(wkt) -> None:
+    raise ValueError(f"invalid zone geometry {str(wkt)[:80]!r}")
+
+
+@dataclass
+class TileHits:
+    """Zone ordinals per tile as a CSR over the sorted tile keys
+    ``tile_row * ntc + tile_col`` of an (ntr, ntc) tile lattice: tile
+    ``key[k]`` is hit by the zones ``zone[off[k]:off[k + 1]]``, in
+    ascending ordinal order."""
+    ntr: int
+    ntc: int
+    key: np.ndarray    # int64, sorted, unique
+    off: np.ndarray    # int64, len(key) + 1
+    zone: np.ndarray   # int64 zone ordinals
+
+    @property
+    def tile_row(self) -> np.ndarray:
+        return (self.key // self.ntc).astype(np.int32)
+
+    @property
+    def tile_col(self) -> np.ndarray:
+        return (self.key % self.ntc).astype(np.int32)
+
+    def gather(self, tile_row, tile_col) -> tuple[np.ndarray, np.ndarray]:
+        """(query index, zone ordinal) of every pair of the queried
+        tiles, grouped by query in query order; a tile without hits
+        (or off the lattice) yields no pair."""
+        r = np.asarray(tile_row, dtype=np.int64)
+        c = np.asarray(tile_col, dtype=np.int64)
+        if not self.key.size:
+            return np.zeros(0, np.int64), np.zeros(0, np.int64)
+        q = np.where((r >= 0) & (r < self.ntr) & (c >= 0) & (c < self.ntc),
+                     r * self.ntc + c, -1)
+        pos = np.minimum(np.searchsorted(self.key, q), self.key.size - 1)
+        lo = self.off[pos]
+        cnt = np.where(self.key[pos] == q, self.off[pos + 1] - lo, 0)
+        return (np.repeat(np.arange(q.size), cnt),
+                self.zone[_gather_ranges(lo, cnt)])
+
+    def tile_filter(self, max_digits: int = 1 << 16) -> Column:
+        """A Spark predicate on (tile_row, tile_col) that keeps every
+        hit tile, evaluated per row with no job: the hit keys as a
+        bitmap in a hex-string literal, four keys per digit.  When the
+        hit keys span more than ``4 * max_digits`` keys, each bit
+        stands for a run of consecutive keys, so the filter keeps a
+        superset (the kernel finds no pairs for the extra tiles)."""
+        if not self.key.size:
+            return F.lit(False)
+        lo = int(self.key[0])
+        step = -(-(int(self.key[-1]) - lo + 1) // (4 * max_digits))
+        on = (self.key - lo) // step
+        bits = np.zeros(-(-int(on[-1] + 1) // 4) * 4, dtype=np.int64)
+        bits[on] = 1
+        digits = bits.reshape(-1, 4) @ np.array([1, 2, 4, 8])
+        hexs = "".join(np.array(list("0123456789abcdef"))[digits])
+        b = f"((cast(tile_row as bigint) * {self.ntc} + tile_col - {lo}) div {step})"
+        return F.expr(
+            f"tile_row >= 0 AND tile_row < {self.ntr} AND tile_col >= 0 "
+            f"AND tile_col < {self.ntc} AND {b} BETWEEN 0 AND {bits.size - 1} AND "
+            f"bit_get(cast(conv(substring('{hexs}', {b} div 4 + 1, 1), 16, 10)"
+            f" AS int), pmod({b}, 4)) = 1")
+
+
+def tile_hits(bbox: np.ndarray, grid: dict, tile: int) -> TileHits:
+    """The tiles each zone's bbox overlaps (the STRtree-query analog,
+    raster_parallel_processor.cpp:142-162) as a numpy CSR: on a regular
+    grid the query is arithmetic.  ``bbox`` is (n, 4) xmin, ymin, xmax,
+    ymax per zone ordinal (NaN for a NULL bbox: no tile).  Same float
+    ops as zone_tile_pairs — the grid-overlap predicate, the clamps and
+    the ``- 1e-12`` nudge of the right/bottom edge — so both give the
+    same (tile, zone) pairs."""
+    gx, gy = float(grid["grid_xmin"]), float(grid["grid_ymax"])
+    dx, dy = float(grid["dx"]), float(grid["dy"])
+    ntr = (int(grid["grid_nrows"]) + tile - 1) // tile
+    ntc = (int(grid["grid_ncols"]) + tile - 1) // tile
+    tw, th = dx * tile, dy * tile
+
+    xmin, ymin, xmax, ymax = np.asarray(bbox, dtype=np.float64).reshape(-1, 4).T
+    with np.errstate(invalid="ignore"):
+        z = np.flatnonzero((xmax > gx) & (xmin < gx + ntc * tw) &
+                           (ymax > gy - ntr * th) & (ymin < gy))
+    tc0 = np.maximum(0, np.floor((xmin[z] - gx) / tw))
+    tc1 = np.minimum(ntc - 1, np.floor((xmax[z] - gx) / tw - 1e-12))
+    tr0 = np.maximum(0, np.floor((gy - ymax[z]) / th))
+    tr1 = np.minimum(ntr - 1, np.floor((gy - ymin[z]) / th - 1e-12))
+    ok = (tr1 >= tr0) & (tc1 >= tc0)
+    z = z[ok]
+    tr0, tr1, tc0, tc1 = (a[ok].astype(np.int64) for a in (tr0, tr1, tc0, tc1))
+
+    ncol = tc1 - tc0 + 1
+    cnt = (tr1 - tr0 + 1) * ncol
+    k = _gather_ranges(np.zeros_like(cnt), cnt)  # index within each zone
+    ncol_p = np.repeat(ncol, cnt)
+    key = (np.repeat(tr0, cnt) + k // ncol_p) * ntc + np.repeat(tc0, cnt) + k % ncol_p
+    order = np.argsort(key, kind="stable")
+    key, zone = key[order], np.repeat(z, cnt)[order].astype(np.int64)
+    first = np.flatnonzero(np.diff(key, prepend=-1))
+    return TileHits(ntr, ntc, key[first],
+                    np.append(first, key.size).astype(np.int64), zone)
 
 
 @dataclass
 class PreparedZones:
     zones_b: DataFrame   # zone table + bbox + GEOM_COLS
     strategy: str        # "broadcast" | "shuffle"
-    lookup: object       # Broadcast[ZoneArrays] (broadcast strategy) or None
-    n_zones: int | None  # counted when the strategy was "auto"
+    lookup: object       # Broadcast[(ZoneArrays, TileHits | None)] or None
+    n_zones: int | None  # known on the broadcast strategy
+    grid: dict | None    # tile lattice of the hit-lists (zone_lists)
+    tile: int | None
+    bbox: np.ndarray | None = None  # (n, 4) xmin.. per ordinal (broadcast)
+    hits: TileHits | None = None    # driver copy of the broadcast CSR
 
     def unpersist(self) -> None:
         self.zones_b.unpersist()
@@ -209,20 +313,27 @@ class PreparedZones:
 
 
 def prepare_zones(zones: DataFrame, strategy: str = "auto", *,
+                  grid: dict | None = None, tile: int | None = None,
                   limit: int | None = None, with_ord: bool = False,
                   persist: bool = False) -> PreparedZones:
     """Zone prep shared by every geometry consumer: attach_bbox (one
-    parse per zone), ONE validating action (that also counts the zones
-    when ``strategy`` is "auto"), and — for the broadcast strategy —
-    the parsed geometry collected with toArrow() and broadcast as flat
-    numpy arrays (geom.ZoneArrays).  Above ``limit`` zones (default
-    BROADCAST_ZONE_LIMIT) the auto strategy switches to "shuffle",
-    where the geometry arrays ride the per-tile zone lists instead
-    (nothing is collected to the driver).
+    parse per zone), then ONE collect of the parsed zones —
+    ``limit(limit + 1).toArrow()`` (default limit
+    BROADCAST_ZONE_LIMIT; no limit for an explicit "broadcast") — that
+    counts them, picks the strategy, validates them (ValueError on the
+    first invalid WKT, before any kernel job) and, given the tile
+    lattice (``grid``, ``tile``), feeds tile_hits.  The broadcast
+    strategy ships the parsed geometry (geom.ZoneArrays) and the tile
+    hit-list CSR as one SparkContext broadcast.
+
+    Above ``limit`` zones (or for an explicit "shuffle") nothing is
+    kept on the driver: one validating action checks the whole table
+    and the geometry arrays ride the per-tile zone lists instead.
 
     ``with_ord`` adds ``_zone_ord`` (input row order, for
     preserve_order output); ``persist`` caches the zone table so the
-    parse runs once across the validation, collect and pair jobs."""
+    parse runs once across the collect, the pair jobs and the final
+    join."""
     if strategy not in ("auto", "broadcast", "shuffle"):
         raise ValueError(f"unknown strategy {strategy!r}: "
                          "expected 'auto', 'broadcast' or 'shuffle'")
@@ -231,54 +342,90 @@ def prepare_zones(zones: DataFrame, strategy: str = "auto", *,
         zones_b = zones_b.withColumn("_zone_ord", F.monotonically_increasing_id())
     if persist:
         zones_b = zones_b.persist()
-    n = None
-    if strategy == "auto":
-        n = count_and_validate(zones_b)
+    t = None
+    if strategy != "shuffle":
         limit = BROADCAST_ZONE_LIMIT if limit is None else limit
-        strategy = "broadcast" if n <= limit else "shuffle"
-    else:
+        q = zones_b.select("zone_id", *_BBOX, *GEOM_COLS, F.when(
+            F.col(GEOM_COLS[0]).isNull(), F.col("geometry")).alias("_bad"))
+        t = (q.limit(limit + 1) if strategy == "auto" else q).toArrow()
+        bad = pc.drop_null(t.column("_bad"))
+        if len(bad):
+            _raise_invalid(bad[0].as_py())
+        if strategy == "auto" and t.num_rows > limit:
+            strategy, t = "shuffle", None
+    if t is None:
         raise_on_invalid_zones(zones_b)
-    lookup = None
-    if strategy == "broadcast":
-        t = zones_b.select("zone_id", *GEOM_COLS).toArrow()
-        za = ZoneArrays.from_arrow(*(t.column(c) for c in GEOM_COLS),
-                                   zone_id=t.column("zone_id"))
-        # derived arrays are computed once here, not per executor
-        za.is_rect, za.segments
-        lookup = zones_b.sparkSession.sparkContext.broadcast(za)
-    return PreparedZones(zones_b, strategy, lookup, n)
+        return PreparedZones(zones_b, "shuffle", None, None, grid, tile)
+    za = ZoneArrays.from_arrow(*(t.column(c) for c in GEOM_COLS),
+                               zone_id=t.column("zone_id"))
+    bbox = np.stack([t.column(c).to_numpy() for c in _BBOX], axis=1)
+    hits = tile_hits(bbox, grid, tile) if grid is not None else None
+    # derived arrays are computed once here, not per executor
+    za.is_rect, za.segments
+    lookup = zones_b.sparkSession.sparkContext.broadcast((za, hits))
+    return PreparedZones(zones_b, "broadcast", lookup, t.num_rows, grid, tile,
+                         bbox, hits)
 
 
-def zone_lists(prep: PreparedZones, grid: dict, tile: int) -> DataFrame:
-    """Per-tile zone hit-lists (the STRtree-query analog,
-    raster_parallel_processor.cpp:142-162), one row per tile so each
-    tile payload crosses the JVM->Arrow boundary once: ``zone_ids``
-    (broadcast strategy; geometry from the broadcast) or
-    ``zone_structs`` (shuffle strategy; the geometry arrays ride the
-    list)."""
-    extra = [] if prep.strategy == "broadcast" else list(GEOM_COLS)
-    pairs = zone_tile_pairs(prep.zones_b.select("zone_id", *extra, *_BBOX),
-                            grid, tile)
-    entry = F.col("zone_id") if not extra else F.struct("zone_id", *extra)
-    return pairs.groupBy("tile_row", "tile_col").agg(
-        F.collect_list(entry).alias("zone_ids" if not extra else "zone_structs"))
+def zone_lists(prep: PreparedZones) -> DataFrame:
+    """Shuffle strategy's zone side of the tile join: one row per tile
+    (tile_row, tile_col) with ``zone_structs``, the list of (zone_id,
+    GEOM_COLS) of its zones.  A mapInArrow over the prepared zones
+    emits one (tile key, zone) row per pair from tile_hits, then the
+    rows are grouped per tile, so each tile payload crosses the
+    shuffle once."""
+    grid, tile = prep.grid, prep.tile
+    zb = prep.zones_b.select("zone_id", *GEOM_COLS, *_BBOX)
+    nb = 1 + len(GEOM_COLS)
+    schema = T.StructType([T.StructField("tile_row", T.IntegerType()),
+                           T.StructField("tile_col", T.IntegerType()),
+                           *zb.schema.fields[:nb]])
+
+    def explode(batches):
+        for b in batches:
+            bbox = np.stack([b.column(nb + k).to_numpy(zero_copy_only=False)
+                             for k in range(4)], axis=1)
+            h = tile_hits(bbox, grid, tile)
+            per_tile = np.diff(h.off)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(np.repeat(h.tile_row, per_tile)),
+                 pa.array(np.repeat(h.tile_col, per_tile)),
+                 *b.take(pa.array(h.zone)).columns[:nb]], names=schema.names)
+
+    return zb.mapInArrow(explode, schema).groupBy("tile_row", "tile_col").agg(
+        F.collect_list(F.struct("zone_id", *GEOM_COLS)).alias("zone_structs"))
+
+
+def join_zone_lists(tiles: DataFrame, prep: PreparedZones,
+                    lists: DataFrame | None = None) -> DataFrame:
+    """Tiles with their zones.  Broadcast strategy: the tiles filtered
+    to the hit tiles (TileHits.tile_filter, no job); the kernel
+    gathers each tile's zone ordinals from the broadcast CSR by key
+    (pair_zones).  Shuffle strategy: the join to the per-tile zone
+    structs (``lists`` = zone_lists(prep), built here when omitted)."""
+    if prep.strategy == "broadcast":
+        return tiles.where(prep.hits.tile_filter())
+    if lists is None:
+        lists = zone_lists(prep)
+    return tiles.join(lists, ["tile_row", "tile_col"])
 
 
 def pair_zones(pdf: pd.DataFrame, lookup) -> tuple:
-    """Kernel side of zone_lists: (ZoneArrays, tile-row index per pair,
+    """Kernel side of join_zone_lists: (ZoneArrays, tile-row index per pair,
     zone ordinal per pair) for a pandas batch of tile rows.  No WKT is
-    parsed: broadcast lists gather ordinals from the broadcast arrays,
-    shuffle lists carry the arrays."""
-    structs = "zone_structs" in pdf.columns
-    lists = pdf["zone_structs" if structs else "zone_ids"].to_numpy()
-    lens = np.fromiter(map(len, lists), dtype=np.int64, count=len(lists))
-    rows = np.repeat(np.arange(len(lists)), lens)
-    if structs:
+    parsed: on the broadcast strategy each tile's ordinals are gathered
+    from the broadcast CSR by (tile_row, tile_col); shuffle lists carry
+    the arrays.  Pairs are keyed by zone ordinal, so zones sharing a
+    zone_id keep their own geometry."""
+    if "zone_structs" in pdf.columns:
+        lists = pdf["zone_structs"].to_numpy()
+        lens = np.fromiter(map(len, lists), dtype=np.int64, count=len(lists))
+        rows = np.repeat(np.arange(len(lists)), lens)
         za = ZoneArrays.from_records(e for lst in lists for e in lst)
         return za, rows, np.arange(rows.size)
-    za = lookup.value
-    flat = np.concatenate(lists) if rows.size else np.zeros(0, dtype=object)
-    return za, rows, za.ordinals(flat)
+    za, hits = lookup.value
+    rows, zo = hits.gather(pdf["tile_row"].to_numpy(), pdf["tile_col"].to_numpy())
+    return za, rows, zo
 
 
 @dataclass
@@ -504,9 +651,11 @@ def run_kernel(joined: DataFrame, keygroups, *, geom_lookup=None,
     """mapInPandas kernel: decode tile, compute coverage once, update
     every op-key's accumulator (read-once dedup of shared windows —
     reference feature_sequential_processor.cpp:85-113).  ``joined``
-    has one row per tile with its zone hit-list (zone_lists);
-    ``geom_lookup`` is the broadcast geometry (prepare_zones) for
-    ``zone_ids`` lists.  ``passthrough`` columns (e.g. tile ids for
+    has one row per tile (join_zone_lists): on the broadcast strategy
+    a plain tile row whose zones ``geom_lookup`` — the broadcast
+    geometry + tile hit-list CSR of prepare_zones — supplies by
+    (tile_row, tile_col); on the shuffle strategy a tile row carrying
+    its ``zone_structs``.  ``passthrough`` columns (e.g. tile ids for
     checkpoint lineage) are copied onto every partial row.
 
     Pair assembly (tile_pairs) is vectorized per Arrow batch: pairs,
@@ -862,9 +1011,11 @@ def _finalize_exprs(i: int, ops_in_key: list[Op], int_values: bool = False,
 
 class ZonalExtractor:
     """Reusable extraction context: zone bboxes, geometry broadcast and
-    the tile⋈zone-list join are prepared once; ``extract(ops)`` can then
-    run many op-sets against the same join (the reference reuses one
-    processor across its Operation list the same way)."""
+    the tile⋈zone-list join are prepared once — on the broadcast
+    strategy in one Spark job (the prepare_zones collect);
+    ``extract(ops)`` can then run many op-sets against the same join
+    (the reference reuses one processor across its Operation list the
+    same way)."""
 
     def __init__(self, zones: DataFrame, tiles: DataFrame, *,
                  weight_tiles: DataFrame | None = None,
@@ -894,11 +1045,13 @@ class ZonalExtractor:
         self.has_weights = weight_tiles is not None
 
         # zone prep is op-independent: parse once and cache it (used by
-        # the pair explode, the geometry broadcast AND the final left
-        # join).  _zone_ord records the input row order for
-        # preserve_order output (the reference's pandas writer reindexes
-        # to the input GeoDataFrame, exact_extract.py:497-501).
-        prep = prepare_zones(zones, strategy, with_ord=True, persist=True)
+        # the one collect that feeds the geometry broadcast and the tile
+        # hit-lists, AND by the final left join).  _zone_ord records the
+        # input row order for preserve_order output (the reference's
+        # pandas writer reindexes to the input GeoDataFrame,
+        # exact_extract.py:497-501).
+        prep = prepare_zones(zones, strategy, grid=grid, tile=tile_size,
+                             with_ord=True, persist=True)
         self._prep = prep
         self.zones_b = prep.zones_b
         self.strategy = prep.strategy
@@ -910,21 +1063,17 @@ class ZonalExtractor:
             tiles_in = join_weight_frame(tiles, w)
 
         # ship each tile payload across the JVM->Arrow boundary exactly
-        # once: the per-tile zone hit-list rides the tile row.  Shuffle
-        # strategy: the lists are grouped BEFORE joining, so each tile
-        # payload crosses the shuffle exactly once (joining raw pairs
-        # would copy the payload once per matching zone — at a 100k-zone
-        # hot tile that is GBs of duplication).
-        pairs_agg = zone_lists(prep, grid, tile_size)
-        self._pairs_agg = None
-        if self.strategy == "broadcast":
-            pairs_agg = self._pairs_agg = pairs_agg.persist()
-            pairs_agg = F.broadcast(pairs_agg)
-        self.joined = tiles_in.join(pairs_agg, ["tile_row", "tile_col"])
+        # once: broadcast strategy, tiles are filtered to the hit keys
+        # and the kernel gathers their zones from the broadcast CSR;
+        # shuffle strategy, the lists are grouped BEFORE joining, so
+        # each tile payload crosses the shuffle exactly once (joining
+        # raw pairs would copy the payload once per matching zone — at
+        # a 100k-zone hot tile that is GBs of duplication).
+        self.joined = join_zone_lists(tiles_in, prep)
         self._joined_persisted = persist_joined
         if persist_joined:
             # materialize the tile⋈zone-list join once: repeated
-            # extract() calls then skip the per-query broadcast build
+            # extract() calls then skip the per-query join
             self.joined = self.joined.persist()
 
     def extract(self, ops, *, include_cols: list[str] | None = None,
@@ -1060,8 +1209,6 @@ class ZonalExtractor:
         self._prep.unpersist()
         for df in getattr(self, "_caches", ()):
             df.unpersist()
-        if self._pairs_agg is not None:
-            self._pairs_agg.unpersist()
         if self._joined_persisted:
             self.joined.unpersist()
 
@@ -1088,7 +1235,12 @@ def exact_extract(zones: DataFrame, tiles: DataFrame, ops, *,
     (reference: python exact_extract,
     /root/reference/python/src/exactextract/exact_extract.py:363-502).
 
-    zones: (zone_id string, geometry WKT string, ...)
+    zones: (zone_id string, geometry WKT string, ...).  Rows sharing a
+           zone_id are one zone made of several geometries: each row's
+           geometry contributes its own cells and the statistics merge
+           them (cells covered by two rows count twice), on either
+           strategy; the output has one row per input row, each
+           carrying the merged statistics.
     tiles: tile table from io.tiles_from_docs (or equivalent schema)
     ops:   list of stat descriptors / Op objects (ops.parse_ops)
     frac_as_map / undefined / dtype_results: see ZonalExtractor.extract

@@ -28,6 +28,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .grid import RasterGrid
+from .session import default_parallelism
 
 __all__ = ["SynthConfig", "build_docs", "zone_sql", "cells_sql", "pairs_sql"]
 
@@ -118,8 +119,7 @@ def _range(spark: SparkSession, n: int) -> DataFrame:
     rows are compute-heavy (decimal WKT rendering ~30µs + bbox parse
     ~35µs per zone doc), so the split targets ~1k rows per partition:
     parallel from a few thousand rows up, single-task below."""
-    parts = max(1, min(spark.sparkContext.defaultParallelism,
-                       -(-n // 1024)))
+    parts = max(1, min(default_parallelism(spark), -(-n // 1024)))
     return spark.range(0, n, 1, parts)
 
 

@@ -131,7 +131,8 @@ class ZoneArrays:
       orientation-normalized for areal zones);
     - ``bbox`` (n, 4): xmin, ymin, xmax, ymax (inverted infinities for
       EMPTY, NaN for invalid);
-    - ``zone_id``: optional zone ids (object array) for id lookups.
+    - ``zone_id``: optional zone ids (object array), by ordinal; ids
+      may repeat (each row keeps its own geometry).
 
     Derived arrays the kernels gather by ordinal (``is_rect``,
     ``segments``) are computed once, on first use."""
@@ -215,22 +216,6 @@ class ZoneArrays:
         seg_off, seg = self.segments
         counts = seg_off[zo + 1] - seg_off[zo]
         return seg[_gather_ranges(seg_off[zo], counts)], counts
-
-    @cached_property
-    def _id_index(self):
-        import pandas as pd
-
-        ser = pd.Series(np.arange(len(self)), index=pd.Index(self.zone_id))
-        return ser[~ser.index.duplicated(keep="last")]
-
-    def ordinals(self, ids) -> np.ndarray:
-        """Dense ordinals of zone ids (a duplicated id resolves to its
-        last row)."""
-        pos = self._id_index.index.get_indexer(ids)
-        if (pos < 0).any():
-            raise KeyError(f"zone ids missing from the zone table: "
-                           f"{list(np.asarray(ids, dtype=object)[pos < 0][:5])}")
-        return self._id_index.to_numpy()[pos]
 
     # -- Arrow / Spark columns (GEOM_COLS) --------------------------------
     def to_arrow(self):

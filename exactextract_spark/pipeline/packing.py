@@ -41,6 +41,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..session import default_parallelism
+
 __all__ = ["pack_documents", "shuffle_documents", "default_blocks"]
 
 
@@ -51,14 +53,8 @@ def default_blocks(spark: SparkSession, cap: int | None = None) -> int:
     idle by balls-in-bins), optionally capped (hex-byte blocking
     cannot exceed 256 buckets).  The block count never leaks into any
     result — prefix sum is associative over ordered disjoint blocks.
-
-    Spark Connect sessions have no SparkContext; their parallelism is
-    read from ``spark.sql.shuffle.partitions`` instead."""
-    try:
-        par = spark.sparkContext.defaultParallelism
-    except (NotImplementedError, AttributeError):
-        par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n = 4 * max(1, par)
+    Works on Spark Connect sessions too (session.default_parallelism)."""
+    n = 4 * max(1, default_parallelism(spark))
     return min(n, cap) if cap else n
 
 

@@ -28,6 +28,16 @@ def job_progress(spark: SparkSession) -> dict:
     return out
 
 
+def default_parallelism(spark: SparkSession) -> int:
+    """The session's default parallelism.  Spark Connect sessions have
+    no SparkContext; their parallelism is read from
+    ``spark.sql.shuffle.partitions`` instead."""
+    try:
+        return spark.sparkContext.defaultParallelism
+    except (NotImplementedError, AttributeError):
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
 def host_defaults() -> tuple[int, str]:
     """(cores, driver memory) for a local session sized to this host:
     the cores this process may run on and min(16g, physical RAM / 3),

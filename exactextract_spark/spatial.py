@@ -206,17 +206,20 @@ def point_in_polygon(points: DataFrame, zones: DataFrame, *,
     and the parsed geometry rides a SparkContext broadcast
     (extract.prepare_zones); above it the join shuffles both sides by
     tile key and the geometry arrays travel in the join (AQE handles
-    skewed tiles).
+    skewed tiles).  Each zone row tests its own geometry: zones sharing
+    a zone_id each yield their own containing (point, zone) rows.
 
     ``grid``/``tile``: optional tile lattice (same dict shape as the
     zonal grid); defaults to a ~sqrt(n_zones)-per-side lattice over the
     zones' bounding box."""
     import math
 
-    # one validating action that also counts the zones (lattice sizing
-    # + strategy); the parsed geometry is broadcast below the limit
+    import pyarrow as pa
+
+    # one collect counts and validates the zones (and, below the limit,
+    # broadcasts the parsed geometry); its bboxes size the lattice
     prep = prepare_zones(zones, "auto", limit=broadcast_limit)
-    zb, n_zones = prep.zones_b, prep.n_zones
+    zb, lookup = prep.zones_b, prep.lookup
     if grid is not None:
         t = int(tile or grid.get("tile") or 64)
         gx, gy = float(grid["grid_xmin"]), float(grid["grid_ymax"])
@@ -224,8 +227,14 @@ def point_in_polygon(points: DataFrame, zones: DataFrame, *,
         ntr = (int(grid["grid_nrows"]) + t - 1) // t
         ntc = (int(grid["grid_ncols"]) + t - 1) // t
     else:
-        b = zb.agg(F.min("xmin"), F.min("ymin"),
-                   F.max("xmax"), F.max("ymax")).first()
+        if lookup is not None:
+            n_zones = prep.n_zones
+            with np.errstate(invalid="ignore"):
+                b = (*np.nanmin(prep.bbox[:, :2], axis=0, initial=np.inf),
+                     *np.nanmax(prep.bbox[:, 2:], axis=0, initial=-np.inf))
+        else:
+            *b, n_zones = zb.agg(F.min("xmin"), F.min("ymin"), F.max("xmax"),
+                                 F.max("ymax"), F.count("*")).first()
         x0, y0, x1, y1 = (float(v) for v in b)
         side = max(1, int(math.sqrt(max(n_zones, 1))))
         tw = max((x1 - x0) / side, 1e-12)
@@ -234,11 +243,21 @@ def point_in_polygon(points: DataFrame, zones: DataFrame, *,
     lattice = dict(grid_xmin=gx, grid_ymax=gy, dx=tw, dy=th,
                    grid_nrows=ntr, grid_ncols=ntc)
 
-    lookup = prep.lookup
-    geo = [] if lookup is not None else list(GEOM_COLS)
-    cols = ["zone_id", "xmin", "ymin", "xmax", "ymax"] + geo
-    zpairs = zone_tile_pairs(zb.select(*cols), lattice, 1) \
-        .select(*cols, "tile_row", "tile_col")
+    # pairs are keyed by zone row (_zrow), so zones sharing a zone_id
+    # each test their own geometry.  Broadcast: the zone side is a
+    # local table of (ordinal, bbox) from the collect, the geometry
+    # the broadcast ZoneArrays; shuffle: the geometry arrays travel in
+    # the join
+    geo = [] if lookup is not None else ["zone_id", *GEOM_COLS]
+    if lookup is not None:
+        bb = {c: prep.bbox[:, k] for k, c in enumerate(("xmin", "ymin", "xmax", "ymax"))}
+        zrows = zb.sparkSession.createDataFrame(pa.table(
+            {"_zrow": np.arange(prep.n_zones, dtype=np.int64), **bb}))
+    else:
+        zrows = zb.select(F.monotonically_increasing_id().alias("_zrow"), "xmin",
+                          "ymin", "xmax", "ymax", *geo)
+    cols = ["_zrow", "xmin", "ymin", "xmax", "ymax", *geo]
+    zpairs = zone_tile_pairs(zrows, lattice, 1).select(*cols, "tile_row", "tile_col")
     if lookup is not None:
         zpairs = F.broadcast(zpairs)
 
@@ -257,7 +276,7 @@ def point_in_polygon(points: DataFrame, zones: DataFrame, *,
     cand = p.join(zpairs, ["tile_row", "tile_col"]) \
         .where((F.col("x") >= F.col("xmin")) & (F.col("x") <= F.col("xmax")) &
                (F.col("y") >= F.col("ymin")) & (F.col("y") <= F.col("ymax"))) \
-        .select("point_id", "x", "y", "zone_id", *geo)
+        .select("point_id", "x", "y", "_zrow", *geo)
 
     schema = T.StructType([
         T.StructField("point_id", T.LongType()),
@@ -269,12 +288,13 @@ def point_in_polygon(points: DataFrame, zones: DataFrame, *,
             if len(pdf) == 0:
                 continue
             out_pid, out_zid = [], []
-            for zid, grp in pdf.groupby("zone_id", sort=False):
+            for zrow, grp in pdf.groupby("_zrow", sort=False):
                 if lookup is not None:
-                    za = lookup.value
-                    geom = za.geometry(int(za.ordinals([zid])[0]))
+                    za = lookup.value[0]
+                    geom, zid = za.geometry(int(zrow)), za.zone_id[int(zrow)]
                 else:
                     geom = ZoneArrays.from_records([grp.iloc[0]]).geometry(0)
+                    zid = grp["zone_id"].iat[0]
                 ins = points_in_geom(geom, grp["x"].to_numpy(), grp["y"].to_numpy())
                 out_pid.extend(grp["point_id"].to_numpy()[ins])
                 out_zid.extend([zid] * int(ins.sum()))

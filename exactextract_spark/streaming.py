@@ -25,8 +25,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import io as eio
-from .extract import (aggregate_partials, join_weight_frame, prepare_weight_frame,
-                      prepare_zones, run_kernel, zone_lists)
+from .extract import (aggregate_partials, join_weight_frame, join_zone_lists,
+                      prepare_weight_frame, prepare_zones, run_kernel, zone_lists)
 from .ops import group_ops_by_key, parse_ops
 
 __all__ = ["StreamingZonalWriter", "stream_zonal_from_dir"]
@@ -55,15 +55,23 @@ class StreamingZonalWriter:
         self.raster_id = raster_id
         self.meta = meta
         # same zone prep as the batch path (extract.prepare_zones): the
-        # parsed geometry is broadcast ONLY below the broadcast limit;
-        # above it the geometry arrays ride the per-tile hit-list
-        # through the shuffle instead — a 10⁸-zone streaming job must
-        # never OOM the driver at construction.
-        prep = prepare_zones(zones, strategy, persist=True)
+        # parsed geometry and the tile hit-lists are broadcast ONLY
+        # below the broadcast limit; above it the geometry arrays ride
+        # the per-tile hit-list through the shuffle instead — a
+        # 10⁸-zone streaming job must never OOM the driver at
+        # construction.
+        prep = prepare_zones(zones, strategy, grid=grid, tile=self.tile_size,
+                             persist=True)
+        self._prep = prep
         self.strategy = prep.strategy
         self.zones_b = prep.zones_b
         self.geom_lookup = prep.lookup
-        self.pairs_agg = zone_lists(prep, grid, self.tile_size).persist()
+        # shuffle strategy: the per-tile zone structs, grouped once for
+        # every micro-batch (the broadcast strategy filters each batch's
+        # tiles to the broadcast hit-lists instead)
+        self.pairs_agg = None
+        if self.strategy == "shuffle":
+            self.pairs_agg = zone_lists(prep).persist()
 
     def process_batch(self, docs_batch: DataFrame, batch_id: int) -> None:
         # Exactly-once under foreachBatch replay: partials are stamped
@@ -84,9 +92,7 @@ class StreamingZonalWriter:
         tiles = eio.tiles_from_docs(docs_batch, self.raster_id, self.meta)
         if self._wframe is not None:
             tiles = join_weight_frame(tiles, self._wframe)
-        rhs = (F.broadcast(self.pairs_agg) if self.strategy == "broadcast"
-               else self.pairs_agg)
-        joined = tiles.join(rhs, ["tile_row", "tile_col"])
+        joined = join_zone_lists(tiles, self._prep, self.pairs_agg)
         partials = run_kernel(joined, self.keygroups,
                               geom_lookup=self.geom_lookup,
                               has_weights=self._wframe is not None,

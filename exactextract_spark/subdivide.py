@@ -33,21 +33,21 @@ reference feeds both from one RasterCellIntersection).  Per chunk:
 
 Zone-count scaling: the zone prep is ZonalExtractor's
 (extract.prepare_zones): below ``BROADCAST_ZONE_LIMIT`` zones the
-parsed geometry arrays ride a SparkContext broadcast and the per-tile
-zone hit-list joins broadcast; above it the operator switches to the
-shuffle strategy (the geometry arrays travel inside the per-tile zone
-list, each tile row crosses the shuffle exactly once), so there is no
-upper bound on the zone count.
+parsed geometry arrays and the tile hit-list CSR ride one SparkContext
+broadcast and the tiles are filtered to the hit keys; above it the
+operator switches to the shuffle strategy (the geometry arrays travel
+inside the per-tile zone list, each tile row crosses the shuffle
+exactly once), so there is no upper bound on the zone count.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, types as T
 
 from .batchkernel import CHUNK_CELLS, coverage_stream
-from .extract import prepare_zones, tile_pairs, zone_lists
+from .extract import join_zone_lists, prepare_zones, tile_pairs
 from .geom import AREAL
 from .traversal import grid_cell_chains, left_hand_rings
 
@@ -315,17 +315,14 @@ def subdivide(zones: DataFrame, tiles: DataFrame, *,
     if tile_size is None:
         from .grid import infer_tile_size
         tile_size = infer_tile_size(grid, tiles)
-    # one validating action (+ zone count for the auto strategy), then
-    # the parsed geometry is broadcast or rides the per-tile zone lists
-    prep = prepare_zones(zones, strategy)
+    # one collect counts, validates and (below the broadcast limit)
+    # feeds the geometry + tile hit-list broadcast; above it the
+    # parsed geometry rides the per-tile zone lists
+    prep = prepare_zones(zones, strategy, grid=grid, tile=tile_size)
     lookup = prep.lookup
-    pairs_agg = zone_lists(prep, grid, tile_size)
-    if prep.strategy == "broadcast":
-        pairs_agg = F.broadcast(pairs_agg)
-    joined = tiles.select("tile_row", "tile_col", "row0", "col0",
-                          "nrows", "ncols", "grid_xmin", "grid_ymax",
-                          "dx", "dy", "grid_ncols") \
-        .join(pairs_agg, ["tile_row", "tile_col"])
+    joined = join_zone_lists(
+        tiles.select("tile_row", "tile_col", "row0", "col0", "nrows", "ncols",
+                     "grid_xmin", "grid_ymax", "dx", "dy", "grid_ncols"), prep)
 
     mcf = np.float32(min_coverage_frac)
 

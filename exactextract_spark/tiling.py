@@ -2,7 +2,8 @@
 zone covering sets, and explicit salting for skewed aggregations.
 
 The engine's primary spatial index is the raster grid itself: zone bbox
-→ tile-range explode → equi-join (extract.zone_tile_pairs).  This
+→ tile range (extract.tile_hits, or the extract.zone_tile_pairs
+explode) → equi-join on the tile key.  This
 module adds the hierarchical layer the north rule calls for (an
 H3/S2-style index): a Morton/quadkey cell id whose PREFIX structure
 gives multi-resolution pruning — one key at level L contains exactly

@@ -26,3 +26,31 @@ def test_host_defaults_env_overrides(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
     monkeypatch.setenv("SPARK_DRIVER_MEM", "2g")
     assert host_defaults() == (3, "2g")
+
+
+class _ConnectSession:
+    """A Spark Connect stand-in: no SparkContext, 6 shuffle partitions."""
+
+    class conf:
+        @staticmethod
+        def get(key):
+            assert key == "spark.sql.shuffle.partitions"
+            return "6"
+
+    @property
+    def sparkContext(self):
+        raise NotImplementedError("sparkContext() is not supported in Spark Connect")
+
+    def range(self, start, end, step, parts):
+        return (start, end, step, parts)
+
+
+def test_fixture_range_without_spark_context():
+    """fixtures._range sizes its partitions from the shuffle-partition
+    count when the session has no SparkContext."""
+    from exactextract_spark.fixtures import _range
+    from exactextract_spark.session import default_parallelism
+
+    assert default_parallelism(_ConnectSession()) == 6
+    assert _range(_ConnectSession(), 100_000) == (0, 100_000, 1, 6)
+    assert _range(_ConnectSession(), 10) == (0, 10, 1, 1)
