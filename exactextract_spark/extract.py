@@ -39,10 +39,11 @@ Join strategies:
   gathers each tile's zone ordinals from the CSR by key.  The big tile
   payloads are NEVER shuffled — the kernel runs in the same stage as
   the tile scan.
-- "shuffle": for huge zone tables; a mapInArrow explodes each zone to
-  its tiles with the same tile_hits, the per-tile zone lists carry the
-  geometry arrays (not WKT) and the join shuffles by tile key
-  (payloads move exactly once).  AQE handles skewed tile keys.
+- "shuffle": for huge zone tables; zone_tile_pairs explodes each zone
+  to its tiles (the same tile ranges as tile_hits, as JVM
+  expressions), the per-tile zone lists carry the geometry arrays
+  (not WKT) and the join shuffles by tile key (payloads move exactly
+  once).  AQE handles skewed tile keys.
 
 Pairs are keyed by zone ordinal (one per zone ROW) on both strategies:
 zones sharing a zone_id each contribute their own geometry, and their
@@ -72,6 +73,8 @@ __all__ = ["exact_extract", "attach_bbox", "zone_tile_pairs", "run_kernel",
            "tile_hits", "zone_lists", "join_zone_lists", "tile_pairs"]
 
 BROADCAST_ZONE_LIMIT = 200_000
+# hex digits of TileHits.tile_filter's bitmap literal (4 tile keys each)
+_FILTER_DIGITS = 1 << 16
 
 
 def crs_matches(crs_a: str | None, crs_b: str | None) -> bool:
@@ -233,26 +236,27 @@ class TileHits:
         return (np.repeat(np.arange(q.size), cnt),
                 self.zone[_gather_ranges(lo, cnt)])
 
-    def tile_filter(self, max_digits: int = 1 << 16) -> Column:
+    def tile_filter(self) -> Column:
         """A Spark predicate on (tile_row, tile_col) that keeps every
         hit tile, evaluated per row with no job: the hit keys as a
         bitmap in a hex-string literal, four keys per digit.  When the
-        hit keys span more than ``4 * max_digits`` keys, each bit
+        hit keys span more than ``4 * _FILTER_DIGITS`` keys, each bit
         stands for a run of consecutive keys, so the filter keeps a
         superset (the kernel finds no pairs for the extra tiles)."""
         if not self.key.size:
             return F.lit(False)
         lo = int(self.key[0])
-        step = -(-(int(self.key[-1]) - lo + 1) // (4 * max_digits))
+        step = -(-(int(self.key[-1]) - lo + 1) // (4 * _FILTER_DIGITS))
         on = (self.key - lo) // step
         bits = np.zeros(-(-int(on[-1] + 1) // 4) * 4, dtype=np.int64)
         bits[on] = 1
         digits = bits.reshape(-1, 4) @ np.array([1, 2, 4, 8])
         hexs = "".join(np.array(list("0123456789abcdef"))[digits])
-        b = f"((cast(tile_row as bigint) * {self.ntc} + tile_col - {lo}) div {step})"
+        k = f"(cast(tile_row as bigint) * {self.ntc} + tile_col - {lo})"
+        b = f"({k} div {step})"
         return F.expr(
             f"tile_row >= 0 AND tile_row < {self.ntr} AND tile_col >= 0 "
-            f"AND tile_col < {self.ntc} AND {b} BETWEEN 0 AND {bits.size - 1} AND "
+            f"AND tile_col < {self.ntc} AND {k} BETWEEN 0 AND {int(self.key[-1]) - lo} AND "
             f"bit_get(cast(conv(substring('{hexs}', {b} div 4 + 1, 1), 16, 10)"
             f" AS int), pmod({b}, 4)) = 1")
 
@@ -370,29 +374,12 @@ def prepare_zones(zones: DataFrame, strategy: str = "auto", *,
 def zone_lists(prep: PreparedZones) -> DataFrame:
     """Shuffle strategy's zone side of the tile join: one row per tile
     (tile_row, tile_col) with ``zone_structs``, the list of (zone_id,
-    GEOM_COLS) of its zones.  A mapInArrow over the prepared zones
-    emits one (tile key, zone) row per pair from tile_hits, then the
-    rows are grouped per tile, so each tile payload crosses the
-    shuffle once."""
-    grid, tile = prep.grid, prep.tile
-    zb = prep.zones_b.select("zone_id", *GEOM_COLS, *_BBOX)
-    nb = 1 + len(GEOM_COLS)
-    schema = T.StructType([T.StructField("tile_row", T.IntegerType()),
-                           T.StructField("tile_col", T.IntegerType()),
-                           *zb.schema.fields[:nb]])
-
-    def explode(batches):
-        for b in batches:
-            bbox = np.stack([b.column(nb + k).to_numpy(zero_copy_only=False)
-                             for k in range(4)], axis=1)
-            h = tile_hits(bbox, grid, tile)
-            per_tile = np.diff(h.off)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.repeat(h.tile_row, per_tile)),
-                 pa.array(np.repeat(h.tile_col, per_tile)),
-                 *b.take(pa.array(h.zone)).columns[:nb]], names=schema.names)
-
-    return zb.mapInArrow(explode, schema).groupBy("tile_row", "tile_col").agg(
+    GEOM_COLS) of its zones — the JVM explode of zone_tile_pairs
+    (the same tile ranges as tile_hits), grouped per tile so each tile
+    payload crosses the shuffle once."""
+    pairs = zone_tile_pairs(prep.zones_b.select("zone_id", *GEOM_COLS, *_BBOX),
+                            prep.grid, prep.tile)
+    return pairs.groupBy("tile_row", "tile_col").agg(
         F.collect_list(F.struct("zone_id", *GEOM_COLS)).alias("zone_structs"))
 
 

@@ -136,11 +136,25 @@ def test_tile_filter_keeps_the_hit_tiles(spark):
     hit = set(zip(h.tile_row.tolist(), h.tile_col.tolist()))
     assert 0 < len(hit) < h.ntr * h.ntc
     assert {tuple(r) for r in tiles.where(h.tile_filter()).collect()} == hit
-    coarse = {tuple(r) for r in tiles.where(h.tile_filter(max_digits=3)).collect()}
-    assert hit < coarse
-    assert all(0 <= r < h.ntr and 0 <= c < h.ntc for r, c in coarse)
     none = tile_hits(np.zeros((0, 4)), grid, tile)
     assert tiles.where(none.tile_filter()).count() == 0
+
+
+def test_tile_filter_coarsens_a_wide_key_span(spark):
+    """Hit keys 5 and 1,000,000 of a one-row lattice 2**20 tiles wide
+    span more keys than the bitmap literal holds (4 per hex digit), so
+    each bit covers a run of 4 keys: the filter keeps both runs and
+    nothing else."""
+    grid = dict(grid_xmin=0.0, grid_ymax=1.0, dx=1.0, dy=1.0,
+                grid_nrows=1, grid_ncols=2**20)
+    h = tile_hits(np.array([[5.2, 0.2, 5.8, 0.8],
+                            [1e6 + 0.2, 0.2, 1e6 + 0.8, 0.8]]), grid, 1)
+    assert h.key.tolist() == [5, 1_000_000]
+    cols = [*range(-2, 13), *range(999_990, 2**20 + 2), 500_000]
+    cells = [(r, c) for r in (-1, 0, 1) for c in cols]
+    tiles = spark.createDataFrame(cells, "tile_row int, tile_col int")
+    kept = {tuple(r) for r in tiles.where(h.tile_filter()).collect()}
+    assert kept == {(0, c) for c in (5, 6, 7, 8, *range(999_997, 1_000_001))}
 
 
 def test_caller_supplied_bbox_drives_the_hit_lists(spark):
@@ -179,6 +193,29 @@ def _zonal_input(spark):
     grid = dict(grid_xmin=0.0, grid_ymax=48.0, dx=1.0, dy=1.0, grid_nrows=48,
                 grid_ncols=40, tile=8, dtype="float64")
     return tiles, zones, grid
+
+
+def test_filtered_tiles_gather_every_pair(spark):
+    """The (tile, zone) pairs the broadcast kernel sees — TileHits.gather
+    over the tiles tile_filter keeps — are exactly the relational
+    explode's pairs, counted and compared as sets."""
+    tiles, zones, grid = _zonal_input(spark)
+    prep = prepare_zones(zones, "broadcast", grid=grid, tile=8)
+    try:
+        kept = tiles.where(prep.hits.tile_filter()) \
+                    .select("tile_row", "tile_col").collect()
+        rows = np.array([r.tile_row for r in kept])
+        cols = np.array([r.tile_col for r in kept])
+        qi, zo = prep.hits.gather(rows, cols)
+        ids = prep.lookup.value[0].zone_id
+        got = list(zip(rows[qi].tolist(), cols[qi].tolist(), ids[zo].tolist()))
+        want = zone_tile_pairs(prep.zones_b, grid, 8) \
+            .select("tile_row", "tile_col", "zone_id").collect()
+        assert len(got) == len(want) > 40
+        assert set(got) == {tuple(r) for r in want}
+    finally:
+        prep.unpersist()
+        tiles.unpersist()
 
 
 def test_fresh_extractor_job_counts(spark):
