@@ -34,8 +34,9 @@ streams so the dispatch cost is per CHUNK:
   (pair, value) np.unique + bincount, which preserves each pair's
   stream-order float addition; area_* coverage weights are a float32
   factor per global row; stored cells are per-pair slices of the
-  compacted stream.  Only the opt-in stable variance's per-pair West
-  state (variance.h:20-72) loops over pairs (np.sum per pair).
+  compacted stream; the opt-in stable variance's pivot-shifted state
+  (pivot = the pair's first cell) is two more bincounts.  No statistic
+  loops over pairs.
 
 Float sums are bit-identical to a per-pair np.sum on exactly
 representable data (the quarter-aligned fixture) and within 1 ulp otherwise
@@ -449,20 +450,21 @@ def accumulate_pairs_batch(pairs, zones, tile_vals, key_specs, *, has_weights,
         if req.variance:
             res["sum_cx2"] = np.bincount(upid, weights=vu * vu * cu, minlength=P)
         if req.stable_variance:
-            # per-pair West state (variance.h:20-72), Chan-merged across
-            # pairs at agg time.  Summed per pair with np.sum (pairwise),
-            # not bincount: the merge amplifies the last-ulp rounding of
-            # each pair's mean into ~1e-9 relative variance error at
-            # |mean|/sd = 1e9, so the floats stay those of the per-pair
-            # reference (tests/accumulate_reference.py)
-            var = np.full((3, P), np.nan)
-            for p, a, b in zip(act_idx, seg, np.append(seg[1:], upid.size)):
-                cp, xp = cu[a:b], vu[a:b]
-                wsum = cp.sum()
-                mean = (xp * cp).sum() / wsum
-                d = xp - mean
-                var[:, p] = wsum, mean, (d * d * cp).sum()
-            res["var_w"], res["var_mean"], res["var_m2"] = var
+            # pivot-shifted state (Chan, Golub & LeVeque 1983): pivot K
+            # = the pair's first cell, s = Σc(x-K), m2 = Σc((x-K) - s/w)²
+            # with w = sum_c.  x - K is exact for nearby values
+            # (Sterbenz), so no large mean is ever rounded into the
+            # state; extract.aggregate_partials merges it in SQL
+            var_k = np.zeros(P)
+            var_k[act_idx] = vu[seg]
+            d_u = vu - var_k[upid]
+            var_s = np.bincount(upid, weights=cu * d_u, minlength=P)
+            off = np.divide(var_s, res["sum_c"], out=np.zeros(P),
+                            where=active)
+            r_u = d_u - off[upid]
+            res["var_k"], res["var_s"] = var_k, var_s
+            res["var_m2"] = np.bincount(upid, weights=cu * r_u * r_u,
+                                        minlength=P)
 
         # weights (the weight raster also serves as the second variable
         # y): undefined cells take default_weight, else NaN — kept in
@@ -618,7 +620,7 @@ def accumulate_pairs_batch(pairs, zones, tile_vals, key_specs, *, has_weights,
         if req.variance:
             out[pfx + "sum_cx2"] = col(res["sum_cx2"])
         if req.stable_variance:
-            for name in ("var_w", "var_mean", "var_m2"):
+            for name in ("var_k", "var_s", "var_m2"):
                 out[pfx + name] = col(res[name])
         if req.weighted:
             out[pfx + "sum_cw"] = col(res["sum_cw"])

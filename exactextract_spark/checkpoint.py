@@ -30,7 +30,8 @@ import uuid
 
 from pyspark.sql import DataFrame, functions as F
 
-from .extract import ZonalExtractor, aggregate_partials, run_kernel
+from .extract import (ZonalExtractor, aggregate_partials, check_partial_layout,
+                      run_kernel)
 from .ops import group_ops_by_key, parse_ops
 
 __all__ = ["CheckpointedExtraction"]
@@ -132,6 +133,7 @@ class CheckpointedExtraction:
             lin.select("tile_row", "tile_col", "batch_id").distinct(),
             ["tile_row", "tile_col", "batch_id"])
         stored = stored.drop("tile_row", "tile_col", "batch_id")
+        check_partial_layout(stored, self.keygroups)
         return aggregate_partials(self.ext.zones_b, stored, self.keygroups,
                                   int_values=self.ext.int_values)
 

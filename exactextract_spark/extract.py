@@ -51,7 +51,9 @@ partial states merge under that id.
 
 Variance is carried as (Σc, Σcx, Σcx²) so partial states merge exactly —
 lifting the reference's parallel-strategy restriction
-(raster_parallel_processor.cpp:91-95, raster_stats.h:113-115).
+(raster_parallel_processor.cpp:91-95, raster_stats.h:113-115); the
+opt-in stable variance's pivot-shifted state merges in SQL too.  No
+Python runs after the kernel except a user's custom python op.
 """
 
 from __future__ import annotations
@@ -62,7 +64,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import Column, DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
 
 from .geom import GEOM_COLS, INVALID, ZoneArrays, _gather_ranges, parse_wkt_batch
 from .io import decode_value_tile
@@ -567,8 +569,8 @@ def _partial_schema(keygroups, passthrough=()) -> T.StructType:
         if req.variance:
             fields.append(T.StructField(p + "sum_cx2", T.DoubleType()))
         if req.stable_variance:
-            fields += [T.StructField(p + "var_w", T.DoubleType()),
-                       T.StructField(p + "var_mean", T.DoubleType()),
+            fields += [T.StructField(p + "var_k", T.DoubleType()),
+                       T.StructField(p + "var_s", T.DoubleType()),
                        T.StructField(p + "var_m2", T.DoubleType())]
         if req.weighted:
             fields += [T.StructField(p + "sum_cw", T.DoubleType()),
@@ -631,6 +633,28 @@ def _partial_schema(keygroups, passthrough=()) -> T.StructType:
         if req.cells:
             fields.append(T.StructField(p + "cells", _CELLS_T))
     return T.StructType(fields)
+
+
+def check_partial_layout(stored: DataFrame, keygroups) -> None:
+    """Raises ValueError unless ``stored`` partial rows (read back from
+    a checkpoint or stream sink, lineage columns dropped) have exactly
+    the columns and types run_kernel writes for ``keygroups``: partials
+    of another op list, or of an older partial layout, must not reach
+    the merge.  Two op lists with the same columns but different op
+    keys are not told apart."""
+    want = {f.name: f.dataType.simpleString()
+            for f in _partial_schema(keygroups).fields}
+    have = {f.name: f.dataType.simpleString() for f in stored.schema.fields}
+    missing = sorted(want.keys() - have.keys())
+    unexpected = sorted(have.keys() - want.keys())
+    retyped = sorted(f"{c} ({have[c]}, expected {want[c]})"
+                     for c in want.keys() & have.keys() if have[c] != want[c])
+    if missing or unexpected or retyped:
+        raise ValueError(
+            "stored partials do not match this op list (written by another "
+            "op list or an older partial layout; recompute them into a "
+            f"fresh path): missing columns {missing}, unexpected columns "
+            f"{unexpected}, wrong types {retyped}")
 
 
 def run_kernel(joined: DataFrame, keygroups, *, geom_lookup=None,
@@ -745,106 +769,72 @@ def run_kernel(joined: DataFrame, keygroups, *, geom_lookup=None,
     return joined.mapInPandas(kernel, schema=schema)
 
 
-def _quantile_udf(q: float):
-    """Exact weighted quantile over the per-zone sorted histogram —
-    digit-for-digit the reference algorithm
-    (/root/reference/src/weighted_quantiles.cpp:21-75: sort distinct
-    values, s_i = i*w_i + (n-1)*cumsum_{i-1}, linear interpolation at
-    q*(Σw)*(n-1)).  NOT percentile_approx — the histogram is exact and
-    bounded by value variety, not cell count."""
-    @F.pandas_udf(T.DoubleType())
-    def qf(hist: pd.Series) -> pd.Series:
-        out = []
-        for h in hist:
-            if h is None or len(h) == 0:
-                out.append(None)
-                continue
-            xs = np.array([e["v"] for e in h], dtype=np.float64)
-            ws = np.array([e["ci"] for e in h], dtype=np.float64)
-            n = xs.size
-            cum = np.cumsum(ws)
-            s = np.empty(n)
-            s[0] = 0.0
-            if n > 1:
-                s[1:] = np.arange(1, n) * ws[1:] + (float(n) - 1.0) * cum[:-1]
-            sn = cum[-1] * (float(n) - 1.0)
-            t = q * sn
-            left = int(np.searchsorted(s, t, side="right")) - 1
-            if left >= n - 1:
-                out.append(float(xs[n - 1]))
-            else:
-                r = left + 1
-                out.append(float(xs[left] + (t - s[left]) * (xs[r] - xs[left]) / (s[r] - s[left])))
-        return pd.Series(out, dtype="float64")
-    return qf
-
-
-def _quantiles_via_window(ops_in_key) -> bool:
-    """True when quantile-type ops are the ONLY sorted-histogram
-    consumers in the key: the per-zone quantile then comes from pure
-    JVM window expressions instead of collect_list(struct) + a pandas
-    UDF.  Measured on the q_hist bench shape (sf0.1, 150k zones × ≤97
-    buckets): the collect+UDF finalizer was 2.2 s of q_hist's 2.9 s —
-    the array<struct> Arrow transfer converts every element to a Python
-    dict.  When unique/frac also run, the collect happens anyway and
-    quantiles keep reading it."""
-    stats = {o.stat for o in ops_in_key}
-    return bool(stats & {"median", "quantile"}) \
-        and not (stats & {"unique", "frac", "weighted_frac"})
-
-
-def _window_quantiles_fused(h: DataFrame, p: str, ops_in_key,
-                            stats: set) -> DataFrame:
-    """Single-pass histogram finalize for the JVM-window quantile path:
-    ONE window pass over the merged per-zone (value, coverage) histogram
-    computes the quantile helper columns (same expression sequence as
-    the pandas-UDF path, digit-for-digit the reference algorithm,
-    weighted_quantiles.cpp:21-75), and ONE final per-zone aggregation
-    computes variety / majority / minority AND every requested quantile
-    together.  Replaces the previous shape — persist(h) + a separate
-    per-zone agg + a separate window sub-plan + two joins — with a
-    single pipeline: explode → (zone, v) agg → window → zone agg.
-    Measured on the q_hist bench shape (sf0.1, 32 cores): 1.23 s →
-    0.82 s; the h cache materialization job and one join disappear.
-    Bit-identical: the quantile expressions are unchanged, and
-    variety/majority/minority aggregate the same (v, ci) rows."""
-    from pyspark.sql import Window
-
-    wo = Window.partitionBy("zone_id").orderBy("v")
-    wp = Window.partitionBy("zone_id")
-    o = h.select(
-        "zone_id", "v", "ci",
-        (F.row_number().over(wo) - 1).alias("i"),
-        F.sum("ci").over(wo.rowsBetween(Window.unboundedPreceding, -1))
-         .alias("cumprev"),
-        F.count("*").over(wp).alias("n"),
-        F.sum("ci").over(wp).alias("sw"))
-    o = o.select(
-        "zone_id", "v", "ci",
-        (F.col("i") * F.col("ci")
-         + (F.col("n") - 1) * F.coalesce(F.col("cumprev"), F.lit(0.0))).alias("s"),
-        (F.col("sw") * (F.col("n") - 1)).alias("sn"))
-    q2 = o.select(
-        "zone_id", F.col("v").alias("x"), "ci", "s", "sn",
-        F.lead("v").over(wo).alias("nx"),
-        F.lead("s").over(wo).alias("ns"))
+def _histogram_finalize(h: DataFrame, p: str, ops_in_key) -> DataFrame:
+    """The one histogram finalize: ONE per-zone aggregation over the
+    merged (zone, v, ci, ciw) histogram computes variety / majority /
+    minority, the sorted histogram and its sums for unique / frac /
+    weighted_frac, and every requested quantile together.  Quantiles
+    are the reference's exact weighted quantile, digit-for-digit
+    (weighted_quantiles.cpp:21-75: sort distinct values, s_i = i*w_i +
+    (n-1)*cumsum_{i-1}, linear interpolation at q*(Σw)*(n-1)) — NOT
+    percentile_approx; the histogram is exact and bounded by value
+    variety, not cell count.  Their helper columns come from ONE window
+    pass, run only when a median or quantile is asked for.  Measured on
+    the q_hist bench shape (sf0.1, 32 cores), this shape (explode →
+    (zone, v) agg → window → zone agg) took the quantile finalize from
+    1.23 s to 0.82 s against persist(h) + a separate per-zone agg + a
+    window sub-plan + two joins."""
+    stats = {op.stat for op in ops_in_key}
+    qops = [op for op in ops_in_key if op.stat in ("median", "quantile")]
+    if qops:
+        wo = Window.partitionBy("zone_id").orderBy("v")
+        wp = Window.partitionBy("zone_id")
+        h = h.select(
+            "zone_id", "v", "ci", "ciw",
+            (F.row_number().over(wo) - 1).alias("i"),
+            F.sum("ci").over(wo.rowsBetween(Window.unboundedPreceding, -1))
+             .alias("cumprev"),
+            F.count("*").over(wp).alias("n"),
+            F.sum("ci").over(wp).alias("sw"))
+        h = h.select(
+            "zone_id", "v", "ci", "ciw",
+            (F.col("i") * F.col("ci")
+             + (F.col("n") - 1) * F.coalesce(F.col("cumprev"), F.lit(0.0))).alias("s"),
+            (F.col("sw") * (F.col("n") - 1)).alias("sn"))
+        h = h.select(
+            "zone_id", "v", "ci", "ciw", "s", "sn",
+            F.lead("v").over(wo).alias("nx"),
+            F.lead("s").over(wo).alias("ns"))
     aggs = []
     if "variety" in stats:
         aggs.append(F.count("*").alias(p + "variety"))
     if stats & {"majority", "mode"}:
-        aggs.append(F.max_by("x", F.struct("ci", "x")).alias(p + "majority"))
+        aggs.append(F.max_by("v", F.struct("ci", "v")).alias(p + "majority"))
     if "minority" in stats:
-        aggs.append(F.min_by("x", F.struct("ci", "x")).alias(p + "minority"))
-    for op in ops_in_key:
-        if op.stat not in ("median", "quantile"):
-            continue
+        aggs.append(F.min_by("v", F.struct("ci", "v")).alias(p + "minority"))
+    if "frac" in stats:
+        aggs.append(F.sum("ci").alias(p + "hist_sum_ci"))
+    if "weighted_frac" in stats:
+        aggs.append(F.sum("ciw").alias(p + "hist_sum_ciw"))
+    if stats & {"unique", "frac", "weighted_frac"}:
+        aggs.append(F.array_sort(F.collect_list(
+            F.struct("v", "ci", "ciw"))).alias(p + "hist_sorted"))
+    for op in qops:
         t = F.lit(0.5 if op.stat == "median" else op.q) * F.col("sn")
         hit = (F.col("s") <= t) & (F.col("ns").isNull() | (F.col("ns") > t))
-        val = F.when(F.col("ns").isNull(), F.col("x")).otherwise(
-            F.col("x") + (t - F.col("s")) * (F.col("nx") - F.col("x"))
+        val = F.when(F.col("ns").isNull(), F.col("v")).otherwise(
+            F.col("v") + (t - F.col("s")) * (F.col("nx") - F.col("v"))
             / (F.col("ns") - F.col("s")))
         aggs.append(F.max(F.when(hit, val)).alias(f"{p}q_{op.name}"))
-    return q2.groupBy("zone_id").agg(*aggs)
+    return h.groupBy("zone_id").agg(*aggs)
+
+
+def _ieee_div(a: Column, b: Column) -> Column:
+    """a / b with the IEEE result for a zero divisor (±inf, or NaN for
+    0/0) that the reference's C++ division gives; Spark's ANSI mode
+    would fail the query instead.  pow(±0, -1) is ±inf, so a * pow(b,
+    -1) is exactly the IEEE quotient when b is a (signed) zero."""
+    return F.when(b == 0, a * F.pow(b, -1.0)).otherwise(a / b)
 
 
 def _python_op_udf(fn, weighted: bool, result_type: str):
@@ -917,7 +907,7 @@ def _finalize_exprs(i: int, ops_in_key: list[Op], int_values: bool = False,
                 elif s == "stdev":
                     e = F.when(svw > 0, F.sqrt(var))
                 else:
-                    e = F.when(svw > 0, F.sqrt(var) / F.col(p + "svar_mean"))
+                    e = F.when(svw > 0, _ieee_div(F.sqrt(var), F.col(p + "svar_mean")))
             else:
                 var = F.greatest(F.col(p + "sum_cx2") / sum_c - mean * mean, F.lit(0.0))
                 if s == "variance":
@@ -925,7 +915,7 @@ def _finalize_exprs(i: int, ops_in_key: list[Op], int_values: bool = False,
                 elif s == "stdev":
                     e = F.when(sum_c > 0, F.sqrt(var))
                 else:
-                    e = F.when(sum_c > 0, F.sqrt(var) / mean)
+                    e = F.when(sum_c > 0, _ieee_div(F.sqrt(var), mean))
         elif s == "weighted_count":
             # any merged partial with an undefined weight (no default)
             # makes the weighted stats undefined (reference NaN
@@ -954,16 +944,12 @@ def _finalize_exprs(i: int, ops_in_key: list[Op], int_values: bool = False,
             e = F.col(p + "minority")
         elif s == "unique":
             e = F.expr(f"transform({p}hist_sorted, s -> s.v)")
-        elif s == "frac":
-            e = F.expr(f"transform({p}hist_sorted, s -> s.ci / {p}hist_sum_ci)")
-        elif s == "weighted_frac":
-            e = F.expr(f"transform({p}hist_sorted, s -> s.ciw / {p}hist_sum_ciw)")
+        elif s in ("frac", "weighted_frac"):
+            f, tot = ("ci", "hist_sum_ci") if s == "frac" else ("ciw", "hist_sum_ciw")
+            e = F.transform(F.col(p + "hist_sorted"),
+                            lambda h: _ieee_div(h[f], F.col(p + tot)))
         elif s in ("median", "quantile"):
-            if _quantiles_via_window(ops_in_key):
-                e = F.col(f"{p}q_{op.name}")
-            else:
-                e = _quantile_udf(0.5 if s == "median" else op.q)(
-                    F.col(p + "hist_sorted"))
+            e = F.col(f"{p}q_{op.name}")
             if int_values:
                 # result type is the cell type (operation.cpp:115-206):
                 # interpolated quantiles truncate toward zero for integer
@@ -1269,10 +1255,11 @@ def aggregate_partials(zones_b, partials, keygroups, *, int_values=False,
     # MapInPandas → explode → partial HashAggregate into one stage and
     # the histogram query runs 2× slower (34–49 s vs 17 s); cutting
     # the stage at the compact per-pair rows lets the Python kernel
-    # stage and the explode+aggregate stage each run clean.
-    need_hist = any(req.histogram for _, req, _ in keygroups)
-    need_cells = any(req.cells for _, req, _ in keygroups)
-    if need_hist or need_cells:
+    # stage and the explode+aggregate stage each run clean.  The
+    # stable-variance window is a second consumer next to the scalar
+    # aggregation: without the persist each would run the kernel.
+    if any(req.histogram or req.cells or req.stable_variance
+           for _, req, _ in keygroups):
         partials = partials.persist()
         if cache_registry is not None:
             cache_registry.append(partials)
@@ -1316,30 +1303,30 @@ def aggregate_partials(zones_b, partials, keygroups, *, int_values=False,
         scalar = partials.groupBy("zone_id").agg(*aggs)
         result = result.join(scalar, "zone_id", "left")
 
-    # --- stable-variance branch: Chan merge of per-pair West states ---
+    # --- stable-variance branch: pivot-shifted pair states (var_k = K,
+    # var_s = Σc(x-K), var_m2 = Σc((x-K) - s/w)², w = sum_c) merged in
+    # SQL (Chan, Golub & LeVeque 1983): W = Σw, M = (Σw·K + Σs)/W, and
+    # M2 = Σ(m2 + w·((K-M) + s/w)²).  K - M is exact for nearby values,
+    # and M's rounding enters M2 only at second order. ---
     for i, (_, req, _) in enumerate(keygroups):
         p = f"k{i}_"
         if req.stable_variance:
-            def _chan(pdf: pd.DataFrame) -> pd.DataFrame:
-                W = M = M2 = 0.0
-                for w, m, m2 in zip(pdf.iloc[:, 1], pdf.iloc[:, 2], pdf.iloc[:, 3]):
-                    if w is None or pd.isna(w):
-                        continue
-                    d = m - M
-                    Wn = W + w
-                    M = M + d * (w / Wn)
-                    M2 = M2 + m2 + d * d * W * (w / Wn)
-                    W = Wn
-                return pd.DataFrame({"zone_id": [pdf.iloc[0, 0]],
-                                     "w": [W], "mean": [M], "m2": [M2]})
-
-            sv = (partials.select("zone_id", p + "var_w", p + "var_mean", p + "var_m2")
-                  .where(F.col(p + "var_w").isNotNull())
+            wz = Window.partitionBy("zone_id")
+            w, k, s = F.col("w"), F.col("k"), F.col("s")
+            sv = (partials.where(F.col(p + "var_k").isNotNull())
+                  .select("zone_id", F.col(p + "sum_c").alias("w"),
+                          F.col(p + "var_k").alias("k"),
+                          F.col(p + "var_s").alias("s"),
+                          F.col(p + "var_m2").alias("m2"))
+                  .withColumn("tw", F.sum(w).over(wz))
+                  .withColumn("mean", (F.sum(w * k).over(wz) + F.sum(s).over(wz))
+                              / F.col("tw"))
+                  .withColumn("d", (k - F.col("mean")) + s / w)
                   .groupBy("zone_id")
-                  .applyInPandas(_chan, schema="zone_id string, w double, mean double, m2 double")
-                  .select("zone_id", F.col("w").alias(p + "svar_w"),
-                          F.col("mean").alias(p + "svar_mean"),
-                          F.col("m2").alias(p + "svar_m2")))
+                  .agg(F.first("tw").alias(p + "svar_w"),
+                       F.first("mean").alias(p + "svar_mean"),
+                       F.sum(F.col("m2") + w * F.col("d") * F.col("d"))
+                       .alias(p + "svar_m2")))
             result = result.join(sv, "zone_id", "left")
 
     # --- histogram branch: per-pair parallel arrays explode JVM-SIDE
@@ -1351,11 +1338,9 @@ def aggregate_partials(zones_b, partials, keygroups, *, int_values=False,
     # the requested ops actually read are built: without a
     # sorted-histogram consumer the per-zone agg stays a cheap scalar
     # aggregation instead of an ObjectHashAggregate collect_list. ---
-    _SORTED_STATS = {"unique", "frac", "weighted_frac", "median", "quantile"}
     for i, (_, req, ops_in_key) in enumerate(keygroups):
         p = f"k{i}_"
         if req.histogram:
-            stats = {o.stat for o in ops_in_key}
             h = (partials.where(F.col(p + "hist_v").isNotNull())
                  .select("zone_id", F.explode(F.arrays_zip(
                      F.col(p + "hist_v").alias("v"),
@@ -1363,34 +1348,8 @@ def aggregate_partials(zones_b, partials, keygroups, *, int_values=False,
                      F.col(p + "hist_ciw").alias("ciw"))).alias("h"))
                  .groupBy("zone_id", F.col("h.v").alias("v"))
                  .agg(F.sum("h.ci").alias("ci"), F.sum("h.ciw").alias("ciw")))
-            if _quantiles_via_window(ops_in_key):
-                # single consumer chain: the fused finalize computes the
-                # per-zone histogram stats AND the quantiles in one
-                # window + one aggregation — no h persist, one join
-                result = result.join(
-                    _window_quantiles_fused(h, p, ops_in_key, stats),
-                    "zone_id", "left")
-            else:
-                hz_aggs = [F.count("*").alias(p + "variety")]
-                if stats & {"majority", "mode"}:
-                    hz_aggs.append(
-                        F.max_by("v", F.struct("ci", "v")).alias(p + "majority"))
-                if "minority" in stats:
-                    hz_aggs.append(
-                        F.min_by("v", F.struct("ci", "v")).alias(p + "minority"))
-                if "frac" in stats:
-                    hz_aggs.append(F.sum("ci").alias(p + "hist_sum_ci"))
-                if "weighted_frac" in stats:
-                    hz_aggs.append(F.sum("ciw").alias(p + "hist_sum_ciw"))
-                if stats & {"unique", "frac", "weighted_frac"}:
-                    # the array consumers genuinely need the sorted
-                    # histogram materialized per zone; quantiles then
-                    # read it too (no benefit splitting the paths when
-                    # the collect happens anyway)
-                    hz_aggs.append(F.array_sort(F.collect_list(
-                        F.struct("v", "ci", "ciw"))).alias(p + "hist_sorted"))
-                hz = h.groupBy("zone_id").agg(*hz_aggs)
-                result = result.join(hz, "zone_id", "left")
+            result = result.join(_histogram_finalize(h, p, ops_in_key),
+                                 "zone_id", "left")
         if req.cells:
             cz = (partials.select("zone_id", F.explode(p + "cells").alias("c"))
                   .groupBy("zone_id")

@@ -58,10 +58,11 @@ class Op:
     # python/src/pybindings/operation_bindings.cpp:29-131)
     fn: object = None              # callable(values, cov[, weights])
     result_type: str = "double"
-    # numerically-stable variance (per-pair West accumulation + Chan
-    # merge) — matches the reference's sequential West results on
-    # pathological data (huge mean, tiny variance); the default
-    # algebraic form is kept because it is bit-reproducible in ANSI SQL
+    # numerically-stable variance (per-pair pivot-shifted sums, merged
+    # in SQL by the shifted-data update of Chan, Golub & LeVeque) —
+    # matches the reference's sequential West results on pathological
+    # data (huge mean, tiny variance); the default algebraic form is
+    # kept because it is bit-reproducible in ANSI SQL
     stable: bool = False
     # histogram value quantization (engine extension beyond the
     # reference): floor(v / bin_width) * bin_width before the histogram,
@@ -91,7 +92,7 @@ class StatRequirements:
     weighted: bool = False   # sum_cw, sum_cxw
     variance: bool = False   # sum_cx2
     weighted_variance: bool = False  # sum_cx2w
-    stable_variance: bool = False  # per-pair West state (w, mean, M2)
+    stable_variance: bool = False  # per-pair pivot state (K, s, M2)
     minmax: bool = False
     store_xy: bool = False   # argmin/argmax locations
     histogram: bool = False

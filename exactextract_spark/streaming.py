@@ -25,8 +25,9 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import io as eio
-from .extract import (aggregate_partials, join_weight_frame, join_zone_lists,
-                      prepare_weight_frame, prepare_zones, run_kernel, zone_lists)
+from .extract import (aggregate_partials, check_partial_layout, join_weight_frame,
+                      join_zone_lists, prepare_weight_frame, prepare_zones,
+                      run_kernel, zone_lists)
 from .ops import group_ops_by_key, parse_ops
 
 __all__ = ["StreamingZonalWriter", "stream_zonal_from_dir"]
@@ -118,6 +119,7 @@ class StreamingZonalWriter:
             lin.select("tile_row", "tile_col", "attempt_id").distinct(),
             ["tile_row", "tile_col", "attempt_id"]) \
             .drop("tile_row", "tile_col", "batch_id", "attempt_id")
+        check_partial_layout(stored, self.keygroups)
         return aggregate_partials(self.zones_b, stored, self.keygroups)
 
     def metrics(self) -> dict:

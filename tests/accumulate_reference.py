@@ -117,14 +117,15 @@ def accumulate_pair(cov: np.ndarray, values: np.ndarray, *,
     if req.variance:
         out["sum_cx2"] = float((cvals * cvals * ccov).sum())
     if req.stable_variance:
-        # per-pair West state (variance.h:20-72 semantics computed in
-        # one vectorized pass); Chan-merged across pairs at agg time
-        wsum = float(ccov.sum())
-        mean = float((cvals * ccov).sum()) / wsum
-        d = cvals - mean
-        out["var_w"] = wsum
-        out["var_mean"] = mean
-        out["var_m2"] = float((d * d * ccov).sum())
+        # pivot-shifted state: pivot K = the first used cell (row-major),
+        # s = Σc(x-K), m2 = Σc((x-K) - s/w)² with w = sum_c; merged
+        # across pairs at agg time (extract.aggregate_partials)
+        d = cvals - cvals[0]
+        s = float((d * ccov).sum())
+        r = d - s / out["sum_c"]
+        out["var_k"] = float(cvals[0])
+        out["var_s"] = s
+        out["var_m2"] = float((r * r * ccov).sum())
 
     w = None
     if req.weighted or req.cells_weights or req.needs_y:

@@ -7,7 +7,7 @@ the stable variance, stored cells and the area_* coverage weights.
 Counts, min/max values/cells, histogram values and stored cells must
 match BIT-EXACTLY (identical comparisons and bincount order on both
 paths).  The weighted/unweighted SUMS (and the quantities derived from
-them: the stable variance's per-pair mean and M2, histogram bucket sums)
+them: the stable variance's shifted sum and M2, histogram bucket sums)
 are compared to 1-ulp-level relative tolerance: the reference uses
 np.sum (pairwise summation) while the batch path uses np.bincount
 (sequential), which differ in the last ulp on arbitrary real values —
@@ -26,7 +26,7 @@ OPS = ["count", "sum", "mean", "min", "max", "variance",
 
 # fields holding float sums (or values derived from them)
 _SUMS = ("sum_c", "sum_cx", "sum_cx2", "sum_cw", "sum_cxw", "sum_cx2w",
-         "var_w", "var_mean", "var_m2")
+         "var_s", "var_m2")
 
 
 def _rand_poly(rng, lo, hi):
@@ -175,9 +175,38 @@ def test_stable_variance_fuzz(seed):
     wkts = [_rand_poly(rng, gx, gx + G) for _ in range(10)]
     ops = ["variance(stable=true)", "stdev(stable=true)", "count",
            "vn=variance(stable=true,coverage_weight=none)",
-           "vm=variance(stable=true,min_coverage_frac=0.5)"]
-    _assert_same(*batch_and_reference(ops, wkts, *_raster(rng, G), tile=T,
-                                      gx=gx, gy=gy))
+           "vm=variance(stable=true,min_coverage_frac=0.5)",
+           # stored cells of each key: the two-pass variance's input
+           "c0=coverage", "cn=coverage(coverage_weight=none)",
+           "cm=coverage(min_coverage_frac=0.5)"]
+    kg, got, want = batch_and_reference(ops, wkts, *_raster(rng, G), tile=T,
+                                        gx=gx, gy=gy)
+    _assert_same(kg, got, want)
+    # the pair states, merged per zone as extract.aggregate_partials
+    # merges them in SQL, against a numpy two-pass variance of the
+    # zone's cells
+    checked = 0
+    for i in range(len(kg)):
+        p = f"k{i}_"
+        for z in {r["zone_id"] for r in got}:
+            rows = [r for r in got if r["zone_id"] == z
+                    and not np.isnan(r[p + "var_k"])]
+            if not rows:
+                continue
+            w, k, s, m2 = (np.array([r[p + c] for r in rows])
+                           for c in ("sum_c", "var_k", "var_s", "var_m2"))
+            tw = w.sum()
+            mean = ((w * k).sum() + s.sum()) / tw
+            d = (k - mean) + s / w
+            merged = max((m2 + w * d * d).sum() / tw, 0.0)
+            cells = np.concatenate([np.array(r[p + "cells"])[:, 1:3]
+                                    for r in rows])
+            x, c = cells[:, 0], cells[:, 1]
+            mu = (c * x).sum() / c.sum()
+            two_pass = (c * (x - mu) ** 2).sum() / c.sum()
+            assert merged == pytest.approx(two_pass, rel=1e-12), (i, z)
+            checked += 1
+    assert checked > 0
 
 
 @pytest.mark.parametrize("seed", range(4))

@@ -94,3 +94,36 @@ def test_orphan_partials_excluded(setup, spark, tmp_path):
                 assert resumed[z][k] is None, (z, k)
             else:
                 assert resumed[z][k] == pytest.approx(v), (z, k)
+
+
+def test_old_layout_stable_variance_partials_rejected(setup, spark, tmp_path):
+    """Partials stored with the former West-state layout (var_w,
+    var_mean, var_m2) are refused with the column difference named,
+    not merged or failed deep in analysis."""
+    zones, tiles = setup
+    ops = ["count", "variance(stable=true)"]
+    ck = CheckpointedExtraction(ZonalExtractor(zones, tiles), ops,
+                                str(tmp_path / "ck"))
+    ck.step()
+    part = str(tmp_path / "ck" / "partials")
+    old = (spark.read.parquet(part)
+           .withColumnRenamed("k0_var_k", "k0_var_w")
+           .withColumnRenamed("k0_var_s", "k0_var_mean"))
+    old.write.mode("overwrite").parquet(str(tmp_path / "old"))
+    spark.read.parquet(str(tmp_path / "old")).write.mode("overwrite").parquet(part)
+    with pytest.raises(ValueError, match=r"missing columns \['k0_var_k', "
+                       r"'k0_var_s'\], unexpected columns \['k0_var_mean', "
+                       r"'k0_var_w'\]"):
+        ck.finalize()
+
+
+def test_partials_of_another_op_list_rejected(setup, tmp_path):
+    zones, tiles = setup
+    path = str(tmp_path / "ck")
+    CheckpointedExtraction(ZonalExtractor(zones, tiles), ["count"], path).step()
+    ck = CheckpointedExtraction(ZonalExtractor(zones, tiles),
+                                ["count", "min"], path)
+    with pytest.raises(ValueError, match=r"missing columns \['k0_max_cell', "
+                       r"'k0_max_v', 'k0_min_cell', 'k0_min_v'\], "
+                       r"unexpected columns \[\]"):
+        ck.finalize()

@@ -299,3 +299,25 @@ def test_plain_wkt_heads_still_accepted(spark):
     assert got["c"] == 0.0
     assert got["d"] == pytest.approx(4.0)  # tab/newline after tag is valid WKT
     assert got["e"] == pytest.approx(4.0)
+
+
+def test_zero_divisor_finalize_gives_ieee_quotients(spark, extract_mem):
+    """Finalize divisions return the reference's IEEE quotient (C++
+    stdev()/mean(), ci/Σci) instead of failing the query under Spark's
+    ANSI mode: ±inf for x/0, NaN for 0/0."""
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    sq2 = "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))"
+    r = extract_mem([[-1.0, 1.0], [-2.0, 2.0]], sq2,
+                    ["mean", "cv=coefficient_of_variation",
+                     "cvs=coefficient_of_variation(stable=true)"])
+    assert r["mean"] == 0.0
+    assert r["cv"] == np.inf and r["cvs"] == np.inf
+    r = extract_mem(-np.ones((2, 2)) + 1.0, sq2,
+                    ["cv=coefficient_of_variation",
+                     "cvs=coefficient_of_variation(stable=true)"])
+    assert np.isnan(r["cv"]) and np.isnan(r["cvs"])
+    r = extract_mem(ARANGE9[:2, :2], sq2, ["frac", "weighted_frac"],
+                    weights=np.zeros((2, 2)))
+    assert r["frac"] == [0.25] * 4
+    assert len(r["weighted_frac"]) == 4
+    assert all(np.isnan(f) for f in r["weighted_frac"])

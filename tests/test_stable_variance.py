@@ -1,8 +1,10 @@
-"""Numerically-stable variance (per-pair West + Chan merge): must match
-the true variance on pathological data (huge mean, tiny variance) where
-the algebraic sum-of-squares form loses all precision — the failure
-mode the reference avoids with West's algorithm (variance.h:20-72) at
-the cost of refusing to parallelize; the Chan merge keeps both."""
+"""Numerically-stable variance (per-pair pivot-shifted sums merged in
+SQL, the shifted-data update of Chan, Golub & LeVeque): must match the
+true variance on pathological data (huge mean, tiny variance) where the
+algebraic sum-of-squares form loses all precision — the failure mode
+the reference avoids with West's algorithm (variance.h:20-72) at the
+cost of refusing to parallelize; the shifted merge keeps both, on every
+data seed of the sweep."""
 
 import numpy as np
 import pytest
@@ -37,6 +39,43 @@ def test_stable_variance_pathological(spark):
     assert r["cv_st"] == pytest.approx(np.sqrt(true_var) / mu, rel=1e-6)
     # demonstrate that the algebraic form genuinely degrades here
     assert abs(r["v_alg"] - true_var) > abs(r["v_st"] - true_var)
+
+
+SWEEP_SEEDS = range(40)
+
+
+@pytest.fixture(scope="module")
+def sweep(spark):
+    """The pathological case on every data seed of SWEEP_SEEDS at once:
+    seed k's 20x20 block sits at columns [20k, 20k+20) of one raster,
+    under its own copy of SQ shifted by 20k (same cell coverages and
+    5-cell tile boundaries as the single-seed test).  Returns
+    {seed: (engine variance, true variance)}."""
+    blocks = [1e9 + np.random.default_rng(s).normal(0, 1, (20, 20))
+              for s in SWEEP_SEEDS]
+    zones = spark.createDataFrame(
+        [(str(s), f"POLYGON (({20 * k + 0.5} 0.5, {20 * k + 19.5} 0.5, "
+                  f"{20 * k + 19.5} 19.5, {20 * k + 0.5} 19.5, "
+                  f"{20 * k + 0.5} 0.5))")
+         for k, s in enumerate(SWEEP_SEEDS)], ["zone_id", "geometry"])
+    tiles = tiles_from_array(spark, np.hstack(blocks), tile=5)
+    got = {r["zone_id"]: r["v"] for r in exact_extract(
+        zones, tiles, ["v=variance(stable=true)"]).collect()}
+    cov = np.ones((20, 20))
+    cov[0, :] = cov[-1, :] = cov[:, 0] = cov[:, -1] = 0.5
+    cov[0, 0] = cov[0, -1] = cov[-1, 0] = cov[-1, -1] = 0.25
+    out = {}
+    for s, data in zip(SWEEP_SEEDS, blocks):
+        mu = np.average(data.ravel(), weights=cov.ravel())
+        out[s] = (got[str(s)],
+                  np.average((data.ravel() - mu) ** 2, weights=cov.ravel()))
+    return out
+
+
+@pytest.mark.parametrize("seed", SWEEP_SEEDS)
+def test_stable_variance_pathological_sweep(sweep, seed):
+    got, true_var = sweep[seed]
+    assert got == pytest.approx(true_var, rel=1e-9)
 
 
 def test_stable_matches_algebraic_on_normal_data(spark):

@@ -230,14 +230,23 @@ def test_tiled_merge_equivalence(extract_mem):
         assert tiled[k] == pytest.approx(whole[k]), k
 
 
+def _reference_quantiles(ext, qs):
+    """{zone_id: (quantile at each q of qs)} by the numpy reference over
+    the engine's merged per-zone histogram."""
+    from quantile_reference import weighted_quantile, zone_histograms
+
+    return {z: tuple(weighted_quantile(xs, ws, q) for q in qs)
+            for z, (xs, ws) in zone_histograms(ext).items()}
+
+
 def test_median_same_with_and_without_array_consumers(spark):
-    """median/quantile switch to the JVM-window path when they are the
-    only sorted-histogram consumers; adding frac to the op list routes
-    them back through collect_list + the pandas-UDF finalizer.  Both
-    paths must be bit-identical."""
+    """median/quantile must not change when an array consumer (frac)
+    joins the op list: both runs equal the numpy reference quantile
+    (tests/quantile_reference.py) over the engine's merged histogram,
+    bit for bit."""
     from exactextract_spark.fixtures import SynthConfig, build_docs
     from exactextract_spark import io as eio
-    from exactextract_spark.extract import exact_extract
+    from exactextract_spark.extract import ZonalExtractor
 
     cfg = SynthConfig(G=96, Z=25)
     docs = build_docs(spark, cfg).cache()
@@ -247,24 +256,29 @@ def test_median_same_with_and_without_array_consumers(spark):
     tiles = eio.tiles_from_docs(docs, "r0", meta["r0"])
     grid = cfg.grid_dict()
     grid["dtype"] = "float64"
+    ext = ZonalExtractor(zones, tiles, grid=grid)
     ops = ["median", "q25=quantile(q=0.25)", "q9=quantile(q=0.9)"]
-    win = {r["zone_id"]: (r["median"], r["q25"], r["q9"])
-           for r in exact_extract(zones, tiles, ops, grid=grid).collect()}
-    udf = {r["zone_id"]: (r["median"], r["q25"], r["q9"])
-           for r in exact_extract(zones, tiles, ops + ["frac"], grid=grid)
-           .select("zone_id", "median", "q25", "q9").collect()}
-    assert win == udf  # exact equality, no tolerance
+    ref = _reference_quantiles(ext, (0.5, 0.25, 0.9))
+    assert ref
+    for extra in ([], ["frac"]):
+        got = {r["zone_id"]: (r["median"], r["q25"], r["q9"])
+               for r in ext.extract(ops + extra)
+               .select("zone_id", "median", "q25", "q9").collect()
+               if r["median"] is not None}
+        assert got == ref, extra  # exact equality, no tolerance
 
 
 def test_quantile_window_vs_udf_fuzz(spark):
-    """Differential fuzz of the two quantile implementations (JVM-window
-    vs collect+pandas-UDF) on random rasters with heavy value repeats,
+    """Differential fuzz of the window quantile against the numpy
+    reference (tests/quantile_reference.py, the engine's former
+    pandas-UDF finalizer) on random rasters with heavy value repeats,
     nodata holes, and irregular polygon zones — guards the window
     formulation's edge cases (single-value zones, duplicate s
-    positions, q at the extremes) beyond the quarter-aligned fixture."""
+    positions, q at the extremes) beyond the quarter-aligned fixture.
+    An array consumer (unique) in the op list must not change it."""
     import numpy as np
     from exactextract_spark.io import tiles_from_array
-    from exactextract_spark.extract import exact_extract
+    from exactextract_spark.extract import ZonalExtractor
 
     rng = np.random.default_rng(42)
     for trial in range(4):
@@ -286,12 +300,15 @@ def test_quantile_window_vs_udf_fuzz(spark):
         zdf = spark.createDataFrame(zones, ["zone_id", "geometry"])
         qa, qb = sorted(rng.uniform(0.01, 0.99, 2))
         ops = ["median", f"qa=quantile(q={qa:.4f})", f"qb=quantile(q={qb:.4f})"]
-        win = {r["zone_id"]: (r["median"], r["qa"], r["qb"])
-               for r in exact_extract(zdf, tiles, ops).collect()}
-        udf = {r["zone_id"]: (r["median"], r["qa"], r["qb"])
-               for r in exact_extract(zdf, tiles, ops + ["unique"])
-               .select("zone_id", "median", "qa", "qb").collect()}
-        assert win == udf, (trial, qa, qb)  # exact equality, no tolerance
+        ext = ZonalExtractor(zdf, tiles)
+        ref = _reference_quantiles(ext, (0.5, float(f"{qa:.4f}"),
+                                         float(f"{qb:.4f}")))
+        for extra in ([], ["unique"]):
+            got = {r["zone_id"]: (r["median"], r["qa"], r["qb"])
+                   for r in ext.extract(ops + extra)
+                   .select("zone_id", "median", "qa", "qb").collect()
+                   if r["median"] is not None}
+            assert got == ref, (trial, qa, qb, extra)  # exact, no tolerance
 
 
 def test_quantile_window_path_with_bin_width(spark):
@@ -310,3 +327,42 @@ def test_quantile_window_path_with_bin_width(spark):
     a = exact_extract(zones, tiles, ops).collect()[0]
     b = exact_extract(zones, tiles, ops + ["u=unique(bin_width=3)"]).collect()[0]
     assert (a["m"], a["q"]) == (b["m"], b["q"])
+
+
+def _python_nodes(df):
+    """(distinct MapInPandas/MapInArrow nodes as (node, function name),
+    the other Python node types present) in ``df``'s optimized plan.  A
+    cached relation prints its plan once per reference, so map nodes are
+    told apart by their expression id."""
+    import re
+
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    maps = set(re.findall(r"(MapIn(?:Pandas|Arrow)) (\w+)\(.*?\)#(\d+)", plan))
+    others = [n for n in ("FlatMapGroupsInPandas", "ArrowEvalPython",
+                          "BatchEvalPython", "AggregateInPandas",
+                          "WindowInPandas") if n in plan]
+    return sorted((node, name) for node, name, _ in maps), others
+
+
+def test_merge_has_no_python_stage(spark):
+    """The zonal merge is SQL: an extraction with the stable variance and
+    every histogram finalize (median, quantile, unique, frac) plans one
+    Python node after zone prep, the kernel's MapInPandas (the zone-prep
+    MapInArrow sits under the cached zone table, which the extractor
+    materializes before any query).  A custom python op adds its own
+    node, as its contract requires."""
+    import numpy as np
+    from exactextract_spark.extract import exact_extract
+    from exactextract_spark.io import tiles_from_array
+
+    def py_sum(values, coverage):
+        return float(np.sum(values))
+
+    tiles = tiles_from_array(spark, ARANGE9)
+    zones = spark.createDataFrame([("z0", SQ)], ["zone_id", "geometry"])
+    ops = ["variance(stable=true)", "median", "unique", "frac",
+           "quantile(q=0.9)"]
+    maps = [("MapInArrow", "prep"), ("MapInPandas", "kernel")]
+    assert _python_nodes(exact_extract(zones, tiles, ops)) == (maps, [])
+    assert _python_nodes(exact_extract(zones, tiles, ops + [py_sum])) \
+        == (maps, ["ArrowEvalPython"])
