@@ -37,6 +37,11 @@ streams so the dispatch cost is per CHUNK:
   compacted stream; the opt-in stable variance's pivot-shifted state
   (pivot = the pair's first cell) is two more bincounts.  No statistic
   loops over pairs.
+- output: one Arrow RecordBatch per chunk, the kernel's side of its
+  mapInArrow boundary.  Scalar states are numpy columns with a
+  validity mask; the histogram, joint-histogram, top-k and stored-cell
+  lists are ListArrays over each flat stream's per-pair bounds, so no
+  loop over pairs or cells builds them either.
 
 Float sums are bit-identical to a per-pair np.sum on exactly
 representable data (the quarter-aligned fixture) and within 1 ulp otherwise
@@ -49,7 +54,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from .geom import AREAL
 from .grid import spherical_row_areas
@@ -235,6 +240,12 @@ def _row_cells(start, length):
         + np.arange(int(length.sum()))
 
 
+def _bounds(pair_of, P):
+    """Per-pair CSR bounds of a stream sorted by pair: pair p owns
+    entries [b[p], b[p + 1])."""
+    return np.searchsorted(pair_of, np.arange(P + 1))
+
+
 def _area_factor(coverage_weight, gr, grid_ymax, dx, dy):
     """float32 cell area for the global rows ``gr`` under the area_*
     coverage weights — the reference's float area raster
@@ -339,17 +350,19 @@ def coverage_stream(pairs, zones, *, grid_xmin, grid_ymax, dx, dy) -> CellStream
 
 
 def accumulate_pairs_batch(pairs, zones, tile_vals, key_specs, *, has_weights,
-                           passthrough, col_names, grid_ncols,
-                           grid_xmin, grid_ymax, dx, dy, multi_raster):
-    """Process a chunk of (zone, tile) pairs; returns one columnar
-    pandas DataFrame of partial-state rows (columns = col_names).
+                           passthrough, schema, grid_ncols,
+                           grid_xmin, grid_ymax, dx, dy):
+    """Process a chunk of (zone, tile) pairs; returns one pa.RecordBatch
+    of partial-state rows whose schema is ``schema``
+    (extract._partial_schema as Arrow).
 
     pairs: dict of equal-length arrays (built by extract.tile_pairs) —
       zone (ordinal into ``zones``, a geom.ZoneArrays), tile (key into
       tile_vals), r0/r1/c0/c1 (crop window within the tile), row0/col0
-      (tile origin in the grid), nodata/w_nodata (NaN = none),
-      raster_id (object array; multi_raster only) and pt (P ×
-      len(passthrough) int64);
+      (tile origin in the grid), nodata/w_nodata (NaN = none), pt (P ×
+      len(passthrough) ints) and raster_match (None, or raster name ->
+      bool per pair: the pair's tile belongs to that raster, for fused
+      multi-raster scans);
     tile_vals: tile key -> (values 2-D, weight 2-D or None)."""
     zone = np.asarray(pairs["zone"], dtype=np.int64)
     P = zone.size
@@ -357,6 +370,7 @@ def accumulate_pairs_batch(pairs, zones, tile_vals, key_specs, *, has_weights,
     c0, c1 = pairs["c0"], pairs["c1"]
     nodata = pairs["nodata"]
     w_nodata = pairs["w_nodata"]
+    raster_match = pairs["raster_match"]
     cs = coverage_stream(pairs, zones, grid_xmin=grid_xmin,
                          grid_ymax=grid_ymax, dx=dx, dy=dy)
     cov, pid, areas = cs.cov, cs.pid, cs.areas
@@ -388,12 +402,8 @@ def accumulate_pairs_batch(pairs, zones, tile_vals, key_specs, *, has_weights,
 
     cov_of = {}  # coverage weight -> effective float32 coverage stream
     wdef_s = None
-    rid_arr = None
-    if multi_raster:
-        rid_arr = pairs["raster_id"]
 
     # --- per-key statistics ----------------------------------------------
-    out = {}
     active_any = np.zeros(P, dtype=bool)
     key_results = []
     for i, req, vname, kwargs in key_specs:
@@ -403,11 +413,8 @@ def accumulate_pairs_batch(pairs, zones, tile_vals, key_specs, *, has_weights,
         dwt = kwargs["default_weight"]
 
         s = cov >= min_cov
-        if multi_raster:
-            # per-pair raster match gathered onto the stream (a direct
-            # object-array compare would run per CELL)
-            s = s & np.repeat(np.fromiter((r == vname for r in rid_arr),
-                                          dtype=bool, count=P), areas)
+        if raster_match is not None:
+            s = s & np.repeat(raster_match[vname], areas)
         if dv is not None:
             vals = np.where(defined_s, v, dv)
             used = s
@@ -468,9 +475,9 @@ def accumulate_pairs_batch(pairs, zones, tile_vals, key_specs, *, has_weights,
 
         # weights (the weight raster also serves as the second variable
         # y): undefined cells take default_weight, else NaN — kept in
-        # the stored cells and histograms, but NaN cannot ride a
-        # top-level partial (pandas NaN becomes SQL NULL, which sum()
-        # would silently skip), so the scalar sums are zero-filled and
+        # the stored cells and histograms, but a top-level NaN partial
+        # is written as NULL (see the partial rows below), which sum()
+        # would silently skip, so the scalar sums are zero-filled and
         # the pair carries an explicit w_undef / y_undef flag that the
         # finalize turns back into the reference's NaN propagation
         # (raster_stats.h:252-296)
@@ -538,10 +545,10 @@ def accumulate_pairs_batch(pairs, zones, tile_vals, key_specs, *, has_weights,
             rank = np.arange(order.size) - seg0[up_s]
             keep_k = rank < k
             sel_i = order[keep_k]
-            kpair = up_s[keep_k]
-            lo_t = np.searchsorted(kpair, np.arange(P), side="left")
-            hi_t = np.searchsorted(kpair, np.arange(P), side="right")
-            res["_topk"] = (cid_u[sel_i], vu[sel_i], cu[sel_i], lo_t, hi_t)
+            bnd = _bounds(up_s[keep_k], P)
+            res["topk_cell"] = (bnd, cid_u[sel_i])
+            res["topk_v"] = (bnd, vu[sel_i])
+            res["topk_cov"] = (bnd, cu[sel_i])
         if req.pair_hist:
             ux, ix = np.unique(vu, return_inverse=True)
             uy, iy = np.unique(w_used, return_inverse=True)
@@ -551,11 +558,10 @@ def accumulate_pairs_batch(pairs, zones, tile_vals, key_specs, *, has_weights,
             uc2, inv2 = np.unique(comb2, return_inverse=True)
             h2c = np.bincount(inv2, weights=cu)
             code_of = u1[uc2 % u1.size]
-            pair_of2 = uc2 // u1.size
-            lo_h = np.searchsorted(pair_of2, np.arange(P), side="left")
-            hi_h = np.searchsorted(pair_of2, np.arange(P), side="right")
-            res["_hist2"] = (ux[code_of // uy.size], uy[code_of % uy.size],
-                             h2c, lo_h, hi_h)
+            bnd = _bounds(uc2 // u1.size, P)
+            res["hist2_v"] = (bnd, ux[code_of // uy.size])
+            res["hist2_w"] = (bnd, uy[code_of % uy.size])
+            res["hist2_c"] = (bnd, h2c)
         if req.histogram:
             bw = kwargs["bin_width"]
             hv = vu if bw is None else np.floor(vu / bw) * bw
@@ -570,144 +576,60 @@ def accumulate_pairs_batch(pairs, zones, tile_vals, key_specs, *, has_weights,
                 hciw = np.bincount(inv2, weights=cu * w_used)
             else:
                 hciw = np.zeros_like(hci)
-            pair_of = uc // nu
-            val_of = uniq_v[uc % nu]
-            lo_b = np.searchsorted(pair_of, np.arange(P), side="left")
-            hi_b = np.searchsorted(pair_of, np.arange(P), side="right")
-            res["_hist"] = (val_of, hci, hciw, lo_b, hi_b)
+            bnd = _bounds(uc // nu, P)
+            res["hist_v"] = (bnd, uniq_v[uc % nu])
+            res["hist_ci"] = (bnd, hci)
+            res["hist_ciw"] = (bnd, hciw)
         if req.cells:
             # stored cells (raster_stats.h:759-765) in stream order: the
             # post-transform coverage, NaN weights unless requested
             wcol = w_used if w_used is not None else np.full(upid.size, np.nan)
             cid_u = cell_of(np.flatnonzero(used))
             gr_u, gc_u = np.divmod(cid_u, grid_ncols)
-            recs = list(zip(cid_u.tolist(), vu.tolist(), cu.tolist(),
-                            wcol.tolist(),
-                            (grid_xmin + (gc_u + 0.5) * dx).tolist(),
-                            (grid_ymax - (gr_u + 0.5) * dy).tolist()))
-            bnd = np.searchsorted(upid, np.arange(P + 1))
-            res["_cells"] = (recs, bnd[:-1], bnd[1:])
+            res["cells"] = (_bounds(upid, P),
+                            [cid_u, vu, cu, wcol, grid_xmin + (gc_u + 0.5) * dx,
+                             grid_ymax - (gr_u + 0.5) * dy])
         key_results.append(res)
 
+    # --- partial rows: every pair some key is active on ----------------
     rows = np.flatnonzero(active_any)
-    if rows.size == 0:
-        return pd.DataFrame(columns=col_names)
-
-    out["zone_id"] = zones.zone_id[zone[rows]]
+    # a pair outside ``rows`` holds no list entries, so a list column's
+    # offsets are its per-pair bounds at ``rows`` and at the end
+    ends = np.append(rows, P)
+    cols = {"zone_id": pa.array(zones.zone_id[zone[rows]], type=pa.string())}
     for t, name in enumerate(passthrough):
-        out[name] = pairs["pt"][rows, t]
-
-    for (i, req, _vname, kwargs), res in zip(key_specs, key_results):
-        pfx = f"k{i}_"
-        if res is None:
-            continue
-        act = res["active"]
-        sel = act[rows]
-
-        def col(vals_arr, fill=np.nan):
-            a = np.full(rows.size, fill)
-            a[sel] = vals_arr[rows][sel]
-            return a
-
-        def flag(vals_arr):
-            a = np.full(rows.size, None, dtype=object)
-            a[sel] = [bool(b) for b in vals_arr[rows][sel]]
-            return a
-
-        out[pfx + "n"] = col(res["n"].astype(np.float64))
-        out[pfx + "sum_c"] = col(res["sum_c"])
-        out[pfx + "sum_cx"] = col(res["sum_cx"])
-        if req.variance:
-            out[pfx + "sum_cx2"] = col(res["sum_cx2"])
-        if req.stable_variance:
-            for name in ("var_k", "var_s", "var_m2"):
-                out[pfx + name] = col(res[name])
-        if req.weighted:
-            out[pfx + "sum_cw"] = col(res["sum_cw"])
-            out[pfx + "sum_cxw"] = col(res["sum_cxw"])
-            out[pfx + "w_undef"] = flag(res["w_undef"])
-            if req.weighted_variance:
-                out[pfx + "sum_cx2w"] = col(res["sum_cx2w"])
-        if req.xy_moments or req.xy_change:
-            out[pfx + "y_undef"] = flag(res["y_undef"])
-        if req.xy_moments:
-            out[pfx + "sum_cy"] = col(res["sum_cy"])
-            out[pfx + "sum_cy2"] = col(res["sum_cy2"])
-            out[pfx + "sum_cxy"] = col(res["sum_cxy"])
-        if req.xy_change:
-            out[pfx + "chg_c"] = col(res["chg_c"])
-            out[pfx + "chg_sd"] = col(res["chg_sd"])
-            out[pfx + "chg_maxad"] = col(res["chg_maxad"])
-        if req.minmax:
-            out[pfx + "min_v"] = col(res["min_v"])
-            out[pfx + "max_v"] = col(res["max_v"])
-            out[pfx + "min_cell"] = col(res["min_cell"].astype(np.float64))
-            out[pfx + "max_cell"] = col(res["max_cell"].astype(np.float64))
-            if req.store_xy:
-                mr, mc = np.divmod(res["min_cell"], grid_ncols)
-                xr, xc = np.divmod(res["max_cell"], grid_ncols)
-                out[pfx + "min_x"] = col(grid_xmin + (mc + 0.5) * dx)
-                out[pfx + "min_y"] = col(grid_ymax - (mr + 0.5) * dy)
-                out[pfx + "max_x"] = col(grid_xmin + (xc + 0.5) * dx)
-                out[pfx + "max_y"] = col(grid_ymax - (xr + 0.5) * dy)
-    # histogram partials ride the pair row as three PARALLEL PRIMITIVE
-    # ARRAYS (numpy slice views of the flat bucket streams).  The Arrow
-    # serializer converts an array<double> column per ROW (one C-level
-    # list per slice) — never the per-ELEMENT Python dict conversion an
-    # array<struct> column costs — and the aggregation explodes
-    # JVM-side, keeping the partial row count per PAIR, not per bucket
-    # (measured 2.5× faster than exploded scalar bucket rows at 150k
-    # zones × 97 buckets).  NaN weighted sums survive inside array
-    # elements (only top-level NaN becomes SQL NULL at the boundary).
-    # Stored cells are the one array<struct> column (a list of tuples
-    # per pair row).
+        cols[name] = pa.array(pairs["pt"][rows, t], type=pa.int32())
     for (i, req, _vname, _kwargs), res in zip(key_specs, key_results):
         if res is None:
             continue
-        act = res["active"]
+        if req.store_xy:
+            for name in ("min", "max"):
+                gr, gc = np.divmod(res[name + "_cell"], grid_ncols)
+                res[name + "_x"] = grid_xmin + (gc + 0.5) * dx
+                res[name + "_y"] = grid_ymax - (gr + 0.5) * dy
+        # a key inactive on a pair leaves the pair's columns NULL.  A
+        # top-level NaN is written as NULL too, so a scalar partial is a
+        # number or NULL and undefined weights ride the w_undef /
+        # y_undef flags.  NaN inside list elements stays NaN: the
+        # reference's poisoned weighted bucket sums and stored weights
+        inactive = ~res["active"][rows]
         pfx = f"k{i}_"
-        array_groups = []
-        if req.histogram:
-            val_of, hci, hciw, lo_b, hi_b = res["_hist"]
-            array_groups.append((lo_b, hi_b,
-                                 ((pfx + "hist_v", val_of),
-                                  (pfx + "hist_ci", hci),
-                                  (pfx + "hist_ciw", hciw))))
-        if req.pair_hist:
-            h2v, h2w, h2c, lo_h, hi_h = res["_hist2"]
-            array_groups.append((lo_h, hi_h,
-                                 ((pfx + "hist2_v", h2v),
-                                  (pfx + "hist2_w", h2w),
-                                  (pfx + "hist2_c", h2c))))
-        if req.pair_topk:
-            tcell, tv, tcov, lo_t, hi_t = res["_topk"]
-            array_groups.append((lo_t, hi_t,
-                                 ((pfx + "topk_cell", tcell),
-                                  (pfx + "topk_v", tv),
-                                  (pfx + "topk_cov", tcov))))
-        if req.cells:
-            recs, lo_c, hi_c = res["_cells"]
-            array_groups.append((lo_c, hi_c, ((pfx + "cells", recs),)))
-        for lo_b, hi_b, named in array_groups:
-            for name, arr in named:
-                col_o = np.empty(rows.size, dtype=object)
-                col_o[:] = None
-                for o, g in enumerate(rows):
-                    if act[g]:
-                        col_o[o] = arr[lo_b[g]:hi_b[g]]
-                out[name] = col_o
-
-    # a key inactive across the whole chunk leaves its array columns
-    # missing — they must reindex to None objects, not NaN floats (the
-    # Arrow array converter iterates non-None values)
-    for i, req, _vname, _kwargs in key_specs:
-        suffixes = (("hist_v", "hist_ci", "hist_ciw") if req.histogram else ()) \
-            + (("hist2_v", "hist2_w", "hist2_c") if req.pair_hist else ()) \
-            + (("topk_cell", "topk_v", "topk_cov") if req.pair_topk else ()) \
-            + (("cells",) if req.cells else ())
-        for suffix in suffixes:
-            name = f"k{i}_{suffix}"
-            if name not in out:
-                out[name] = np.full(rows.size, None, dtype=object)
-    df = pd.DataFrame({c: out[c] for c in col_names if c in out})
-    return df.reindex(columns=col_names)
+        for f in schema:
+            if not f.name.startswith(pfx):
+                continue
+            v = res[f.name[len(pfx):]]
+            if isinstance(v, tuple):
+                bnd, child = v
+                if isinstance(child, list):
+                    child = pa.StructArray.from_arrays(
+                        child, fields=list(f.type.value_type))
+                cols[f.name] = pa.ListArray.from_arrays(
+                    pa.array(bnd[ends].astype(np.int32)), child, type=f.type,
+                    mask=pa.array(inactive))
+            else:
+                a = v[rows]
+                null = inactive | np.isnan(a) if a.dtype.kind == "f" else inactive
+                cols[f.name] = pa.array(a, type=f.type, mask=null)
+    return pa.RecordBatch.from_arrays(
+        [cols[f.name] if f.name in cols else pa.nulls(rows.size, f.type)
+         for f in schema], schema=schema)

@@ -15,7 +15,7 @@ a consistent prefix):
 
     path/partials/   partial-state rows keyed by (tile_row, tile_col)
     path/lineage/    one row per completed tile: batch id, partial-row
-                     count, wall-clock, zones touched
+                     count, wall-clock, the op list's op keys
 
 ``resume()`` anti-joins the tile table against the lineage, processes
 only the remainder, appends, and finalizes from ALL stored partials.
@@ -31,7 +31,7 @@ import uuid
 from pyspark.sql import DataFrame, functions as F
 
 from .extract import (ZonalExtractor, aggregate_partials, check_partial_layout,
-                      run_kernel)
+                      op_keys, run_kernel)
 from .ops import group_ops_by_key, parse_ops
 
 __all__ = ["CheckpointedExtraction"]
@@ -101,17 +101,20 @@ class CheckpointedExtraction:
                               passthrough=("tile_row", "tile_col")) \
             .withColumn("batch_id", F.lit(batch)).persist()
         partials.write.mode("append").parquet(f"{self.path}/partials")
+        keys = op_keys(self.keygroups)
         lineage = (partials.groupBy("tile_row", "tile_col")
                    .agg(F.count("*").alias("n_partial_rows"))
                    .withColumn("batch_id", F.lit(batch))
-                   .withColumn("ts", F.lit(time.time())))
+                   .withColumn("ts", F.lit(time.time()))
+                   .withColumn("op_keys", F.lit(keys)))
         # tiles whose kernel produced no partials still count as done
         empty = (todo.select("tile_row", "tile_col").distinct()
                  .join(lineage.select("tile_row", "tile_col"),
                        ["tile_row", "tile_col"], "left_anti")
                  .withColumn("n_partial_rows", F.lit(0).cast("long"))
                  .withColumn("batch_id", F.lit(batch))
-                 .withColumn("ts", F.lit(time.time())))
+                 .withColumn("ts", F.lit(time.time()))
+                 .withColumn("op_keys", F.lit(keys)))
         done = lineage.unionByName(empty)
         n = done.count()
         done.write.mode("append").parquet(f"{self.path}/lineage")
@@ -133,7 +136,7 @@ class CheckpointedExtraction:
             lin.select("tile_row", "tile_col", "batch_id").distinct(),
             ["tile_row", "tile_col", "batch_id"])
         stored = stored.drop("tile_row", "tile_col", "batch_id")
-        check_partial_layout(stored, self.keygroups)
+        check_partial_layout(stored, lin, self.keygroups)
         return aggregate_partials(self.ext.zones_b, stored, self.keygroups,
                                   int_values=self.ext.int_values)
 

@@ -12,8 +12,8 @@ pipeline maps onto the Spark plan one-to-one:
                                      key (tile_hits); the grid itself is
                                      the spatial index
   3. raster window read           -> tile payload column scan
-  4. coverage + block-local stats -> Arrow-batched mapInPandas kernel
-                                     emitting partial-state rows
+  4. coverage + block-local stats -> mapInArrow kernel emitting
+                                     partial-state rows as Arrow batches
   5. serial merge                 -> groupBy(zone_id).agg(...) — Spark's
                                      partial+final aggregation, which is
                                      also the skew answer: a zone touching
@@ -58,6 +58,7 @@ Python runs after the kernel except a user's custom python op.
 
 from __future__ import annotations
 
+import json
 from dataclasses import dataclass
 
 import numpy as np
@@ -399,21 +400,26 @@ def join_zone_lists(tiles: DataFrame, prep: PreparedZones,
     return tiles.join(lists, ["tile_row", "tile_col"])
 
 
-def pair_zones(pdf: pd.DataFrame, lookup) -> tuple:
+def pair_zones(batch: pa.RecordBatch, lookup) -> tuple:
     """Kernel side of join_zone_lists: (ZoneArrays, tile-row index per pair,
-    zone ordinal per pair) for a pandas batch of tile rows.  No WKT is
+    zone ordinal per pair) for an Arrow batch of tile rows.  No WKT is
     parsed: on the broadcast strategy each tile's ordinals are gathered
-    from the broadcast CSR by (tile_row, tile_col); shuffle lists carry
-    the arrays.  Pairs are keyed by zone ordinal, so zones sharing a
-    zone_id keep their own geometry."""
-    if "zone_structs" in pdf.columns:
-        lists = pdf["zone_structs"].to_numpy()
-        lens = np.fromiter(map(len, lists), dtype=np.int64, count=len(lists))
+    from the broadcast CSR by (tile_row, tile_col); on the shuffle
+    strategy the ``zone_structs`` lists carry the geometry arrays,
+    decoded by ZoneArrays.from_arrow over their flattened children.
+    Pairs are keyed by zone ordinal, so zones sharing a zone_id keep
+    their own geometry."""
+    if "zone_structs" in batch.schema.names:
+        lists = batch.column("zone_structs")
+        lens = pc.list_value_length(lists).fill_null(0).to_numpy()
         rows = np.repeat(np.arange(len(lists)), lens)
-        za = ZoneArrays.from_records(e for lst in lists for e in lst)
+        zs = {f.name: a for f, a in zip(lists.type.value_type, lists.flatten().flatten())}
+        za = ZoneArrays.from_arrow(*(zs[c] for c in GEOM_COLS),
+                                   zone_id=zs["zone_id"])
         return za, rows, np.arange(rows.size)
     za, hits = lookup.value
-    rows, zo = hits.gather(pdf["tile_row"].to_numpy(), pdf["tile_col"].to_numpy())
+    rows, zo = hits.gather(batch.column("tile_row").to_numpy(),
+                           batch.column("tile_col").to_numpy())
     return za, rows, zo
 
 
@@ -443,9 +449,9 @@ class TilePairs:
                 "row0": self.row0[bj], "col0": self.col0[bj]}
 
 
-def tile_pairs(pdf: pd.DataFrame, lookup, chunk_cells: int) -> TilePairs:
+def tile_pairs(batch: pa.RecordBatch, lookup, chunk_cells: int) -> TilePairs:
     """Pair assembly shared by the zonal and subdivide kernels, for a
-    non-empty pandas batch of tile rows with zone hit-lists.
+    non-empty Arrow batch of tile rows with zone hit-lists.
 
     Every pair's window is the zone-bbox ∩ tile crop (the reference's
     crop/shrink_to_fit, grid.h:145-238), computed with numpy from the
@@ -456,18 +462,19 @@ def tile_pairs(pdf: pd.DataFrame, lookup, chunk_cells: int) -> TilePairs:
     All tiles must share one grid (``_GRID_COLS``): tiles were assigned
     to zones with the first tile's grid, so a batch whose tiles
     disagree raises ValueError."""
-    mixed = [c for c in _GRID_COLS if pdf[c].nunique() > 1]
+    mixed = [c for c in _GRID_COLS
+             if pc.count_distinct(batch.column(c)).as_py() > 1]
     if mixed:
         raise ValueError(
             "tiles of one extraction must share one grid; these "
             f"columns differ between tiles: {', '.join(mixed)}")
-    n_rows = len(pdf)
-    za, prow, zo = pair_zones(pdf, lookup)
-    g = lambda c: pdf[c].to_numpy().astype(np.int64)
+    n_rows = batch.num_rows
+    za, prow, zo = pair_zones(batch, lookup)
+    g = lambda c: batch.column(c).to_numpy().astype(np.int64)
     nr_a, nc_a, r0_a, c0_a = g("nrows"), g("ncols"), g("row0"), g("col0")
-    gx, gy, dx, dy = (float(pdf[c].iat[0]) for c in _GRID_COLS[:4])
+    gx, gy, dx, dy = (float(batch.column(c)[0].as_py()) for c in _GRID_COLS[:4])
     grid = {"grid_xmin": gx, "grid_ymax": gy, "dx": dx, "dy": dy,
-            "grid_ncols": int(pdf["grid_ncols"].iat[0])}
+            "grid_ncols": int(batch.column("grid_ncols")[0].as_py())}
 
     live = za.ring_off[zo + 1] > za.ring_off[zo]
     prow, zo = prow[live], zo[live]
@@ -588,28 +595,21 @@ def _partial_schema(keygroups, passthrough=()) -> T.StructType:
                            for n in ("min_x", "min_y", "max_x", "max_y")]
         if req.histogram:
             # per-pair histogram as three PARALLEL PRIMITIVE ARRAYS.
-            # Measured against the two alternatives at 150k zones ×
-            # 16k-cell windows (97 value buckets):
-            # - array<struct{v,ci,ciw}> (round 2): the Arrow serializer
-            #   runs a per-ELEMENT Python dict converter — the q_hist
-            #   hot-path cost;
-            # - one flat row per (pair, value) bucket: 97× the partial
-            #   rows through pandas/Arrow/HashAggregate — 2.5× slower
-            #   than round 2 at scale (JVM-side explode of a small row
-            #   set beats Python-side row materialization).
-            # Parallel primitive arrays keep the tiny row count AND
-            # convert per-row (one C-level list per array), not
-            # per-element; the aggregation explodes arrays_zip JVM-side.
-            # NaN (the reference's poisoning of weighted bucket sums)
-            # survives INSIDE array elements — only top-level NaN
-            # becomes SQL NULL at the Arrow boundary.
+            # Measured against one flat row per (pair, value) bucket at
+            # 150k zones × 16k-cell windows (97 value buckets): 97× the
+            # partial rows through the boundary and HashAggregate were
+            # 2.5× slower at scale.  The kernel builds each column as
+            # one ListArray over the flat bucket stream; the
+            # aggregation explodes arrays_zip JVM-side.  NaN inside the
+            # arrays stays NaN (the reference's poisoning of weighted
+            # bucket sums); a top-level NaN partial is written as NULL.
             fields += [T.StructField(p + "hist_v", T.ArrayType(T.DoubleType())),
                        T.StructField(p + "hist_ci", T.ArrayType(T.DoubleType())),
                        T.StructField(p + "hist_ciw", T.ArrayType(T.DoubleType()))]
         if req.xy_moments or req.xy_change:
-            # explicit undefined-y flag: NaN cannot ride a top-level
-            # double partial (pandas NaN -> SQL NULL, silently skipped
-            # by sum/max) — same mechanism as w_undef
+            # explicit undefined-y flag: a top-level NaN partial is
+            # written as NULL, which sum/max silently skip — same
+            # mechanism as w_undef
             fields.append(T.StructField(p + "y_undef", T.BooleanType()))
         if req.xy_moments:
             fields += [T.StructField(p + "sum_cy", T.DoubleType()),
@@ -635,13 +635,26 @@ def _partial_schema(keygroups, passthrough=()) -> T.StructType:
     return T.StructType(fields)
 
 
-def check_partial_layout(stored: DataFrame, keygroups) -> None:
+def op_keys(keygroups) -> str:
+    """The op keys of ``keygroups`` as one canonical string.  Checkpoint
+    and stream lineage rows carry it: op lists with the same partial
+    columns can differ in their keys (``sum`` and
+    ``sum(min_coverage_frac=0.5)`` both write k0_n/k0_sum_c/k0_sum_cx)."""
+    return json.dumps([list(k) for k, _, _ in keygroups])
+
+
+def check_partial_layout(stored: DataFrame, lineage: DataFrame, keygroups) -> None:
     """Raises ValueError unless ``stored`` partial rows (read back from
-    a checkpoint or stream sink, lineage columns dropped) have exactly
-    the columns and types run_kernel writes for ``keygroups``: partials
-    of another op list, or of an older partial layout, must not reach
-    the merge.  Two op lists with the same columns but different op
-    keys are not told apart."""
+    a checkpoint or stream sink, lineage columns dropped) were written
+    for ``keygroups``: every ``lineage`` row carries this op list's
+    op_keys, and the partials have exactly the columns and types
+    run_kernel writes for it.  Partials of another op list, or of an
+    older partial layout (lineage without op_keys included), must not
+    reach the merge."""
+    keys = op_keys(keygroups)
+    stored_keys = [r[0] for r in lineage.select("op_keys").distinct().collect()] \
+        if "op_keys" in lineage.columns else [None]
+    other = sorted((k for k in stored_keys if k != keys), key=str)
     want = {f.name: f.dataType.simpleString()
             for f in _partial_schema(keygroups).fields}
     have = {f.name: f.dataType.simpleString() for f in stored.schema.fields}
@@ -649,17 +662,56 @@ def check_partial_layout(stored: DataFrame, keygroups) -> None:
     unexpected = sorted(have.keys() - want.keys())
     retyped = sorted(f"{c} ({have[c]}, expected {want[c]})"
                      for c in want.keys() & have.keys() if have[c] != want[c])
-    if missing or unexpected or retyped:
+    if missing or unexpected or retyped or other:
         raise ValueError(
             "stored partials do not match this op list (written by another "
             "op list or an older partial layout; recompute them into a "
             f"fresh path): missing columns {missing}, unexpected columns "
-            f"{unexpected}, wrong types {retyped}")
+            f"{unexpected}, wrong types {retyped}, stored op keys {other}, "
+            f"this op list's op keys {keys}")
+
+
+def _tile_decoder(batch: pa.RecordBatch, pfx: str = ""):
+    """Decode parameters of the tile payload columns ``{pfx}values``,
+    ``{pfx}dtype``, ``{pfx}nodata`` and the optional on-read transform
+    ``{pfx}scale`` (NULL = 1), ``{pfx}offset`` (NULL = 0) and
+    ``{pfx}mask_values``, read per row as arrays.  Returns (decode(j)
+    -> 2-D values of row j, or None for a NULL payload; the nodata the
+    kernel compares against per row).  A transformed
+    tile is decoded to float64 with undefined cells already NaN, so its
+    kernel nodata is NaN (none)."""
+    names = batch.schema.names
+
+    def num(c, null):
+        if pfx + c not in names:
+            return np.full(batch.num_rows, null)
+        return batch.column(pfx + c).fill_null(null).to_numpy()
+
+    nd, sc, of = num("nodata", np.nan), num("scale", 1.0), num("offset", 0.0)
+    mk = batch.column(pfx + "mask_values") if pfx + "mask_values" in names else None
+    transformed = (sc != 1.0) | (of != 0.0)
+    if mk is not None:
+        transformed |= mk.is_valid().to_numpy(zero_copy_only=False)
+    buf = batch.column(pfx + "values")
+    dtypes = batch.column(pfx + "dtype").to_pylist()
+    nr, nc = batch.column("nrows").to_numpy(), batch.column("ncols").to_numpy()
+
+    def decode(j):
+        if not buf[j].is_valid:
+            return None
+        m = mk[j] if mk is not None else None
+        return decode_value_tile(
+            buf[j].as_buffer(), dtypes[j], int(nr[j]), int(nc[j]),
+            nodata=None if np.isnan(nd[j]) else float(nd[j]),
+            scale=float(sc[j]), offset=float(of[j]),
+            mask_buf=m.as_buffer() if m is not None and m.is_valid else None)
+
+    return decode, np.where(transformed, np.nan, nd)
 
 
 def run_kernel(joined: DataFrame, keygroups, *, geom_lookup=None,
                has_weights: bool, passthrough=(), progress_acc=None) -> DataFrame:
-    """mapInPandas kernel: decode tile, compute coverage once, update
+    """mapInArrow kernel: decode tile, compute coverage once, update
     every op-key's accumulator (read-once dedup of shared windows —
     reference feature_sequential_processor.cpp:85-113).  ``joined``
     has one row per tile (join_zone_lists): on the broadcast strategy
@@ -669,16 +721,23 @@ def run_kernel(joined: DataFrame, keygroups, *, geom_lookup=None,
     its ``zone_structs``.  ``passthrough`` columns (e.g. tile ids for
     checkpoint lineage) are copied onto every partial row.
 
-    Pair assembly (tile_pairs) is vectorized per Arrow batch: pairs,
+    Each Arrow batch is read column-wise: the decode parameters are
+    per-row arrays (_tile_decoder), each tile is decoded once, and a
+    fused multi-raster scan matches rows to op keys by comparing the
+    raster_id column.  Pair assembly (tile_pairs) is vectorized: pairs,
     crop windows and chunks come as numpy arrays, and each chunk goes
     through batchkernel.accumulate_pairs_batch, the one statistics
     path: coverage + statistics for every pair — areal or linear, any
-    window size, any op set — are flat numpy streams, so Python
+    window size, any op set — are flat numpy streams, and its partial
+    rows come back as an Arrow batch of the partial schema, so Python
     dispatch cost is per chunk, not per pair.  Tiles of one batch must
     share one grid (tile_pairs raises ValueError otherwise)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     from .batchkernel import CHUNK_CELLS, accumulate_pairs_batch
 
     schema = _partial_schema(keygroups, passthrough)
+    arrow_schema = to_arrow_schema(schema)
     # key[0] is the logical raster name; when the joined rows carry a
     # raster_id column (fused multi-raster scan) each key only consumes
     # rows of its own raster
@@ -686,87 +745,41 @@ def run_kernel(joined: DataFrame, keygroups, *, geom_lookup=None,
         min_coverage_frac=key[2], coverage_weight=key[3],
         default_value=key[4], default_weight=key[5], bin_width=key[6]))
         for i, (key, req, _) in enumerate(keygroups)]
-    multi_raster = len({k[0] for k, _, _ in keygroups}) > 1
-    col_names = [f.name for f in schema.fields]
-
-    def opt(pdf, c):
-        return pdf[c].to_numpy() if c in pdf.columns else None
-
-    def row_transform(j, nd, sa, oa, ma):
-        sc = float(sa[j]) if sa is not None and sa[j] is not None else 1.0
-        of = float(oa[j]) if oa is not None and oa[j] is not None else 0.0
-        mk = ma[j] if ma is not None else None
-        transformed = sc != 1.0 or of != 0.0 or mk is not None
-        # a transformed tile is decoded to float64 with undefined cells
-        # already NaN, so downstream nodata is cleared
-        return sc, of, mk, (None if transformed else nd)
+    rasters = {k[0] for k, _, _ in keygroups}
 
     def kernel(batches):
-        for pdf in batches:
-            n_rows = len(pdf)
+        for b in batches:
+            n_rows = b.num_rows
             if n_rows == 0:
                 continue
-            tp = tile_pairs(pdf, geom_lookup, CHUNK_CELLS)
-            g = lambda c: pdf[c].to_numpy()
-            nr_a, nc_a = g("nrows").astype(np.int64), g("ncols").astype(np.int64)
-            buf_a, dt_a = g("values"), g("dtype")
-            nd_a = pdf["nodata"].to_numpy(dtype=np.float64, na_value=np.nan)
-            # optional on-read transform columns (scale/offset, mask band)
-            sc_a, of_a, mk_a = opt(pdf, "scale"), opt(pdf, "offset"), opt(pdf, "mask_values")
-            rid_a = g("raster_id") if multi_raster else None
-            if has_weights:
-                wbuf_a, wdt_a = g("w_values"), g("w_dtype")
-                wnd_a = pdf["w_nodata"].to_numpy(dtype=np.float64, na_value=np.nan)
-                wsc_a, wof_a = opt(pdf, "w_scale"), opt(pdf, "w_offset")
-                wmk_a = opt(pdf, "w_mask_values")
-            pt_rows = np.stack([g(c).astype(np.int64) for c in passthrough], axis=1) \
-                if passthrough else np.zeros((n_rows, 0), dtype=np.int64)
-
-            # per-row decode parameters: (sc, of, mk, nd, raw nodata,
-            # weight transform, weight nodata after transform)
-            def row_params(j):
-                nd_raw = None if np.isnan(nd_a[j]) else float(nd_a[j])
-                sc, of, mk, nd = row_transform(j, nd_raw, sc_a, of_a, mk_a)
-                wt, wn0 = (1.0, 0.0, None, None), None
-                if has_weights:
-                    wn_raw = None if np.isnan(wnd_a[j]) else float(wnd_a[j])
-                    wsc, wof, wmk, wn0 = row_transform(j, wn_raw, wsc_a, wof_a, wmk_a)
-                    wt = (wsc, wof, wmk, wn_raw)
-                return sc, of, mk, nd, nd_raw, wt, wn0
-
-            params = [row_params(j) for j in range(n_rows)]
-            nd_row = np.array([np.nan if q[3] is None else q[3] for q in params])
-            wn_row = np.array([np.nan if q[6] is None else q[6] for q in params])
-
-            def decode_row(j):
-                sc, of, mk, _nd, nd_raw, wt, _wn0 = params[j]
-                nr, nc = int(nr_a[j]), int(nc_a[j])
-                tv = decode_value_tile(buf_a[j], dt_a[j], nr, nc, nodata=nd_raw,
-                                       scale=sc, offset=of, mask_buf=mk)
-                tw = None
-                if has_weights and wbuf_a[j] is not None:
-                    wsc, wof, wmk, wnd = wt
-                    tw = decode_value_tile(wbuf_a[j], wdt_a[j], nr, nc, nodata=wnd,
-                                           scale=wsc, offset=wof, mask_buf=wmk)
-                return tv, tw
+            tp = tile_pairs(b, geom_lookup, CHUNK_CELLS)
+            decode, nd_row = _tile_decoder(b)
+            wdecode, wn_row = _tile_decoder(b, "w_") if has_weights \
+                else (None, np.full(n_rows, np.nan))
+            match = {r: pc.equal(b.column("raster_id"), r).fill_null(False)
+                     .to_numpy(zero_copy_only=False) for r in rasters} \
+                if len(rasters) > 1 else None
+            pt_rows = np.stack([b.column(c).to_numpy() for c in passthrough], axis=1) \
+                if passthrough else np.zeros((n_rows, 0), dtype=np.int32)
 
             for lo, hi in tp.chunks:
                 pairs = tp.chunk(lo, hi)
                 bj = pairs["tile"]
-                decoded = {int(j): decode_row(int(j)) for j in np.unique(bj)}
-                pairs.update(nodata=nd_row[bj], w_nodata=wn_row[bj],
-                             raster_id=rid_a[bj] if multi_raster else None,
-                             pt=pt_rows[bj])
-                frame = accumulate_pairs_batch(
+                decoded = {j: (decode(j), wdecode(j) if has_weights else None)
+                           for j in np.unique(bj).tolist()}
+                pairs.update(nodata=nd_row[bj], w_nodata=wn_row[bj], pt=pt_rows[bj],
+                             raster_match=None if match is None
+                             else {r: m[bj] for r, m in match.items()})
+                out = accumulate_pairs_batch(
                     pairs, tp.zones, decoded, key_specs,
                     has_weights=has_weights, passthrough=passthrough,
-                    col_names=col_names, multi_raster=multi_raster, **tp.grid)
-                if len(frame):
-                    yield frame
+                    schema=arrow_schema, **tp.grid)
+                if out.num_rows:
+                    yield out
             if progress_acc is not None:
                 progress_acc.add(n_rows)
 
-    return joined.mapInPandas(kernel, schema=schema)
+    return joined.mapInArrow(kernel, schema)
 
 
 def _histogram_finalize(h: DataFrame, p: str, ops_in_key) -> DataFrame:
@@ -1252,7 +1265,7 @@ def aggregate_partials(zones_b, partials, keygroups, *, int_values=False,
     # Persist the partials whenever a histogram/cells branch consumes
     # them — even single-consumer.  Measured at 150k zones × 97 value
     # buckets (local[16]): WITHOUT the persist, Catalyst fuses
-    # MapInPandas → explode → partial HashAggregate into one stage and
+    # the kernel map → explode → partial HashAggregate into one stage and
     # the histogram query runs 2× slower (34–49 s vs 17 s); cutting
     # the stage at the compact per-pair rows lets the Python kernel
     # stage and the explode+aggregate stage each run clean.  The

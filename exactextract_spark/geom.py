@@ -251,22 +251,6 @@ class ZoneArrays:
                                r_len, zid)
 
     @classmethod
-    def from_records(cls, recs) -> "ZoneArrays":
-        """From an iterable of {zone_id, _geom_kind, _geom_xy,
-        _geom_rings} mappings (the shuffle strategy's zone structs)."""
-        recs = list(recs)
-        xy = [np.asarray(r["_geom_xy"], dtype=np.float64) for r in recs]
-        rg = [np.asarray(r["_geom_rings"], dtype=np.int64) for r in recs]
-        cat = (lambda parts, dt: np.concatenate(parts) if parts
-               else np.zeros(0, dtype=dt))
-        return cls._from_parts(
-            np.array([INVALID if r["_geom_kind"] is None else r["_geom_kind"]
-                      for r in recs], dtype=np.int8),
-            cat(xy, np.float64), np.array([a.size for a in xy], dtype=np.int64),
-            cat(rg, np.int64), np.array([a.size for a in rg], dtype=np.int64),
-            np.array([r["zone_id"] for r in recs], dtype=object))
-
-    @classmethod
     def _from_parts(cls, kind, xy_flat, xy_len, ring_ends, ring_count, zone_id):
         ring_off = _excl_cumsum(ring_count)
         zpt = _excl_cumsum(np.asarray(xy_len, dtype=np.int64) // 2)

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from .extract import BROADCAST_ZONE_LIMIT, prepare_zones, zone_tile_pairs
@@ -214,8 +215,6 @@ def point_in_polygon(points: DataFrame, zones: DataFrame, *,
     zones' bounding box."""
     import math
 
-    import pyarrow as pa
-
     # one collect counts and validates the zones (and, below the limit,
     # broadcasts the parsed geometry); its bboxes size the lattice
     prep = prepare_zones(zones, "auto", limit=broadcast_limit)
@@ -284,23 +283,33 @@ def point_in_polygon(points: DataFrame, zones: DataFrame, *,
     ])
 
     def kernel(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
+        for b in batches:
+            if b.num_rows == 0:
                 continue
-            out_pid, out_zid = [], []
-            for zrow, grp in pdf.groupby("_zrow", sort=False):
-                if lookup is not None:
-                    za = lookup.value[0]
-                    geom, zid = za.geometry(int(zrow)), za.zone_id[int(zrow)]
-                else:
-                    geom = ZoneArrays.from_records([grp.iloc[0]]).geometry(0)
-                    zid = grp["zone_id"].iat[0]
-                ins = points_in_geom(geom, grp["x"].to_numpy(), grp["y"].to_numpy())
-                out_pid.extend(grp["point_id"].to_numpy()[ins])
-                out_zid.extend([zid] * int(ins.sum()))
-            yield pd.DataFrame({"point_id": out_pid, "zone_id": out_zid})
+            # the candidates grouped by zone row; each group's zone is
+            # the broadcast geometry, or (shuffle) its first row's arrays
+            zrow = b.column("_zrow").to_numpy()
+            order = np.argsort(zrow, kind="stable")
+            start = np.flatnonzero(np.diff(zrow[order], prepend=-1))
+            bounds = np.append(start, order.size)
+            if lookup is not None:
+                za, zo = lookup.value[0], zrow[order[start]]
+            else:
+                first = pa.array(order[start])
+                za = ZoneArrays.from_arrow(
+                    *(b.column(c).take(first) for c in GEOM_COLS),
+                    zone_id=b.column("zone_id").take(first))
+                zo = np.arange(start.size)
+            x, y = b.column("x").to_numpy()[order], b.column("y").to_numpy()[order]
+            hit = np.zeros(order.size, dtype=bool)
+            for k, (lo, hi) in enumerate(zip(bounds[:-1], bounds[1:])):
+                hit[lo:hi] = points_in_geom(za.geometry(int(zo[k])), x[lo:hi], y[lo:hi])
+            zid = np.repeat(za.zone_id[zo], np.diff(bounds))[hit]
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(b.column("point_id").to_numpy()[order][hit], type=pa.int64()),
+                 pa.array(zid, type=pa.string())], names=["point_id", "zone_id"])
 
-    return cand.mapInPandas(kernel, schema=schema)
+    return cand.mapInArrow(kernel, schema=schema)
 
 
 def knn_tiles(points: DataFrame, grid: dict, *, k: int = 4,

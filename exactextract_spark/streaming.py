@@ -26,8 +26,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import io as eio
 from .extract import (aggregate_partials, check_partial_layout, join_weight_frame,
-                      join_zone_lists, prepare_weight_frame, prepare_zones,
-                      run_kernel, zone_lists)
+                      join_zone_lists, op_keys, prepare_weight_frame,
+                      prepare_zones, run_kernel, zone_lists)
 from .ops import group_ops_by_key, parse_ops
 
 __all__ = ["StreamingZonalWriter", "stream_zonal_from_dir"]
@@ -105,7 +105,8 @@ class StreamingZonalWriter:
                    .agg(F.count("*").alias("n_partial_rows"))
                    .withColumn("batch_id", F.lit(str(batch_id)))
                    .withColumn("attempt_id", F.lit(attempt))
-                   .withColumn("ts", F.lit(time.time())))
+                   .withColumn("ts", F.lit(time.time()))
+                   .withColumn("op_keys", F.lit(op_keys(self.keygroups))))
         lineage.write.mode("append").parquet(f"{self.path}/lineage")
         partials.unpersist()
 
@@ -119,7 +120,7 @@ class StreamingZonalWriter:
             lin.select("tile_row", "tile_col", "attempt_id").distinct(),
             ["tile_row", "tile_col", "attempt_id"]) \
             .drop("tile_row", "tile_col", "batch_id", "attempt_id")
-        check_partial_layout(stored, self.keygroups)
+        check_partial_layout(stored, lin, self.keygroups)
         return aggregate_partials(self.zones_b, stored, self.keygroups)
 
     def metrics(self) -> dict:

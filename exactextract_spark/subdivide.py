@@ -3,7 +3,7 @@
 raster_cell_intersection.cpp:504-546, CLI `subdivide`).
 
 Spark shape: the same zone⋈tile join as zonal extraction feeds a
-mapInPandas kernel that emits one row per covered cell:
+mapInArrow kernel that emits one row per covered cell:
 
     (zone_id, cell_id, coverage, x0, y0, x1, y1, wkt)
 
@@ -43,8 +43,10 @@ exactly once), so there is no upper bound on the zone count.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .batchkernel import CHUNK_CELLS, coverage_stream
 from .extract import join_zone_lists, prepare_zones, tile_pairs
@@ -97,9 +99,6 @@ def _box_wkt_vec(px0, py0, px1, py1):
     binary_join_element_wise builds the strings in one C++ pass —
     ~20× faster than np.char (which re-copies the whole padded-UTF-32
     array per concatenation) and ~7× faster than a Python loop."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
     x0s = pc.cast(pa.array(px0), pa.string())
     y0s = pc.cast(pa.array(py0), pa.string())
     x1s = pc.cast(pa.array(px1), pa.string())
@@ -124,9 +123,6 @@ def _batch_polygons_wkt(cell_poly_off, poly_ring_off, ring_coord_off,
     C-level list joins (coords→ring, rings→poly, polys→cell), driven
     by the precomputed offset hierarchy (see _offsets).  Returns an
     Arrow string array, one WKT per cell."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
     xs = pc.cast(pa.array(coord_x), pa.string())
     ys = pc.cast(pa.array(coord_y), pa.string())
     coord_str = pc.binary_join_element_wise(xs, ys, " ")
@@ -156,7 +152,7 @@ _SCHEMA = T.StructType([
     T.StructField("y1", T.DoubleType()),
     T.StructField("wkt", T.StringType()),
 ])
-_COLS = [f.name for f in _SCHEMA.fields]
+_ARROW_SCHEMA = to_arrow_schema(_SCHEMA)
 
 
 def _clip_fallback(rings, box):
@@ -183,8 +179,6 @@ def _boundary_pieces(b, zone, gr, gc, cells, zones, grid):
     chain walk and ring assembly.  Returns [(selections, x0, y0, x1,
     y1, wkt)] for the assembled cells (bboxes and WKT built in one
     vectorized pass) and for the clip-fallback cells."""
-    import pyarrow as pa
-
     gx, gy, dx, dy = (grid[c] for c in ("grid_xmin", "grid_ymax", "dx", "dy"))
     cx0, cy0, cx1, cy1 = cells
     b = b[np.argsort(zone[b], kind="stable")]
@@ -247,13 +241,12 @@ def _boundary_pieces(b, zone, gr, gc, cells, zones, grid):
 
 
 def _chunk_pieces(pairs, zones, grid, min_coverage_frac):
-    """One row per covered cell of a chunk's pairs (_COLS), or None.
+    """One row per covered cell of a chunk's pairs, as an Arrow batch of
+    _SCHEMA, or None.
     Cells come from the zonal kernel's coverage stream; rectangle zones
     and full cells are closed-form boxes, built for the whole chunk in
     one vectorized pass; only boundary cells of general polygons take
     per-cell ring assembly."""
-    import pyarrow as pa
-
     gx, gy, dx, dy = (grid[c] for c in ("grid_xmin", "grid_ymax", "dx", "dy"))
     cs = coverage_stream(pairs, zones, grid_xmin=gx, grid_ymax=gy, dx=dx, dy=dy)
     pos = np.flatnonzero(cs.cov > min_coverage_frac)
@@ -284,22 +277,13 @@ def _chunk_pieces(pairs, zones, grid, min_coverage_frac):
         out += _boundary_pieces(b, zone, gr, gc, (cx0, cy0, cx1, cy1),
                                 zones, grid)
     sel = np.concatenate([o[0] for o in out])
-    # the wkt column stays an ARROW string array end-to-end: pandas
-    # ArrowDtype passes through Spark's Arrow serializer zero-copy
-    # (StringType has no per-element converter), skipping 10⁶s of
-    # PyUnicode allocations per batch.  Single chunk: the serializer's
-    # StructArray.from_arrays rejects ChunkedArray columns
-    wkt = pa.chunked_array([pa.concat_arrays([o[5] for o in out])])
-    return pd.DataFrame({
-        "zone_id": zones.zone_id[zone[sel]],
-        "cell_id": gr[sel] * grid["grid_ncols"] + gc[sel],
-        "coverage": cv[sel],
-        "x0": np.concatenate([o[1] for o in out]),
-        "y0": np.concatenate([o[2] for o in out]),
-        "x1": np.concatenate([o[3] for o in out]),
-        "y1": np.concatenate([o[4] for o in out]),
-        "wkt": pd.arrays.ArrowExtensionArray(wkt),
-    })
+    return pa.RecordBatch.from_arrays([
+        pa.array(zones.zone_id[zone[sel]], type=pa.string()),
+        pa.array(gr[sel] * grid["grid_ncols"] + gc[sel]),
+        pa.array(cv[sel]),
+        *(pa.array(np.concatenate([o[k] for o in out])) for k in range(1, 5)),
+        pa.concat_arrays([o[5] for o in out]),
+    ], schema=_ARROW_SCHEMA)
 
 
 def subdivide(zones: DataFrame, tiles: DataFrame, *,
@@ -327,15 +311,15 @@ def subdivide(zones: DataFrame, tiles: DataFrame, *,
     mcf = np.float32(min_coverage_frac)
 
     def kernel(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
+        for b in batches:
+            if b.num_rows == 0:
                 continue
-            tp = tile_pairs(pdf, lookup, CHUNK_CELLS)
+            tp = tile_pairs(b, lookup, CHUNK_CELLS)
             if (tp.zones.kind[tp.zone] != AREAL).any():
                 raise ValueError("subdivide requires areal geometries")
             for lo, hi in tp.chunks:
-                frame = _chunk_pieces(tp.chunk(lo, hi), tp.zones, tp.grid, mcf)
-                if frame is not None:
-                    yield frame
+                pieces = _chunk_pieces(tp.chunk(lo, hi), tp.zones, tp.grid, mcf)
+                if pieces is not None:
+                    yield pieces
 
-    return joined.mapInPandas(kernel, schema=_SCHEMA)
+    return joined.mapInArrow(kernel, schema=_SCHEMA)

@@ -45,6 +45,7 @@ from exactextract_spark.geom import parse_wkt_batch
 from exactextract_spark.grid import spherical_row_areas
 from exactextract_spark.kernel import coverage_for_window
 from exactextract_spark.ops import StatRequirements, group_ops_by_key, parse_ops
+from pyspark.sql.pandas.types import to_arrow_schema
 
 __all__ = ["accumulate_pair", "batch_and_reference"]
 
@@ -295,16 +296,20 @@ def batch_and_reference(ops, wkts, vals, weights, *, tile, gx, gy,
             if any_key:
                 want.append(rec)
 
-    cols = [f.name for f in _partial_schema(kg).fields]
     batch = dict(zip(("zone", "tile", "r0", "r1", "c0", "c1", "row0", "col0"),
                      np.array(pairs, dtype=np.int64).T))
     batch.update(nodata=np.full(len(pairs), nodata),
-                 w_nodata=np.full(len(pairs), np.nan), raster_id=None,
+                 w_nodata=np.full(len(pairs), np.nan), raster_match=None,
                  pt=np.zeros((len(pairs), 0), dtype=np.int64))
     tile_vals = {k: (tv, tw) for k, (_r, _c, tv, tw) in tiles.items()}
     got = accumulate_pairs_batch(batch, zones, tile_vals, key_specs,
                                  has_weights=True, passthrough=(),
-                                 col_names=cols, grid_ncols=nc, grid_xmin=gx,
-                                 grid_ymax=gy, dx=dx, dy=dy,
-                                 multi_raster=False)
-    return kg, got.to_dict("records"), want
+                                 schema=to_arrow_schema(_partial_schema(kg)),
+                                 grid_ncols=nc, grid_xmin=gx, grid_ymax=gy,
+                                 dx=dx, dy=dy)
+    rows = got.to_pandas().to_dict("records")
+    for r in rows:  # stored cells as the tuples the reference builds
+        for c, a in r.items():
+            if c.endswith("_cells") and a is not None:
+                r[c] = [tuple(e.values()) for e in a]
+    return kg, rows, want

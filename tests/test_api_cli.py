@@ -175,11 +175,13 @@ def test_multiband_fused_single_scan(spark):
         for k, v in want[z].items():
             assert got[z][k] == v, (z, k, got[z][k], v)
 
-    # exactly ONE kernel scan (one mapInPandas over the fused table);
-    # AQE prints the plan twice (final + initial), take the final part
+    # exactly ONE kernel scan (one mapInArrow over the fused table; the
+    # zone-prep mapInArrow, named prep, sits under the cached zone
+    # table); AQE prints the plan twice (final + initial), take the
+    # final part
     plan = fused._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]
-    assert final.count("MapInPandas") == 1
+    assert final.count("MapInArrow kernel(") == 1
 
 
 def test_frac_as_map_auto_unique(spark):

@@ -7,9 +7,15 @@ The ZOO raster is integer-valued, so even the float sums are exact."""
 import numpy as np
 import pytest
 
+from pyspark.sql.pandas.types import to_arrow_schema
+
 from accumulate_reference import batch_and_reference
-from exactextract_spark.extract import exact_extract
+from exactextract_spark.batchkernel import accumulate_pairs_batch
+from exactextract_spark.extract import _partial_schema, exact_extract
+from exactextract_spark.geom import parse_wkt_batch
 from exactextract_spark.io import tiles_from_array
+from exactextract_spark.ops import FLT_MIN, StatRequirements
+from exactextract_spark.subdivide import _SCHEMA, _chunk_pieces
 
 ZOO = [
     ("rect", "POLYGON ((0.5 0.5, 7.25 0.5, 7.25 6.75, 0.5 6.75, 0.5 0.5))"),
@@ -83,3 +89,57 @@ def test_batch_equals_perpair_unweighted_with_chunking(spark, monkeypatch):
     monkeypatch.setattr(bk, "CHUNK_CELLS", 64)
     got = {r["zone_id"]: r.asDict() for r in exact_extract(zdf, t, ops).collect()}
     assert got == want
+
+
+# every partial family on: two keys, the second needing near-full cells
+_REQ_ALL = StatRequirements(
+    basic=True, weighted=True, variance=True, weighted_variance=True,
+    stable_variance=True, minmax=True, store_xy=True, histogram=True,
+    cells=True, cells_weights=True, xy_moments=True, xy_change=True,
+    pair_hist=True, pair_topk=3)
+_KG_ALL = [(("values", "weights", cov, "fraction", None, None, None), _REQ_ALL, [])
+           for cov in (FLT_MIN, 0.999)]
+
+
+@pytest.mark.parametrize("chunk", ["normal", "second_key_inactive", "none_active"])
+def test_arrow_schemas_pinned(chunk):
+    """mapInArrow rejects a batch whose types differ from the declared
+    schema only at run time: the kernel's batch must be exactly the
+    partial schema as Arrow (and subdivide's pieces its _SCHEMA) — with
+    every partial family on, when a key is inactive on every pair, and
+    when no pair is active."""
+    wkts = {"normal": [ZOO[0][1], ZOO[3][1], ZOO[7][1]],
+            "second_key_inactive": [ZOO[7][1]],
+            "none_active": [ZOO[0][1], ZOO[7][1]]}[chunk]
+    data, w = _zoo_raster()
+    w[2:6, 2:6] = np.nan
+    if chunk == "none_active":
+        data[:] = np.nan
+    zones = parse_wkt_batch(wkts, zone_id=np.array(wkts, dtype=object))
+    P = len(wkts)
+    full = np.full(P, 20)
+    pairs = {"zone": np.arange(P), "tile": np.zeros(P, dtype=np.int64),
+             "r0": np.zeros(P, dtype=np.int64), "r1": full,
+             "c0": np.zeros(P, dtype=np.int64), "c1": full,
+             "row0": np.zeros(P, dtype=np.int64), "col0": np.zeros(P, dtype=np.int64),
+             "nodata": np.full(P, np.nan), "w_nodata": np.full(P, np.nan),
+             "pt": np.zeros((P, 2), dtype=np.int64), "raster_match": None}
+    grid = dict(grid_xmin=0.0, grid_ymax=20.0, dx=1.0, dy=1.0)
+    passthrough = ("tile_row", "tile_col")
+    want = to_arrow_schema(_partial_schema(_KG_ALL, passthrough))
+    key_specs = [(i, req, key[0], dict(min_coverage_frac=key[2], coverage_weight=key[3],
+                                       default_value=None, default_weight=None,
+                                       bin_width=None))
+                 for i, (key, req, _) in enumerate(_KG_ALL)]
+    got = accumulate_pairs_batch(pairs, zones, {0: (data, w)}, key_specs,
+                                 has_weights=True, passthrough=passthrough,
+                                 schema=want, grid_ncols=20, **grid)
+    assert got.schema == want
+    rows = {"normal": 3, "second_key_inactive": 1, "none_active": 0}[chunk]
+    assert got.num_rows == rows
+    if chunk == "second_key_inactive":
+        assert all(got.column(f.name).null_count == 1 for f in want
+                   if f.name.startswith("k1_"))
+
+    pieces = _chunk_pieces(pairs, zones, {**grid, "grid_ncols": 20}, np.float32(0))
+    assert pieces.schema == to_arrow_schema(_SCHEMA)

@@ -127,3 +127,26 @@ def test_partials_of_another_op_list_rejected(setup, tmp_path):
                        r"'k0_max_v', 'k0_min_cell', 'k0_min_v'\], "
                        r"unexpected columns \[\]"):
         ck.finalize()
+
+
+def test_partials_of_other_op_keys_rejected(setup, spark, tmp_path):
+    """``sum`` and ``sum(min_coverage_frac=0.5)`` write the same partial
+    columns; the op keys stored with the lineage tell them apart, and a
+    lineage without op keys (an older checkpoint) is refused too."""
+    zones, tiles = setup
+    path = str(tmp_path / "ck")
+    CheckpointedExtraction(ZonalExtractor(zones, tiles), ["sum"], path).step()
+    ck = CheckpointedExtraction(ZonalExtractor(zones, tiles),
+                                ["sum(min_coverage_frac=0.5)"], path)
+    with pytest.raises(ValueError, match=r"recompute .*stored op keys "
+                       r"\['\[\[\"values\", null, 1\.17549435e-38.*"
+                       r"this op list's op keys \[\[\"values\", null, 0\.5"):
+        ck.finalize()
+
+    lin = str(tmp_path / "ck" / "lineage")
+    spark.read.parquet(lin).drop("op_keys").write.mode("overwrite") \
+        .parquet(str(tmp_path / "old"))
+    spark.read.parquet(str(tmp_path / "old")).write.mode("overwrite").parquet(lin)
+    ck = CheckpointedExtraction(ZonalExtractor(zones, tiles), ["sum"], path)
+    with pytest.raises(ValueError, match=r"recompute .*stored op keys \[None\]"):
+        ck.finalize()

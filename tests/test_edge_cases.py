@@ -199,6 +199,33 @@ def test_undefined_weight_nulls_weighted_stats(spark, split):
     assert got2["z"] == pytest.approx(63.0 + 2.0)
 
 
+
+def test_undefined_weight_stays_nan_in_arrays(spark):
+    """An undefined weight is NaN, not NULL, inside the array partials:
+    it poisons weighted_frac for every value (Σciwi(v) / Σciwi,
+    raster_stats.h:554-564), is kept in the stored weights
+    (raster_stats.h:759-765) and in the weight column of the joint
+    (value, weight) histogram."""
+    from exactextract_spark.api import zonal_crosstab
+
+    def nan(x):
+        return x is not None and x != x
+
+    tiles = tiles_from_array(spark, np.array([[1.0, 2.0], [3.0, 3.0]]))
+    wt = tiles_from_array(spark, np.array([[1.0, np.nan], [2.0, 1.0]]),
+                          raster_id="w")
+    zones = spark.createDataFrame(
+        [("z", "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))")], ["zone_id", "geometry"])
+    r = exact_extract(zones, tiles, ["unique", "weighted_frac", "weights"],
+                      weight_tiles=wt).first()
+    assert r["unique"] == [1.0, 2.0, 3.0]
+    assert len(r["weighted_frac"]) == 3 and all(map(nan, r["weighted_frac"]))
+    assert r["weights"][0] == 1.0 and nan(r["weights"][1]) \
+        and r["weights"][2:] == [2.0, 1.0]
+    ct = [(x["value"], x["weight"]) for x in zonal_crosstab(zones, tiles, wt).collect()]
+    assert sorted(c for c in ct if c[0] != 2.0) == [(1.0, 1.0), (3.0, 1.0), (3.0, 2.0)]
+    assert [nan(w) for v, w in ct if v == 2.0] == [True]
+
 def test_mixed_grids_raise(spark):
     """Tiles of one extraction share one grid (tiles are assigned to
     zones with the first tile's grid), so a tile table mixing two

@@ -347,7 +347,7 @@ def _python_nodes(df):
 def test_merge_has_no_python_stage(spark):
     """The zonal merge is SQL: an extraction with the stable variance and
     every histogram finalize (median, quantile, unique, frac) plans one
-    Python node after zone prep, the kernel's MapInPandas (the zone-prep
+    Python node after zone prep, the kernel's MapInArrow (the zone-prep
     MapInArrow sits under the cached zone table, which the extractor
     materializes before any query).  A custom python op adds its own
     node, as its contract requires."""
@@ -362,7 +362,7 @@ def test_merge_has_no_python_stage(spark):
     zones = spark.createDataFrame([("z0", SQ)], ["zone_id", "geometry"])
     ops = ["variance(stable=true)", "median", "unique", "frac",
            "quantile(q=0.9)"]
-    maps = [("MapInArrow", "prep"), ("MapInPandas", "kernel")]
+    maps = [("MapInArrow", "kernel"), ("MapInArrow", "prep")]
     assert _python_nodes(exact_extract(zones, tiles, ops)) == (maps, [])
     assert _python_nodes(exact_extract(zones, tiles, ops + [py_sum])) \
         == (maps, ["ArrowEvalPython"])

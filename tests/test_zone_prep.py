@@ -8,8 +8,10 @@ import numpy as np
 import pytest
 
 from exactextract_spark.extract import (ZonalExtractor, attach_bbox, exact_extract,
-                                        prepare_zones, tile_hits, zone_tile_pairs)
+                                        prepare_zones, run_kernel, tile_hits,
+                                        zone_tile_pairs)
 from exactextract_spark.io import tiles_from_array
+from exactextract_spark.ops import FLT_MIN, StatRequirements
 from exactextract_spark.spatial import point_in_polygon
 from exactextract_spark.subdivide import subdivide
 
@@ -276,3 +278,68 @@ def test_duplicate_zone_ids_use_each_rows_geometry(spark, strategy):
     hits = sorted(tuple(r) for r in point_in_polygon(
         pts, zones, broadcast_limit=lim).collect())
     assert hits == [(1, "a"), (2, "a"), (3, "b")]
+
+
+def _stars(rng, n, G):
+    out = []
+    for _ in range(n):
+        m = int(rng.integers(5, 12))
+        ang = (np.arange(m) + rng.uniform(0.05, 0.95, m)) * (2 * np.pi / m)
+        rad = rng.uniform(0.4, 6.0, m)
+        cx, cy = rng.uniform(-2, G + 2, 2)
+        pts = [(cx + r * np.cos(a), cy + r * np.sin(a)) for r, a in zip(rad, ang)]
+        out.append("POLYGON ((" + ", ".join(f"{x!r} {y!r}" for x, y in pts + pts[:1]) + "))")
+    return out
+
+
+def test_shuffle_strategy_equals_broadcast(spark):
+    """The shuffle strategy decodes the per-tile ``zone_structs`` lists
+    instead of reading the broadcast geometry: on fuzzed stars (two rows
+    sharing a zone_id, NaN/nodata values, NaN weights) its results are
+    bit-identical to the broadcast strategy's — every statistic with
+    and without weights, the kernel's partial rows with every partial
+    family on, and point_in_polygon."""
+    rng = np.random.default_rng(11)
+    G = 40
+    vals = rng.integers(0, 9, (G, G)).astype(np.float64)
+    vals[rng.random((G, G)) < 0.05] = -1.0
+    vals[rng.random((G, G)) < 0.03] = np.nan
+    w = rng.uniform(0, 3, (G, G))
+    w[rng.random((G, G)) < 0.05] = np.nan
+    tiles = tiles_from_array(spark, vals, tile=8, nodata=-1.0)
+    wt = tiles_from_array(spark, w, tile=8, raster_id="w")
+    wkts = _stars(rng, 30, G)
+    ids = [f"s{i}" for i in range(30)]
+    ids[7] = ids[3]
+    zones = spark.createDataFrame(list(zip(ids, wkts)), ["zone_id", "geometry"])
+    ops = ["count", "sum", "mean", "variance", "sv=variance(stable=true)",
+           "min", "max", "min_center_x", "max_center_y", "median", "unique",
+           "frac", "values", "coverage", "cell_id", "center_x",
+           "mc=sum(min_coverage_frac=0.5)"]
+    w_ops = ["weighted_mean", "weighted_variance", "weighted_frac", "weights"]
+    req = StatRequirements(
+        basic=True, weighted=True, variance=True, weighted_variance=True,
+        stable_variance=True, minmax=True, store_xy=True, histogram=True,
+        cells=True, cells_weights=True, xy_moments=True, xy_change=True,
+        pair_hist=True, pair_topk=3)
+    kg = [(("values", "weights", FLT_MIN, "fraction", None, None, None), req, [])]
+
+    def rows(df):
+        return sorted(map(repr, df.collect()))
+
+    got = {}
+    for strategy in ("broadcast", "shuffle"):
+        with ZonalExtractor(zones, tiles, strategy=strategy) as ext:
+            plain = rows(ext.extract(ops))
+        with ZonalExtractor(zones, tiles, weight_tiles=wt, strategy=strategy) as ext:
+            assert ext.strategy == strategy
+            got[strategy] = (plain, rows(ext.extract(ops + w_ops)), rows(run_kernel(
+                ext.joined, kg, geom_lookup=ext.geom_lookup, has_weights=True)))
+    assert got["shuffle"] == got["broadcast"]
+    assert any("nan" in r for r in got["broadcast"][1])
+
+    pts = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(rng.uniform(-3, G + 3, (600, 2)))],
+        ["point_id", "x", "y"])
+    shuffled = rows(point_in_polygon(pts, zones, broadcast_limit=0))
+    assert shuffled == rows(point_in_polygon(pts, zones)) and len(shuffled) > 100
