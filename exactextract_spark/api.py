@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from .extract import ZonalExtractor
 from .ops import parse_ops
+from .pipeline import two_phase_topk
 
 __all__ = ["exact_extract_multi", "exact_extract_fused",
            "exact_extract_multiband", "zonal_crosstab",
@@ -25,12 +26,19 @@ def _pair_partials(zones: DataFrame, tiles: DataFrame,
     which built ONE collect_list row per zone before exploding it back:
     an aggregation-buffer / 2 GB-column killer for continent-sized
     zones).  The kernel emits bounded per-pair rows instead; every
-    downstream aggregation is a plain partial+final hash agg."""
-    from .extract import ZonalExtractor, run_kernel
+    downstream aggregation is a plain partial+final hash agg.
+
+    The extractor's cached zone table serves only its constructor's
+    collect and ZonalExtractor.extract's final join, which never runs
+    here, so it is released at once: the call leaves no cached table
+    behind.  The geometry broadcast stays, since the returned plan
+    reads it."""
+    from .extract import run_kernel
     from .ops import FLT_MIN
 
     ext = ZonalExtractor(zones, tiles, weight_tiles=other_tiles,
                          grid=grid, strategy=strategy)
+    ext.zones_b.unpersist()
     key = ("values", "weights" if other_tiles is not None else None,
            FLT_MIN, "fraction", None, None, None)
     return run_kernel(ext.joined, [(key, req, [])],
@@ -269,13 +277,11 @@ def zonal_topk_cells(zones: DataFrame, tiles: DataFrame, *,
     """Per-zone hotspot extraction: the top-k covered cells by value
     (ties → lowest cell_id).  The kernel emits each (zone, tile) pair's
     LOCAL top-k candidates (≤ k rows per pair — the per-zone union
-    provably contains the zone's global top-k), then the two-phase
-    salted rank of the ann_topk scale pattern merges them: a local rank
-    per (zone, salt) bounds every task, the final rank sees
-    ≤ k·salts rows per zone — no task ever sorts a whole zone's cell
-    list, and no per-zone collect_list exists anywhere in the plan."""
-    from pyspark.sql import Window
-
+    provably contains the zone's global top-k), then two_phase_topk
+    merges them: a local rank per (zone, cell_id mod salts) bounds
+    every task, the final rank sees ≤ k·salts rows per zone — no task
+    ever sorts a whole zone's cell list, and no per-zone collect_list
+    exists anywhere in the plan."""
     from .ops import StatRequirements
 
     req = StatRequirements(basic=True, pair_topk=int(k))
@@ -290,15 +296,9 @@ def zonal_topk_cells(zones: DataFrame, tiles: DataFrame, *,
          .select("zone_id", F.col("e.cid").alias("cell_id"),
                  F.col("e.v").alias("value"),
                  F.col("e.cov").alias("cov")))
-    w1 = Window.partitionBy("zone_id",
-                            F.pmod(F.col("cell_id"), F.lit(int(salts)))) \
-        .orderBy(F.col("value").desc(), F.col("cell_id"))
-    local = e.withColumn("_lr", F.row_number().over(w1)) \
-        .where(F.col("_lr") <= k)
-    w2 = Window.partitionBy("zone_id") \
-        .orderBy(F.col("value").desc(), F.col("cell_id"))
-    return (local.withColumn("rank", F.row_number().over(w2))
-            .where(F.col("rank") <= k)
+    return (two_phase_topk(e, "zone_id",
+                           [F.col("value").desc(), F.col("cell_id")],
+                           "cell_id", k, salts)
             .select("zone_id", "rank", "cell_id", "value", "cov"))
 
 

@@ -24,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from . import two_phase_topk
+
 K = 8          # clusters; seeds = vectors with vec_id < K
 DIM = 64       # embeddings table dimension (matches label_centroids)
 QSCALE = 1048576.0  # 2^20 — quantization step
@@ -183,17 +185,16 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
            .where(F.col("vec_id") != F.col("query_id"))
            .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
            .agg(F.sum("qd").alias("adc_dist")))
-    # two-phase top-k (ann_topk shape): local per-salt rank, then final
-    # rank over <= k * salts rows per query
-    from pyspark.sql import Window
-    order = [F.asc("adc_dist"), F.asc("neighbor_id")]
-    wl = Window.partitionBy("query_id", "_salt").orderBy(*order)
-    local = (adc.withColumn("_salt", F.col("neighbor_id") % PQ_SALTS)
-             .withColumn("_lr", F.row_number().over(wl))
-             .where(F.col("_lr") <= TOP_K_PQ).drop("_salt", "_lr"))
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return (local.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= TOP_K_PQ)
+    return _rank_adc(adc)
+
+
+def _rank_adc(adc: DataFrame) -> DataFrame:
+    """Top TOP_K_PQ (query_id, neighbor_id) rows by adc_dist ASC,
+    neighbor_id ASC (two_phase_topk: local per-salt rank, then the
+    final rank over <= k * salts rows per query)."""
+    return (two_phase_topk(adc, "query_id",
+                           [F.asc("adc_dist"), F.asc("neighbor_id")],
+                           "neighbor_id", TOP_K_PQ, PQ_SALTS)
             .select("query_id", "neighbor_id",
                     F.col("rank").cast("int").alias("rank"), "adc_dist"))
 
@@ -255,8 +256,7 @@ def semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw floats (the ann_topk cross-engine contract); assignments use
     integer-exact quantized distances, so both engines pick identical
     clusters."""
-    from .similarity import _DOT_SPARK as DOT
-    from .similarity import _emb_planted
+    from .similarity import _emb_planted, cosine
 
     e = _emb_planted(spark, sf_dir).select("vec_id", "embedding")
     eq = e.selectExpr("vec_id", f"{_QX} AS x")
@@ -268,12 +268,9 @@ def semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                   F.col("embedding").alias("ea"))
     b = av.select(F.col("vec_id").alias("vec_b"), "cid",
                   F.col("embedding").alias("eb"))
-    dot = DOT.format(a="ea", b="eb")
-    na = "SQRT(" + DOT.format(a="ea", b="ea") + ")"
-    nb = "SQRT(" + DOT.format(a="eb", b="eb") + ")"
     dups = (a.join(b, "cid")
             .where(F.col("vec_a") < F.col("vec_b"))
-            .selectExpr("vec_b", f"({dot}) / (({na}) * ({nb})) AS cos_ab")
+            .selectExpr("vec_b", f"{cosine('ea', 'eb')} AS cos_ab")
             .where(F.col("cos_ab") > SEMDEDUP_THRESHOLD)
             .select("vec_b").distinct())
     return (a1.join(dups, a1.vec_id == dups.vec_b, "left")
@@ -359,16 +356,7 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     adc = (cand.join(F.broadcast(lut), ["query_id", "m", "code"])
            .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
            .agg(F.sum("qd").alias("adc_dist")))
-    order = [F.asc("adc_dist"), F.asc("neighbor_id")]
-    wl = Window.partitionBy("query_id", "_salt").orderBy(*order)
-    local = (adc.withColumn("_salt", F.col("neighbor_id") % PQ_SALTS)
-             .withColumn("_lr", F.row_number().over(wl))
-             .where(F.col("_lr") <= TOP_K_PQ).drop("_salt", "_lr"))
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return (local.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= TOP_K_PQ)
-            .select("query_id", "neighbor_id",
-                    F.col("rank").cast("int").alias("rank"), "adc_dist"))
+    return _rank_adc(adc)
 
 
 def ann_ivf_pq_oracle() -> str:

@@ -1,20 +1,28 @@
 """Deduplication operators: exact (hash-groupBy), MinHash+LSH banding,
-SimHash, and n-gram Jaccard — all JVM-side Spark SQL expressions with
-bit-exact DuckDB oracles.
+SimHash, and n-gram Jaccard, each with a bit-exact DuckDB oracle.
+
+The documents are tokenized in the JVM (``split(trim(text), '\\s+')``,
+exact Spark semantics).  The MinHash, shingle and SimHash signatures
+are numpy integer kernels over the token lists, behind the one
+Arrow map of _doc_map; everything else (band self-joins, Jaccard
+verification, components) is JVM-side Spark SQL.
 
 Scale notes (100 TB): exact dedup is a single hash shuffle on the
 digest; MinHash-LSH turns all-pairs similarity into an equi-join on
-band keys (each band join is a shuffle on a 64-bit key, candidates
-verified afterwards) — the standard shingle→minhash→band→bucket-join
-pipeline.  No driver-side state anywhere."""
+band keys (one shuffle on (band_idx, key), candidates verified
+afterwards) — the standard shingle→minhash→band→bucket-join pipeline.
+No driver-side state anywhere."""
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_type
 
 from .text import M, P, TOKCODE_SPARK
 
-from . import stage_cache as _stage_cache
+from . import band_pairs, stage_cache as _stage_cache
 
 # fixed minhash permutation constants (a*x + b) % P
 MINHASH_A = [131, 137, 139, 149, 151, 157, 163, 167,
@@ -88,8 +96,6 @@ def _token_codes(toks):
     non-ASCII tokens (byte != codepoint) take a per-token Python
     fallback with the same ascii()/substr()/length() behaviour.
     Returns (valid, n_docs, tc, off0, n_tok)."""
-    import numpy as np
-
     n_docs = len(toks)
     valid = toks.is_valid().to_numpy(zero_copy_only=False)
     off = toks.offsets.to_numpy().astype(np.int64)
@@ -141,8 +147,6 @@ def _shingle_streams(toks):
     ``starts``/``sh_count`` the per-doc segments of ``sh``.  Identical
     integer formulas to the DuckDB oracle's _SHINGLES_DUCK; all
     intermediates < 2^63."""
-    import numpy as np
-
     valid, n_docs, tc, off0, n_tok = _token_codes(toks)
     # --- shingles (flat): docs with >= 3 tokens ---
     doc_of = np.repeat(np.arange(n_docs), n_tok)
@@ -165,14 +169,11 @@ def _shingle_streams(toks):
     return valid, n_docs, sh, sh_doc, sh_count, starts, fold
 
 
-def _band_columns(valid, sh, sh_count, starts, fold):
+def _band_columns(streams):
     """The 16-perm minhash → 4 folded LSH band keys for one batch's
-    shingle streams, as N_BANDS pyarrow int64 arrays (NULL for docs
-    with a NULL token list)."""
-    import numpy as np
-    import pyarrow as pa
-
-    n_docs = valid.size
+    shingle streams (_shingle_streams), as N_BANDS pyarrow int64
+    arrays (NULL for docs with a NULL token list)."""
+    valid, n_docs, sh, _sh_doc, sh_count, starts, fold = streams
     mh = np.empty((len(MINHASH_A), n_docs), dtype=np.int64)
     big = np.iinfo(np.int64).max
     for j, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B)):
@@ -189,98 +190,13 @@ def _band_columns(valid, sh, sh_count, starts, fold):
     return out
 
 
-def _minhash_arrow_kernel(schema):
-    """Vectorized signature kernel (guide §4.2): tokenization happens in
-    the JVM (``split(trim(text), '\\s+')`` — exact Spark semantics),
-    and the per-token/shingle/minhash integer arithmetic runs as flat
-    numpy int64 streams over the Arrow list buffers — the interpreted
-    CodegenFallback higher-order functions were ~60% of the 1M-doc
-    minhash wall (5.5 s of 13 s measured).  Bit-exact by differential
-    test against the SQL expression path (tests/dedup_reference.py)."""
-    import pyarrow as pa
-
-    def run(batches):
-        for rb in batches:
-            ids = rb.column(0)
-            toks = rb.column(1)
-            n_docs = len(toks)
-            if n_docs == 0:
-                yield pa.RecordBatch.from_arrays(
-                    [ids] + [pa.array([], type=pa.int64())
-                             for _ in range(N_BANDS)],
-                    schema=schema)
-                continue
-            valid, n_docs, sh, _sh_doc, sh_count, starts, fold = \
-                _shingle_streams(toks)
-            out_cols = [ids] + _band_columns(valid, sh, sh_count,
-                                             starts, fold)
-            yield pa.RecordBatch.from_arrays(out_cols, schema=schema)
-
-    return run
-
-
-def _shingles_arrow_kernel(schema):
-    """Vectorized distinct-shingle kernel: per-doc SORTED distinct
-    shingle codes as list<int64> (every consumer — Jaccard set sizes,
-    explode+join — is order-independent, so sorted-distinct replaces
-    array_distinct's first-occurrence order without changing any
-    result)."""
-    import pyarrow as pa
-
-    def run(batches):
-        for rb in batches:
-            ids = rb.column(0)
-            toks = rb.column(1)
-            n_docs = len(toks)
-            if n_docs == 0:
-                yield pa.RecordBatch.from_arrays(
-                    [ids, pa.array([], type=pa.list_(pa.int64()))],
-                    schema=schema)
-                continue
-            streams = _shingle_streams(toks)
-            lists = _distinct_list_array(*streams)
-            yield pa.RecordBatch.from_arrays([ids, lists], schema=schema)
-
-    return run
-
-
-def _fused_arrow_kernel(schema):
-    """One-pass kernel for the verified-pairs pipeline: per doc the
-    sorted distinct shingle list AND the 4 LSH band keys, from a single
-    tokenize → shingle-stream build.  The signature and shingle outputs
-    are produced by exactly the code the standalone kernels run
-    (_band_columns / _distinct_list_array), so the fusion cannot drift
-    from either declared query."""
-    import pyarrow as pa
-
-    def run(batches):
-        for rb in batches:
-            ids = rb.column(0)
-            toks = rb.column(1)
-            n_docs = len(toks)
-            if n_docs == 0:
-                yield pa.RecordBatch.from_arrays(
-                    [ids, pa.array([], type=pa.list_(pa.int64()))]
-                    + [pa.array([], type=pa.int64())
-                       for _ in range(N_BANDS)],
-                    schema=schema)
-                continue
-            streams = _shingle_streams(toks)
-            valid, _n, sh, _sh_doc, sh_count, starts, fold = streams
-            lists = _distinct_list_array(*streams)
-            bands = _band_columns(valid, sh, sh_count, starts, fold)
-            yield pa.RecordBatch.from_arrays([ids, lists] + bands,
-                                             schema=schema)
-
-    return run
-
-
-def _distinct_list_array(valid, n_docs, sh, sh_doc, sh_count, starts, fold):
+def _distinct_list_array(streams):
     """Per-doc SORTED distinct shingle lists for one batch's shingle
-    streams, as a pyarrow list<int64> array."""
-    import numpy as np
-    import pyarrow as pa
-
+    streams (_shingle_streams), as a pyarrow list<int64> array.  Every
+    consumer (Jaccard set sizes, explode + join) is order-independent,
+    so sorted-distinct replaces array_distinct's first-occurrence
+    order without changing any result."""
+    valid, n_docs, sh, sh_doc, sh_count, starts, fold = streams
     # sorted distinct per doc on the flat stream: stable sort by
     # (doc, code), then drop adjacent duplicates within a doc
     order = np.lexsort((sh, sh_doc))
@@ -316,47 +232,48 @@ def _distinct_list_array(valid, n_docs, sh, sh_doc, sh_count, starts, fold):
                  mask=flat_null if flat_null.any() else None))
 
 
-def _toks_frame(spark: SparkSession, sf_dir: str):
-    """Shared Arrow-kernel input: the JVM-tokenized (doc_id, toks)
-    frame plus the doc_id types for the output schemas (one place to
-    keep tokenization and id typing consistent across the kernels)."""
-    import pyarrow as pa
+_BANDS = [(f"band{b}", pa.int64()) for b in range(N_BANDS)]
+_SH = [("sh", pa.list_(pa.int64()))]
 
+
+def _doc_map(spark: SparkSession, sf_dir: str, fields, fn) -> DataFrame:
+    """The one Arrow boundary of the document kernels: a map over the
+    Arrow batches of the JVM-tokenized (doc_id, toks) frame.
+    ``fn(toks)`` maps a batch's token lists to one array per ``fields``
+    entry ((name, Arrow type) pairs); the output is (doc_id, *fields).
+    The doc_id type comes from the frame and the Spark schema from the
+    Arrow schema, so each output type is written once.  Empty batches
+    are skipped."""
     toks = _docs(spark, sf_dir).selectExpr(
         "doc_id", "split(trim(text), '\\\\s+') AS toks")
-    id_type = toks.schema["doc_id"].dataType.simpleString()
-    pa_id = pa.int64() if id_type == "bigint" else pa.string()
-    return toks, id_type, pa_id
+    schema = pa.schema(
+        [pa.field("doc_id", to_arrow_type(toks.schema["doc_id"].dataType))]
+        + [pa.field(name, t) for name, t in fields])
+
+    def run(batches):
+        for rb in batches:
+            if rb.num_rows:
+                yield pa.RecordBatch.from_arrays(
+                    [rb.column(0)] + fn(rb.column(1)), schema=schema)
+
+    return toks.mapInArrow(run, from_arrow_schema(schema))
 
 
 def _distinct_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, sh array<bigint>): each document's distinct 3-token
-    shingle codes, Arrow-vectorized (sorted distinct; every consumer is
-    order-independent)."""
-    import pyarrow as pa
-
-    toks, id_type, pa_id = _toks_frame(spark, sf_dir)
-    pa_schema = pa.schema(
-        [pa.field("doc_id", pa_id),
-         pa.field("sh", pa.list_(pa.int64()))])
-    return toks.mapInArrow(_shingles_arrow_kernel(pa_schema),
-                           schema=f"doc_id {id_type}, sh array<bigint>")
+    """(doc_id, sh array<bigint>): each document's sorted distinct
+    3-token shingle codes."""
+    return _doc_map(spark, sf_dir, _SH,
+                    lambda t: [_distinct_list_array(_shingle_streams(t))])
 
 
 def minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """16 minhashes over 3-token shingles, folded into 4 LSH bands.
-    The arithmetic runs in a vectorized Arrow kernel
-    (_minhash_arrow_kernel)."""
-    import pyarrow as pa
-
-    toks, id_type, pa_id = _toks_frame(spark, sf_dir)
-    out_schema_str = ", ".join(
-        [f"doc_id {id_type}"] + [f"band{b} long" for b in range(N_BANDS)])
-    pa_schema = pa.schema(
-        [pa.field("doc_id", pa_id)]
-        + [pa.field(f"band{b}", pa.int64()) for b in range(N_BANDS)])
-    return toks.mapInArrow(_minhash_arrow_kernel(pa_schema),
-                           schema=out_schema_str)
+    """16 minhashes over 3-token shingles, folded into 4 LSH bands —
+    flat numpy int64 streams over the Arrow token lists (the
+    interpreted higher-order-function form was ~60% of a 1M-doc
+    minhash wall).  Bit-exact by differential test against the SQL
+    expression path (tests/dedup_reference.py)."""
+    return _doc_map(spark, sf_dir, _BANDS,
+                    lambda t: _band_columns(_shingle_streams(t)))
 
 
 def minhash_signature_oracle() -> str:
@@ -399,21 +316,12 @@ def _band_long(sig: DataFrame) -> DataFrame:
          .alias("band_idx", "bk"))
 
 
-def _pairs_from_band_long(long: DataFrame) -> DataFrame:
-    """Distinct (doc_a < doc_b) pairs sharing a (band_idx, bk) key."""
-    l = long.select(F.col("doc_id").alias("doc_a"), "band_idx", "bk")
-    r = long.select(F.col("doc_id").alias("doc_b"), "band_idx", "bk")
-    return (l.join(r, ["band_idx", "bk"])
-            .where(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b").distinct())
-
-
 def minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH candidate pairs: docs sharing any band key — one shuffle
     equi-join on (band_idx, band_key) over the long signature table
     (see minhash_band_long for why not per-band joins on computed
     keys)."""
-    return _pairs_from_band_long(minhash_band_long(spark, sf_dir))
+    return band_pairs(minhash_band_long(spark, sf_dir), "doc_id")
 
 
 def minhash_pairs_oracle() -> str:
@@ -425,68 +333,45 @@ def minhash_pairs_oracle() -> str:
     return f"WITH sig AS ({sig}) {joins}"
 
 
-def _bit_majority_kernel(schema, nbits, sim60):
-    """Vectorized SimHash kernel: bit-majority of a per-token hash,
-    computed as a (tokens x nbits) ±1 matrix summed per doc — replaces
-    the O(nbits x tokens) interpreted nested-aggregate expressions.
-    ``sim60``: the two-half 30-bit multiplicative hash of
-    _SIM60_HALF/_SIM60_BIT; otherwise the raw token code's low bits.
-    NULL-token docs yield 0 (the SQL CASE WHEN NULL > 0 path), exactly
-    like the expression form."""
-    import numpy as np
-    import pyarrow as pa
-
-    def run(batches):
-        for rb in batches:
-            ids = rb.column(0)
-            toks = rb.column(1)
-            n_docs = len(toks)
-            if n_docs == 0:
-                yield pa.RecordBatch.from_arrays(
-                    [ids, pa.array([], type=pa.int64())], schema=schema)
-                continue
-            valid, n_docs, tc, off0, n_tok = _token_codes(toks)
-            if sim60:
-                h1 = (tc * 2654435761) % (1 << 30)
-                h2 = (tc * 2246822519 + 3266489917) % (1 << 30)
-                bits = np.concatenate(
-                    [(h1[:, None] >> np.arange(30)) & 1,
-                     (h2[:, None] >> np.arange(30)) & 1], axis=1)
-            else:
-                bits = (tc[:, None] >> np.arange(nbits)) & 1
-            pm = (bits.astype(np.int64) * 2 - 1)
-            # per-doc segment sums; a zero sentinel row keeps empty
-            # trailing segments (null docs, n_tok == 0) in bounds
-            pm = np.vstack([pm, np.zeros((1, nbits), dtype=np.int64)])
-            starts = np.concatenate(([0], np.cumsum(n_tok)))[:-1]
-            sums = np.add.reduceat(pm, starts, axis=0)
-            sums[n_tok == 0] = 0          # empty segment -> no votes
-            sim = ((sums > 0).astype(np.int64)
-                   << np.arange(nbits)).sum(axis=1)
-            sim[~valid | (n_tok == 0)] = 0  # SQL: CASE WHEN NULL>0 -> 0
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(sim, type=pa.int64())], schema=schema)
-
-    return run
+def _bit_majority(toks, nbits, sim60):
+    """Vectorized SimHash of one Arrow batch of token lists: the
+    bit-majority of a per-token hash, computed as a (tokens x nbits)
+    ±1 matrix summed per doc — replaces the O(nbits x tokens)
+    interpreted nested-aggregate expressions.  ``sim60``: the two-half
+    30-bit multiplicative hash of _SIM60_HALF/_SIM60_BIT; otherwise the
+    raw token code's low bits.  NULL-token docs yield 0 (the SQL CASE
+    WHEN NULL > 0 path), exactly like the expression form."""
+    valid, n_docs, tc, off0, n_tok = _token_codes(toks)
+    if sim60:
+        h1 = (tc * 2654435761) % (1 << 30)
+        h2 = (tc * 2246822519 + 3266489917) % (1 << 30)
+        bits = np.concatenate(
+            [(h1[:, None] >> np.arange(30)) & 1,
+             (h2[:, None] >> np.arange(30)) & 1], axis=1)
+    else:
+        bits = (tc[:, None] >> np.arange(nbits)) & 1
+    pm = (bits.astype(np.int64) * 2 - 1)
+    # per-doc segment sums; a zero sentinel row keeps empty trailing
+    # segments (null docs, n_tok == 0) in bounds
+    pm = np.vstack([pm, np.zeros((1, nbits), dtype=np.int64)])
+    starts = np.concatenate(([0], np.cumsum(n_tok)))[:-1]
+    sums = np.add.reduceat(pm, starts, axis=0)
+    sums[n_tok == 0] = 0          # empty segment -> no votes
+    sim = ((sums > 0).astype(np.int64) << np.arange(nbits)).sum(axis=1)
+    sim[~valid | (n_tok == 0)] = 0  # SQL: CASE WHEN NULL>0 -> 0
+    return pa.array(sim, type=pa.int64())
 
 
 def _simhash_table(spark: SparkSession, sf_dir: str, nbits: int,
                    sim60: bool, out_col: str) -> DataFrame:
-    """(doc_id, <out_col>) SimHash fingerprints, Arrow-vectorized."""
-    import pyarrow as pa
-
-    toks, id_type, pa_id = _toks_frame(spark, sf_dir)
-    pa_schema = pa.schema(
-        [pa.field("doc_id", pa_id),
-         pa.field(out_col, pa.int64())])
-    return toks.mapInArrow(_bit_majority_kernel(pa_schema, nbits, sim60),
-                           schema=f"doc_id {id_type}, {out_col} long")
-
+    """(doc_id, <out_col>) SimHash fingerprints (_bit_majority)."""
+    return _doc_map(spark, sf_dir, [(out_col, pa.int64())],
+                    lambda t: [_bit_majority(t, nbits, sim60)])
 
 
 def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-bit SimHash over token codes (bit-majority of code bits),
-    Arrow-vectorized (_bit_majority_kernel; differential-tested against
+    Arrow-vectorized (_bit_majority; differential-tested against
     the expression path in tests/dedup_reference.py)."""
     return _simhash_table(spark, sf_dir, SIMHASH_BITS, False, "simhash")
 
@@ -538,13 +423,7 @@ def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     long = s.select("doc_id", "sim",
                     F.posexplode(F.array(*bucket)).alias("band_idx", "bk")) \
         .transform(_stage_cache)
-    a = long.select(F.col("doc_id").alias("doc_a"),
-                    F.col("sim").alias("sim_a"), "band_idx", "bk")
-    c = long.select(F.col("doc_id").alias("doc_b"),
-                    F.col("sim").alias("sim_b"), "band_idx", "bk")
-    return (a.join(c, ["band_idx", "bk"])
-            .where(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b", "sim_a", "sim_b").distinct()
+    return (band_pairs(long, "doc_id", carry=("sim",))
             .selectExpr("doc_a", "doc_b",
                         "CAST(bit_count(sim_a ^ sim_b) AS INT) AS hamming")
             .where(f"hamming <= {SIM60_HAMMING_MAX}"))
@@ -576,21 +455,16 @@ def minhash_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass (one corpus scan/tokenize instead of two); the persisted fused
     table then feeds both the band self-join (keys are materialized, so
     no computed-key pushdown — see minhash_band_long) and both sides of
-    the verify join."""
-    import pyarrow as pa
+    the verify join.  Both outputs come from the code the standalone
+    kernels run, so the fusion cannot drift from either declared
+    query."""
+    def fused(toks):
+        streams = _shingle_streams(toks)
+        return [_distinct_list_array(streams)] + _band_columns(streams)
 
-    toks, id_type, pa_id = _toks_frame(spark, sf_dir)
-    pa_schema = pa.schema(
-        [pa.field("doc_id", pa_id),
-         pa.field("sh", pa.list_(pa.int64()))]
-        + [pa.field(f"band{b}", pa.int64()) for b in range(N_BANDS)])
-    out_schema = ", ".join(
-        [f"doc_id {id_type}", "sh array<bigint>"]
-        + [f"band{b} long" for b in range(N_BANDS)])
-    fused = toks.mapInArrow(_fused_arrow_kernel(pa_schema),
-                            schema=out_schema).transform(_stage_cache)
-    return _jaccard_verified(_pairs_from_band_long(_band_long(fused)),
-                             fused.select("doc_id", "sh"))
+    sig = _doc_map(spark, sf_dir, _SH + _BANDS, fused).transform(_stage_cache)
+    return _jaccard_verified(band_pairs(_band_long(sig), "doc_id"),
+                             sig.select("doc_id", "sh"))
 
 
 def _jaccard_verified(cand: DataFrame, sh: DataFrame) -> DataFrame:

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from . import stage_cache as _stage_cache
+from . import band_pairs, stage_cache as _stage_cache, two_phase_topk
 
 N_QUERIES = 16
 TOP_K = 5
@@ -31,43 +31,47 @@ _DOT_DUCK = ("list_reduce(list_prepend(CAST(0.0 AS DOUBLE),"
              " i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE))), (x, y) -> x + y)")
 
 
+def cosine(a: str, b: str) -> str:
+    """Spark SQL text of the cosine of array columns ``a`` and ``b``:
+    dot / (|a| |b|), each a float64 index-order left fold — the form
+    the DuckDB oracles write with _DOT_DUCK, so the two agree bit for
+    bit."""
+    dot = _DOT_SPARK.format(a=a, b=b)
+    na = "SQRT(" + _DOT_SPARK.format(a=a, b=a) + ")"
+    nb = "SQRT(" + _DOT_SPARK.format(a=b, b=b) + ")"
+    return f"({dot}) / (({na}) * ({nb}))"
+
+
 TOPK_SALTS = 32
 
 
 def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k for the first N_QUERIES vectors.
 
-    Two-phase top-k: a single ``Window.partitionBy(query_id)`` over the
-    full scored set would sort |corpus| rows per query in N_QUERIES
-    tasks — the one shuffle whose per-task size grows with the corpus.
-    Instead each (query, salt) shard keeps its local top-k (salt =
-    neighbor_id % TOPK_SALTS, deterministic), and the final rank runs
-    over ≤ k·TOPK_SALTS rows per query.  Identical output: every global
-    top-k row is within its shard's top-k under the same total order
-    (cosine DESC, neighbor_id ASC)."""
+    Ranked by two_phase_topk: a single ``Window.partitionBy(query_id)``
+    over the full scored set would sort |corpus| rows per query in
+    N_QUERIES tasks; the salted local rank (salt = neighbor_id mod
+    TOPK_SALTS) leaves ≤ k·TOPK_SALTS rows per query for the final
+    rank, with identical output under the total order (cosine DESC,
+    neighbor_id ASC)."""
     e = _emb(spark, sf_dir)
     q = e.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"))
     c = e.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ce"))
     j = c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-    dot = _DOT_SPARK.format(a="qe", b="ce")
-    nq = "SQRT(" + _DOT_SPARK.format(a="qe", b="qe") + ")"
-    nc = "SQRT(" + _DOT_SPARK.format(a="ce", b="ce") + ")"
     scored = j.selectExpr("query_id", "neighbor_id",
-                          f"({dot}) / (({nq}) * ({nc})) AS cosine")
-    from pyspark.sql import Window
-    order = [F.desc("cosine"), F.asc("neighbor_id")]
-    wl = Window.partitionBy("query_id", "_salt").orderBy(*order)
-    local = (scored
-             .withColumn("_salt", F.col("neighbor_id") % TOPK_SALTS)
-             .withColumn("_lrank", F.row_number().over(wl))
-             .where(F.col("_lrank") <= TOP_K)
-             .drop("_salt", "_lrank"))
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return (local.withColumn("rank", F.row_number().over(w))
-                 .where(F.col("rank") <= TOP_K)
-                 .select("query_id", "neighbor_id",
-                         F.col("rank").cast("int").alias("rank"), "cosine"))
+                          f"{cosine('qe', 'ce')} AS cosine")
+    return _rank_neighbors(scored)
+
+
+def _rank_neighbors(scored: DataFrame) -> DataFrame:
+    """Top TOP_K (query_id, neighbor_id) rows by cosine DESC,
+    neighbor_id ASC."""
+    return (two_phase_topk(scored, "query_id",
+                           [F.desc("cosine"), F.asc("neighbor_id")],
+                           "neighbor_id", TOP_K, TOPK_SALTS)
+            .select("query_id", "neighbor_id",
+                    F.col("rank").cast("int").alias("rank"), "cosine"))
 
 
 def ann_topk_oracle() -> str:
@@ -142,11 +146,9 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _emb(spark, sf_dir)
     cents = e.where(F.col("vec_id") < N_CENTROIDS).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("ce"))
-    dot = _DOT_SPARK.format(a="embedding", b="ce")
-    ne = "SQRT(" + _DOT_SPARK.format(a="embedding", b="embedding") + ")"
-    nc = "SQRT(" + _DOT_SPARK.format(a="ce", b="ce") + ")"
     scored = e.join(F.broadcast(cents)).selectExpr(
-        "vec_id", "embedding", "cent_id", f"({dot}) / (({ne}) * ({nc})) AS ccos")
+        "vec_id", "embedding", "cent_id",
+        f"{cosine('embedding', 'ce')} AS ccos")
     w = Window.partitionBy("vec_id").orderBy(F.desc("ccos"), F.asc("cent_id"))
     # assign (crank == 1) and probes (crank <= N_PROBE) both derive from
     # ranked: filter to crank <= max(1, N_PROBE) FIRST and persist that —
@@ -166,26 +168,12 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
                          F.col("embedding").alias("ne_"), "cell") \
         .join(probes, "cell") \
         .where(F.col("neighbor_id") != F.col("query_id"))
-    qdot = _DOT_SPARK.format(a="qe", b="ne_")
-    nq = "SQRT(" + _DOT_SPARK.format(a="qe", b="qe") + ")"
-    nn = "SQRT(" + _DOT_SPARK.format(a="ne_", b="ne_") + ")"
     scored2 = cand.selectExpr("query_id", "neighbor_id",
-                              f"({qdot}) / (({nq}) * ({nn})) AS cosine") \
+                              f"{cosine('qe', 'ne_')} AS cosine") \
         .dropDuplicates(["query_id", "neighbor_id"])
     # two-phase rank like ann_topk: a hot posting list would otherwise
     # funnel all its candidates into one task per query
-    order = [F.desc("cosine"), F.asc("neighbor_id")]
-    wl = Window.partitionBy("query_id", "_salt").orderBy(*order)
-    local = (scored2
-             .withColumn("_salt", F.col("neighbor_id") % TOPK_SALTS)
-             .withColumn("_lrank", F.row_number().over(wl))
-             .where(F.col("_lrank") <= TOP_K)
-             .drop("_salt", "_lrank"))
-    w2 = Window.partitionBy("query_id").orderBy(*order)
-    return (local.withColumn("rank", F.row_number().over(w2))
-            .where(F.col("rank") <= TOP_K)
-            .select("query_id", "neighbor_id",
-                    F.col("rank").cast("int").alias("rank"), "cosine"))
+    return _rank_neighbors(scored2)
 
 
 def ann_ivf_oracle() -> str:
@@ -336,7 +324,7 @@ def neardup_candidates(spark: SparkSession, sf_dir: str,
         "vec_id",
         *[f"CAST({_band_bucket_spark('embedding', b)} AS INT) AS band{b}"
           for b in range(NEARDUP_BANDS)])
-    # Long form + persist, one self-join on (band_idx, bucket) — NOT a
+    # Long form + persist, one self-join on (band_idx, bk) — NOT a
     # join per band on the computed bucket columns: join planning adds
     # isnotnull(key) filters, and predicate pushdown substitutes the
     # full hyperplane-projection tree (interpreted HOFs) into them
@@ -349,12 +337,8 @@ def neardup_candidates(spark: SparkSession, sf_dir: str,
         "vec_id",
         F.posexplode(F.array(*[F.col(f"band{b}")
                                for b in range(NEARDUP_BANDS)]))
-         .alias("band_idx", "bucket")).transform(_stage_cache)
-    a = long.select(F.col("vec_id").alias("vec_a"), "band_idx", "bucket")
-    c = long.select(F.col("vec_id").alias("vec_b"), "band_idx", "bucket")
-    return (a.join(c, ["band_idx", "bucket"])
-            .where(F.col("vec_a") < F.col("vec_b"))
-            .select("vec_a", "vec_b").distinct())
+         .alias("band_idx", "bk")).transform(_stage_cache)
+    return band_pairs(long, "vec_id")
 
 
 def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -369,11 +353,7 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
                             F.col("embedding").alias("ea")), "vec_a")
              .join(e.select(F.col("vec_id").alias("vec_b"),
                             F.col("embedding").alias("eb")), "vec_b"))
-    dot = _DOT_SPARK.format(a="ea", b="eb")
-    na = "SQRT(" + _DOT_SPARK.format(a="ea", b="ea") + ")"
-    nb = "SQRT(" + _DOT_SPARK.format(a="eb", b="eb") + ")"
-    return (j.selectExpr("vec_a", "vec_b",
-                         f"({dot}) / (({na}) * ({nb})) AS cosine")
+    return (j.selectExpr("vec_a", "vec_b", f"{cosine('ea', 'eb')} AS cosine")
             .where(f"cosine > {NEARDUP_THRESHOLD}"))
 
 

@@ -88,23 +88,54 @@ class _Chain:
         self.visited = False
 
 
-# set False to force the generic corner-chain walk everywhere (used by
-# the equivalence fuzz in tests/test_traversal.py)
-SINGLE_CHAIN_FAST = True
-
-
 def visit_rings(box, coord_lists):
     """Identify the CCW rings formed by the coordinate lists and the
     box boundary (reference traversal_areas.cpp:94-158).  Yields
     (coords, is_ccw) pairs; closed input rings keep their own
     orientation.  Returns (rings, found_any)."""
+    live = [c for c in coord_lists if any(p != c[0] for p in c[1:])]
+    if len(live) != 1 or live[0][0] == live[0][-1]:
+        return _corner_walk(box, live)
+    # fast path for the overwhelmingly common boundary-cell shape (one
+    # traversal in, one out): the generic walk with only corner chains
+    # left reduces to "append the corners that lie strictly CCW-before
+    # the chain's own entry, nearest first" — tie order matches the
+    # generic scan (the chain precedes the corners in list order,
+    # corners keep bl/tl/tr/br order)
+    x0, y0, x1, y1 = box
+    height = y1 - y0
+    width = x1 - x0
+    perimeter = 2.0 * (height + width)
+    chain = live[0]
+    start = perimeter_distance(x0, y0, x1, y1, *chain[0])
+    stop = perimeter_distance(x0, y0, x1, y1, *chain[-1])
+    d_ref = _ccw_distance(stop, start, perimeter)
+    sel = []
+    for m, pt in ((0.0, (x0, y0)), (height, (x0, y1)),
+                  (height + width, (x1, y1)),
+                  (2.0 * height + width, (x1, y0))):
+        d = _ccw_distance(stop, m, perimeter)
+        if d < d_ref:
+            sel.append((d, pt))
+    sel.sort(key=lambda t: t[0])
+    coords = chain + [pt for _, pt in sel]
+    coords.append(coords[0])
+    if any(p != coords[0] for p in coords[1:]):
+        return [(coords, True)], True
+    return [], False
+
+
+def _corner_walk(box, coord_lists):
+    """visit_rings' generic walk over non-degenerate coordinate lists:
+    closed lists are rings as they are; open traversals and the four
+    box corners (single-point chains) are chained CCW, each traversal
+    followed to its nearest successor along the box perimeter until
+    the walk closes.  Returns (rings, found_any)."""
     x0, y0, x1, y1 = box
     rings: list[tuple[list, bool]] = []
     chains: list[_Chain] = []
     found = False
     for coords in coord_lists:
-        if not any(p != coords[0] for p in coords[1:]):
-            continue
         if coords[0] == coords[-1]:
             found = True
             rings.append((coords, ring_area(coords) > 0.0))
@@ -117,30 +148,6 @@ def visit_rings(box, coord_lists):
     height = y1 - y0
     width = x1 - x0
     perimeter = 2.0 * (height + width)
-
-    if SINGLE_CHAIN_FAST and not rings and len(chains) == 1:
-        # fast path for the overwhelmingly common boundary-cell shape
-        # (one traversal in, one out): the generic walk with only
-        # corner chains left reduces to "append the corners that lie
-        # strictly CCW-before the chain's own entry, nearest first" —
-        # tie order matches the generic scan (chain_ref precedes the
-        # corners in list order, corners keep bl/tl/tr/br order)
-        ch = chains[0]
-        d_ref = _ccw_distance(ch.stop, ch.start, perimeter)
-        sel = []
-        for m, pt in ((0.0, (x0, y0)), (height, (x0, y1)),
-                      (height + width, (x1, y1)),
-                      (2.0 * height + width, (x1, y0))):
-            d = _ccw_distance(ch.stop, m, perimeter)
-            if d < d_ref:
-                sel.append((d, pt))
-        sel.sort(key=lambda t: t[0])
-        coords = ch.coords + [pt for _, pt in sel]
-        coords.append(coords[0])
-        if any(p != coords[0] for p in coords[1:]):
-            return [(coords, True)], True
-        return [], False
-
     # box corners as single-point chains
     chains.append(_Chain(0.0, 0.0, [(x0, y0)]))
     chains.append(_Chain(height, height, [(x0, y1)]))

@@ -6,11 +6,10 @@ array), kept only to cross-check the kernels bit for bit
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from exactextract_spark.pipeline import stage_cache
+from exactextract_spark.pipeline import band_pairs, stage_cache
 from exactextract_spark.pipeline.dedup import (
     MINHASH_A, MINHASH_B, N_BANDS, SIMHASH_BITS, _SIM60_BIT, _SIM60_HALF,
-    _TC, _band_expr, _band_long, _docs, _jaccard_verified,
-    _pairs_from_band_long)
+    _TC, _band_expr, _band_long, _docs, _jaccard_verified)
 from exactextract_spark.pipeline.text import M, P
 
 _TC_ARR_SPARK = f"transform(split(trim(text), '\\\\s+'), t -> CAST({_TC} AS BIGINT))"
@@ -72,4 +71,4 @@ def minhash_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed both sides of the verify join."""
     sh = distinct_shingles(spark, sf_dir).transform(stage_cache)
     long = _band_long(minhash_signature(spark, sf_dir)).transform(stage_cache)
-    return _jaccard_verified(_pairs_from_band_long(long), sh)
+    return _jaccard_verified(band_pairs(long, "doc_id"), sh)

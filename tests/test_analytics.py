@@ -113,6 +113,32 @@ def test_crosstab_consistency_with_count_and_frac(spark):
     assert len(cats) > 4  # genuinely joint, not one-dimensional
 
 
+@pytest.mark.parametrize("strategy", ["broadcast", "shuffle"])
+def test_pair_partials_leave_no_persisted_rdd(spark, strategy):
+    """zonal_crosstab (like zonal_correlation, zonal_change and
+    zonal_topk_cells) releases the extractor's cached zone table:
+    repeated calls end with the session's persisted-RDD count where it
+    started, and return the same rows each time."""
+    from exactextract_spark.api import zonal_crosstab
+    from exactextract_spark.io import tiles_from_array
+
+    sc = spark.sparkContext
+    rng = np.random.RandomState(11)
+    tiles = tiles_from_array(spark, rng.randint(0, 4, (16, 16)).astype(float),
+                             tile=8)
+    wt = tiles_from_array(spark, rng.randint(0, 3, (16, 16)).astype(float),
+                          tile=8, raster_id="w")
+    zones = _zdf(spark, {
+        "a": "POLYGON((0.25 0.25, 10.5 0.25, 10.5 7.75, 0.25 7.75, 0.25 0.25))",
+        "b": "POLYGON((5 5, 15 5, 15 15, 5 15, 5 5))",
+    })
+    before = sc._jsc.getPersistentRDDs().size()
+    runs = [sorted(zonal_crosstab(zones, tiles, wt, strategy=strategy).collect())
+            for _ in range(3)]
+    assert runs[0] and runs[0] == runs[1] == runs[2]
+    assert sc._jsc.getPersistentRDDs().size() == before
+
+
 # --- funnel ----------------------------------------------------------------
 
 def test_funnel_semantics(spark):

@@ -223,6 +223,56 @@ def test_ann_topk_plan_is_two_phase(spark):
     assert plan.count("Window") >= 2
 
 
+@pytest.mark.parametrize("name", ["ann_ivf", "ann_pq", "ann_ivf_pq"])
+def test_two_phase_topk_plans(name, spark):
+    """The other salted top-k operators rank like ann_topk: the local
+    (query_id, _salt) window sits below the final per-query rank."""
+    df = entry_mod.queries()[name](spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "_salt" in plan, plan
+    assert plan.count("Window") >= 2
+
+
+# Pinned document-kernel output schemas: dedup._doc_map derives them
+# from the kernels' Arrow schemas, and mapInArrow checks the kernel's
+# types only at run time.
+_DOC_KERNEL_SCHEMAS = {
+    "minhash_signature": "struct<doc_id:bigint,band0:bigint,band1:bigint,"
+                         "band2:bigint,band3:bigint>",
+    "_distinct_shingles": "struct<doc_id:bigint,sh:array<bigint>>",
+    "simhash": "struct<doc_id:bigint,simhash:bigint>",
+    "sim60": "struct<doc_id:bigint,sim:bigint>",
+    "minhash_verified_pairs": "struct<doc_a:bigint,doc_b:bigint,jaccard:double>",
+}
+
+
+def test_doc_kernel_schemas_pinned(spark, tmp_path):
+    """Each document kernel's Spark schema is pinned, and the kernel
+    runs against it: rows on the sf fixture, zero rows (no error) on a
+    zero-row documents table."""
+    import pyarrow.parquet as pq
+
+    from exactextract_spark.pipeline import dedup as D, release_staged
+
+    pq.write_table(pq.read_schema(f"{SF_DIR}/documents.parquet").empty_table(),
+                   tmp_path / "documents.parquet")
+    fns = {"minhash_signature": D.minhash_signature,
+           "_distinct_shingles": D._distinct_shingles,
+           "simhash": D.simhash,
+           "sim60": lambda s, d: D._simhash_table(s, d, 60, True, "sim"),
+           "minhash_verified_pairs": D.minhash_verified_pairs}
+    try:
+        for src in (SF_DIR, str(tmp_path)):
+            for name, fn in fns.items():
+                df = fn(spark, src)
+                assert df.schema.simpleString() == _DOC_KERNEL_SCHEMAS[name], \
+                    (name, src)
+                n = len(df.collect())
+                assert n > 0 if src == SF_DIR else n == 0, (name, src, n)
+    finally:
+        release_staged()
+
+
 def test_streaming_dedup_state_accumulates(spark, tmp_path):
     """The keyed state store must carry (min doc_id, count) ACROSS
     micro-batches: a text present in all three files emits increasing

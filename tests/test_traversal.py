@@ -384,11 +384,11 @@ def test_grid_cell_chains_tiny_ring_inside_cell():
 
 
 @pytest.mark.parametrize("seed", range(8))
-def test_single_chain_fast_path_matches_generic(seed, monkeypatch):
-    """visit_rings' single-chain fast path must return exactly what the
-    generic corner-chain walk returns, for every boundary cell of a
-    fuzzed polygon (the exact-equality fuzz above runs both sides
-    through the SAME visit_rings, so this toggles the flag)."""
+def test_single_chain_fast_path_matches_generic(seed):
+    """visit_rings (with its single-chain fast path) must return
+    exactly what the generic corner-chain walk (_corner_walk) returns,
+    for every boundary cell of a fuzzed polygon (the exact-equality
+    fuzz above runs both sides through the SAME visit_rings)."""
     import exactextract_spark.traversal as tv
     from exactextract_spark.geom import parse_wkt
     from exactextract_spark.kernel import coverage_fraction
@@ -409,21 +409,21 @@ def test_single_chain_fast_path_matches_generic(seed, monkeypatch):
     pts = ", ".join(f"{x} {y}" for x, y in zip(xs, ys))
     g = parse_wkt(f"POLYGON (({pts}, {xs[0]} {ys[0]}))")
     cov = coverage_fraction(g, 0.0, float(G), 1.0, 1.0, G, G)
+    n_single = 0
     for r in range(G):
         for c in range(G):
             if not (0.0 < cov[r, c] < 1.0):
                 continue
             cell = (float(c), float(G - 1 - r), float(c + 1), float(G - r))
-            def run():
-                try:
-                    return covered_polygons(g.rings, *cell)
-                except ValueError as e:
-                    return ("raise", str(e))
-            fast = run()
-            monkeypatch.setattr(tv, "SINGLE_CHAIN_FAST", False)
-            slow = run()
-            monkeypatch.undo()
-            assert fast == slow, (seed, r, c)
+            lists = []
+            for ring in g.rings:
+                chains, closed = box_traversals(ring, *cell)
+                lists.extend(chains)
+                lists.extend(closed)
+            n_single += len(lists) == 1 and lists[0][0] != lists[0][-1]
+            assert tv.visit_rings(cell, lists) == tv._corner_walk(cell, lists), \
+                (seed, r, c)
+    assert n_single > 0, seed
 
 
 def test_grid_cell_chains_huge_coordinates():
