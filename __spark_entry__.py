@@ -770,7 +770,7 @@ def _tile_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _zonal_bandmath(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raster calculator → zonal stats: normalized difference of mb0's
     two bands derived by bandmath.band_math (one tile-key equi-join +
-    one Arrow mapInPandas over blocks), then the standard extraction —
+    one mapInArrow over blocks), then the standard extraction —
     the derived table is a first-class tile table, nothing downstream
     changes."""
     from exactextract_spark.bandmath import band_math, normalized_difference_q20

@@ -68,6 +68,7 @@ import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
 
 from .geom import GEOM_COLS, INVALID, ZoneArrays, _gather_ranges, parse_wkt_batch
+from .grid import resolve_grid
 from .io import decode_value_tile
 from .ops import Op, group_ops_by_key, parse_ops
 
@@ -1009,12 +1010,7 @@ class ZonalExtractor:
                  grid: dict | None = None,
                  tile_size: int | None = None,
                  persist_joined: bool = False):
-        if grid is None:
-            grid = tiles.select("grid_xmin", "grid_ymax", "dx", "dy",
-                                "grid_nrows", "grid_ncols").first().asDict()
-        if tile_size is None:
-            from .grid import infer_tile_size
-            tile_size = infer_tile_size(grid, tiles)
+        grid, tile_size = resolve_grid(tiles, grid, tile_size)
         # CRS validation (reference exact_extract.py:297-360): a zones
         # table may carry a constant `crs` column; raster CRS comes from
         # the grid dict or a tile-table `crs` column.  Mismatches warn —

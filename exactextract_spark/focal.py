@@ -8,23 +8,28 @@ R centred on it.  A single-node engine slides a window over the full
 array; the distributed formulation is a **halo exchange** — the
 canonical stencil pattern:
 
-1. *Scatter* (map-only, Arrow ``mapInPandas``): every tile decodes its
-   payload once (nodata → NaN), keeps its core block, and addresses up
-   to eight boundary strips — ≤ R cells deep — to the neighbor tiles
-   that need them.
-2. *Gather* (ONE hash shuffle keyed by tile): ``applyInPandas``
-   assembles each tile's core plus received strips into a padded array
-   (missing halo = outside the raster = NaN) and evaluates every window
-   with vectorized numpy — no per-cell Python.
+1. *Scatter* (map-only, ``mapInArrow``): every tile decodes its payload
+   once (``io.decode_defined_tiles``: nodata, mask band and
+   scale/offset applied on read, undefined cells NaN), keeps its core
+   block, and addresses up to eight boundary strips — ≤ R cells deep —
+   to the neighbor tiles that need them.
+2. *Gather* (ONE hash shuffle keyed by tile, ``applyInArrow``):
+   :func:`_padded` assembles each tile's core plus received strips into
+   a padded array (missing halo = outside the raster = NaN) and the
+   operator evaluates every window with vectorized numpy — no per-cell
+   Python.
 
-Two output shapes share the exchange:
+Every operator is that one exchange (:func:`_halo_map`) plus its window
+math, in one of two output shapes:
 
-* :func:`focal_stats` — one row per CELL with all five statistics (the
+* per CELL (:func:`focal_stats`, :func:`focal_convolve`,
+  :func:`focal_proximity`, :func:`focal_gradient`) — ``cell_id, r, c``
+  plus the operator's columns, undefined values as SQL NULL (the
   analysis/oracle frame);
-* :func:`focal_raster` — one row per TILE: the chosen statistic
-  re-encoded as a payload, i.e. raster-in → raster-out with no second
-  shuffle and no per-cell Arrow transfer (the production smoothing
-  shape; ~3 orders of magnitude fewer output rows).
+* per TILE (:func:`focal_raster`) — the chosen statistic re-encoded as
+  a payload (undefined = NaN), i.e. raster-in → raster-out with no
+  second shuffle and no per-cell Arrow transfer (the production
+  smoothing shape; ~3 orders of magnitude fewer output rows).
 
 Scale shape (100 TB): the shuffle moves core + halo ≈ ``(1+2R/tile)²``
 × the raster — for R=2 on 64-cell tiles a 6% overhead over one full
@@ -42,13 +47,13 @@ with no tolerance.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from .io import decode_tile, encode_tile
+from .grid import resolve_grid
+from .io import (arrow_batch, decode_defined_tiles, decode_tile, encode_tile,
+                 tile_payload_columns)
 
 __all__ = ["focal_stats", "focal_raster", "focal_convolve",
            "focal_proximity", "focal_gradient", "focal_to_tiles"]
@@ -64,16 +69,21 @@ _PART_SCHEMA = T.StructType([
     T.StructField("buf", T.BinaryType(), False),
 ])
 
-_CELL_SCHEMA = T.StructType([
-    T.StructField("cell_id", T.LongType()),
-    T.StructField("r", T.IntegerType()),
-    T.StructField("c", T.IntegerType()),
-    T.StructField("focal_n", T.LongType()),
-    T.StructField("focal_sum", T.DoubleType()),
-    T.StructField("focal_mean", T.DoubleType()),
-    T.StructField("focal_min", T.DoubleType()),
-    T.StructField("focal_max", T.DoubleType()),
-])
+
+def _cell_schema(**fields) -> T.StructType:
+    """Per-cell output: ``cell_id, r, c`` plus the operator's columns."""
+    return T.StructType([T.StructField("cell_id", T.LongType()),
+                         T.StructField("r", T.IntegerType()),
+                         T.StructField("c", T.IntegerType()),
+                         *(T.StructField(n, t) for n, t in fields.items())])
+
+
+_L, _D = T.LongType(), T.DoubleType()
+_CELL_SCHEMA = _cell_schema(focal_n=_L, focal_sum=_D, focal_mean=_D,
+                            focal_min=_D, focal_max=_D)
+_CONV_SCHEMA = _cell_schema(wsum=_L, conv=_D, smooth=_D)
+_PROX_SCHEMA = _cell_schema(d2=_L, dist=_D)
+_GRAD_SCHEMA = _cell_schema(gx=_D, gy=_D, slope_sq=_D)
 
 _STATS = ("count", "sum", "mean", "min", "max")
 
@@ -82,28 +92,11 @@ _DIRS = [(-1, -1), (-1, 0), (-1, 1), (0, -1),
          (0, 1), (1, -1), (1, 0), (1, 1)]
 
 
-def _decode_masked(row) -> np.ndarray:
-    """Tile payload → float64 with nodata cells as NaN (the kernel's
-    masking convention — io.decode_value_tile semantics without
-    scale/offset, which the fixture rasters don't set)."""
-    arr = decode_tile(row.values, row.dtype, int(row.nrows),
-                      int(row.ncols)).astype(np.float64)
-    nodata = getattr(row, "nodata", None)
-    if nodata is not None and not pd.isna(nodata):
-        arr = np.where(arr == float(nodata), np.nan, arr)
-    return arr
-
-
 def _resolve(tiles: DataFrame, radius: int, grid: dict | None):
-    if grid is None:
-        grid = dict(tiles.select("grid_xmin", "grid_ymax", "dx", "dy",
-                                 "grid_nrows", "grid_ncols").first()
-                    .asDict())
-    # infer the stride from the tile table when the grid dict lacks
-    # 'tile' (a hard-coded 64 mis-addresses halo strips on any other
-    # stride with no error — ADVICE r5)
-    from .grid import infer_tile_size
-    tile = infer_tile_size(grid, tiles)
+    # the stride comes from the grid dict or the tile table (a
+    # hard-coded 64 mis-addresses halo strips on any other stride with
+    # no error — ADVICE r5)
+    grid, tile = resolve_grid(tiles, grid)
     rad = int(radius)
     if rad < 1:
         raise ValueError(f"radius must be >= 1, got {radius}")
@@ -115,25 +108,21 @@ def _resolve(tiles: DataFrame, radius: int, grid: dict | None):
     return grid, tile, rad
 
 
-def _halo_parts(tiles: DataFrame, rad: int, tile: int,
-                g_nrows: int, g_ncols: int) -> DataFrame:
+def _halo_parts(tiles: DataFrame, rad: int, tile: int, grid: dict) -> DataFrame:
     """Stage 1: core block + ≤8 boundary strips per tile, addressed to
     the tiles that consume them."""
-    n_tr = -(-g_nrows // tile)
-    n_tc = -(-g_ncols // tile)
+    n_tr = -(-int(grid["grid_nrows"]) // tile)
+    n_tc = -(-int(grid["grid_ncols"]) // tile)
     cols = ["tile_row", "tile_col", "row0", "col0", "nrows", "ncols",
-            "values", "dtype"]
-    if "nodata" in tiles.columns:
-        cols.append("nodata")
+            *tile_payload_columns(tiles)]
 
-    def scatter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def scatter(batches):
+        for b in batches:
             out = []
-            for row in pdf.itertuples(index=False):
-                arr = _decode_masked(row)
+            keys = zip(*(b.column(c).to_pylist()
+                         for c in ("tile_row", "tile_col", "row0", "col0")))
+            for (tr, tc, row0, col0), arr in zip(keys, decode_defined_tiles(b)):
                 nr, nc = arr.shape
-                tr, tc = int(row.tile_row), int(row.tile_col)
-                row0, col0 = int(row.row0), int(row.col0)
                 out.append((tr, tc, True, row0, col0, nr, nc,
                             encode_tile(arr)))
                 for di, dj in _DIRS:
@@ -155,27 +144,80 @@ def _halo_parts(tiles: DataFrame, rad: int, tile: int,
                                 row0 + rs.start, col0 + cs.start,
                                 strip.shape[0], strip.shape[1],
                                 encode_tile(strip)))
-            yield pd.DataFrame(out, columns=[f.name for f in _PART_SCHEMA])
+            if out:
+                yield arrow_batch(_PART_SCHEMA, dict(
+                    zip(_PART_SCHEMA.names, map(list, zip(*out)))))
 
-    return tiles.select(*cols).mapInPandas(scatter, schema=_PART_SCHEMA)
+    return tiles.select(*cols).mapInArrow(scatter, schema=_PART_SCHEMA)
 
 
-def _window_stats(pdf: pd.DataFrame, rad: int):
-    """Stage 2 core: assemble the padded tile, evaluate every window.
-    Returns (c_row0, c_col0, dict of 2-D stat arrays) or None when the
-    group holds only halo strips (no core tile)."""
-    core = pdf[pdf["is_core"]]
-    if core.empty:
+def _padded(parts: pa.Table, rad: int):
+    """Stage 2 assembly: a tile's core block plus its received strips
+    in one ``(nrows+2R, ncols+2R)`` array, cells outside the raster
+    NaN.  Returns ``(row0, col0, padded)`` of the core, or None when
+    the group holds only halo strips (no core tile)."""
+    core = parts.column("is_core").to_pylist()
+    if True not in core:
         return None
-    crow = core.iloc[0]
-    c_row0, c_col0 = int(crow["row0"]), int(crow["col0"])
-    nr, nc = int(crow["nrows"]), int(crow["ncols"])
-    pad = np.full((nr + 2 * rad, nc + 2 * rad), np.nan)
-    for p in pdf.itertuples(index=False):
-        i = int(p.row0) - c_row0 + rad
-        j = int(p.col0) - c_col0 + rad
-        pad[i:i + int(p.nrows), j:j + int(p.ncols)] = \
-            decode_tile(p.buf, "float64", int(p.nrows), int(p.ncols))
+    k = core.index(True)
+    row0, col0, nrows, ncols = (parts.column(c).to_pylist()
+                                for c in ("row0", "col0", "nrows", "ncols"))
+    buf = parts.column("buf").combine_chunks()
+    pad = np.full((nrows[k] + 2 * rad, ncols[k] + 2 * rad), np.nan)
+    for j in range(len(core)):
+        i = row0[j] - row0[k] + rad
+        c = col0[j] - col0[k] + rad
+        pad[i:i + nrows[j], c:c + ncols[j]] = decode_tile(
+            buf[j].as_buffer(), "float64", nrows[j], ncols[j])
+    return row0[k], col0[k], pad
+
+
+def _halo_map(tiles: DataFrame, rad: int, tile: int, grid: dict,
+              schema: T.StructType, emit) -> DataFrame:
+    """The halo exchange: scatter, then ONE tile-keyed gather that hands
+    every core tile's padded array to ``emit(row0, col0, pad)`` → the
+    output columns (field name → values) of that tile."""
+    parts = _halo_parts(tiles, rad, tile, grid)
+
+    def gather(table):
+        got = _padded(table, rad)
+        cols = dict.fromkeys(schema.names, []) if got is None else emit(*got)
+        return pa.Table.from_batches([arrow_batch(schema, cols)])
+
+    return parts.groupBy("t_row", "t_col").applyInArrow(gather, schema=schema)
+
+
+def _per_cell(tiles: DataFrame, rad: int, tile: int, grid: dict,
+              schema: T.StructType, window) -> DataFrame:
+    """Per-cell output of the halo exchange: ``window(pad)`` → 2-D arrays
+    over the core cells, emitted with ``cell_id, r, c``."""
+    g_ncols = int(grid["grid_ncols"])
+
+    def emit(row0, col0, pad):
+        out = window(pad)
+        nr, nc = pad.shape[0] - 2 * rad, pad.shape[1] - 2 * rad
+        r, c = np.mgrid[row0:row0 + nr, col0:col0 + nc]
+        return {"cell_id": (r * g_ncols + c).ravel(), "r": r.ravel(),
+                "c": c.ravel(), **{k: v.ravel() for k, v in out.items()}}
+
+    return _halo_map(tiles, rad, tile, grid, schema, emit)
+
+
+def _stats(n, s, mn, mx) -> dict:
+    """The five statistics of windows (or blocks) from their count,
+    sum, min and max; an empty one (n == 0) has undefined (NaN)
+    sum/mean/min/max, matching the oracle's SUM/MIN/MAX of an empty
+    group."""
+    empty = n == 0
+    s = np.where(empty, np.nan, s)
+    return {"count": n, "sum": s,
+            "mean": np.where(empty, np.nan, s / np.maximum(n, 1)),
+            "min": np.where(empty, np.nan, mn),
+            "max": np.where(empty, np.nan, mx)}
+
+
+def _window_stats(pad: np.ndarray, rad: int) -> dict:
+    """Every ``(2R+1)²`` window of the padded tile → :func:`_stats`."""
     # separable two-pass window evaluation: a (2R+1)² box reduction is
     # a vertical (2R+1) pass then a horizontal one — 2(2R+1) ops/cell
     # instead of (2R+1)², and temporaries shrink the same way.  Window
@@ -189,20 +231,23 @@ def _window_stats(pdf: pd.DataFrame, rad: int):
     vs = np.where(vvalid, vwin, 0.0).sum(axis=2)
     vmn = np.where(vvalid, vwin, np.inf).min(axis=2)
     vmx = np.where(vvalid, vwin, -np.inf).max(axis=2)
-    n = swv(vn, W, axis=1).sum(axis=2).astype(np.int64)
-    s = swv(vs, W, axis=1).sum(axis=2)
-    mn = swv(vmn, W, axis=1).min(axis=2)
-    mx = swv(vmx, W, axis=1).max(axis=2)
-    empty = n == 0
-    # NaN → SQL NULL through Arrow: undefined stats of an all-nodata
-    # window come out as NULL, matching the oracle's SUM/MIN/MAX of an
-    # empty group
-    s = np.where(empty, np.nan, s)
-    mean = np.where(empty, np.nan, s / np.maximum(n, 1))
-    mn = np.where(empty, np.nan, mn)
-    mx = np.where(empty, np.nan, mx)
-    return c_row0, c_col0, {"count": n, "sum": s, "mean": mean,
-                            "min": mn, "max": mx}
+    return _stats(swv(vn, W, axis=1).sum(axis=2).astype(np.int64),
+                  swv(vs, W, axis=1).sum(axis=2),
+                  swv(vmn, W, axis=1).min(axis=2),
+                  swv(vmx, W, axis=1).max(axis=2))
+
+
+def _slide(a: np.ndarray, axis: int, terms: list, combine) -> np.ndarray:
+    """One separable pass: ``combine`` over k of ``term_k(a shifted by
+    k along axis)`` for the ``len(terms)`` window offsets."""
+    W = len(terms)
+    n_out = a.shape[axis] - W + 1
+    view = (lambda k: a[k:k + n_out]) if axis == 0 else \
+        (lambda k: a[:, k:k + n_out])
+    out = terms[0](view(0))
+    for k in range(1, W):
+        combine(out, terms[k](view(k)), out=out)
+    return out
 
 
 def focal_stats(tiles: DataFrame, radius: int = 2, *,
@@ -217,30 +262,9 @@ def focal_stats(tiles: DataFrame, radius: int = 2, *,
     get a first-class raster back, or use :func:`focal_raster` to skip
     the per-cell frame entirely."""
     grid, tile, rad = _resolve(tiles, radius, grid)
-    g_nrows, g_ncols = int(grid["grid_nrows"]), int(grid["grid_ncols"])
-    parts = _halo_parts(tiles, rad, tile, g_nrows, g_ncols)
-
-    def gather(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        got = _window_stats(pdf, rad)
-        if got is None:
-            return pd.DataFrame(columns=[f.name for f in _CELL_SCHEMA])
-        c_row0, c_col0, st = got
-        nr, nc = st["count"].shape
-        rr = np.arange(c_row0, c_row0 + nr, dtype=np.int64)[:, None]
-        cc = np.arange(c_col0, c_col0 + nc, dtype=np.int64)[None, :]
-        return pd.DataFrame({
-            "cell_id": np.broadcast_to(rr * g_ncols + cc, (nr, nc)).ravel(),
-            "r": np.broadcast_to(rr, (nr, nc)).ravel().astype(np.int32),
-            "c": np.broadcast_to(cc, (nr, nc)).ravel().astype(np.int32),
-            "focal_n": st["count"].ravel(),
-            "focal_sum": st["sum"].ravel(),
-            "focal_mean": st["mean"].ravel(),
-            "focal_min": st["min"].ravel(),
-            "focal_max": st["max"].ravel(),
-        })
-
-    return parts.groupBy("t_row", "t_col").applyInPandas(
-        gather, schema=_CELL_SCHEMA)
+    names = [f.name for f in _CELL_SCHEMA.fields[3:]]
+    return _per_cell(tiles, rad, tile, grid, _CELL_SCHEMA, lambda pad: dict(
+        zip(names, _window_stats(pad, rad).values())))
 
 
 def focal_raster(tiles: DataFrame, radius: int = 2, *,
@@ -258,43 +282,23 @@ def focal_raster(tiles: DataFrame, radius: int = 2, *,
     if stat not in _STATS:
         raise ValueError(f"unknown focal stat {stat!r}; one of {_STATS}")
     grid, tile, rad = _resolve(tiles, radius, grid)
-    g_nrows, g_ncols = int(grid["grid_nrows"]), int(grid["grid_ncols"])
-    parts = _halo_parts(tiles, rad, tile, g_nrows, g_ncols)
 
-    def gather(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        got = _window_stats(pdf, rad)
-        if got is None:
-            return pd.DataFrame(
-                columns=[f.name for f in _TILE_FIELDS])
-        c_row0, c_col0, st = got
-        arr = st[stat].astype(np.float64)
-        nr, nc = arr.shape
-        return pd.DataFrame([dict(
-            raster_id=raster_id, band=0,
-            tile_row=c_row0 // tile, tile_col=c_col0 // tile,
-            row0=c_row0, col0=c_col0, nrows=nr, ncols=nc,
-            values=encode_tile(arr))])
+    def emit(row0, col0, pad):
+        arr = _window_stats(pad, rad)[stat].astype(np.float64)
+        return dict(raster_id=[raster_id], band=[0],
+                    tile_row=[row0 // tile], tile_col=[col0 // tile],
+                    row0=[row0], col0=[col0], nrows=[arr.shape[0]],
+                    ncols=[arr.shape[1]], values=[encode_tile(arr)])
 
-    t = parts.groupBy("t_row", "t_col").applyInPandas(
-        gather, schema=_TILE_FIELDS)
+    t = _halo_map(tiles, rad, tile, grid, _TILE_FIELDS, emit)
     return (t.withColumn("grid_xmin", F.lit(float(grid["grid_xmin"])))
              .withColumn("grid_ymax", F.lit(float(grid["grid_ymax"])))
              .withColumn("dx", F.lit(float(grid["dx"])))
              .withColumn("dy", F.lit(float(grid["dy"])))
-             .withColumn("grid_nrows", F.lit(g_nrows))
-             .withColumn("grid_ncols", F.lit(g_ncols))
+             .withColumn("grid_nrows", F.lit(int(grid["grid_nrows"])))
+             .withColumn("grid_ncols", F.lit(int(grid["grid_ncols"])))
              .withColumn("dtype", F.lit("float64"))
              .withColumn("nodata", F.lit(None).cast("double")))
-
-
-_CONV_SCHEMA = T.StructType([
-    T.StructField("cell_id", T.LongType()),
-    T.StructField("r", T.IntegerType()),
-    T.StructField("c", T.IntegerType()),
-    T.StructField("wsum", T.LongType()),
-    T.StructField("conv", T.DoubleType()),
-    T.StructField("smooth", T.DoubleType()),
-])
 
 
 def focal_convolve(tiles: DataFrame, kernel=(1, 4, 6, 4, 1), *,
@@ -318,65 +322,22 @@ def focal_convolve(tiles: DataFrame, kernel=(1, 4, 6, 4, 1), *,
         raise ValueError(f"kernel length must be odd >= 3, got {len(b)}")
     if any(w < 0 for w in b) or sum(b) == 0:
         raise ValueError("kernel weights must be non-negative, not all 0")
-    rad = len(b) // 2
-    grid, tile, rad = _resolve(tiles, rad, grid)
-    g_nrows, g_ncols = int(grid["grid_nrows"]), int(grid["grid_ncols"])
-    parts = _halo_parts(tiles, rad, tile, g_nrows, g_ncols)
-    W = len(b)
+    grid, tile, rad = _resolve(tiles, len(b) // 2, grid)
+    terms = [lambda v, w=w: w * v for w in b]
 
-    def _wslide(a: np.ndarray, axis: int) -> np.ndarray:
-        n_out = a.shape[axis] - W + 1
-        def sl(k):
-            return (slice(k, k + n_out), slice(None)) if axis == 0 \
-                else (slice(None), slice(k, k + n_out))
-        out = b[0] * a[sl(0)]
-        for k in range(1, W):
-            out += b[k] * a[sl(k)]
-        return out
-
-    def gather(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        core = pdf[pdf["is_core"]]
-        if core.empty:
-            return pd.DataFrame(columns=[f.name for f in _CONV_SCHEMA])
-        crow = core.iloc[0]
-        c_row0, c_col0 = int(crow["row0"]), int(crow["col0"])
-        nr, nc = int(crow["nrows"]), int(crow["ncols"])
-        pad = np.full((nr + 2 * rad, nc + 2 * rad), np.nan)
-        for p in pdf.itertuples(index=False):
-            i = int(p.row0) - c_row0 + rad
-            j = int(p.col0) - c_col0 + rad
-            pad[i:i + int(p.nrows), j:j + int(p.ncols)] = \
-                decode_tile(p.buf, "float64", int(p.nrows), int(p.ncols))
+    def window(pad):
         isn = np.isnan(pad)
-        az = np.where(isn, 0.0, pad)
-        cnt = (~isn).astype(np.float64)
-        conv = _wslide(_wslide(az, 0), 1)
-        wsum = _wslide(_wslide(cnt, 0), 1)
+        conv = _slide(_slide(np.where(isn, 0.0, pad), 0, terms, np.add),
+                      1, terms, np.add)
+        wsum = _slide(_slide((~isn).astype(np.float64), 0, terms, np.add),
+                      1, terms, np.add)
         empty = wsum == 0
-        conv = np.where(empty, np.nan, conv)
-        smooth = np.where(empty, np.nan, conv / np.where(empty, 1, wsum))
-        rr = np.arange(c_row0, c_row0 + nr, dtype=np.int64)[:, None]
-        cc = np.arange(c_col0, c_col0 + nc, dtype=np.int64)[None, :]
-        return pd.DataFrame({
-            "cell_id": np.broadcast_to(rr * g_ncols + cc, (nr, nc)).ravel(),
-            "r": np.broadcast_to(rr, (nr, nc)).ravel().astype(np.int32),
-            "c": np.broadcast_to(cc, (nr, nc)).ravel().astype(np.int32),
-            "wsum": wsum.ravel().astype(np.int64),
-            "conv": conv.ravel(),
-            "smooth": smooth.ravel(),
-        })
+        return {"wsum": wsum.astype(np.int64),
+                "conv": np.where(empty, np.nan, conv),
+                "smooth": np.where(empty, np.nan,
+                                   conv / np.where(empty, 1, wsum))}
 
-    return parts.groupBy("t_row", "t_col").applyInPandas(
-        gather, schema=_CONV_SCHEMA)
-
-
-_PROX_SCHEMA = T.StructType([
-    T.StructField("cell_id", T.LongType()),
-    T.StructField("r", T.IntegerType()),
-    T.StructField("c", T.IntegerType()),
-    T.StructField("d2", T.LongType()),
-    T.StructField("dist", T.DoubleType()),
-])
+    return _per_cell(tiles, rad, tile, grid, _CONV_SCHEMA, window)
 
 
 def focal_proximity(tiles: DataFrame, radius: int = 8, *,
@@ -396,71 +357,20 @@ def focal_proximity(tiles: DataFrame, radius: int = 8, *,
     every focal operator (strips are ``radius`` deep, so radius ≤ tile
     still holds)."""
     grid, tile, rad = _resolve(tiles, radius, grid)
-    g_nrows, g_ncols = int(grid["grid_nrows"]), int(grid["grid_ncols"])
-    parts = _halo_parts(tiles, rad, tile, g_nrows, g_ncols)
-    W = 2 * rad + 1
-    off2 = [(k - rad) ** 2 for k in range(W)]
+    terms = [lambda v, o=(k - rad) ** 2: v + o for k in range(2 * rad + 1)]
     tmin = float(target_min)
 
-    def _minslide(a: np.ndarray, axis: int) -> np.ndarray:
-        n_out = a.shape[axis] - W + 1
-        def sl(k):
-            return (slice(k, k + n_out), slice(None)) if axis == 0 \
-                else (slice(None), slice(k, k + n_out))
-        out = a[sl(0)] + off2[0]
-        for k in range(1, W):
-            np.minimum(out, a[sl(k)] + off2[k], out=out)
-        return out
-
-    def gather(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        core = pdf[pdf["is_core"]]
-        if core.empty:
-            return pd.DataFrame(columns=[f.name for f in _PROX_SCHEMA])
-        crow = core.iloc[0]
-        c_row0, c_col0 = int(crow["row0"]), int(crow["col0"])
-        nr, nc = int(crow["nrows"]), int(crow["ncols"])
-        pad = np.full((nr + 2 * rad, nc + 2 * rad), np.nan)
-        for p in pdf.itertuples(index=False):
-            i = int(p.row0) - c_row0 + rad
-            j = int(p.col0) - c_col0 + rad
-            pad[i:i + int(p.nrows), j:j + int(p.ncols)] = \
-                decode_tile(p.buf, "float64", int(p.nrows), int(p.ncols))
+    def window(pad):
         # target penalty: 0 at targets, +inf elsewhere (NaN compares
         # False, so nodata cells are never targets; outside-raster halo
         # stays NaN → inf)
         with np.errstate(invalid="ignore"):
             tpen = np.where(pad >= tmin, 0.0, np.inf)
-        d2f = _minslide(_minslide(tpen, 0), 1)
-        none = ~np.isfinite(d2f)
-        d2 = np.where(none, -1, d2f).astype(np.int64)
-        dist = np.where(none, np.nan, np.sqrt(d2f))
-        rr = np.arange(c_row0, c_row0 + nr, dtype=np.int64)[:, None]
-        cc = np.arange(c_col0, c_col0 + nc, dtype=np.int64)[None, :]
-        out = pd.DataFrame({
-            "cell_id": np.broadcast_to(rr * g_ncols + cc, (nr, nc)).ravel(),
-            "r": np.broadcast_to(rr, (nr, nc)).ravel().astype(np.int32),
-            "c": np.broadcast_to(cc, (nr, nc)).ravel().astype(np.int32),
-            "d2": d2.ravel(),
-            "dist": dist.ravel(),
-        })
-        # -1 sentinel → nullable NULL (NaN-through-Arrow only works for
-        # floats; d2 is integral)
-        out["d2"] = out["d2"].astype("Int64")
-        out.loc[out["d2"] < 0, "d2"] = pd.NA
-        return out
+        d2 = _slide(_slide(tpen, 0, terms, np.minimum), 1, terms, np.minimum)
+        d2[np.isinf(d2)] = np.nan                   # no target → NULL
+        return {"d2": d2, "dist": np.sqrt(d2)}
 
-    return parts.groupBy("t_row", "t_col").applyInPandas(
-        gather, schema=_PROX_SCHEMA)
-
-
-_GRAD_SCHEMA = T.StructType([
-    T.StructField("cell_id", T.LongType()),
-    T.StructField("r", T.IntegerType()),
-    T.StructField("c", T.IntegerType()),
-    T.StructField("gx", T.DoubleType()),
-    T.StructField("gy", T.DoubleType()),
-    T.StructField("slope_sq", T.DoubleType()),
-])
+    return _per_cell(tiles, rad, tile, grid, _PROX_SCHEMA, window)
 
 
 def focal_gradient(tiles: DataFrame, *, grid: dict | None = None
@@ -480,23 +390,10 @@ def focal_gradient(tiles: DataFrame, *, grid: dict | None = None
     the caller: libm rounding is not guaranteed identical across
     engines, so they stay out of the gated columns."""
     grid, tile, rad = _resolve(tiles, 1, grid)
-    g_nrows, g_ncols = int(grid["grid_nrows"]), int(grid["grid_ncols"])
     dx, dy = float(grid["dx"]), float(grid["dy"])
-    parts = _halo_parts(tiles, 1, tile, g_nrows, g_ncols)
 
-    def gather(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        core = pdf[pdf["is_core"]]
-        if core.empty:
-            return pd.DataFrame(columns=[f.name for f in _GRAD_SCHEMA])
-        crow = core.iloc[0]
-        c_row0, c_col0 = int(crow["row0"]), int(crow["col0"])
-        nr, nc = int(crow["nrows"]), int(crow["ncols"])
-        pad = np.full((nr + 2, nc + 2), np.nan)
-        for p in pdf.itertuples(index=False):
-            i = int(p.row0) - c_row0 + 1
-            j = int(p.col0) - c_col0 + 1
-            pad[i:i + int(p.nrows), j:j + int(p.ncols)] = \
-                decode_tile(p.buf, "float64", int(p.nrows), int(p.ncols))
+    def window(pad):
+        nr, nc = pad.shape[0] - 2, pad.shape[1] - 2
 
         def z(dr, dc):
             return pad[1 + dr:1 + dr + nr, 1 + dc:1 + dc + nc]
@@ -511,20 +408,10 @@ def focal_gradient(tiles: DataFrame, *, grid: dict | None = None
         bad = np.isnan(z(0, 0)) | np.isnan(gx) | np.isnan(gy)
         gx = np.where(bad, np.nan, gx)
         gy = np.where(bad, np.nan, gy)
-        slope_sq = np.where(bad, np.nan, gx * gx + gy * gy)
-        rr = np.arange(c_row0, c_row0 + nr, dtype=np.int64)[:, None]
-        cc = np.arange(c_col0, c_col0 + nc, dtype=np.int64)[None, :]
-        return pd.DataFrame({
-            "cell_id": np.broadcast_to(rr * g_ncols + cc, (nr, nc)).ravel(),
-            "r": np.broadcast_to(rr, (nr, nc)).ravel().astype(np.int32),
-            "c": np.broadcast_to(cc, (nr, nc)).ravel().astype(np.int32),
-            "gx": gx.ravel(),
-            "gy": gy.ravel(),
-            "slope_sq": slope_sq.ravel(),
-        })
+        return {"gx": gx, "gy": gy,
+                "slope_sq": np.where(bad, np.nan, gx * gx + gy * gy)}
 
-    return parts.groupBy("t_row", "t_col").applyInPandas(
-        gather, schema=_GRAD_SCHEMA)
+    return _per_cell(tiles, rad, tile, grid, _GRAD_SCHEMA, window)
 
 
 def focal_to_tiles(cells: DataFrame, grid: dict, *,

@@ -14,7 +14,7 @@ import math
 from dataclasses import dataclass
 
 __all__ = ["RasterGrid", "TileWindow", "DEFAULT_TILE", "EARTH_RADIUS",
-           "spherical_row_areas", "infer_tile_size"]
+           "spherical_row_areas", "infer_tile_size", "resolve_grid"]
 
 DEFAULT_TILE = 64
 EARTH_RADIUS = 6378137.0  # reference raster_area.h:79
@@ -49,6 +49,18 @@ def infer_tile_size(grid: dict | None, tiles=None) -> int:
     raise ValueError(
         "tile stride cannot be determined: pass grid['tile'] or a "
         "non-empty tile table")
+
+
+def resolve_grid(tiles, grid: dict | None = None,
+                 tile: int | None = None) -> tuple[dict, int]:
+    """(grid dict, tile stride) of a tile table: ``grid`` as given, else
+    read from the table's first row; ``tile`` as given, else
+    :func:`infer_tile_size`.  Runs no Spark job when ``grid`` is given
+    and carries ``tile`` (or ``tile`` is passed)."""
+    if grid is None:
+        grid = tiles.select("grid_xmin", "grid_ymax", "dx", "dy",
+                            "grid_nrows", "grid_ncols").first().asDict()
+    return grid, int(tile) if tile is not None else infer_tile_size(grid, tiles)
 
 
 @dataclass(frozen=True)

@@ -33,12 +33,14 @@ iterators (/root/reference/src/feature_source.h,
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F, types as T
 
 __all__ = [
     "SPAN_SCHEMA", "DOCS_SCHEMA", "GRID_META_SCHEMA",
     "read_docs", "zones_from_docs", "raster_meta_from_docs", "tiles_from_docs",
-    "decode_tile", "decode_value_tile", "encode_tile", "spans_roundtrip",
+    "decode_tile", "decode_value_tile", "decode_defined_tiles",
+    "tile_payload_columns", "arrow_batch", "encode_tile", "spans_roundtrip",
 ]
 
 SPAN_SCHEMA = T.StructType([
@@ -105,6 +107,78 @@ def decode_value_tile(buf: bytes, dtype: str, nrows: int, ncols: int, *,
     if undef.any():
         vals[undef] = np.nan
     return vals
+
+
+_DECODE_COLS = ("nodata", "scale", "offset", "mask_values")
+
+
+def tile_payload_columns(tiles: DataFrame) -> list[str]:
+    """The payload columns of a tile table: ``values``, ``dtype`` and
+    whichever of the on-read decode columns (``nodata``, ``scale``,
+    ``offset``, ``mask_values``) it carries."""
+    return ["values", "dtype", *(c for c in _DECODE_COLS if c in tiles.columns)]
+
+
+def decode_defined_tiles(batch: pa.RecordBatch, values: str = "values",
+                         mask: str = "mask_values") -> list[np.ndarray]:
+    """Every tile of an Arrow batch of tile rows (``nrows``, ``ncols``
+    and the :func:`tile_payload_columns`) as float64 with each
+    undefined cell NaN: the raw nodata sentinel, a raw NaN, or mask 0,
+    with scale and offset applied — :func:`decode_value_tile`, whose
+    untransformed path is widened and sentinel-masked here.  NULL
+    nodata / scale / offset / mask read as none / 1 / 0 / no mask.
+    ``values`` and ``mask`` name the payload pair to decode."""
+    names, n = batch.schema.names, batch.num_rows
+
+    def num(c, null):
+        if c not in names:
+            return np.full(n, null)
+        return batch.column(c).fill_null(null).to_numpy()
+
+    nd, sc, of = num("nodata", np.nan), num("scale", 1.0), num("offset", 0.0)
+    mk = batch.column(mask) if mask in names else None
+    buf, dtypes = batch.column(values), batch.column("dtype").to_pylist()
+    nr, nc = batch.column("nrows").to_numpy(), batch.column("ncols").to_numpy()
+    out = []
+    for j in range(n):
+        m = mk[j].as_buffer() if mk is not None and mk[j].is_valid else None
+        nodata = None if np.isnan(nd[j]) else float(nd[j])
+        v = decode_value_tile(buf[j].as_buffer(), dtypes[j], int(nr[j]),
+                              int(nc[j]), nodata=nodata, scale=float(sc[j]),
+                              offset=float(of[j]), mask_buf=m)
+        if sc[j] == 1.0 and of[j] == 0.0 and m is None:
+            raw, v = v, v.astype(np.float64)
+            if nodata is not None:
+                v[raw == nodata] = np.nan
+        out.append(v)
+    return out
+
+
+def arrow_batch(schema: T.StructType, cols: dict) -> pa.RecordBatch:
+    """One Arrow batch of the Spark ``schema`` from ``cols`` (field name
+    → numpy array, Arrow array or sequence), each cast to its field's
+    type.  A NaN in a float numpy column is written as NULL, for float
+    and integer fields alike: the operators' outputs mark undefined
+    values (empty windows, missing corners) as SQL NULL, and Arrow would
+    keep the NaN."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(schema)
+    arrays = []
+    for f in schema:
+        v = cols[f.name]
+        if isinstance(v, pa.Array):
+            arrays.append(v.cast(f.type))
+            continue
+        null = None
+        if isinstance(v, np.ndarray) and v.dtype.kind == "f":
+            null = np.isnan(v)
+            if pa.types.is_integer(f.type):
+                v = np.where(null, 0, v).astype(np.int64)
+            if not null.any():
+                null = None
+        arrays.append(pa.array(v, type=f.type, mask=null))
+    return pa.RecordBatch.from_arrays(arrays, schema=schema)
 
 
 def encode_tile(arr: np.ndarray) -> bytes:

@@ -10,8 +10,10 @@ statistics).
 Distributed shape: when ``factor`` divides the tile size, every coarse
 block lies inside exactly one tile, so the whole computation is
 **map-only — zero shuffles, zero Exchange in the plan** (asserted in
-tests): one Arrow ``mapInPandas`` decodes, block-reduces with a
-reshape, and emits either coarse-cell rows or re-encoded coarse tiles.
+tests): one ``mapInArrow`` decodes (``io.decode_defined_tiles``: nodata,
+mask band and scale/offset applied on read), block-reduces with a
+reshape, and emits coarse-cell rows; ``overview_tiles`` re-encodes them
+as a coarse tile table.
 A factor that does not divide the tile size would put one coarse block
 across up to four tiles; rather than silently paying a hidden shuffle,
 ``overview`` rejects it — re-tile first (the halo machinery in
@@ -25,11 +27,12 @@ bit-identical to the DuckDB ``GROUP BY r//f, c//f`` oracle.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, types as T
+from pyspark.sql import DataFrame, functions as F, types as T
+
+from .focal import _stats
+from .grid import resolve_grid
+from .io import arrow_batch, decode_defined_tiles, tile_payload_columns
 
 __all__ = ["overview", "overview_tiles", "coarse_grid",
            "raster_histogram"]
@@ -61,25 +64,38 @@ def coarse_grid(grid: dict, factor: int) -> dict:
     return out
 
 
-def _block_reduce(arr: np.ndarray, f: int):
+def _block_reduce(arr: np.ndarray, f: int) -> dict:
     """Pad to a multiple of f with NaN, reshape to (R, f, C, f) blocks,
-    return per-block (n, sum, mean, min, max)."""
+    return the per-block statistics (focal._stats)."""
     nr, nc = arr.shape
     R, C = -(-nr // f), -(-nc // f)
     pad = np.full((R * f, C * f), np.nan)
     pad[:nr, :nc] = arr
     blocks = pad.reshape(R, f, C, f).transpose(0, 2, 1, 3)
     valid = ~np.isnan(blocks)
-    n = valid.sum(axis=(2, 3)).astype(np.int64)
-    s = np.where(valid, blocks, 0.0).sum(axis=(2, 3))
-    mn = np.where(valid, blocks, np.inf).min(axis=(2, 3))
-    mx = np.where(valid, blocks, -np.inf).max(axis=(2, 3))
-    empty = n == 0
-    s = np.where(empty, np.nan, s)
-    mean = np.where(empty, np.nan, s / np.maximum(n, 1))
-    mn = np.where(empty, np.nan, mn)
-    mx = np.where(empty, np.nan, mx)
-    return n, s, mean, mn, mx
+    return _stats(valid.sum(axis=(2, 3)).astype(np.int64),
+                  np.where(valid, blocks, 0.0).sum(axis=(2, 3)),
+                  np.where(valid, blocks, np.inf).min(axis=(2, 3)),
+                  np.where(valid, blocks, -np.inf).max(axis=(2, 3)))
+
+
+def _tile_map(tiles: DataFrame, schema: T.StructType, fn) -> DataFrame:
+    """Map-only pass over the decoded tiles: ``fn(row0, col0, arr)`` →
+    output columns (field name → 1-D array) of one tile, concatenated
+    per Arrow batch."""
+
+    def run(batches):
+        for b in batches:
+            parts = [fn(r0, c0, arr) for r0, c0, arr in zip(
+                b.column("row0").to_pylist(), b.column("col0").to_pylist(),
+                decode_defined_tiles(b))]
+            if parts:
+                yield arrow_batch(schema, {
+                    k: np.concatenate([p[k] for p in parts])
+                    for k in schema.names})
+
+    return tiles.select("row0", "col0", "nrows", "ncols",
+                        *tile_payload_columns(tiles)).mapInArrow(run, schema)
 
 
 def overview(tiles: DataFrame, factor: int = 4, *,
@@ -88,14 +104,8 @@ def overview(tiles: DataFrame, factor: int = 4, *,
     coarse cell — ``(ov_r, ov_c, n, sum, mean, min, max)`` over the
     block's defined (non-nodata) cells; all-nodata blocks keep the row
     with n=0 and NULL stats.  Map-only (no shuffle) — see module doc."""
-    from .focal import _decode_masked
-
     f = int(factor)
-    if grid is None:
-        grid = tiles.select("grid_xmin", "grid_ymax", "dx", "dy",
-                            "grid_nrows", "grid_ncols").first().asDict()
-    from .grid import infer_tile_size
-    tile = infer_tile_size(grid, tiles)
+    grid, tile = resolve_grid(tiles, grid)
     if f < 2:
         raise ValueError(f"factor must be >= 2, got {factor}")
     if tile % f != 0:
@@ -103,37 +113,17 @@ def overview(tiles: DataFrame, factor: int = 4, *,
             f"factor {f} does not divide tile size {tile}: a coarse "
             f"block would span tiles — re-tile the raster first")
 
-    cols = ["tile_row", "tile_col", "row0", "col0", "nrows", "ncols",
-            "values", "dtype"]
-    if "nodata" in tiles.columns:
-        cols.append("nodata")
+    def reduce_tile(row0, col0, arr):
+        st = _block_reduce(arr, f)
+        # row0/col0 are tile-aligned and f | tile, so the block origin
+        # maps exactly onto the coarse grid
+        R, C = st["count"].shape
+        r, c = np.mgrid[row0 // f:row0 // f + R, col0 // f:col0 // f + C]
+        return {"ov_r": r.ravel(), "ov_c": c.ravel(),
+                "n": st.pop("count").ravel(),
+                **{k: v.ravel() for k, v in st.items()}}
 
-    def reduce_tiles(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            frames = []
-            for row in pdf.itertuples(index=False):
-                arr = _decode_masked(row)
-                n, s, mean, mn, mx = _block_reduce(arr, f)
-                R, C = n.shape
-                # row0/col0 are tile-aligned and f | tile, so the
-                # block origin maps exactly onto the coarse grid
-                orr = int(row.row0) // f
-                occ = int(row.col0) // f
-                rr = np.arange(orr, orr + R, dtype=np.int64)[:, None]
-                cc = np.arange(occ, occ + C, dtype=np.int64)[None, :]
-                frames.append(pd.DataFrame({
-                    "ov_r": np.broadcast_to(rr, (R, C)).ravel().astype(np.int32),
-                    "ov_c": np.broadcast_to(cc, (R, C)).ravel().astype(np.int32),
-                    "n": n.ravel(),
-                    "sum": s.ravel(),
-                    "mean": mean.ravel(),
-                    "min": mn.ravel(),
-                    "max": mx.ravel(),
-                }))
-            yield pd.concat(frames) if frames else \
-                pd.DataFrame(columns=[x.name for x in _OV_SCHEMA])
-
-    return tiles.select(*cols).mapInPandas(reduce_tiles, schema=_OV_SCHEMA)
+    return _tile_map(tiles, _OV_SCHEMA, reduce_tile)
 
 
 def overview_tiles(ov: DataFrame, grid: dict, factor: int = 4, *,
@@ -143,8 +133,6 @@ def overview_tiles(ov: DataFrame, grid: dict, factor: int = 4, *,
     coarse grid, ready for ``exact_extract`` or another ``overview``
     pass (pyramid chaining).  Undefined coarse cells (all-nodata
     blocks) become NaN, which the kernel masks."""
-    from pyspark.sql import functions as F
-
     from .rasterize import burn_to_tiles
 
     cg = coarse_grid(grid, factor)
@@ -170,29 +158,10 @@ def raster_histogram(tiles: DataFrame, *, grid: dict | None = None
     shuffle carries one compact (value, count) row per distinct value
     per tile — for categorical/integer rasters that is ~|domain| rows
     per tile regardless of tile size, then one tiny hash aggregate."""
-    from .focal import _decode_masked
 
-    cols = ["tile_row", "tile_col", "row0", "col0", "nrows", "ncols",
-            "values", "dtype"]
-    if "nodata" in tiles.columns:
-        cols.append("nodata")
+    def local_hist(row0, col0, arr):
+        uniq, cnt = np.unique(arr[~np.isnan(arr)], return_counts=True)
+        return {"value": uniq, "n": cnt}
 
-    def local_hist(batches):
-        for pdf in batches:
-            frames = []
-            for row in pdf.itertuples(index=False):
-                arr = _decode_masked(row)
-                v = arr[~np.isnan(arr)]
-                if v.size == 0:
-                    continue
-                uniq, cnt = np.unique(v, return_counts=True)
-                frames.append(pd.DataFrame(
-                    {"value": uniq, "n": cnt.astype(np.int64)}))
-            yield pd.concat(frames) if frames else \
-                pd.DataFrame({"value": pd.Series(dtype="float64"),
-                              "n": pd.Series(dtype="int64")})
-
-    from pyspark.sql import functions as F
-    return (tiles.select(*cols)
-            .mapInPandas(local_hist, schema=_HIST_SCHEMA)
+    return (_tile_map(tiles, _HIST_SCHEMA, local_hist)
             .groupBy("value").agg(F.sum("n").alias("n")))

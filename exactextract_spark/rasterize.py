@@ -34,6 +34,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from .grid import resolve_grid
 from .subdivide import subdivide
 
 __all__ = ["rasterize_burn", "burn_to_tiles"]
@@ -48,10 +49,9 @@ def rasterize_burn(zones: DataFrame, tiles: DataFrame, *,
 
     ``tiles`` supplies only the windowing (which grid blocks exist);
     payloads are never decoded."""
-    if grid is None:
-        grid = tiles.select("grid_xmin", "grid_ymax", "dx", "dy",
-                            "grid_nrows", "grid_ncols").first().asDict()
-    pieces = subdivide(zones, tiles, grid=grid, strategy=strategy)
+    grid, tile = resolve_grid(tiles, grid)
+    pieces = subdivide(zones, tiles, grid=grid, tile_size=tile,
+                       strategy=strategy)
     ncols = int(grid["grid_ncols"])
     return (pieces
             .groupBy("cell_id")

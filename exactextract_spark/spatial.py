@@ -15,12 +15,13 @@ raster↔vector)"):
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from .extract import BROADCAST_ZONE_LIMIT, prepare_zones, zone_tile_pairs
 from .geom import GEOM_COLS, Geometry, ZoneArrays
+from .grid import resolve_grid
+from .io import arrow_batch
 
 __all__ = ["point_in_polygon", "knn_tiles", "points_in_geom",
            "sample_points"]
@@ -48,26 +49,23 @@ def sample_points(points: DataFrame, tiles: DataFrame, *,
 
     Distributed shape: points key to their owning tile with pure JVM
     expressions; tile payloads arrive with a 1-cell halo via the focal
-    scatter (so corner cells across a tile edge need no second hop);
-    ONE cogrouped shuffle evaluates all points of a tile vectorized.
+    scatter (so corner cells across a tile edge need no second hop;
+    nodata, mask band and scale/offset are applied on read there);
+    ONE cogrouped ``applyInArrow`` shuffle assembles each tile's padded
+    block (focal._padded) and evaluates all its points vectorized.
     Points shuffle as scalars; payloads cross the wire exactly once.
 
     Exactness: for quarter-aligned coordinates and integer-valued
     rasters, the weights are dyadic rationals, so the interpolation is
     computed without rounding — bit-identical to the SQL oracle."""
-    from .focal import _halo_parts
+    from .focal import _halo_parts, _padded
 
-    if grid is None:
-        grid = dict(tiles.select("grid_xmin", "grid_ymax", "dx", "dy",
-                                 "grid_nrows", "grid_ncols").first()
-                    .asDict())
-    from .grid import infer_tile_size
-    tile = infer_tile_size(grid, tiles)
+    grid, tile = resolve_grid(tiles, grid)
     g_nrows, g_ncols = int(grid["grid_nrows"]), int(grid["grid_ncols"])
     xmin, ymax = float(grid["grid_xmin"]), float(grid["grid_ymax"])
     dx, dy = float(grid["dx"]), float(grid["dy"])
 
-    parts = _halo_parts(tiles, 1, tile, g_nrows, g_ncols)
+    parts = _halo_parts(tiles, 1, tile, grid)
     pts = (points.select(
         "point_id", F.col("x").cast("double").alias("x"),
         F.col("y").cast("double").alias("y"))
@@ -79,68 +77,42 @@ def sample_points(points: DataFrame, tiles: DataFrame, *,
         .withColumn("t_row", (F.col("_r") / tile).cast("int"))
         .withColumn("t_col", (F.col("_c") / tile).cast("int")))
 
-    def fn(key, pts_pdf: pd.DataFrame, parts_pdf: pd.DataFrame
-           ) -> pd.DataFrame:
-        from .io import decode_tile
-        cols = [f.name for f in _SAMPLE_SCHEMA]
-        core = parts_pdf[parts_pdf["is_core"]] if len(parts_pdf) else \
-            parts_pdf
-        if pts_pdf.empty:
-            return pd.DataFrame(columns=cols)
-        if core.empty:
-            # points whose containing tile has no row in the tiles
-            # table (sparse tile tables, e.g. burn_to_tiles output)
-            # keep their row with NULL values — GDAL / LEFT-JOIN-oracle
-            # semantics, not a silent drop (ADVICE r5)
-            return pd.DataFrame({
-                "point_id": pts_pdf["point_id"].to_numpy(),
-                "x": pts_pdf["x"].to_numpy(),
-                "y": pts_pdf["y"].to_numpy(),
-                "r": pts_pdf["_r"].to_numpy().astype(np.int32),
-                "c": pts_pdf["_c"].to_numpy().astype(np.int32),
-                "v_nearest": np.full(len(pts_pdf), np.nan),
-                "v_bilinear": np.full(len(pts_pdf), np.nan),
-            })
-        crow = core.iloc[0]
-        c_row0, c_col0 = int(crow["row0"]), int(crow["col0"])
-        nr, nc = int(crow["nrows"]), int(crow["ncols"])
-        pad = np.full((nr + 2, nc + 2), np.nan)
-        for p in parts_pdf.itertuples(index=False):
-            i = int(p.row0) - c_row0 + 1
-            j = int(p.col0) - c_col0 + 1
-            pad[i:i + int(p.nrows), j:j + int(p.ncols)] = \
-                decode_tile(p.buf, "float64", int(p.nrows), int(p.ncols))
-        x = pts_pdf["x"].to_numpy()
-        y = pts_pdf["y"].to_numpy()
-        r = pts_pdf["_r"].to_numpy().astype(np.int64)
-        c = pts_pdf["_c"].to_numpy().astype(np.int64)
-        nearest = pad[r - c_row0 + 1, c - c_col0 + 1]
-        # bilinear between the 4 surrounding cell centers
-        fx = (x - xmin) / dx - 0.5
-        fy = (ymax - y) / dy - 0.5
-        gr = np.floor(fy).astype(np.int64)
-        gc = np.floor(fx).astype(np.int64)
-        wr = fy - gr
-        wx = fx - gc
-        gi = gr - c_row0 + 1
-        gj = gc - c_col0 + 1
-        v00 = pad[gi, gj]
-        v01 = pad[gi, gj + 1]
-        v10 = pad[gi + 1, gj]
-        v11 = pad[gi + 1, gj + 1]
-        bilin = ((1 - wr) * (1 - wx) * v00 + (1 - wr) * wx * v01
-                 + wr * (1 - wx) * v10 + wr * wx * v11)
-        return pd.DataFrame({
-            "point_id": pts_pdf["point_id"].to_numpy(),
-            "x": x, "y": y,
-            "r": r.astype(np.int32), "c": c.astype(np.int32),
-            "v_nearest": nearest,
-            "v_bilinear": bilin,
-        })
+    def fn(pts_t, parts_t):
+        x, y = pts_t.column("x").to_numpy(), pts_t.column("y").to_numpy()
+        r = pts_t.column("_r").to_numpy().astype(np.int64)
+        c = pts_t.column("_c").to_numpy().astype(np.int64)
+        got = _padded(parts_t, 1) if len(r) else None
+        if got is None:
+            # no points, or points whose containing tile has no row in
+            # the tiles table (sparse tile tables, e.g. burn_to_tiles
+            # output): those keep their row with NULL values — GDAL /
+            # LEFT-JOIN-oracle semantics, not a silent drop (ADVICE r5)
+            nearest = bilin = np.full(len(r), np.nan)
+        else:
+            c_row0, c_col0, pad = got
+            nearest = pad[r - c_row0 + 1, c - c_col0 + 1]
+            # bilinear between the 4 surrounding cell centers
+            fx = (x - xmin) / dx - 0.5
+            fy = (ymax - y) / dy - 0.5
+            gr = np.floor(fy).astype(np.int64)
+            gc = np.floor(fx).astype(np.int64)
+            wr = fy - gr
+            wx = fx - gc
+            gi = gr - c_row0 + 1
+            gj = gc - c_col0 + 1
+            v00 = pad[gi, gj]
+            v01 = pad[gi, gj + 1]
+            v10 = pad[gi + 1, gj]
+            v11 = pad[gi + 1, gj + 1]
+            bilin = ((1 - wr) * (1 - wx) * v00 + (1 - wr) * wx * v01
+                     + wr * (1 - wx) * v10 + wr * wx * v11)
+        return pa.Table.from_batches([arrow_batch(_SAMPLE_SCHEMA, {
+            "point_id": pts_t.column("point_id").to_numpy(), "x": x, "y": y,
+            "r": r, "c": c, "v_nearest": nearest, "v_bilinear": bilin})])
 
     return (pts.groupBy("t_row", "t_col")
             .cogroup(parts.groupBy("t_row", "t_col"))
-            .applyInPandas(fn, schema=_SAMPLE_SCHEMA))
+            .applyInArrow(fn, schema=_SAMPLE_SCHEMA))
 
 
 def points_in_geom(geom: Geometry, xs: np.ndarray, ys: np.ndarray,

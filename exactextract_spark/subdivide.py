@@ -51,6 +51,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from .batchkernel import CHUNK_CELLS, coverage_stream
 from .extract import join_zone_lists, prepare_zones, tile_pairs
 from .geom import AREAL
+from .grid import resolve_grid
 from .traversal import grid_cell_chains, left_hand_rings
 
 __all__ = ["subdivide", "clip_ring_box"]
@@ -293,12 +294,7 @@ def subdivide(zones: DataFrame, tiles: DataFrame, *,
     """One row per (zone, covered cell) with the covered piece's exact
     coverage fraction, bbox and polygon WKT.  Purely geometric — raster
     values are never read (the tile table supplies the windowing)."""
-    if grid is None:
-        grid = tiles.select("grid_xmin", "grid_ymax", "dx", "dy",
-                            "grid_nrows", "grid_ncols").first().asDict()
-    if tile_size is None:
-        from .grid import infer_tile_size
-        tile_size = infer_tile_size(grid, tiles)
+    grid, tile_size = resolve_grid(tiles, grid, tile_size)
     # one collect counts, validates and (below the broadcast limit)
     # feeds the geometry + tile hit-list broadcast; above it the
     # parsed geometry rides the per-tile zone lists

@@ -917,3 +917,197 @@ def test_correlation_change_nan_poison_on_undefined_y(spark):
     assert not np.isnan(r["cov"]) and r["corr"] == 1.0
     r = zonal_change(z2, tx, ty, grid=grid).first()
     assert r["mean_delta"] == -(x[2:, 2:].mean())
+
+
+# --- on-read semantics (nodata, mask band, scale/offset) ---------------------
+
+def _scaled_raster(spark, seed=31, shape=(9, 10), band=0, raster_id="sc"):
+    """An int16 raster with scale 0.5, offset 10, a nodata sentinel and a
+    mask band on ragged 4-cell tiles, plus its reference decode
+    (io.decode_value_tile over the whole array: nodata and mask on the
+    raw values, then raw*scale + offset)."""
+    from exactextract_spark.io import decode_value_tile, tiles_from_array
+
+    rng = np.random.RandomState(seed)
+    raw = rng.randint(0, 50, shape).astype(np.int16)
+    raw[rng.rand(*shape) < 0.15] = -1              # nodata sentinel
+    mask = rng.rand(*shape) >= 0.15                # mask band: 0 = undefined
+    tiles = tiles_from_array(spark, raw, tile=4, nodata=-1, scale=0.5,
+                             offset=10.0, mask=mask, band=band,
+                             raster_id=raster_id)
+    ref = decode_value_tile(raw.tobytes(), "int16", *shape, nodata=-1,
+                            scale=0.5, offset=10.0,
+                            mask_buf=mask.astype(np.uint8).tobytes())
+    grid = dict(grid_xmin=0.0, grid_ymax=float(shape[0]), dx=1.0, dy=1.0,
+                grid_nrows=shape[0], grid_ncols=shape[1], tile=4)
+    return tiles, ref, grid
+
+
+def _window(ref, r, c, rad):
+    w = ref[max(0, r - rad):r + rad + 1, max(0, c - rad):c + rad + 1]
+    return w[~np.isnan(w)]
+
+
+def _check_focal_stats(spark, tiles, ref, grid):
+    from exactextract_spark.extract import exact_extract
+    from exactextract_spark.focal import focal_stats
+
+    got = {(r["r"], r["c"]): r for r in
+           focal_stats(tiles, radius=1, grid=grid).collect()}
+    brute = _brute_focal(ref, 1)
+    assert set(got) == set(brute)
+    for k, (n, s, m, mn, mx) in brute.items():
+        g = got[k]
+        assert (g["focal_n"], g["focal_sum"], g["focal_mean"],
+                g["focal_min"], g["focal_max"]) == (n, s, m, mn, mx), k
+    # the zonal engine reads the same cells: count/sum of the window
+    # polygon of cell (4, 4) (across a tile corner) equal focal n/sum
+    nr = ref.shape[0]
+    win = _zdf(spark, {"w": f"POLYGON((3 {nr - 6}, 6 {nr - 6}, 6 {nr - 3}, "
+                            f"3 {nr - 3}, 3 {nr - 6}))"})
+    z = exact_extract(win, tiles, ["count", "sum"], grid=grid).first()
+    assert (z["count"], z["sum"]) == (got[(4, 4)]["focal_n"],
+                                      got[(4, 4)]["focal_sum"])
+
+
+def _check_focal_raster(spark, tiles, ref, grid):
+    from exactextract_spark.focal import focal_raster
+    from exactextract_spark.io import decode_tile
+
+    seen = np.full(ref.shape, False)
+    for t in focal_raster(tiles, radius=1, stat="sum", grid=grid).collect():
+        a = decode_tile(t["values"], t["dtype"], t["nrows"], t["ncols"])
+        for (i, j), v in np.ndenumerate(a):
+            r, c = t["row0"] + i, t["col0"] + j
+            w = _window(ref, r, c, 1)
+            assert (np.isnan(v) and w.size == 0) or v == w.sum(), (r, c)
+            seen[r, c] = True
+    assert seen.all()
+
+
+def _check_focal_convolve(spark, tiles, ref, grid):
+    from exactextract_spark.focal import focal_convolve
+
+    b = [1, 2, 1]
+    got = {(r["r"], r["c"]): (r["wsum"], r["conv"]) for r in
+           focal_convolve(tiles, kernel=b, grid=grid).collect()}
+    nr, nc = ref.shape
+    assert len(got) == nr * nc
+    for r in range(nr):
+        for c in range(nc):
+            ws, cv = 0, 0.0
+            for dr in (-1, 0, 1):
+                for dc in (-1, 0, 1):
+                    rr, cc = r + dr, c + dc
+                    if 0 <= rr < nr and 0 <= cc < nc and not np.isnan(ref[rr, cc]):
+                        ws += b[dr + 1] * b[dc + 1]
+                        cv += b[dr + 1] * b[dc + 1] * ref[rr, cc]
+            assert got[(r, c)] == (ws, cv if ws else None), (r, c)
+
+
+def _check_overview(spark, tiles, ref, grid):
+    from exactextract_spark.pyramid import overview
+
+    got = {(r["ov_r"], r["ov_c"]): (r["n"], r["sum"], r["min"], r["max"])
+           for r in overview(tiles, factor=2, grid=grid).collect()}
+    assert len(got) == 5 * 5
+    for (i, j), row in got.items():
+        blk = ref[2 * i:2 * i + 2, 2 * j:2 * j + 2]
+        v = blk[~np.isnan(blk)]
+        assert row == (len(v), v.sum() if len(v) else None,
+                       v.min() if len(v) else None,
+                       v.max() if len(v) else None), (i, j)
+
+
+def _check_raster_histogram(spark, tiles, ref, grid):
+    from exactextract_spark.pyramid import raster_histogram
+
+    got = {r["value"]: r["n"] for r in raster_histogram(tiles).collect()}
+    uniq, cnt = np.unique(ref[~np.isnan(ref)], return_counts=True)
+    assert got == dict(zip(uniq.tolist(), cnt.tolist()))
+
+
+def _check_sample_points(spark, tiles, ref, grid):
+    from exactextract_spark.spatial import sample_points
+
+    nr, nc = ref.shape
+    rng = np.random.RandomState(5)
+    xs = rng.randint(0, nc * 4, 120) / 4.0 + 0.125
+    ys = rng.randint(0, nr * 4, 120) / 4.0 + 0.125
+    pts = spark.createDataFrame(
+        [(i, float(xs[i]), float(ys[i])) for i in range(120)],
+        ["point_id", "x", "y"])
+    got = {r["point_id"]: r for r in
+           sample_points(pts, tiles, grid=grid).collect()}
+
+    def cell(rr, cc):
+        return ref[rr, cc] if 0 <= rr < nr and 0 <= cc < nc else np.nan
+
+    for i in range(120):
+        fx, fy = xs[i] - 0.5, (nr - ys[i]) - 0.5
+        gr, gc = int(np.floor(fy)), int(np.floor(fx))
+        wr, wx = fy - gr, fx - gc
+        near = cell(int(np.floor(nr - ys[i])), int(np.floor(xs[i])))
+        bl = ((1 - wr) * (1 - wx) * cell(gr, gc) + (1 - wr) * wx * cell(gr, gc + 1)
+              + wr * (1 - wx) * cell(gr + 1, gc) + wr * wx * cell(gr + 1, gc + 1))
+        for col, exp in (("v_nearest", near), ("v_bilinear", bl)):
+            assert got[i][col] == (None if np.isnan(exp) else exp), (i, col)
+
+
+def _check_band_math(spark, tiles, ref, grid):
+    from exactextract_spark.bandmath import band_math, normalized_difference
+    from exactextract_spark.io import decode_tile
+
+    t1, ref1, _ = _scaled_raster(spark, seed=32, band=1)
+    out = band_math(tiles.unionByName(t1), normalized_difference).collect()
+    assert len(out) == 9
+    exp = normalized_difference(ref, ref1)
+    exp[np.isnan(ref) | np.isnan(ref1)] = np.nan
+    for t in out:
+        a = decode_tile(t["values"], "float64", t["nrows"], t["ncols"])
+        e = exp[t["row0"]:t["row0"] + t["nrows"], t["col0"]:t["col0"] + t["ncols"]]
+        np.testing.assert_array_equal(a, e)
+
+
+@pytest.mark.parametrize("op", ["focal_stats", "focal_raster",
+                                "focal_convolve", "overview",
+                                "raster_histogram", "sample_points",
+                                "band_math"])
+def test_raster_ops_apply_scale_offset_mask(spark, op):
+    """Every raster operator reads a tile through the reference's
+    on-read semantics — nodata and the mask band on the raw values,
+    then raw*scale + offset — and matches brute force over the
+    decode_value_tile-decoded array."""
+    tiles, ref, grid = _scaled_raster(spark)
+    assert np.isnan(ref).any() and not np.isnan(ref).all()
+    globals()[f"_check_{op}"](spark, tiles, ref, grid)
+
+
+def test_raster_ops_emit_no_warnings(spark):
+    """The raster operators run without a UserWarning (applyInPandas
+    warned on every call about its type hints)."""
+    import warnings
+
+    from exactextract_spark.bandmath import band_math, normalized_difference
+    from exactextract_spark.focal import (focal_convolve, focal_gradient,
+                                          focal_proximity, focal_raster,
+                                          focal_stats)
+    from exactextract_spark.pyramid import overview, raster_histogram
+    from exactextract_spark.spatial import sample_points
+
+    tiles, ref, grid = _scaled_raster(spark)
+    t1, _, _ = _scaled_raster(spark, seed=32, band=1)
+    pts = spark.createDataFrame([(0, 1.5, 2.5), (1, 4.0, 4.0)],
+                                ["point_id", "x", "y"])
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        for df in (focal_stats(tiles, radius=1, grid=grid),
+                   focal_raster(tiles, radius=1, grid=grid),
+                   focal_convolve(tiles, grid=grid),
+                   focal_proximity(tiles, radius=2, target_min=20.0, grid=grid),
+                   focal_gradient(tiles, grid=grid),
+                   overview(tiles, factor=2, grid=grid),
+                   raster_histogram(tiles),
+                   sample_points(pts, tiles, grid=grid),
+                   band_math(tiles.unionByName(t1), normalized_difference)):
+            assert df.count() > 0

@@ -121,3 +121,62 @@ def test_band_math_nodata_and_guard(spark):
     assert vals[1, 0] == np.floor(((6 - 3) / 9) * 1048576.0)
     assert np.isnan(vals[1, 1])                     # 0 denominator
     assert out[0]["band"] == 0 and out[0]["dtype"] == "float64"
+
+
+# (rows, simpleString, {column: NULL count}) of the raster frames on
+# sf0.01; every other column has no NULL, and no float column holds NaN.
+# The comparator above treats NaN and NULL alike, so this pins what the
+# Arrow boundary writes.
+_RASTER_FRAMES = {
+    "focal_mean": (40000, "struct<cell_id:bigint,r:int,c:int,focal_n:bigint,"
+                   "focal_sum:double,focal_mean:double,focal_min:double,"
+                   "focal_max:double>", {}),
+    "focal_convolve": (40000, "struct<cell_id:bigint,r:int,c:int,wsum:bigint,"
+                       "conv:double,smooth:double>", {}),
+    "raster_proximity": (40000, "struct<cell_id:bigint,r:int,c:int,d2:bigint,"
+                         "dist:double>", {}),
+    "raster_gradient": (40000, "struct<cell_id:bigint,r:int,c:int,gx:double,"
+                        "gy:double,slope_sq:double>",
+                        {"gx": 16136, "gy": 16136, "slope_sq": 16136}),
+    "raster_histogram": (97, "struct<value:double,n:bigint>", {}),
+    "raster_overview": (2500, "struct<ov_r:int,ov_c:int,n:bigint,sum:double,"
+                        "mean:double,min:double,max:double>", {}),
+    "point_sample": (100, "struct<point_id:bigint,x:double,y:double,r:int,"
+                     "c:int,v_nearest:double,v_bilinear:double>",
+                     {"v_nearest": 4, "v_bilinear": 19}),
+    "zonal_bandmath": (16, "struct<band:int,tile_row:int,tile_col:int,"
+                       "row0:int,col0:int,nrows:int,ncols:int,values:binary,"
+                       "raster_id:string,grid_xmin:double,grid_ymax:double,"
+                       "dx:double,dy:double,grid_nrows:int,grid_ncols:int,"
+                       "dtype:string,nodata:double>", {"nodata": 16}),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_RASTER_FRAMES))
+def test_raster_frame_schema_and_nulls(name, spark):
+    """Schema, row count and per-column NULL/NaN counts of the raster
+    operator frames (zonal_bandmath: band_math's derived tiles)."""
+    from pyspark.sql import functions as F, types as T
+
+    from exactextract_spark import io as eio
+    from exactextract_spark.bandmath import band_math, normalized_difference_q20
+    from exactextract_spark.fixtures import build_docs
+
+    if name == "zonal_bandmath":
+        docs = build_docs(spark, CFG)
+        meta = {r["raster_id"]: r.asDict()
+                for r in eio.raster_meta_from_docs(docs).collect()}
+        df = band_math(eio.tiles_from_docs(docs, "mb0", meta["mb0"]),
+                       normalized_difference_q20)
+    else:
+        df = entry_mod.queries()[name](spark, SF_DIR)
+    rows, schema, nulls = _RASTER_FRAMES[name]
+    assert df.schema.simpleString() == schema
+    aggs = [F.count("*").alias("_rows")]
+    for f in df.schema.fields:
+        aggs.append(F.sum(F.col(f.name).isNull().cast("long")).alias(f.name))
+        if isinstance(f.dataType, T.DoubleType):
+            aggs.append(F.sum(F.isnan(f.name).cast("long")).alias(f"{f.name}_nan"))
+    got = df.agg(*aggs).first().asDict()
+    assert got.pop("_rows") == rows
+    assert got == {**{k: 0 for k in got}, **nulls}

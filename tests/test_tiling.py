@@ -78,7 +78,7 @@ def test_bucketed_band_join_is_shuffle_free(spark, tmp_path):
     """100 TB co-location evidence: when the tile table is BUCKETED by
     the tile key, band_math's band-alignment join plans with ZERO
     Exchange operators (scan -> SortMergeJoin on bucket layout ->
-    MapInPandas) — the 'pre-bucketed at production scale' claim in the
+    MapInArrow) — the 'pre-bucketed at production scale' claim in the
     module docstring, asserted on the physical plan."""
     import numpy as np
 
@@ -108,3 +108,29 @@ def test_bucketed_band_join_is_shuffle_free(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
         spark.sql(f"DROP TABLE IF EXISTS {tab}")
+
+
+def test_resolve_grid_reads_the_table_once(spark):
+    """grid.resolve_grid: the grid dict comes from the tile table's first
+    row and the stride is inferred from it; a grid that carries 'tile'
+    (or an explicit tile) runs no Spark job."""
+    import uuid
+
+    from exactextract_spark.grid import resolve_grid
+    from exactextract_spark.io import tiles_from_array
+
+    tiles = tiles_from_array(spark, np.zeros((10, 12)), tile=4)
+    grid, tile = resolve_grid(tiles)
+    assert tile == 4
+    assert grid == dict(grid_xmin=0.0, grid_ymax=10.0, dx=1.0, dy=1.0,
+                        grid_nrows=10, grid_ncols=12)
+    sc = spark.sparkContext
+    group = f"resolve-grid-{uuid.uuid4().hex}"
+    try:
+        sc.setJobGroup(group, "resolve_grid with a known stride")
+        assert resolve_grid(tiles, {**grid, "tile": 4}) == ({**grid, "tile": 4}, 4)
+        assert resolve_grid(tiles, grid, 4) == (grid, 4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
